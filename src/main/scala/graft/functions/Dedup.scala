@@ -369,6 +369,8 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Materialize, then release the (already candidate-sized) helper
     // caches now rather than pinning them for the session.
+    // Stays persist + count, not a checkpoint: PlanSpec reads the eager
+    // pair generators' plans through the cache, which a checkpoint hides.
     verified.count()
     candidates.unpersist(blocking = false)
     candSh.unpersist(blocking = false)
@@ -509,6 +511,8 @@ object Dedup {
       .filter(col("inter_count") * tauDen >= lit(tauNum) * col("union_count"))
       .select(col("id_a"), col("id_b"), col("inter_count"), col("union_count"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: PlanSpec reads the eager
+    // pair generators' plans through the cache, which a checkpoint hides.
     verified.count()
     candidates.unpersist(blocking = false)
     candSh.unpersist(blocking = false)
@@ -762,6 +766,8 @@ object Dedup {
       .select(col("doc_id"), col("bench_id"),
         col("inter_count"), col("union_count"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: PlanSpec reads the eager
+    // pair generators' plans through the cache, which a checkpoint hides.
     out.count()
     candidates.unpersist(blocking = false)
     out

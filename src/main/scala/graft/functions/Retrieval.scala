@@ -105,8 +105,19 @@ object Retrieval {
     * caller's action), materializes the candidate-sized result, and
     * releases the corpus cache before returning — so the corpus is still
     * tokenized once, at the price of one transient corpus-sized
-    * spillable cache. An empty corpus returns an empty, correctly-typed
-    * result instead of failing on the null avgdl aggregate.
+    * spillable cache. That eager result is a `localCheckpoint`:
+    * materialized, plan-severed and SELF-CONTAINED — it pins no cached
+    * plan (and so none of the broadcasts the query built), its storage
+    * is released when the frame is garbage-collected (ContextCleaner),
+    * and `unpersist` is a harmless no-op. An empty corpus returns an
+    * empty, correctly-typed result instead of failing on the null avgdl
+    * aggregate.
+    *
+    * The query side is collected to the driver as (query_id, term)
+    * pairs and broadcast into both joins, so it is size-gated BEFORE
+    * any corpus work: past the rows a forced broadcast of the pairs
+    * admits (`BroadcastGate.maxRows` at the default key limit), the
+    * call fails fast naming that bound — split the query batch.
     *
     * Returns (query_id, neighbor_id, score, rank), rank 1..k,
     * (score desc, id asc). */
@@ -115,7 +126,39 @@ object Retrieval {
                k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
                corpusStats: Option[(Long, Double)] = None): DataFrame = {
     import graft.functions.{TextFunctions => TF}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import org.apache.spark.storage.StorageLevel
+    import graft.store.BroadcastGate
+    val spark = corpus.sparkSession
+    val corpusIdType = corpus.schema(corpusIdCol).dataType
+
+    // ONE bounded collect of the (query_id, term) pairs (r19, the
+    // index paths' one-collect discipline): the queries subtree — often
+    // itself a filtered corpus read — was evaluated twice (the distinct
+    // term broadcast + the scoring tail's qSide); both sides now rebuild
+    // as LocalRelations from the collected pairs. The term set must be
+    // exactly-deduplicated either way (qTerms feeds an INNER join, where
+    // a duplicate term would double tf), which the local distinct does.
+    // The pairs are broadcast below, so the collect stops one row past
+    // the broadcast ceiling and refuses — before the corpus is touched.
+    val qIdType = queries.schema(queryIdCol).dataType
+    val pairSchema = StructType(Seq(StructField("query_id", qIdType),
+      StructField("term", StringType)))
+    val maxPairs = BroadcastGate.maxRows(pairSchema, BroadcastGate.DefaultKeyLimit)
+    val qPairs = queries
+      .select(col(queryIdCol).as("query_id"),
+        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
+      .limit(maxPairs.toInt + 1)
+      .collect()
+    require(qPairs.length <= maxPairs,
+      s"bm25TopK: the query batch yields more than $maxPairs (query_id, " +
+        "term) pairs, the BroadcastGate ceiling (DefaultKeyLimit " +
+        s"${BroadcastGate.DefaultKeyLimit} rows, DefaultByteLimit " +
+        s"${BroadcastGate.DefaultByteLimit} bytes) they are broadcast " +
+        "under; split the query batch")
+    if (qPairs.isEmpty)
+      return emptyRanked(spark, qIdType, corpusIdType)
+
     val docsTokRaw = corpus.select(col(corpusIdCol).as("neighbor_id"),
       TF.tokens(lower(col(textCol))).as("toks"))
     val docsTok =
@@ -132,34 +175,11 @@ object Retrieval {
       // empty corpus (or all-empty docs): no postings can exist — return
       // the typed empty result rather than dividing by a null aggregate
       docsTok.unpersist(blocking = false)
-      return emptyRanked(corpus.sparkSession,
-        queries.schema(queryIdCol).dataType, corpus.schema(corpusIdCol).dataType)
+      return emptyRanked(spark, qIdType, corpusIdType)
     }
 
-    // ONE bounded collect of the (query_id, term) pairs (r19, the
-    // index paths' one-collect discipline): the queries subtree — often
-    // itself a filtered corpus read — was evaluated twice (the distinct
-    // term broadcast + the scoring tail's qSide); both sides now rebuild
-    // as LocalRelations from the collected pairs. The term set must be
-    // exactly-deduplicated either way (qTerms feeds an INNER join, where
-    // a duplicate term would double tf), which the local distinct does.
-    val qIdType = queries.schema(queryIdCol).dataType
-    val qPairs = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
-      .collect()
-    if (qPairs.isEmpty) {
-      docsTok.unpersist(blocking = false)
-      return emptyRanked(corpus.sparkSession, qIdType,
-        corpus.schema(corpusIdCol).dataType)
-    }
-    val spark = corpus.sparkSession
     val qSide = spark.createDataFrame(
-      java.util.Arrays.asList(qPairs: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id", qIdType),
-        org.apache.spark.sql.types.StructField("term",
-          org.apache.spark.sql.types.StringType))))
+      java.util.Arrays.asList(qPairs: _*), pairSchema)
     import spark.implicits._
     val qTerms = qPairs.map(_.getString(1)).distinct.toSeq.toDF("term")
 
@@ -177,11 +197,10 @@ object Retrieval {
 
     if (corpusStats.isDefined) ranked // lazy: stats given, single corpus scan
     else {
-      // EAGER: materialize the (Q·k)-row result, then free the corpus
-      // cache — the result DataFrame the caller composes reads its own
-      // small cache, never the corpus again.
-      val out = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
+      // EAGER: checkpoint the (Q·k)-row result, then free the corpus
+      // cache — the result the caller composes is a leaf over its own
+      // small blocks, never the corpus (or this plan) again.
+      val out = ranked.localCheckpoint()
       docsTok.unpersist(blocking = false)
       out
     }

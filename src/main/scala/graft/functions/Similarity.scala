@@ -678,6 +678,8 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: PlanSpec reads the eager
+    // pair generators' plans through the cache, which a checkpoint hides.
     verified.count()
     uvNeeded.unpersist(blocking = false)
     verified

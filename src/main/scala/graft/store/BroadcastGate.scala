@@ -63,9 +63,13 @@ private[graft] object BroadcastGate {
     case _ => 256L
   }
 
+  /** The most rows of `schema` a forced broadcast admits: `limit` keys,
+    * and no more than the byte budget. */
+  def maxRows(schema: StructType, limit: Long): Long =
+    math.min(limit, DefaultByteLimit / rowWidth(schema))
+
   def apply(df: DataFrame, keyCount: Long, limit: Long): DataFrame =
-    if (keyCount <= limit &&
-        keyCount * rowWidth(df.schema) <= DefaultByteLimit) broadcast(df)
+    if (keyCount <= maxRows(df.schema, limit)) broadcast(df)
     else df
 
   /** Restrict `pairs` (id_a, id_b, …) to rows touching `newIds` (one

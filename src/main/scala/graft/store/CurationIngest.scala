@@ -365,6 +365,13 @@ object CurationIngest {
     lineage
   }
 
+  /** The eager, plan-severing materialization of [[closeLineage]] and
+    * [[takedownLineage]]: a reliable checkpoint when the session has a
+    * checkpoint dir, else a local one. */
+  private def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   /** Transitive closure of accumulated one-hop lineage — the periodic
     * COMPACTION that turns [[ingestBatchOnce]]'s one-hop `keep_id` into
     * the canonical owner (the root of the keep chain, always a
@@ -404,9 +411,6 @@ object CurationIngest {
                    driverSolveMaxRows: Long =
                      graft.functions.Dedup.DriverSolveMaxEdges): DataFrame = {
     val spark = lineage.sparkSession
-    def cut(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // The emptiness probe rides the initial checkpoint as an observation
     // (r18): one job instead of checkpoint + isEmpty.
     val ptrObs = org.apache.spark.sql.Observation()
@@ -548,8 +552,10 @@ object CurationIngest {
     * Scale shape: the pointer-jump closure (⌈log₂ depth⌉ lineage-sized
     * joins) + two joins against the DELETE-sized id set + one
     * orphaned-group-sized min aggregate — the corpus never shuffles.
-    * Output is EAGER like closeLineage's (persisted + counted;
-    * unpersist when done). */
+    * Output is EAGER through closeLineage's checkpoint: plan-severed
+    * and SELF-CONTAINED; a local checkpoint's storage is released when
+    * the frame is garbage-collected (ContextCleaner), and `unpersist`
+    * is a harmless no-op. */
   def takedownLineage(lineage: DataFrame,
                       deletedIds: DataFrame): DataFrame = {
     val del = deletedIds.toDF("id").distinct()
@@ -563,7 +569,7 @@ object CurationIngest {
         "left_semi")
       .groupBy(col("keep_id"))
       .agg(min(col("id")).as("_new_root"))
-    val out = live
+    val out = cut(live
       .join(promos, Seq("keep_id"), "left")
       .withColumn("_promoted", col("_new_root").isNotNull)
       .withColumn("keep_id",
@@ -571,9 +577,7 @@ object CurationIngest {
       .withColumn("regime",
         when(col("_promoted") && col("id") === col("keep_id"),
           lit("promoted")).otherwise(col("regime")))
-      .drop("_new_root", "_promoted")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+      .drop("_new_root", "_promoted"))
     del.unpersist(blocking = false)
     closed.unpersist(blocking = false)
     out

@@ -442,6 +442,8 @@ object DedupIndex {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
+    // the LSH appends' count callsite; CurationIngest unpersists it.
     verified.count()
     candidates.unpersist(blocking = false)
     sigs.unpersist(blocking = false)

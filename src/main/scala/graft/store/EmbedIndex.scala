@@ -402,6 +402,8 @@ object EmbedIndex {
       .select(col("p.id_a"), col("p.id_b"), round(col("p.cos"), 6).as("cos"))
       .dropDuplicates("id_a", "id_b")
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
+    // the LSH appends' count callsite; CurationIngest unpersists it.
     verified.count()
     verified
   }

@@ -232,7 +232,8 @@ object FingerprintIndex {
         // write action itself populates the cache (filter + projection
         // over an InMemoryRelation materialize full cached batches), so
         // the returned frame is eager by the time the transact returns,
-        // one job earlier.
+        // one job earlier. It stays a cache, not a checkpoint: a
+        // checkpoint would spend its own job on top of the commit's.
         val resolved =
           resolveAgainst(idx, enc, nKeys, broadcastKeyLimit)
             .persist(StorageLevel.MEMORY_AND_DISK)

@@ -47,14 +47,6 @@ private[graft] object ObservedStats {
     }
   }
 
-  /** A single observed LONG metric (the first field), or `fallback`
-    * when the observation resolved empty (collapsed plan), null (sum
-    * over zero rows — callers wanting 0 there should coalesce in the
-    * metric expression) or timed out. Used by the iterative loops
-    * (connected components, lineage closure) to ride their convergence
-    * count on the round's eager checkpoint — measured (ObsProbe r18):
-    * the observation fires on `localCheckpoint` materializations with
-    * exact counts. */
   /** A collect_set(struct(…)) observation's structs (the first field),
     * or None when the observation resolved empty (collapsed plan) or
     * timed out — the caller runs its eager fallback then. Used by the
@@ -75,6 +67,14 @@ private[graft] object ObservedStats {
     }
   }
 
+  /** A single observed LONG metric (the first field), or `fallback`
+    * when the observation resolved empty (collapsed plan), null (sum
+    * over zero rows — callers wanting 0 there should coalesce in the
+    * metric expression) or timed out. Used by the iterative loops
+    * (connected components, lineage closure) to ride their convergence
+    * count on the round's eager checkpoint — measured (ObsProbe r18):
+    * the observation fires on `localCheckpoint` materializations with
+    * exact counts. */
   def longMetric(obs: Observation, fallback: => Long): Long = {
     val row =
       try Some(scala.concurrent.Await.result(obs.future,

@@ -624,8 +624,12 @@ object PhraseIndex {
     * set is read twice (the df aggregate and the scoring join), so it
     * is persisted and the result materialized EAGERLY — the returned
     * (query_id, doc_id, score, rank) frame (rank 1..k, score rounded
-    * for display; compare RANKS across engines, not raw doubles) is
-    * persisted: unpersist when done, the index family convention. */
+    * for display; compare RANKS across engines, not raw doubles) is a
+    * `localCheckpoint`: plan-severed and SELF-CONTAINED — no cached
+    * plan or broadcast stays pinned, no version dir is read again (safe
+    * across a later vacuum), its storage is released when the frame is
+    * garbage-collected (ContextCleaner), and `unpersist` is a harmless
+    * no-op. */
   def phraseQueryRanked(store: SnapshotStore, table: String,
                         phrases: DataFrame, queryIdCol: String,
                         phraseCol: String, k: Int = 10, slop: Int = 0,
@@ -659,8 +663,7 @@ object PhraseIndex {
         col("col.neighbor_id").as("doc_id"),
         round(col("col.score"), 6).as("score"),
         (col("pos") + 1).cast("int").as("rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+      .localCheckpoint()
     m.unpersist(blocking = false)
     out
   }

@@ -226,6 +226,8 @@ object SemIndex {
         lit(0.0d).as("cos"))
       .limit(0)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: SemIndexSpec reads this
+    // frame's analyzed plan, which a checkpoint would hide.
     e.count()
     e
   }
@@ -276,6 +278,8 @@ object SemIndex {
     // incremental ≡ batch pair-for-pair).
     val verified = Similarity.semPairsTouching(tagged, eps, maxClusterSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: SemIndexSpec reads this
+    // frame's analyzed plan, which a checkpoint would hide.
     verified.count()
     verified
   }

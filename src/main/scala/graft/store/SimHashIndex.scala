@@ -297,6 +297,8 @@ object SimHashIndex {
         broadcastKeyLimit)
       .select(col("id_a"), col("id_b"), col("hamming"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
+    // the LSH appends' count callsite; CurationIngest unpersists it.
     verified.count()
     verified
   }

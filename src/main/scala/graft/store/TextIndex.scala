@@ -1365,7 +1365,14 @@ object TextIndex {
     *
     * MaxScore is an OPTIMIZATION of the exact path, never a semantic
     * switch: stale/missing champions (or a pre-bounds champion table)
-    * fall back to [[query]] silently — correct, just reads more. */
+    * fall back to [[query]] silently — correct, just reads more.
+    *
+    * The bounded path's result is EAGER, a `localCheckpoint`:
+    * materialized, plan-severed and SELF-CONTAINED — it holds no cached
+    * plan (and so none of the query's broadcasts), reads no version dir
+    * (safe across a later vacuum), its storage is released when the
+    * frame is garbage-collected (ContextCleaner), and `unpersist` is a
+    * harmless no-op. The fallbacks return [[query]]'s lazy frame. */
   def queryMaxScore(store: SnapshotStore, indexTable: String,
                     queries: DataFrame, queryIdCol: String,
                     queryTextCol: String, k: Int = 10,
@@ -1468,6 +1475,11 @@ object TextIndex {
             .collect().toSeq
             .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
         }
+        // one row per term, the fallback's first() on the driver: a
+        // repeated term (stats that ever stop being constant per term)
+        // would fan out the dfLookup join and double-count its BM25
+        // contribution
+        .distinctBy(_._1)
       val ub: Map[String, Double] = stats.map { case (t, dfL, maxTfL, minDlI) =>
         val df = dfL.toDouble
         val maxTf = maxTfL.toDouble
@@ -1595,8 +1607,7 @@ object TextIndex {
         hits.join(broadcast(dfLookup), Seq("term")),
         queries, queryIdCol, queryTextCol, nDocs, avgdl, k, k1, b,
         restrictTo = Some(candidates), qSideOpt = Some(qSide))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ranked.count() // EAGER: helper caches release on return
+        .localCheckpoint() // EAGER: helper caches release on return
       candidates.unpersist(blocking = false)
       (ranked, Some(io))
     }
