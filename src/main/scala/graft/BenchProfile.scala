@@ -14,7 +14,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * of the weather; wall time is printed for context only.
   *
   * Usage: runMain graft.BenchProfile [substringFilter,...]
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as Bench).
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 4, as Verify).
   * Prints one line per query:
   *   PROFILE q=<name> jobs=N stages=N tasks=N shufW=bytes shufR=bytes
   *           input=bytes spillMem=bytes spillDisk=bytes wall_ms=N
@@ -22,7 +22,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 object BenchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val filter = args.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     def selected(name: String): Boolean =
       filter.isEmpty || filter.exists(name.contains)

@@ -7,75 +7,17 @@ import graft.store._
   * no maintenance; a lakehouse of delta-chained index tables does).
   *
   * [[maintainAll]] is the ONE call a scheduler runs: every persistent
-  * index in this library identifies itself through its committed
-  * metadata prefix, so the store can be maintained without the operator
-  * keeping a registry of which table is which index type — add an
+  * index in this library identifies itself through a committed
+  * metadata marker, and one ordered marker registry
+  * ([[graft.store.ChainedIndex.kinds]]) maps the marker to the index's
+  * maintenance and takedown entry points — for [[maintainAll]],
+  * [[deleteDocs]], [[deleteDocsOnce]] and CurationIngest alike. The
+  * operator keeps no list of which table is which index type: add an
   * index table, and the next maintenance cycle covers it. */
 object Graft {
 
   /** What [[maintainAll]] did to one table — returned for logs/specs. */
   final case class MaintenanceAction(table: String, kind: String)
-
-  /** Per-type dispatch row: metadata marker key → (kind tag, handler).
-    * Ordered: champion tables carry `text.`-prefixed keys too and must
-    * match their own marker first (they are DERIVED caches owned by
-    * their postings table's maintenance — never maintained directly). */
-  private type Handler = (SnapshotStore, String, Int, Option[Double]) => Option[String]
-
-  /** Fold the chain past `maxChainLength`, then vacuum — the shared
-    * shape of every compact-only index. Pending TOMBSTONES fold
-    * unconditionally: a takedown's physical removal must not wait out
-    * the chain-length policy (DeltaChain's takedown contract). */
-  private def foldAndVacuum(kind: String, partsKey: String,
-                            compact: (SnapshotStore, String) => Boolean,
-                            vacuum: (SnapshotStore, String) => Unit): Handler =
-    (store, table, maxChainLength, _) => {
-      val meta = store.metaForVersion(table, store.currentVersion(table))
-      val tombs = meta.get(s"$partsKey.tombs").exists(_.trim.nonEmpty)
-      val len = meta.get(partsKey)
-        .map(p => if (p.trim.isEmpty) 1 else p.split(",").length + 1)
-        .getOrElse(1)
-      if (len > maxChainLength || tombs) compact(store, table)
-      vacuum(store, table)
-      Some(kind)
-    }
-
-  /** Text-index maintenance (both layouts): champion policy is
-    * COMMITTED on the champion table (its m) — refresh at that m when
-    * stale; a table that never had champions built gets none forced on
-    * it. TextIndex.maintain is layout-aware (positional tables fold
-    * through PhraseIndex, positions preserved). */
-  private def textMaintain(kind: String): Handler =
-    (store, table, maxChainLength, _) => {
-      val ct = s"${table}__champ"
-      val cv = store.currentVersion(ct)
-      val championM =
-        if (cv > 0) store.metaForVersion(ct, cv).get("text.champ.m").map(_.toInt)
-        else None
-      TextIndex.maintain(store, table, maxChainLength, championM)
-      Some(kind)
-    }
-
-  private val handlers: Seq[(String, Handler)] = Seq(
-    // derived champion cache: refreshed by its postings table's maintain
-    "text.champ.forVersion" -> ((_, _, _, _) => None),
-    "text.parts" -> textMaintain("text"),
-    "semdedup.parts" -> { (store, table, maxChainLength, retrainFraction) =>
-      SemIndex.maintain(store, table, maxChainLength, retrainFraction)
-      Some("sem")
-    },
-    "fpdedup.parts" -> foldAndVacuum("fingerprint", "fpdedup.parts",
-      FingerprintIndex.compactIndex, FingerprintIndex.vacuumIndex),
-    "dedup.parts" -> foldAndVacuum("minhash", "dedup.parts",
-      DedupIndex.compactIndex, DedupIndex.vacuumIndex),
-    "shdedup.parts" -> foldAndVacuum("simhash", "shdedup.parts",
-      SimHashIndex.compactIndex, SimHashIndex.vacuumIndex),
-    "embdedup.parts" -> foldAndVacuum("embed", "embdedup.parts",
-      EmbedIndex.compactIndex, EmbedIndex.vacuumIndex),
-    "ivfpq.parts" -> foldAndVacuum("vector", "ivfpq.parts",
-      VectorIndex.compactIndex, VectorIndex.vacuumIndex),
-    // the unified positional store (r17) shares the text handler
-    "phrase.parts" -> textMaintain("phrase"))
 
   /** Apply every index's maintenance policy across the whole store in
     * one idempotent call — what an operator actually schedules (cron /
@@ -113,10 +55,12 @@ object Graft {
                   retrainAppendFraction: Option[Double] = Some(0.5))
       : Seq[MaintenanceAction] =
     store.tables.flatMap { table =>
-      val meta = store.metaForVersion(table, store.currentVersion(table))
-      handlers.collectFirst { case (marker, h) if meta.contains(marker) => h }
-        .flatMap(h => h(store, table, maxChainLength, retrainAppendFraction))
-        .map(kind => MaintenanceAction(table, kind))
+      ChainedIndex.kindOf(store, table).flatMap { k =>
+        k.maintain.map { m =>
+          m(store, table, maxChainLength, retrainAppendFraction)
+          MaintenanceAction(table, k.tag)
+        }
+      }
     }
 
   /** Build THE text index for a corpus — the default path (r18,
@@ -142,57 +86,20 @@ object Graft {
                      corpusTag: Option[String] = None): Long =
     PhraseIndex.build(store, table, corpus, textCol, idCol, corpusTag)
 
-  /** Per-type TAKEDOWN dispatch: marker key → deleteDocs entry point.
-    * Champion tables are derived caches — a delete on the postings
-    * table stales them; deleting ON one is a caller error. The unified
-    * positional store routes through TextIndex.deleteDocs, which is
-    * layout-aware like its other entry points. */
-  private val deleters
-      : Seq[(String, (SnapshotStore, String, org.apache.spark.sql.DataFrame) => Long)] = Seq(
-    "text.champ.forVersion" -> ((_, table, _) =>
-      throw new IllegalArgumentException(
-        s"$table is a derived champion cache — delete on its postings " +
-          "table; the staleness rule propagates")),
-    "text.parts" -> (TextIndex.deleteDocs _),
-    "phrase.parts" -> (TextIndex.deleteDocs _),
-    "fpdedup.parts" -> (FingerprintIndex.deleteDocs _),
-    "dedup.parts" -> (DedupIndex.deleteDocs _),
-    "shdedup.parts" -> (SimHashIndex.deleteDocs _),
-    "embdedup.parts" -> (EmbedIndex.deleteDocs _),
-    "semdedup.parts" -> (SemIndex.deleteDocs _),
-    "ivfpq.parts" -> (VectorIndex.deleteDocs _))
-
   /** TAKEDOWN across the store: delete `ids` (a single-column frame of
     * document/vector ids) from the named index table, dispatched by the
     * committed metadata marker exactly like [[maintainAll]] — the one
     * call an operator wires a takedown queue to, per affected table.
     * O(ids) tombstone commit; serving reflects the delete immediately,
-    * the next [[maintainAll]] cycle folds the bytes off disk. Throws on
-    * tables that are not a known index (plain snapshot tables delete
-    * through [[graft.operators.Mutations]] M4/M5). */
+    * the next [[maintainAll]] cycle folds the bytes off disk. Text
+    * tables (both layouts) route to the layout-aware TextIndex entry
+    * point. Throws on a derived champion cache (delete on its postings
+    * table; the staleness rule propagates) and on tables that are not a
+    * known index (plain snapshot tables delete through
+    * [[graft.operators.Mutations]] M4/M5). */
   def deleteDocs(store: SnapshotStore, table: String,
-                 ids: org.apache.spark.sql.DataFrame): Long = {
-    val meta = store.metaForVersion(table, store.currentVersion(table))
-    deleters.collectFirst { case (marker, d) if meta.contains(marker) => d }
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table carries no known index marker — takedown applies to the " +
-          "persistent index family; mutate plain tables via Mutations"))
-      .apply(store, table, ids)
-  }
-
-  private val onceDeleters: Seq[(String,
-      (SnapshotStore, String, org.apache.spark.sql.DataFrame, String, Long) => Boolean)] = Seq(
-    "text.champ.forVersion" -> ((_, table, _, _, _) =>
-      throw new IllegalArgumentException(
-        s"$table is a derived champion cache — delete on its postings table")),
-    "text.parts" -> (TextIndex.deleteDocsOnce _),
-    "phrase.parts" -> (TextIndex.deleteDocsOnce _),
-    "fpdedup.parts" -> (FingerprintIndex.deleteDocsOnce _),
-    "dedup.parts" -> (DedupIndex.deleteDocsOnce _),
-    "shdedup.parts" -> (SimHashIndex.deleteDocsOnce _),
-    "embdedup.parts" -> (EmbedIndex.deleteDocsOnce _),
-    "semdedup.parts" -> (SemIndex.deleteDocsOnce _),
-    "ivfpq.parts" -> (VectorIndex.deleteDocsOnce _))
+                 ids: org.apache.spark.sql.DataFrame): Long =
+    indexKind(store, table).deleteDocs(store, table, ids)
 
   /** [[deleteDocs]] under the shared exactly-once (streamId, batchId)
     * watermark — what a TAKEDOWN QUEUE consumer (foreachBatch over a
@@ -205,14 +112,14 @@ object Graft {
     * .tombNextOnce]]). Returns true if applied, false on replay. */
   def deleteDocsOnce(store: SnapshotStore, table: String,
                      ids: org.apache.spark.sql.DataFrame,
-                     streamId: String, batchId: Long): Boolean = {
-    val meta = store.metaForVersion(table, store.currentVersion(table))
-    onceDeleters.collectFirst { case (marker, d) if meta.contains(marker) => d }
-      .getOrElse(throw new IllegalArgumentException(
+                     streamId: String, batchId: Long): Boolean =
+    indexKind(store, table).deleteDocsOnce(store, table, ids, streamId, batchId)
+
+  private def indexKind(store: SnapshotStore, table: String): ChainedIndex.Kind =
+    ChainedIndex.kindOf(store, table).getOrElse(
+      throw new IllegalArgumentException(
         s"$table carries no known index marker — takedown applies to the " +
           "persistent index family; mutate plain tables via Mutations"))
-      .apply(store, table, ids, streamId, batchId)
-  }
 
   /** Wire a TAKEDOWN QUEUE to the whole store: every micro-batch of
     * deletion ids (a single-column stream — one shared id domain across

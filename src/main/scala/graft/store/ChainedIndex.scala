@@ -1,0 +1,216 @@
+package graft.store
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
+
+/** The [[DeltaChain]] lifecycle of a compact-only persistent index,
+  * written once for the six that share it ([[DedupIndex]],
+  * [[SimHashIndex]], [[EmbedIndex]], [[SemIndex]], [[FingerprintIndex]],
+  * [[VectorIndex]]): the live read, the tombstone TAKEDOWN (plain and
+  * exactly-once), the on-demand fold, the chain-aware vacuum and the
+  * maintenance fold policy. An index keeps only what is its own —
+  * encode, keys, verify, parameters — and declares here its chain and
+  * the physical layout of its fold commit.
+  *
+  * [[TextIndex]] and [[PhraseIndex]] are not members: their deletes
+  * adjust corpus statistics and carry payload tombstones, and their
+  * maintenance refreshes champions. They join the marker registry
+  * ([[ChainedIndex.kinds]]) only. */
+trait ChainedIndex {
+
+  /** The index's delta chain; its `partsKey` is the table's marker. */
+  private[store] def chain: DeltaChain
+
+  /** Physical layout of a fold commit: sort key, zone-map columns,
+    * bloom columns. */
+  protected def foldSortKey: String = "id"
+  protected def foldStatsCols: Seq[String] = Nil
+  protected def foldBloomCols: Seq[String] = Nil
+
+  /** Safety check a takedown runs on the committed metadata before it
+    * writes anything (VectorIndex refuses a foreign encoding scheme). */
+  protected def checkDelete(meta: Map[String, String], table: String): Unit = ()
+
+  /** The live index contents (delta-chain union, tombstones applied) as
+    * of the current version. */
+  def load(store: SnapshotStore, table: String): DataFrame = {
+    val v = store.currentVersion(table)
+    chain.load(store, table, v, store.metaForVersion(table, v))
+  }
+
+  /** TAKEDOWN: delete rows by id (`ids` is a single-column frame of the
+    * ids the index was built with) — an O(ids) tombstone commit
+    * ([[DeltaChain]] epoch rule). A deleted id goes invisible to every
+    * read and append path immediately and its bytes leave disk at the
+    * next fold; pairs already emitted stand (they were correct when
+    * computed), and a re-appended id serves again from its new rows.
+    * The `*_deleted` oracle queries pin serve ≡ rebuild-without-docs.
+    * Idempotent. Returns the committed tombstone version. */
+  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
+    tombstone[Nothing](store, table) { (v, meta) =>
+      Right(chain.tombNext(v, meta, ids.toDF(chain.tombIdCol)))
+    }.merge
+
+  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
+    * watermark ([[DeltaChain.tombNextOnce]]'s correctness rationale: a
+    * redelivered delete batch would out-epoch rows re-ingested since).
+    * Returns true if applied, false if skipped as a replay. */
+  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
+                     streamId: String, batchId: Long): Boolean =
+    tombstone[Unit](store, table) { (v, meta) =>
+      chain.tombNextOnce(v, meta, ids.toDF(chain.tombIdCol), streamId, batchId)
+    }.isRight
+
+  /** A tombstone commit under the table lock, sorted and zoned by the
+    * id column it holds. */
+  private def tombstone[A](store: SnapshotStore, table: String)
+      (rows: (Long, Map[String, String]) => Either[A, (DataFrame, Map[String, String])])
+      : Either[A, Long] =
+    store.transactMeta[A](table, sortKey = Some(chain.tombIdCol),
+        statsCols = Seq(chain.tombIdCol)) {
+      val v = store.currentVersion(table)
+      if (v == 0)
+        throw new IllegalStateException(s"$table: build the index before " +
+          s"deleting (${getClass.getSimpleName.stripSuffix("$")}.build)")
+      val meta = store.metaForVersion(table, v)
+      checkDelete(meta, table)
+      rows(v, meta)
+    }
+
+  /** On-demand chain fold into a full snapshot (maintenance-triggered;
+    * appends also fold themselves every `compactEvery`). Returns true if
+    * a compacting commit happened, false if already compact — IDEMPOTENT,
+    * and the commit is the store's atomic version flip, so a crash
+    * mid-compaction leaves the old chain fully live. */
+  def compactIndex(store: SnapshotStore, table: String): Boolean =
+    store.transactMeta[Unit](table, sortKey = Some(foldSortKey),
+        statsCols = foldStatsCols, bloomCols = foldBloomCols) {
+      val v = store.currentVersion(table)
+      if (v == 0) Left(())
+      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
+        .toRight(())
+    }.isRight
+
+  /** Drop every version dir NOT referenced by the current version's
+    * chain (data members and pending tombstones) — the chain-aware
+    * replacement for SnapshotStore.vacuum, which assumes every version
+    * is a full snapshot. Time travel to the dropped versions is gone. */
+  def vacuumIndex(store: SnapshotStore, table: String): Unit =
+    store.dropVersions(table,
+      store.versions(table).toSet -- chain.liveVersions(store, table))
+
+  /** The maintenance fold policy: fold when the current chain has more
+    * than `maxChainLength` data members, or whenever tombstones are
+    * pending — a takedown's physical removal must not wait out the
+    * length policy. */
+  private[store] def foldDue(store: SnapshotStore, table: String,
+                             maxChainLength: Int): Boolean = {
+    val v = store.currentVersion(table)
+    val meta = store.metaForVersion(table, v)
+    chain.chainOf(meta, v).length > maxChainLength || chain.tombsPending(meta)
+  }
+}
+
+object ChainedIndex {
+
+  /** One row of the marker registry: the committed metadata key that
+    * identifies a table's index, the kind tag [[graft.Graft.maintainAll]]
+    * reports, and the kind's store-wide entry points. `maintain` takes
+    * (store, table, maxChainLength, retrainAppendFraction); None marks
+    * a derived table that is never maintained directly. `index` is the
+    * shared lifecycle for the compact-only kinds. */
+  private[graft] final case class Kind(
+      marker: String, tag: String,
+      maintain: Option[(SnapshotStore, String, Int, Option[Double]) => Unit],
+      deleteDocs: (SnapshotStore, String, DataFrame) => Long,
+      deleteDocsOnce: (SnapshotStore, String, DataFrame, String, Long) => Boolean,
+      index: Option[ChainedIndex] = None)
+
+  /** A compact-only kind: the fold policy, then the chain-aware vacuum. */
+  private def chained(tag: String, idx: ChainedIndex): Kind =
+    Kind(idx.chain.partsKey, tag,
+      Some { (store, table, maxChainLength, _) =>
+        if (idx.foldDue(store, table, maxChainLength))
+          idx.compactIndex(store, table)
+        idx.vacuumIndex(store, table)
+      },
+      idx.deleteDocs, idx.deleteDocsOnce, Some(idx))
+
+  /** Both text layouts route to the layout-aware TextIndex entry points.
+    * Champion policy is COMMITTED on the champion table (its m): refresh
+    * at that m when stale; a table that never had champions built gets
+    * none forced on it. */
+  private def text(marker: String, tag: String): Kind =
+    Kind(marker, tag,
+      Some { (store, table, maxChainLength, _) =>
+        val ct = TextIndex.champTable(table)
+        val cv = store.currentVersion(ct)
+        val championM =
+          if (cv > 0) store.metaForVersion(ct, cv).get("text.champ.m").map(_.toInt)
+          else None
+        TextIndex.maintain(store, table, maxChainLength, championM)
+      },
+      TextIndex.deleteDocs, TextIndex.deleteDocsOnce)
+
+  private def derivedCache(table: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$table is a derived champion cache — delete on its postings " +
+        "table; the staleness rule propagates")
+
+  /** The registry, in match order. Champion tables carry `text.`-prefixed
+    * keys too and must match their own marker first: they are DERIVED
+    * caches, maintained by their postings table's maintenance and never
+    * deleted from directly. */
+  private[graft] val kinds: Seq[Kind] = Seq(
+    Kind("text.champ.forVersion", "champion", None,
+      (_, table, _) => derivedCache(table),
+      (_, table, _, _, _) => derivedCache(table)),
+    text("text.parts", "text"),
+    chained("sem", SemIndex).copy(maintain = Some(SemIndex.maintain _)),
+    chained("fingerprint", FingerprintIndex),
+    chained("minhash", DedupIndex),
+    chained("simhash", SimHashIndex),
+    chained("embed", EmbedIndex),
+    chained("vector", VectorIndex),
+    // the unified positional store (r17)
+    text("phrase.parts", "phrase"))
+
+  /** The registry row of `table`'s committed marker (None: a plain
+    * snapshot table, or a table not built yet). Metadata carries
+    * forward, so a table rebuilt as another compact-only kind keeps the
+    * old kind's stale chain key; it throws rather than let a fold or
+    * vacuum follow the wrong chain and drop live members. */
+  private[graft] def kindOf(store: SnapshotStore, table: String): Option[Kind] = {
+    val meta = store.metaForVersion(table, store.currentVersion(table))
+    val chained = kinds.filter(k => k.index.isDefined && meta.contains(k.marker))
+    if (chained.size > 1) throw new IllegalStateException(s"$table carries " +
+      s"compact-only markers ${chained.map(_.marker).mkString(", ")} — cannot pick one")
+    kinds.find(k => meta.contains(k.marker))
+  }
+
+  /** The compact-only index behind `table`, resolved through the
+    * registry; throws when the table is not one. */
+  private[store] def of(store: SnapshotStore, table: String): ChainedIndex =
+    kindOf(store, table).flatMap(_.index).getOrElse(
+      throw new IllegalArgumentException(
+        s"$table carries no compact-only index marker"))
+
+  /** Stream wiring shared by the pair-returning indexes: each non-empty
+    * micro-batch goes through `appendOnce` exactly once (None = a
+    * replayed batch, whose pairs were already delivered) and its pairs
+    * to `onPairs`, unpersisted after the callback returns — materialize
+    * inside it. Caller stops the query. */
+  private[store] def pairStream(stream: DataFrame, checkpointDir: String,
+                                onPairs: (DataFrame, Long) => Unit)
+                               (appendOnce: (DataFrame, Long) => Option[DataFrame])
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) appendOnce(batch, batchId).foreach { pairs =>
+          try onPairs(pairs, batchId)
+          finally pairs.unpersist(blocking = false)
+        }
+      }
+      .start()
+}

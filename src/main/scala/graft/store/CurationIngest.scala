@@ -595,38 +595,31 @@ object CurationIngest {
     * [[closeLineage]]: chain fan-in says how overdue compaction is, the
     * watermarks say which micro-batch each index has durably applied (a
     * gap between the two tables = a crash between the commits, repaired
-    * by replay), and rows sizes the next append's scan floor. Cost: one
-    * count per table (the chain union — `store.load` alone would
-    * undercount a delta-chained table); metadata reads are file I/O,
-    * no jobs. */
+    * by replay), and rows sizes the next append's scan floor.
+    * `chainLength` is the read fan-in (data plus pending tombstone
+    * members), `rows` the VISIBLE rows. Cost: one count per table;
+    * metadata reads are file I/O, no jobs. */
   def stats(store: SnapshotStore, prefix: String): Seq[IndexTableStats] =
     Seq(fpTable(prefix), ndTable(prefix)).map { table =>
       val v = store.currentVersion(table)
       val meta = store.metaForVersion(table, v)
-      // A table's meta carries exactly ONE delta-chain parts key (its
-      // own index's). Metadata is carried forward by every commit, so
-      // guard against a second one ever landing rather than letting an
-      // arbitrary Map-iteration winner report a wrong chain.
-      val partsKeys = meta.keys.filter(_.endsWith(".parts")).toSeq.sorted
-      if (partsKeys.size > 1)
-        throw new IllegalStateException(
-          s"$table carries ${partsKeys.size} delta-chain keys " +
-            s"(${partsKeys.mkString(", ")}) — stats cannot pick one")
-      val chain = partsKeys.headOption.flatMap(meta.get).filter(_.nonEmpty)
-        .map(_.split(",").toSeq.map(_.toLong)).getOrElse(Seq.empty) :+ v
-      val rows =
-        if (v == 0) 0L
-        else chain.map(store.loadVersion(table, _)).reduce(_ unionByName _).count()
+      val (chainLength, rows) =
+        if (v == 0) (1, 0L)
+        else {
+          val chain = ChainedIndex.of(store, table).chain
+          (chain.fanIn(meta, v), chain.load(store, table, v, meta).count())
+        }
       val wm = meta.collect {
         case (k, value) if k.startsWith("stream.") && k.endsWith(".lastBatchId") =>
           k.stripPrefix("stream.").stripSuffix(".lastBatchId") -> value.toLong
       }
-      IndexTableStats(table, v, chain.length, rows, wm.toMap)
+      IndexTableStats(table, v, chainLength, rows, wm.toMap)
     }
 
   /** Thresholds for [[maintain]] — when the operational [[stats]] say a
     * table's delta fan-in has grown past `maxChainLength`, it is folded
-    * into a full snapshot; `vacuum` then drops the dead version dirs.
+    * into a full snapshot (a table with pending tombstones folds
+    * whatever its length); `vacuum` then drops the dead version dirs.
     *
     * `vacuum = true` is only safe once every outstanding append's
     * lineage frame has been MATERIALIZED by its consumer (the
@@ -647,12 +640,13 @@ object CurationIngest {
   /** The scheduled-maintenance entry point that CONSUMES [[stats]] — the
     * missing wiring between the pipeline's introspection and its upkeep
     * operators: read both index tables' operational stats, fold any
-    * chain at/past `policy.maxChainLength` into a full snapshot
-    * (amortizing read fan-in the way the per-append compactEvery does,
-    * but on an operator's schedule instead of a fixed stride), then
-    * chain-aware-vacuum the dead dirs. ([[closeLineage]] stays a
-    * separate call: lineage frames live with the ingest's consumer, not
-    * in the store — close them where they are accumulated.)
+    * chain at/past `policy.maxChainLength` or with pending tombstones
+    * into a full snapshot (amortizing read fan-in the way the
+    * per-append compactEvery does, but on an operator's schedule
+    * instead of a fixed stride), then chain-aware-vacuum the dead dirs.
+    * ([[closeLineage]] stays a separate call: lineage frames live with
+    * the ingest's consumer, not in the store — close them where they
+    * are accumulated.)
     *
     * Safety: each fold is one atomic version flip (idempotent — a
     * re-run on a compact table is a no-op), vacuum only ever drops dirs
@@ -664,17 +658,12 @@ object CurationIngest {
                policy: MaintenancePolicy = MaintenancePolicy())
       : MaintenanceReport = {
     val before = stats(store, prefix)
-    val compacted = before
-      .filter(_.chainLength >= policy.maxChainLength)
-      .map(_.table)
-      .filter { table =>
-        if (table == fpTable(prefix)) FingerprintIndex.compactIndex(store, table)
-        else regime match {
-          case _: SimHashRegime => SimHashIndex.compactIndex(store, table)
-          case _: MinHashRegime => DedupIndex.compactIndex(store, table)
-          case _: EmbedRegime => EmbedIndex.compactIndex(store, table)
-        }
-      }
+    val compacted = indexes(store, prefix).filter { case (table, index) =>
+      // the shared fold policy one member earlier: "at/past
+      // maxChainLength" is "past maxChainLength - 1"
+      index.foldDue(store, table, policy.maxChainLength - 1) &&
+        index.compactIndex(store, table)
+    }.map(_._1)
     if (policy.vacuum) vacuum(store, prefix, regime)
     MaintenanceReport(compacted, policy.vacuum, before, stats(store, prefix))
   }
@@ -683,14 +672,17 @@ object CurationIngest {
     * every outstanding append have been consumed — see the
     * consume-before-vacuum contract). */
   def vacuum(store: SnapshotStore, prefix: String,
-             regime: NearDupRegime): Unit = {
-    FingerprintIndex.vacuumIndex(store, fpTable(prefix))
-    regime match {
-      case _: SimHashRegime => SimHashIndex.vacuumIndex(store, ndTable(prefix))
-      case _: MinHashRegime => DedupIndex.vacuumIndex(store, ndTable(prefix))
-      case _: EmbedRegime => EmbedIndex.vacuumIndex(store, ndTable(prefix))
+             regime: NearDupRegime): Unit =
+    indexes(store, prefix).foreach { case (table, index) =>
+      index.vacuumIndex(store, table)
     }
-  }
+
+  /** The built index tables, resolved through the marker registry
+    * (`regime` is never consulted). */
+  private def indexes(store: SnapshotStore, prefix: String)
+      : Seq[(String, ChainedIndex)] =
+    Seq(fpTable(prefix), ndTable(prefix)).filter(store.exists)
+      .map(t => t -> ChainedIndex.of(store, t))
 
   /** Keep the pipeline current from a document stream: each micro-batch
     * runs the full fingerprint → near-dup gate exactly once; its lineage

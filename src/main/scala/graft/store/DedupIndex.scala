@@ -101,8 +101,9 @@ import graft.functions.Dedup
   * all batches (they are join keys and pair members). Pair outputs match
   * [[Dedup.nearDuplicatePairs]]: (id_a, id_b, jaccard) with id_a < id_b,
   * jaccard ≥ threshold, EAGER (persisted + materialized — unpersist when
-  * done). */
-object DedupIndex {
+  * done). Takedown, fold and vacuum are the shared [[ChainedIndex]]
+  * lifecycle. */
+object DedupIndex extends ChainedIndex {
 
   private val P = "dedup." // metadata key prefix
 
@@ -135,7 +136,7 @@ object DedupIndex {
   // Canonical columns: pre-r14 tables carry the stored `bks` key column;
   // projecting every chain member keeps mixed old-fat/new-slim chains
   // unioning cleanly, and the next compaction rewrites the table slim.
-  private val chain = new DeltaChain(s"${P}parts", Seq("id", "h_arr"))
+  private[store] val chain = new DeltaChain(s"${P}parts", Seq("id", "h_arr"))
 
   /** Index rows for `df`: the distinct sorted shingle hashes, from which
     * everything else (signature, band keys) is recomputed in-expression —
@@ -160,13 +161,6 @@ object DedupIndex {
         s"${P}shingleN" -> shingleN.toString,
         s"${P}k" -> k.toString,
         s"${P}bands" -> bands.toString))
-
-  /** The live index contents (delta-chain union) as of the current
-    * version. */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
-  }
 
   /** Dedup `batch` against the indexed corpus AND itself, then append its
     * encodings as an O(batch) delta version. Returns the new near-dup
@@ -462,69 +456,10 @@ object DedupIndex {
                          threshold: Double = 0.5,
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          appendBatchOnce(store, table, batch, textCol, idCol,
-            streamId, batchId, threshold).foreach { pairs =>
-            try onPairs(pairs, batchId)
-            finally pairs.unpersist(blocking = false)
-          }
-        }
-      }
-      .start()
-
-  /** On-demand chain fold into a full snapshot (maintenance-triggered;
-    * appends also fold themselves every `compactEvery`). Returns true if
-    * a compacting commit happened, false if already compact — IDEMPOTENT,
-    * and the commit is the store's atomic version flip, so a crash
-    * mid-compaction leaves the old chain fully live. */
-  /** TAKEDOWN: delete documents from the minhash index — an O(ids)
-    * tombstone commit ([[DeltaChain]] epoch rule). A deleted id's
-    * signature goes invisible immediately (it stops pairing against
-    * future batches — `dedup_minhash_deleted_oracle` pins serve ≡
-    * rebuild-without-docs), and its bytes leave disk at the next fold.
-    * Pairs already emitted naturally stand (they were correct when
-    * computed — the incremental family's history contract). A
-    * re-appended id pairs again from its new rows. Idempotent. */
-  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
-    store.transactMeta[Nothing](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the dedup index before deleting (DedupIndex.build)")
-      Right(chain.tombNext(v, store.metaForVersion(table, v), ids.toDF("id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]). True if applied. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the dedup index before deleting (DedupIndex.build)")
-      chain.tombNextOnce(v, store.metaForVersion(table, v), ids.toDF("id"),
-        streamId, batchId)
-    }.isRight
-
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
-    }.isRight
-
-  /** Drop every version dir NOT referenced by the current delta chain —
-    * see VectorIndex.vacuumIndex. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
+    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
+      appendBatchOnce(store, table, batch, textCol, idCol, streamId, batchId,
+        threshold)
+    }
 
   private def paramsFrom(meta: Map[String, String], table: String)
       : (Int, Int, Int) = {

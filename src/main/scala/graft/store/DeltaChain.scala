@@ -3,8 +3,10 @@ package graft.store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
-/** Delta-chain versioning over a [[SnapshotStore]] table, shared by the
-  * persistent indexes (VectorIndex's IVFPQ codes, DedupIndex's band keys).
+/** Delta-chain versioning over a [[SnapshotStore]] table — the one
+  * parser of a chained table's `*.parts` metadata. The compact-only
+  * indexes use it through [[ChainedIndex]]; [[TextIndex]] (postings and
+  * champion chains) and [[PhraseIndex]] use it directly.
   *
   * A chained table's version directory holds only that commit's DELTA
   * rows; the version's metadata records (under `partsKey`) the parent
@@ -58,11 +60,12 @@ import org.apache.spark.sql.functions.{col, lit}
   * Physical removal happens at the next FOLD (compaction, retrain, or
   * any full-snapshot rewrite): the fold unions the chain through the
   * visibility filter, so tombstoned bytes leave disk and both keys
-  * reset — the takedown completes. [[graft.Graft.maintainAll]] folds a
-  * chain with pending tombstones unconditionally (a takedown must not
-  * wait out `maxChainLength`). Tombstone members count toward the chain
-  * length (they add read fan-in like any member) and are kept by the
-  * chain-aware vacuum until the fold retires them.
+  * reset — the takedown completes. Every maintenance fold policy
+  * ([[ChainedIndex.foldDue]], TextIndex's own) folds a chain with
+  * pending tombstones unconditionally (a takedown must not wait out
+  * `maxChainLength`). Tombstone members count toward the chain length
+  * ([[fanIn]]) and are kept by the chain-aware vacuum until the fold
+  * retires them.
   *
   * Scale shape of the visibility filter: the tombstone side is the
   * accumulated UNRESOLVED takedown set — bounded by delete traffic
@@ -73,11 +76,16 @@ import org.apache.spark.sql.functions.{col, lit}
   * member's parquet stats). Tombstone members commit sorted by id with
   * id zones, so candidate-restricted readers could prune them like any
   * member. */
-private[store] final class DeltaChain(partsKey: String,
+private[store] final class DeltaChain(val partsKey: String,
                                       canonCols: Seq[String] = Nil,
-                                      tombIdCol: String = "id") {
+                                      val tombIdCol: String = "id") {
 
   private[store] val tombsKey = s"$partsKey.tombs"
+
+  /** The version list recorded under `key` (absent or empty ⇒ none). */
+  private def versionsAt(meta: Map[String, String], key: String): Seq[Long] =
+    meta.get(key).filter(_.nonEmpty)
+      .map(_.split(",").toSeq.map(_.toLong)).getOrElse(Seq.empty)
 
   /** Metadata entries that reset BOTH chain keys — every full-snapshot
     * rewrite (build/rebuild, retrain, fold) must include these: commit
@@ -94,8 +102,7 @@ private[store] final class DeltaChain(partsKey: String,
   /** Versions of the TOMBSTONE members pending in `meta` (ascending —
     * they were appended in commit order). */
   private[store] def tombVersionsOf(meta: Map[String, String]): Seq[Long] =
-    meta.get(tombsKey).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.toLong)).getOrElse(Seq.empty)
+    versionsAt(meta, tombsKey)
 
   /** True iff version `v`'s chain carries tombstones awaiting a fold —
     * the maintenance policies fold such a chain unconditionally. */
@@ -107,10 +114,14 @@ private[store] final class DeltaChain(partsKey: String,
     * tombstone member, whose parts already name the complete data
     * chain. Empty parts ⇒ v is a full snapshot. */
   def chainOf(meta: Map[String, String], v: Long): Seq[Long] = {
-    val parts = meta.get(partsKey).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.toLong)).getOrElse(Seq.empty)
+    val parts = versionsAt(meta, partsKey)
     if (tombVersionsOf(meta).contains(v)) parts else parts :+ v
   }
+
+  /** Read fan-in of version `v`: data members plus pending tombstone
+    * members (each is one more version dir every read opens). */
+  def fanIn(meta: Map[String, String], v: Long): Int =
+    chainOf(meta, v).length + tombVersionsOf(meta).length
 
   /** The pending tombstones as (`_graft_tid`, `_graft_dv`) rows — the
     * deleted id and the tombstone's member version (its epoch). The
@@ -169,26 +180,24 @@ private[store] final class DeltaChain(partsKey: String,
   /** Delta-or-compact decision for the next commit: below the threshold
     * the new version is `delta` alone (O(batch) write); at it, the chain
     * folds into a full snapshot (amortized O(corpus/compactEvery) per
-    * append). Tombstone members count toward the threshold (they add
-    * read fan-in like any member) and a fold retires them — the union
-    * reads through the visibility filter, so tombstoned rows are
-    * physically absent from the folded snapshot. Returns (rows to
-    * commit, metadata to commit). */
-  /** `layout` re-establishes a physical layout (e.g. a range partition)
-    * on COMPACTING commits only — chain unions interleave the members'
-    * file layouts, so a fold is where clustering must be re-applied;
-    * plain deltas pass through untouched (the producer laid them out). */
+    * append). Tombstone members count toward the threshold ([[fanIn]])
+    * and a fold retires them — the union reads through the visibility
+    * filter, so tombstoned rows are physically absent from the folded
+    * snapshot. `layout` re-establishes a physical layout (e.g. a range
+    * partition) on COMPACTING commits only — chain unions interleave
+    * the members' file layouts, so a fold is where clustering must be
+    * re-applied; plain deltas pass through untouched (the producer laid
+    * them out). Returns (rows to commit, metadata to commit). */
   def next(store: SnapshotStore, table: String, v: Long,
            meta: Map[String, String], delta: DataFrame,
            compactEvery: Int, extraMeta: Map[String, String],
            layout: DataFrame => DataFrame = identity)
       : (DataFrame, Map[String, String]) = {
-    val chain = chainOf(meta, v)
-    if (chain.length + tombVersionsOf(meta).length >= compactEvery)
+    if (fanIn(meta, v) >= compactEvery)
       (layout(load(store, table, v, meta).unionByName(canon(delta))),
         extraMeta ++ resetMeta)
     else
-      (canon(delta), extraMeta + (partsKey -> chain.mkString(",")))
+      (canon(delta), extraMeta + (partsKey -> chainOf(meta, v).mkString(",")))
   }
 
   /** Tombstone commit for the ids in `ids`: (rows, metadata) to commit

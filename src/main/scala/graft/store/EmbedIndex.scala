@@ -121,8 +121,9 @@ import graft.functions.Similarity
   * match the batch operator's while final bucket sizes stay under
   * maxBucketSize (same degenerate-regime caveat as the other indexes).
   * EmbedIndexSpec pins pair-for-pair equality with
-  * `Similarity.embeddingNearDupPairs` across batchings. */
-object EmbedIndex {
+  * `Similarity.embeddingNearDupPairs` across batchings. Takedown, fold
+  * and vacuum are the shared [[ChainedIndex]] lifecycle. */
+object EmbedIndex extends ChainedIndex {
 
   /** Committed dims at/above which appends ship the float exchange by
     * default (class scaladoc): below it the 4·dim-byte saving cannot
@@ -145,7 +146,7 @@ object EmbedIndex {
   // Canonical columns: pre-r15 tables carry the stored `bks` key column;
   // projecting every chain member keeps mixed old-fat/new-slim chains
   // unioning cleanly, and the next compaction rewrites the table slim.
-  private val chain = new DeltaChain(s"${P}parts", Seq("id", "uv"))
+  private[store] val chain = new DeltaChain(s"${P}parts", Seq("id", "uv"))
 
   /** The embeddingNearDupPairs corpus-sizing formula, applied to the
     * EXPECTED corpus (an index must not re-key as it grows). */
@@ -187,12 +188,6 @@ object EmbedIndex {
         s"${P}bits" -> bits.toString,
         s"${P}seed" -> seed.toString,
         s"${P}maxBucketSize" -> maxBucketSize.toString))
-  }
-
-  /** The live index contents as of the current version. */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
   }
 
   /** Dedup `batchVecs` (id, vec) against the indexed corpus AND itself
@@ -459,63 +454,7 @@ object EmbedIndex {
                          streamId: String = "emb-inbox",
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          appendBatchOnce(store, table, batch, streamId, batchId).foreach { pairs =>
-            try onPairs(pairs, batchId)
-            finally pairs.unpersist(blocking = false)
-          }
-        }
-      }
-      .start()
-
-  /** On-demand chain fold into a full snapshot (maintenance-triggered;
-    * appends also fold themselves every `compactEvery`). Returns true if
-    * a compacting commit happened, false if already compact — IDEMPOTENT,
-    * and the commit is the store's atomic version flip, so a crash
-    * mid-compaction leaves the old chain fully live. */
-  /** TAKEDOWN: delete vectors from the embedding-LSH index — the
-    * [[DedupIndex.deleteDocs]] contract verbatim (O(ids) tombstone,
-    * immediate invisibility on every candidate path, physical removal
-    * at the next fold, reinsert serves from new rows). Idempotent. */
-  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
-    store.transactMeta[Nothing](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the embedding index before deleting " +
-            "(EmbedIndex.build)")
-      Right(chain.tombNext(v, store.metaForVersion(table, v), ids.toDF("id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]). True if applied. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the embedding index before deleting " +
-            "(EmbedIndex.build)")
-      chain.tombNextOnce(v, store.metaForVersion(table, v), ids.toDF("id"),
-        streamId, batchId)
-    }.isRight
-
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
-    }.isRight
-
-  /** Drop version dirs outside the live delta chain. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
+    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
+      appendBatchOnce(store, table, batch, streamId, batchId)
+    }
 }

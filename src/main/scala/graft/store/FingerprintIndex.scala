@@ -43,11 +43,18 @@ import graft.functions.TextFunctions
   *
   * Contract: ids globally unique; fingerprint collisions of distinct
   * token sequences are the usual 2⁻⁶⁴ non-event (same caveat as
-  * fingerprintGroups). */
-object FingerprintIndex {
+  * fingerprintGroups).
+  *
+  * Takedown, fold and vacuum are the shared [[ChainedIndex]] lifecycle.
+  * Deleting an owner frees its CONTENT (a re-ingest becomes a fresh
+  * survivor); dropped duplicates were never stored, so none is
+  * promoted — lineage of past resolutions is CurationIngest's record. */
+object FingerprintIndex extends ChainedIndex {
 
   private val P = "fpdedup." // metadata key prefix
-  private val chain = new DeltaChain(s"${P}parts")
+  private[store] val chain = new DeltaChain(s"${P}parts")
+  override protected val foldSortKey = "fp"
+  override protected val foldBloomCols = Seq("fp")
 
   private def encode(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("id"),
@@ -63,12 +70,6 @@ object FingerprintIndex {
     store.commit(table, survivors.select(col("fp"), col("id")),
       sortKey = Some("fp"), meta = chain.resetMeta,
       bloomCols = Seq("fp"))
-  }
-
-  /** The live index (delta-chain union) as of the current version. */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
   }
 
   /** The live index reduced to the files that MIGHT contain one of
@@ -250,63 +251,4 @@ object FingerprintIndex {
     if (enc != null) enc.unpersist(blocking = false)
     result
   }
-
-  /** TAKEDOWN: delete documents from the fingerprint index — an O(ids)
-    * tombstone commit ([[DeltaChain]] epoch rule). A deleted id's
-    * fingerprint row goes invisible immediately: the content stops
-    * blocking future ingest (a re-ingest of the same text becomes a
-    * fresh survivor under its new id — the takedown semantics: the
-    * CONTENT left the corpus), and the bytes leave disk at the next
-    * fold. Contract note: ids that were resolved as DUPLICATES were
-    * never stored here (the index keeps owners only), so deleting an
-    * owner removes the fingerprint outright rather than promoting a
-    * dropped duplicate — lineage of past resolutions is the caller's
-    * record (CurationIngest keeps one). Idempotent. */
-  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
-    store.transactMeta[Nothing](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the fingerprint index before deleting " +
-            "(FingerprintIndex.build)")
-      Right(chain.tombNext(v, store.metaForVersion(table, v), ids.toDF("id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]'s correctness rationale:
-    * a redelivered delete batch would out-epoch rows re-ingested
-    * since). Returns true if applied, false on replay. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the fingerprint index before deleting " +
-            "(FingerprintIndex.build)")
-      chain.tombNextOnce(v, store.metaForVersion(table, v), ids.toDF("id"),
-        streamId, batchId)
-    }.isRight
-
-  /** On-demand chain fold into a full snapshot (maintenance-triggered;
-    * appends also fold themselves every `compactEvery`). Returns true if
-    * a compacting commit happened, false if already compact — IDEMPOTENT,
-    * and the commit is the store's atomic version flip, so a crash
-    * mid-compaction leaves the old chain fully live. */
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("fp"),
-        bloomCols = Seq("fp")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
-    }.isRight
-
-  /** Drop version dirs outside the live delta chain (see
-    * VectorIndex.vacuumIndex). */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
 }

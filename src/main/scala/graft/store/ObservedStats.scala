@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
   * job scans them, so the stats cost zero extra passes and the persist
   * goes away entirely.
   *
-  * Failure shape (measured, ObsProbe r18): on a plan the optimizer
-  * collapses to an empty relation (e.g. `docs.limit(0)` empty init)
-  * the CollectMetrics node is eliminated and the observation resolves
-  * with an EMPTY row — `result` then falls back to the eager aggregate,
-  * which on such inputs is a trivial job. A timeout falls back the same
-  * way, so the stats are never silently wrong or missing. */
+  * Failure shape (measured, OPTIMIZATION_r18.md): on a plan the
+  * optimizer collapses to an empty relation (e.g. `docs.limit(0)` empty
+  * init) the CollectMetrics node is eliminated and the observation
+  * resolves with an EMPTY row — `result` then falls back to the eager
+  * aggregate, which on such inputs is a trivial job. A timeout falls
+  * back the same way, so the stats are never silently wrong or
+  * missing. */
 private[graft] object ObservedStats {
 
   /** Attach a (count, sum(dl)) observation to `tok` over `dlExpr`.
@@ -72,9 +73,9 @@ private[graft] object ObservedStats {
     * over zero rows — callers wanting 0 there should coalesce in the
     * metric expression) or timed out. Used by the iterative loops
     * (connected components, lineage closure) to ride their convergence
-    * count on the round's eager checkpoint — measured (ObsProbe r18):
-    * the observation fires on `localCheckpoint` materializations with
-    * exact counts. */
+    * count on the round's eager checkpoint — measured
+    * (OPTIMIZATION_r18.md): the observation fires on `localCheckpoint`
+    * materializations with exact counts. */
   def longMetric(obs: Observation, fallback: => Long): Long = {
     val row =
       try Some(scala.concurrent.Await.result(obs.future,

@@ -48,11 +48,17 @@ import graft.functions.Similarity
   * member (cap caveat as the other indexes: equality holds while final
   * cluster sizes stay under maxClusterSize). SemIndexSpec pins
   * pair-for-pair equality with `Similarity.semDedupPairs` across
-  * batchings. */
-object SemIndex {
+  * batchings.
+  *
+  * Takedown, fold and vacuum are the shared [[ChainedIndex]] lifecycle;
+  * a takedown leaves the drift counters untouched (the retrain reads
+  * the visible rows, so the next epoch flip reflects it exactly). */
+object SemIndex extends ChainedIndex {
 
   private val P = "semdedup." // metadata key prefix
-  private val chain = new DeltaChain(s"${P}parts")
+  private[store] val chain = new DeltaChain(s"${P}parts")
+  override protected val foldSortKey = "cluster_id"
+  override protected val foldStatsCols = Seq("cluster_id")
 
   /** The degenerate single-cluster "quantizer": any centroid assigns
     * every vector to cluster 0, so no sample/train pass is owed. */
@@ -103,12 +109,6 @@ object SemIndex {
           s"${P}appendedSinceTrain" -> "0"),
         statsCols = Seq("cluster_id"))
     } finally enc.unpersist(blocking = false)
-  }
-
-  /** The live index contents as of the current version. */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
   }
 
   /** SemDeDup `batchVecs` (id, vec) against the indexed corpus AND
@@ -291,60 +291,9 @@ object SemIndex {
                          streamId: String = "sem-inbox",
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          appendBatchOnce(store, table, batch, streamId, batchId).foreach { pairs =>
-            try onPairs(pairs, batchId)
-            finally pairs.unpersist(blocking = false)
-          }
-        }
-      }
-      .start()
-
-  /** TAKEDOWN: delete vectors from the semantic index — the
-    * [[DedupIndex.deleteDocs]] contract verbatim (O(ids) tombstone,
-    * immediate invisibility on every in-cluster pairing path, physical
-    * removal at the next fold/retrain, reinsert serves from new rows).
-    * The drift counters are deliberately untouched: they gate RETRAIN
-    * urgency, and a deletion only makes the trained centroids slightly
-    * conservative — the retrain itself reads the visible rows, so the
-    * next epoch flip reflects the deletions exactly. Idempotent. */
-  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
-    store.transactMeta[Nothing](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the semantic index before deleting (SemIndex.build)")
-      Right(chain.tombNext(v, store.metaForVersion(table, v), ids.toDF("id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]). True if applied. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the semantic index before deleting (SemIndex.build)")
-      chain.tombNextOnce(v, store.metaForVersion(table, v), ids.toDF("id"),
-        streamId, batchId)
-    }.isRight
-
-  /** On-demand chain fold into a full snapshot — idempotent; the commit
-    * is the store's atomic version flip. */
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("cluster_id"),
-      statsCols = Seq("cluster_id")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
-    }.isRight
+    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
+      appendBatchOnce(store, table, batch, streamId, batchId)
+    }
 
   /** RETRAIN-AS-A-NEW-VERSION (r12 verdict #5): when the rows appended
     * since the last training exceed `maxAppendFraction` of the index,
@@ -419,29 +368,18 @@ object SemIndex {
   /** Chain + drift maintenance in one idempotent call (the TextIndex
     * [[TextIndex.maintain]] contract): retrain when the append fraction
     * exceeds the policy threshold (a retrain commit IS a full snapshot,
-    * so it subsumes compaction), otherwise fold the chain when it
-    * exceeds `maxChainLength`; then drop version dirs outside the live
+    * so it subsumes compaction), otherwise the shared fold policy
+    * ([[ChainedIndex.foldDue]]); then drop version dirs outside the live
     * chain. Honor consume-before-vacuum: call only after outstanding
     * appends' pair frames are materialized. */
   def maintain(store: SnapshotStore, table: String,
                maxChainLength: Int = 4,
                retrainAppendFraction: Option[Double] = Some(0.5)): Unit = {
-    val v = store.currentVersion(table)
-    if (v == 0) return
+    if (store.currentVersion(table) == 0) return
     val retrained =
       retrainAppendFraction.exists(f => retrainIfDrifted(store, table, f))
-    if (!retrained) {
-      val meta = store.metaForVersion(table, v)
-      // pending tombstones fold unconditionally (takedown removal must
-      // not wait out maxChainLength; a retrain commit already folded)
-      if (chain.chainOf(meta, v).size > maxChainLength ||
-          chain.tombsPending(meta)) compactIndex(store, table)
-    }
+    if (!retrained && foldDue(store, table, maxChainLength))
+      compactIndex(store, table)
     vacuumIndex(store, table)
   }
-
-  /** Drop version dirs outside the live delta chain. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
 }

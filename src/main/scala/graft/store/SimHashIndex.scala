@@ -45,15 +45,16 @@ import org.apache.spark.storage.StorageLevel
   * member; cap semantics match while the final bucket size stays under
   * maxBucketSize (degenerate-regime superset caveat identical).
   * SimHashIndexSpec pins pair-for-pair equality with
-  * `Dedup.simhashPairsFromHashes` across batchings. */
-object SimHashIndex {
+  * `Dedup.simhashPairsFromHashes` across batchings. Takedown, fold and
+  * vacuum are the shared [[ChainedIndex]] lifecycle. */
+object SimHashIndex extends ChainedIndex {
 
   private val P = "shdedup." // metadata key prefix
   // Canonical columns: tables written before the r13 slimming carry the
   // stored `bks` key column; projecting every chain member keeps a mixed
   // old-base + slim-delta chain unioning cleanly (reads AND appends), and
   // the next compaction rewrites the table slim.
-  private val chain = new DeltaChain(s"${P}parts", Seq("id", "sh64"))
+  private[store] val chain = new DeltaChain(s"${P}parts", Seq("id", "sh64"))
 
   private def encode(hashed: DataFrame): DataFrame =
     hashed.select(col("id"), col("sh64"))
@@ -73,12 +74,6 @@ object SimHashIndex {
         s"${P}nBlocks" -> nBlocks.toString,
         s"${P}maxHamming" -> maxHamming.toString,
         s"${P}maxBucketSize" -> maxBucketSize.toString))
-
-  /** The live index contents as of the current version. */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
-  }
 
   /** Dedup `batchHashed` (id, sh64) against the indexed corpus AND
     * itself under the COMMITTED banding parameters, then append its
@@ -313,63 +308,7 @@ object SimHashIndex {
                          streamId: String = "sh-inbox",
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          appendBatchOnce(store, table, batch, streamId, batchId).foreach { pairs =>
-            try onPairs(pairs, batchId)
-            finally pairs.unpersist(blocking = false)
-          }
-        }
-      }
-      .start()
-
-  /** On-demand chain fold into a full snapshot (maintenance-triggered;
-    * appends also fold themselves every `compactEvery`). Returns true if
-    * a compacting commit happened, false if already compact — IDEMPOTENT,
-    * and the commit is the store's atomic version flip, so a crash
-    * mid-compaction leaves the old chain fully live. */
-  /** TAKEDOWN: delete documents from the simhash index — the
-    * [[DedupIndex.deleteDocs]] contract verbatim (O(ids) tombstone,
-    * immediate invisibility on every candidate path, physical removal
-    * at the next fold, reinsert serves from new rows). Idempotent. */
-  def deleteDocs(store: SnapshotStore, table: String, ids: DataFrame): Long =
-    store.transactMeta[Nothing](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the simhash index before deleting " +
-            "(SimHashIndex.build)")
-      Right(chain.tombNext(v, store.metaForVersion(table, v), ids.toDF("id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]). True if applied. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id"),
-        statsCols = Seq("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the simhash index before deleting " +
-            "(SimHashIndex.build)")
-      chain.tombNextOnce(v, store.metaForVersion(table, v), ids.toDF("id"),
-        streamId, batchId)
-    }.isRight
-
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
-    }.isRight
-
-  /** Drop version dirs outside the live delta chain. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
+    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
+      appendBatchOnce(store, table, batch, streamId, batchId)
+    }
 }

@@ -666,7 +666,7 @@ object TextIndex {
   private val DlClamp = (1 << 21) - 1
   private val ChampC = (DlClamp + 1).toDouble // 2^21 as the pack radix
 
-  private def champTable(indexTable: String) = s"${indexTable}__champ"
+  private[store] def champTable(indexTable: String) = s"${indexTable}__champ"
 
   /** Rebuild the champion acceleration table for the CURRENT postings
     * version: per term, the top-`m` postings under the deterministic
@@ -784,7 +784,7 @@ object TextIndex {
           .++(contentOf(meta).map(c => s"${P}champ.forContent" -> c))
         def chained(touchedRows: DataFrame, touchedTerms: DataFrame,
                     mode: String): (DataFrame, Map[String, String]) = {
-          val chainNow = champChainOf(cmeta, cv)
+          val chainNow = champChain.chainOf(cmeta, cv)
           if (chainNow.length >= champCompactEvery) {
             // self-fold: touched rows ∪ resolved untouched rest (marker
             // rows dropped — a fold is a full snapshot, so a vanished
@@ -872,17 +872,15 @@ object TextIndex {
 
   private val ChampParts = s"${P}champ.parts"
 
-  /** Champion chain members of champion-table version `cv`, committed
-    * oldest → newest (the DeltaChain parts convention; pre-chain
-    * tables — no parts key — resolve to the single member `cv`). */
-  private def champChainOf(cmeta: Map[String, String], cv: Long): Seq[Long] =
-    cmeta.get(ChampParts).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.toLong)).getOrElse(Seq.empty) :+ cv
+  /** Parses the champion chain's members (oldest → newest; no parts key
+    * ⇒ the single member `cv`). Only the parse is shared: members
+    * resolve last-writer-wins per term ([[resolveChamps]]), not by union. */
+  private val champChain = new DeltaChain(ChampParts)
 
   /** Term-zone-pruned scans of every chain member, oldest → newest. */
   private def champMembers(store: SnapshotStore, ct: String, cv: Long,
                            preds: Seq[ZoneMap.ZonePred]): Seq[DataFrame] =
-    champChainOf(store.metaForVersion(ct, cv), cv)
+    champChain.chainOf(store.metaForVersion(ct, cv), cv)
       .map(mv => ZoneMap.prunedScanAt(store, ct, mv, preds))
 
   /** Resolve champion chain members under last-writer-wins-per-term: a
@@ -943,7 +941,7 @@ object TextIndex {
       if (cv == 0) Left(())
       else {
         val cmeta = store.metaForVersion(ct, cv)
-        if (champChainOf(cmeta, cv).length <= 1) Left(())
+        if (champChain.chainOf(cmeta, cv).length <= 1) Left(())
         else Right((champLayout(champRowsAt(store, ct, cv)),
           Map(ChampParts -> "")))
       }
@@ -1650,12 +1648,12 @@ object TextIndex {
     val ct = champTable(indexTable)
     val ccv = store.currentVersion(ct)
     if (ccv > 0) {
-      if (champChainOf(store.metaForVersion(ct, ccv), ccv)
+      if (champChain.chainOf(store.metaForVersion(ct, ccv), ccv)
             .length > maxChainLength)
         compactChampions(store, indexTable)
       val cvNow = store.currentVersion(ct)
       store.dropVersions(ct, store.versions(ct).toSet --
-        champChainOf(store.metaForVersion(ct, cvNow), cvNow).toSet)
+        champChain.chainOf(store.metaForVersion(ct, cvNow), cvNow).toSet)
     }
   }
 

@@ -30,11 +30,16 @@ import graft.functions.Similarity
   * reaches `compactEvery` members, the next append folds everything into
   * a fresh full snapshot, bounding read fan-in; `vacuumIndex` then drops
   * the dirs outside the live chain. Rebuilds (`build`) are full snapshots
-  * — retrain when the data distribution drifts. */
-object VectorIndex {
+  * — retrain when the data distribution drifts.
+  *
+  * Takedown, fold and vacuum are the shared [[ChainedIndex]] lifecycle;
+  * a takedown keeps the trained centroids/codebooks (they describe the
+  * space, not the rows). */
+object VectorIndex extends ChainedIndex {
 
   private val P = "ivfpq." // metadata key prefix
-  private val chain = new DeltaChain(s"${P}parts", tombIdCol = "neighbor_id")
+  private[store] val chain = new DeltaChain(s"${P}parts", tombIdCol = "neighbor_id")
+  override protected val foldSortKey = "list_id"
 
   /** Encoding scheme tag. "residual" = IVFADC (codes quantize v − list
     * centroid; scores are cdot + ADC). Indexes built before the residual
@@ -50,6 +55,10 @@ object VectorIndex {
         s"$table was encoded with scheme '$found' but this library scores " +
           s"'$Scheme' codes — rebuild the index (VectorIndex.build)")
   }
+
+  override protected def checkDelete(meta: Map[String, String],
+                                     table: String): Unit =
+    requireScheme(meta, table)
 
   /** Train quantizers, encode the corpus, commit as the next version of
     * `indexTable` (a full snapshot — empty delta chain). Returns the
@@ -100,13 +109,6 @@ object VectorIndex {
     store.metaForVersion(indexTable, store.currentVersion(indexTable))
       .get(s"${P}corpusTag")
 
-  /** The live index contents (delta-chain union) as of the current
-    * version — the chained-table counterpart of `store.load`. */
-  def load(store: SnapshotStore, indexTable: String): DataFrame = {
-    val v = store.currentVersion(indexTable)
-    chain.load(store, indexTable, v, store.metaForVersion(indexTable, v))
-  }
-
   /** Append new vectors to an existing index: encode them with the
     * CURRENT version's trained parameters (no retrain — centroids/codebooks
     * describe the space, not the rows) and commit ONLY the encoded batch
@@ -124,17 +126,9 @@ object VectorIndex {
       val (centroids, codebooks, _) = paramsFrom(meta, indexTable)
       val encoded = Similarity.ivfPqEncode(
         newVectors, idCol, vecCol, centroids, codebooks)
-      Right(withChain(store, indexTable, v, meta, encoded, compactEvery,
+      Right(chain.next(store, indexTable, v, meta, encoded, compactEvery,
         Map.empty))
     }.merge
-
-  /** Delta-or-compact decision shared by append and appendBatchOnce —
-    * see [[DeltaChain.next]]. */
-  private def withChain(store: SnapshotStore, table: String, v: Long,
-                        meta: Map[String, String], encoded: DataFrame,
-                        compactEvery: Int, extraMeta: Map[String, String])
-      : (DataFrame, Map[String, String]) =
-    chain.next(store, table, v, meta, encoded, compactEvery, extraMeta)
 
   /** Exactly-once streaming append: the same batch-id watermark discipline
     * as the catalog ingest (Mutations.appendBatchOnce) — the last applied
@@ -157,51 +151,11 @@ object VectorIndex {
         val (centroids, codebooks, _) = paramsFrom(meta, indexTable)
         val encoded = Similarity.ivfPqEncode(
           batch, idCol, vecCol, centroids, codebooks)
-        Right(withChain(store, indexTable, v, meta, encoded, compactEvery,
+        Right(chain.next(store, indexTable, v, meta, encoded, compactEvery,
           Map(metaKey -> batchId.toString)))
       }
     }.isRight
   }
-
-  /** TAKEDOWN: delete vectors from the index — an O(ids) tombstone
-    * commit ([[DeltaChain]] epoch rule; `ids` is a single-column frame
-    * of the ids the index was built with). Deleted vectors stop
-    * appearing in every query/queryRefined result immediately (the
-    * visibility filter sits under the chain union the probe reads),
-    * the trained centroids/codebooks stay — they describe the space,
-    * not the rows, the same argument as appends — and the codes leave
-    * disk at the next fold. `sim_index_deleted` pins delete → serve ≡
-    * brute-force over the surviving corpus. Idempotent. */
-  def deleteDocs(store: SnapshotStore, indexTable: String,
-                 ids: DataFrame): Long =
-    store.transactMeta[Nothing](indexTable, sortKey = Some("neighbor_id"),
-        statsCols = Seq("neighbor_id")) {
-      val v = store.currentVersion(indexTable)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$indexTable: build the vector index before deleting " +
-            "(VectorIndex.build)")
-      val meta = store.metaForVersion(indexTable, v)
-      requireScheme(meta, indexTable)
-      Right(chain.tombNext(v, meta, ids.toDF("neighbor_id")))
-    }.merge
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]). True if applied. */
-  def deleteDocsOnce(store: SnapshotStore, indexTable: String,
-                     ids: DataFrame, streamId: String,
-                     batchId: Long): Boolean =
-    store.transactMeta[Unit](indexTable, sortKey = Some("neighbor_id"),
-        statsCols = Seq("neighbor_id")) {
-      val v = store.currentVersion(indexTable)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$indexTable: build the vector index before deleting " +
-            "(VectorIndex.build)")
-      val meta = store.metaForVersion(indexTable, v)
-      requireScheme(meta, indexTable)
-      chain.tombNextOnce(v, meta, ids.toDF("neighbor_id"), streamId, batchId)
-    }.isRight
 
   /** Keep an index current from a stream of vectors: each micro-batch
     * encodes with the live parameters and appends exactly once. Caller
@@ -289,27 +243,6 @@ object VectorIndex {
           org.apache.spark.sql.functions.col(vecCol)).as("uv")),
       queries, queryIdCol, queryVecCol, k)
   }
-
-  /** On-demand chain fold into a full snapshot (maintenance-triggered;
-    * appends also fold themselves every `compactEvery`). Returns true if
-    * a compacting commit happened, false if already compact — IDEMPOTENT,
-    * and the commit is the store's atomic version flip, so a crash
-    * mid-compaction leaves the old chain fully live. */
-  def compactIndex(store: SnapshotStore, indexTable: String): Boolean =
-    store.transactMeta[Unit](indexTable, sortKey = Some("list_id")) {
-      val v = store.currentVersion(indexTable)
-      if (v == 0) Left(())
-      else chain.compactNow(store, indexTable, v,
-        store.metaForVersion(indexTable, v)).toRight(())
-    }.isRight
-
-  /** Drop every version dir NOT referenced by the current version's delta
-    * chain. The chain-aware replacement for SnapshotStore.vacuum (which
-    * assumes every version is a full snapshot); like any vacuum, time
-    * travel to the dropped versions is gone. */
-  def vacuumIndex(store: SnapshotStore, indexTable: String): Unit =
-    store.dropVersions(indexTable,
-      store.versions(indexTable).toSet -- chain.liveVersions(store, indexTable))
 
   /** Trained parameters recorded in a version's metadata:
     * (centroids, codebooks, kCodes). */

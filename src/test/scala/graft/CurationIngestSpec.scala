@@ -394,6 +394,56 @@ class CurationIngestSpec extends SparkSpec {
     Seq(l0, l1).foreach(_.unpersist(blocking = false))
   }
 
+  test("stats and maintain after a takedown: visible rows, tombstone fan-in, tombstones fold") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-stats-td").toString, spark)
+    val regime = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
+    CurationIngest.init(store, "td", regime, docsDF, "text", "doc_id")
+    val lin = CurationIngest.ingestBatchOnce(store, "td", regime, docsDF,
+      "text", "doc_id", "s", 0L)
+    lin.count()
+    lin.unpersist(blocking = false)
+    val before = CurationIngest.stats(store, "td")
+    // ids 0-2 are distinct-content owners with tokens: rows of BOTH tables
+    val gone = Seq(0L, 1L, 2L).toDF("id")
+    Seq("td_nd", "td_fp").foreach(t => Graft.deleteDocs(store, t, gone))
+    val after = CurationIngest.stats(store, "td")
+    after.zip(before).foreach { case (a, b) =>
+      assert(a.table == b.table && a.version == b.version + 1)
+      assert(a.rows == b.rows - 3, s"${a.table}: rows must count visible rows")
+      assert(a.chainLength == b.chainLength + 1,
+        s"${a.table}: the pending tombstone member is read fan-in")
+    }
+    // the takedown contract: pending tombstones fold whatever the length
+    val policy = CurationIngest.MaintenancePolicy(maxChainLength = 100)
+    val report = CurationIngest.maintain(store, "td", regime, policy)
+    assert(report.compacted.toSet == Set("td_fp", "td_nd"))
+    assert(report.after.forall(_.chainLength == 1), s"${report.after}")
+    assert(report.after.map(_.rows) == after.map(_.rows))
+    assert(store.loadVersion("td_fp", store.currentVersion("td_fp"))
+      .filter(col("id").isin(0L, 1L, 2L)).count() == 0)
+    assert(CurationIngest.maintain(store, "td", regime, policy).compacted.isEmpty)
+  }
+
+  test("a prefix rebuilt under another regime: stats, maintain and vacuum refuse it") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-regime-swap").toString, spark)
+    val small = corpus.take(12).toDF("doc_id", "text")
+    val simhash = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
+    CurationIngest.build(store, "sw", MinHashRegime(threshold = 0.5), small,
+      "text", "doc_id")
+    CurationIngest.build(store, "sw", simhash, small, "text", "doc_id")
+    // near-dups 50-53 of docs 0-3: a live simhash delta member
+    CurationIngest.ingestBatchOnce(store, "sw", simhash,
+      corpus.slice(40, 44).toDF("doc_id", "text"), "text", "doc_id", "s", 0L)
+      .count()
+    // _nd carries the stale minhash chain key beside its own; resolving
+    // either chain would fold or vacuum away the other's members
+    val versions = store.versions("sw_nd")
+    intercept[IllegalStateException](CurationIngest.vacuum(store, "sw", simhash))
+    intercept[IllegalStateException](CurationIngest.stats(store, "sw"))
+    intercept[IllegalStateException](CurationIngest.maintain(store, "sw", simhash))
+    assert(store.versions("sw_nd") == versions, "a live chain member was dropped")
+  }
+
   test("maintain: stats-driven compaction+vacuum ≡ the unmaintained pipeline, idempotent, crash-window safe") {
     val regime = SimHashRegime(maxHamming = 20, expectedCorpus = 100L)
     val policy = CurationIngest.MaintenancePolicy(maxChainLength = 3)
