@@ -1021,7 +1021,7 @@ object ScaleBench {
       // Depends on curate_build_5m/curate_append_* — filter with
       // "curate", not "curate_maintain".
       timed("curate_maintain") {
-        val report = CurationIngest.maintain(store, "cur", MinHashRegime(),
+        val report = CurationIngest.maintain(store, "cur",
           CurationIngest.MaintenancePolicy(maxChainLength = 3))
         System.err.println(s"[scalebench] maintain compacted=" +
           s"${report.compacted} chains=" +

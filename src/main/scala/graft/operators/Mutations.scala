@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.schema.Schemas
 import graft.sources.Ingest
-import graft.store.SnapshotStore
+import graft.store.{DeltaChain, SnapshotStore}
 
 /** Outcome ADT mirroring the reference's HTTP status-code semantics
   * (lambda_function.py:343-352,469-475,506-516,598-631). */
@@ -170,11 +170,10 @@ final class Mutations(store: SnapshotStore, spark: SparkSession,
     * false if skipped as a replay. */
   def appendBatchOnce(batch: DataFrame, streamId: String, batchId: Long,
                       dedupKey: Option[String] = None): Boolean = {
-    val metaKey = s"stream.$streamId.lastBatchId"
     store.transactEither[Unit](table, sortKey = Some(key),
-      meta = Map(metaKey -> batchId.toString)) { cur =>
-      val last = store.latestMeta(table).get(metaKey).map(_.toLong).getOrElse(-1L)
-      if (batchId <= last) Left(())
+      meta = DeltaChain.mark(streamId, batchId)) { cur =>
+      if (DeltaChain.replayed(store.latestMeta(table), streamId, batchId))
+        Left(())
       else Right(appended(cur, batch, dedupKey))
     }.isRight
   }

@@ -2,15 +2,17 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
 
 /** The [[DeltaChain]] lifecycle of a compact-only persistent index,
   * written once for the six that share it ([[DedupIndex]],
   * [[SimHashIndex]], [[EmbedIndex]], [[SemIndex]], [[FingerprintIndex]],
-  * [[VectorIndex]]): the live read, the tombstone TAKEDOWN (plain and
+  * [[VectorIndex]]): the exactly-once APPEND transaction, the committed
+  * parameter read, the live read, the tombstone TAKEDOWN (plain and
   * exactly-once), the on-demand fold, the chain-aware vacuum and the
   * maintenance fold policy. An index keeps only what is its own —
-  * encode, keys, verify, parameters — and declares here its chain and
-  * the physical layout of its fold commit.
+  * encode, keys, verify, the body of its append — and declares here its
+  * chain and its commit layout, which every append and fold commit uses.
   *
   * [[TextIndex]] and [[PhraseIndex]] are not members: their deletes
   * adjust corpus statistics and carry payload tombstones, and their
@@ -21,8 +23,8 @@ trait ChainedIndex {
   /** The index's delta chain; its `partsKey` is the table's marker. */
   private[store] def chain: DeltaChain
 
-  /** Physical layout of a fold commit: sort key, zone-map columns,
-    * bloom columns. */
+  /** Physical layout of the index's commits (build, append, fold): sort
+    * key, zone-map columns, bloom columns. */
   protected def foldSortKey: String = "id"
   protected def foldStatsCols: Seq[String] = Nil
   protected def foldBloomCols: Seq[String] = Nil
@@ -30,6 +32,80 @@ trait ChainedIndex {
   /** Safety check a takedown runs on the committed metadata before it
     * writes anything (VectorIndex refuses a foreign encoding scheme). */
   protected def checkDelete(meta: Map[String, String], table: String): Unit = ()
+
+  private def name: String = getClass.getSimpleName.stripSuffix("$")
+
+  /** The current version and its metadata, refusing a table the index
+    * was never built on. Run under the table lock. */
+  private def built(store: SnapshotStore, table: String, doing: String)
+      : (Long, Map[String, String]) = {
+    val v = store.currentVersion(table)
+    if (v == 0)
+      throw new IllegalStateException(
+        s"$table: build the index before $doing ($name.build)")
+    (v, store.metaForVersion(table, v))
+  }
+
+  /** One committed build parameter (`<prefix><key>`, e.g. `dedup.bands`),
+    * refusing metadata that lacks it. */
+  protected def param(meta: Map[String, String], key: String): String = {
+    val k = chain.keyPrefix + key
+    meta.getOrElse(k, throw new IllegalStateException(
+      s"no committed $name metadata '$k' — build the index first ($name.build)"))
+  }
+
+  /** Commit `rows` as a fresh full snapshot (build or rebuild) in the
+    * index's layout: the chain resets and `params` — unprefixed keys,
+    * read back through [[param]] — ride in the metadata. */
+  protected def commitBuild(store: SnapshotStore, table: String,
+                            rows: DataFrame, params: Map[String, String])
+      : Long =
+    store.commit(table, rows, sortKey = Some(foldSortKey),
+      meta = chain.resetMeta ++
+        params.map { case (k, v) => (chain.keyPrefix + k) -> v },
+      statsCols = foldStatsCols, bloomCols = foldBloomCols)
+
+  /** The APPEND transaction, written once for the family. Under the table
+    * lock it refuses an unbuilt table and skips a replayed `once`
+    * (streamId, batchId) — None is the plain, non-idempotent form. It
+    * then encodes the batch from the committed metadata, persisted when
+    * `persist` (the body reads it several times) and unpersisted once
+    * the commit returns. `body` maps (version, metadata, encoding) to
+    * (result, delta, extra metadata); the delta commits through
+    * [[DeltaChain.next]] with the watermark, in the index's layout.
+    *
+    * The body runs against the pre-append version (its dirs are
+    * immutable, so its plans stay valid after the pointer flips) and
+    * materializes its result before the commit: a failure anywhere
+    * leaves the index unchanged, so a retry reruns the whole batch.
+    * Returns (result, committed version), or None for a replay. */
+  protected final def appendTx[R](store: SnapshotStore, table: String,
+                                  once: Option[(String, Long)],
+                                  compactEvery: Int, persist: Boolean = true)
+                                 (encode: Map[String, String] => DataFrame)
+                                 (body: (Long, Map[String, String], DataFrame) =>
+                                   (R, DataFrame, Map[String, String]))
+      : Option[(R, Long)] = {
+    var enc: DataFrame = null
+    var result: Option[R] = None
+    val committed =
+      try store.transactMeta[Unit](table, sortKey = Some(foldSortKey),
+          statsCols = foldStatsCols, bloomCols = foldBloomCols) {
+        val (v, meta) = built(store, table, "appending")
+        if (once.exists { case (s, b) => DeltaChain.replayed(meta, s, b) })
+          Left(())
+        else {
+          enc = encode(meta)
+          if (persist) enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
+          val (r, delta, extraMeta) = body(v, meta, enc)
+          result = Some(r)
+          Right(chain.next(store, table, v, meta, delta, compactEvery,
+            extraMeta ++ once.map { case (s, b) => DeltaChain.mark(s, b) }
+              .getOrElse(Map.empty)))
+        }
+      } finally if (persist && enc != null) enc.unpersist(blocking = false)
+    for (cv <- committed.toOption; r <- result) yield (r, cv)
+  }
 
   /** The live index contents (delta-chain union, tombstones applied) as
     * of the current version. */
@@ -68,11 +144,7 @@ trait ChainedIndex {
       : Either[A, Long] =
     store.transactMeta[A](table, sortKey = Some(chain.tombIdCol),
         statsCols = Seq(chain.tombIdCol)) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(s"$table: build the index before " +
-          s"deleting (${getClass.getSimpleName.stripSuffix("$")}.build)")
-      val meta = store.metaForVersion(table, v)
+      val (v, meta) = built(store, table, "deleting")
       checkDelete(meta, table)
       rows(v, meta)
     }

@@ -609,11 +609,7 @@ object CurationIngest {
           val chain = ChainedIndex.of(store, table).chain
           (chain.fanIn(meta, v), chain.load(store, table, v, meta).count())
         }
-      val wm = meta.collect {
-        case (k, value) if k.startsWith("stream.") && k.endsWith(".lastBatchId") =>
-          k.stripPrefix("stream.").stripSuffix(".lastBatchId") -> value.toLong
-      }
-      IndexTableStats(table, v, chainLength, rows, wm.toMap)
+      IndexTableStats(table, v, chainLength, rows, DeltaChain.watermarks(meta))
     }
 
   /** Thresholds for [[maintain]] — when the operational [[stats]] say a
@@ -654,7 +650,7 @@ object CurationIngest {
     * every table readable — the next maintain run simply finishes the
     * remaining work. Appends interleaved with maintain serialize under
     * the per-table lock. */
-  def maintain(store: SnapshotStore, prefix: String, regime: NearDupRegime,
+  def maintain(store: SnapshotStore, prefix: String,
                policy: MaintenancePolicy = MaintenancePolicy())
       : MaintenanceReport = {
     val before = stats(store, prefix)
@@ -664,21 +660,19 @@ object CurationIngest {
       index.foldDue(store, table, policy.maxChainLength - 1) &&
         index.compactIndex(store, table)
     }.map(_._1)
-    if (policy.vacuum) vacuum(store, prefix, regime)
+    if (policy.vacuum) vacuum(store, prefix)
     MaintenanceReport(compacted, policy.vacuum, before, stats(store, prefix))
   }
 
   /** Chain-aware vacuum of both indexes (after the lineage frames of
     * every outstanding append have been consumed — see the
     * consume-before-vacuum contract). */
-  def vacuum(store: SnapshotStore, prefix: String,
-             regime: NearDupRegime): Unit =
+  def vacuum(store: SnapshotStore, prefix: String): Unit =
     indexes(store, prefix).foreach { case (table, index) =>
       index.vacuumIndex(store, table)
     }
 
-  /** The built index tables, resolved through the marker registry
-    * (`regime` is never consulted). */
+  /** The built index tables, resolved through the marker registry. */
   private def indexes(store: SnapshotStore, prefix: String)
       : Seq[(String, ChainedIndex)] =
     Seq(fpTable(prefix), ndTable(prefix)).filter(store.exists)

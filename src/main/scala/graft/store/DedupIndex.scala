@@ -155,12 +155,9 @@ object DedupIndex extends ChainedIndex {
   def build(store: SnapshotStore, table: String, corpus: DataFrame,
             textCol: String, idCol: String, shingleN: Int = 3,
             k: Int = 32, bands: Int = 16): Long =
-    store.commit(table, encode(corpus, textCol, idCol, shingleN),
-      sortKey = Some("id"),
-      meta = chain.resetMeta ++ Map(
-        s"${P}shingleN" -> shingleN.toString,
-        s"${P}k" -> k.toString,
-        s"${P}bands" -> bands.toString))
+    commitBuild(store, table, encode(corpus, textCol, idCol, shingleN), Map(
+      "shingleN" -> shingleN.toString, "k" -> k.toString,
+      "bands" -> bands.toString))
 
   /** Dedup `batch` against the indexed corpus AND itself, then append its
     * encodings as an O(batch) delta version. Returns the new near-dup
@@ -213,86 +210,57 @@ object DedupIndex extends ChainedIndex {
                              broadcastKeyLimit: Long,
                              batchCountHint: Option[Long],
                              keyProbeMaxKeys: Int)
-      : Option[DataFrame] = {
-    var result: Option[DataFrame] = None
-    var enc: DataFrame = null
-    // Pairs are computed INSIDE the table lock against the pre-append
-    // version (its dirs are immutable, so the plan stays valid after the
-    // pointer flips) and materialized before the commit — a failure
-    // anywhere leaves the index unchanged, so retry reruns the whole
-    // batch, never half of it.
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the dedup index before appending (DedupIndex.build; " +
-            "corpus.limit(0) for an empty init)")
-      val meta = store.metaForVersion(table, v)
-      val watermark = onceKey.map { case (sid, bid) =>
-        (s"stream.$sid.lastBatchId", bid)
+      : Option[DataFrame] =
+    // The pair result has its own cache, and its lineage re-derives the
+    // encoding if an executor loses blocks.
+    appendTx(store, table, onceKey, compactEvery)(meta =>
+        encode(batch, textCol, idCol, param(meta, "shingleN").toInt)) {
+        (v, meta, enc) =>
+      val k = param(meta, "k").toInt
+      val bands = param(meta, "bands").toInt
+      // One driver action at most for gate sizing: callers that already
+      // know the batch size (CurationIngest counts its survivors) pass
+      // it through; the fallback is a NARROW count on the persisted
+      // encoding (also warms the cache) — never a distinct() exchange
+      // (r9 verdict: each blocking action is a separate job whose
+      // latency multiplies under host degradation).
+      val nBatch = batchCountHint.getOrElse(enc.count())
+      // Scan prefilter (ON by default — see DefaultKeyProbeMaxKeys):
+      // one extra BOUNDED action collects the batch's band keys; the
+      // index scan then keeps only docs whose recomputed keys can hit
+      // them — a pure in-codegen map of ≤ bands membership tests per
+      // row — before anything explodes through the bucket semi-join.
+      // The exact (band, bucket) semi-join still runs on the
+      // survivors, so tester false positives never change the output.
+      // Batches whose key bound (nBatch·bands) fits the budget get
+      // the exact sorted set; bigger (backfill-sized) batches get a
+      // ~1%-fpp BLOOM over the same keys instead of losing the probe
+      // entirely (measured: an unprobed 500k-doc append pays the full
+      // ~80M-row recomputed-key explode — curate_ungated_500k 92.5 s
+      // vs ~40 s probed). keyProbeMaxKeys = 0 disables the probe and
+      // keeps the strict one-action job budget.
+      // Shared decision ladder (LshKeyProbe): exact sorted set within
+      // the clamped budget, ~1%-fpp Bloom up to the ceiling, nothing
+      // past it. MinHash band keys are near-unique (64-bit buckets),
+      // so the a-priori bound is tight and no rescue take is run.
+      val probeFilter: Option[org.apache.spark.sql.Column] =
+        LshKeyProbe(
+          keysOf(enc, k, bands).select(col("band").as("part"), col("bucket")),
+          bound = nBatch * bands,
+          keyProbeMaxKeys = keyProbeMaxKeys,
+          rescueTakeCeiling = 0L,
+          exact = arr => graft.plans.VectorExpressions
+            .minhashKeyHits(col("h_arr"), k, bands, arr),
+          bloom = bf => graft.plans.VectorExpressions
+            .minhashKeyHitsBloom(col("h_arr"), k, bands, bf))
+      val idxRows = chain.load(store, table, v, meta)
+      val idxSrc = probeFilter match {
+        case Some(p) => idxRows.filter(p)
+        case None => idxRows
       }
-      val replay = watermark.exists { case (key, bid) =>
-        bid <= meta.get(key).map(_.toLong).getOrElse(-1L)
-      }
-      if (replay) Left(())
-      else {
-        val (shingleN, k, bands) = paramsFrom(meta, table)
-        enc = encode(batch, textCol, idCol, shingleN)
-          .persist(StorageLevel.MEMORY_AND_DISK) // batch-sized, read 4×
-        // One driver action at most for gate sizing: callers that already
-        // know the batch size (CurationIngest counts its survivors) pass
-        // it through; the fallback is a NARROW count on the persisted
-        // encoding (also warms the cache) — never a distinct() exchange
-        // (r9 verdict: each blocking action is a separate job whose
-        // latency multiplies under host degradation).
-        val nBatch = batchCountHint.getOrElse(enc.count())
-        // Scan prefilter (ON by default — see DefaultKeyProbeMaxKeys):
-        // one extra BOUNDED action collects the batch's band keys; the
-        // index scan then keeps only docs whose recomputed keys can hit
-        // them — a pure in-codegen map of ≤ bands membership tests per
-        // row — before anything explodes through the bucket semi-join.
-        // The exact (band, bucket) semi-join still runs on the
-        // survivors, so tester false positives never change the output.
-        // Batches whose key bound (nBatch·bands) fits the budget get
-        // the exact sorted set; bigger (backfill-sized) batches get a
-        // ~1%-fpp BLOOM over the same keys instead of losing the probe
-        // entirely (measured: an unprobed 500k-doc append pays the full
-        // ~80M-row recomputed-key explode — curate_ungated_500k 92.5 s
-        // vs ~40 s probed). keyProbeMaxKeys = 0 disables the probe and
-        // keeps the strict one-action job budget.
-        // Shared decision ladder (LshKeyProbe): exact sorted set within
-        // the clamped budget, ~1%-fpp Bloom up to the ceiling, nothing
-        // past it. MinHash band keys are near-unique (64-bit buckets),
-        // so the a-priori bound is tight and no rescue take is run.
-        val probeFilter: Option[org.apache.spark.sql.Column] =
-          LshKeyProbe(
-            keysOf(enc, k, bands).select(col("band").as("part"), col("bucket")),
-            bound = nBatch * bands,
-            keyProbeMaxKeys = keyProbeMaxKeys,
-            rescueTakeCeiling = 0L,
-            exact = arr => graft.plans.VectorExpressions
-              .minhashKeyHits(col("h_arr"), k, bands, arr),
-            bloom = bf => graft.plans.VectorExpressions
-              .minhashKeyHitsBloom(col("h_arr"), k, bands, bf))
-        val idxRows = chain.load(store, table, v, meta)
-        val idxSrc = probeFilter match {
-          case Some(p) => idxRows.filter(p)
-          case None => idxRows
-        }
-        result = Some(pairsVsIndex(
-          idxSrc, enc, nBatch, k, bands, threshold,
-          maxBucketSize, broadcastKeyLimit))
-        Right(chain.next(store, table, v, meta, enc, compactEvery,
-          watermark.map { case (key, bid) => Map(key -> bid.toString) }
-            .getOrElse(Map.empty)))
-      }
-    }
-    // The commit (inside transactMeta) consumed the encoding; the pair
-    // result has its own cache, and its lineage re-derives enc if an
-    // executor loses blocks.
-    if (enc != null) enc.unpersist(blocking = false)
-    result
-  }
+      (pairsVsIndex(idxSrc, enc, nBatch, k, bands, threshold,
+        maxBucketSize, broadcastKeyLimit), enc, Map.empty)
+    }.map(_._1)
 
   /** Key rows recomputed in-expression from the stored shingle hashes —
     * the scan reads only the flat (id, h_arr) columns; signature and
@@ -354,7 +322,8 @@ object DedupIndex extends ChainedIndex {
       : DataFrame = {
     val v = store.currentVersion(table)
     val meta = store.metaForVersion(table, v)
-    val (_, k, bands) = paramsFrom(meta, table)
+    val k = param(meta, "k").toInt
+    val bands = param(meta, "bands").toInt
     val idx = chain.load(store, table, v, meta)
     val idRows = ids.select(col("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -460,13 +429,4 @@ object DedupIndex extends ChainedIndex {
       appendBatchOnce(store, table, batch, textCol, idCol, streamId, batchId,
         threshold)
     }
-
-  private def paramsFrom(meta: Map[String, String], table: String)
-      : (Int, Int, Int) = {
-    def req(key: String): String = meta.getOrElse(P + key,
-      throw new IllegalStateException(
-        s"$table has no committed dedup-index metadata '$P$key' — " +
-          "build the index first (DedupIndex.build)"))
-    (req("shingleN").toInt, req("k").toInt, req("bands").toInt)
-  }
 }

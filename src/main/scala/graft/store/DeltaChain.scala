@@ -4,8 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Delta-chain versioning over a [[SnapshotStore]] table — the one
-  * parser of a chained table's `*.parts` metadata. The compact-only
-  * indexes use it through [[ChainedIndex]]; [[TextIndex]] (postings and
+  * parser of a chained table's `*.parts` metadata, and (companion
+  * object) the one owner of the exactly-once stream watermark every
+  * append and takedown path commits beside it. The compact-only indexes
+  * use it through [[ChainedIndex]]; [[TextIndex]] (postings and
   * champion chains) and [[PhraseIndex]] use it directly.
   *
   * A chained table's version directory holds only that commit's DELTA
@@ -81,6 +83,10 @@ private[store] final class DeltaChain(val partsKey: String,
                                       val tombIdCol: String = "id") {
 
   private[store] val tombsKey = s"$partsKey.tombs"
+
+  /** The owning index's metadata key prefix (`dedup.` for `dedup.parts`):
+    * its committed parameters and corpus stats sit beside the chain keys. */
+  private[store] val keyPrefix = partsKey.stripSuffix("parts")
 
   /** The version list recorded under `key` (absent or empty ⇒ none). */
   private def versionsAt(meta: Map[String, String], key: String): Seq[Long] =
@@ -235,17 +241,16 @@ private[store] final class DeltaChain(val partsKey: String,
     * commits at the next version number, so an at-least-once redelivery
     * of an old delete batch would land at a HIGHER epoch and hide rows
     * re-ingested since (the one case the epoch rule cannot distinguish
-    * from a genuine re-delete). Left(()) = replay, skip. Watermarks
-    * share the per-stream `stream.<id>.lastBatchId` namespace with the
+    * from a genuine re-delete). Left(()) = replay, skip. Takedowns
+    * share the per-stream watermark ([[DeltaChain.replayed]]) with the
     * append paths: one monotone batch sequence per streamId. */
   def tombNextOnce(v: Long, meta: Map[String, String], ids: DataFrame,
                    streamId: String, batchId: Long,
                    extraMeta: Map[String, String] = Map.empty)
-      : Either[Unit, (DataFrame, Map[String, String])] = {
-    val key = s"stream.$streamId.lastBatchId"
-    if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
-    else Right(tombNext(v, meta, ids, extraMeta + (key -> batchId.toString)))
-  }
+      : Either[Unit, (DataFrame, Map[String, String])] =
+    if (DeltaChain.replayed(meta, streamId, batchId)) Left(())
+    else Right(tombNext(v, meta, ids,
+      extraMeta ++ DeltaChain.mark(streamId, batchId)))
 
   /** On-demand fold of the whole chain into a full snapshot — the
     * maintenance-triggered form of the compactEvery path in [[next]]:
@@ -270,4 +275,35 @@ private[store] final class DeltaChain(val partsKey: String,
     val meta = store.metaForVersion(table, v)
     chainOf(meta, v).toSet ++ tombVersionsOf(meta)
   }
+}
+
+/** The exactly-once (streamId, batchId) watermark — Structured
+  * Streaming's idempotent-sink contract for at-least-once sources. The
+  * last applied batchId per stream rides in a table's commit metadata,
+  * atomically with the rows it applied, so a redelivered batch is
+  * recognised under the table lock and skipped. One monotone sequence
+  * per streamId per table, shared by appends and takedowns. */
+private[graft] object DeltaChain {
+
+  private val Prefix = "stream."
+  private val Suffix = ".lastBatchId"
+
+  /** True iff `batchId` was already applied to the version whose
+    * metadata is `meta` (a replay: skip it). */
+  def replayed(meta: Map[String, String], streamId: String,
+               batchId: Long): Boolean =
+    batchId <= meta.get(Prefix + streamId + Suffix).map(_.toLong)
+      .getOrElse(-1L)
+
+  /** The metadata entry that records `batchId` as applied — committed
+    * with the batch's rows. */
+  def mark(streamId: String, batchId: Long): Map[String, String] =
+    Map(Prefix + streamId + Suffix -> batchId.toString)
+
+  /** Every stream's last applied batchId in `meta`. */
+  def watermarks(meta: Map[String, String]): Map[String, Long] =
+    meta.collect {
+      case (k, v) if k.startsWith(Prefix) && k.endsWith(Suffix) =>
+        k.stripPrefix(Prefix).stripSuffix(Suffix) -> v.toLong
+    }
 }

@@ -179,15 +179,13 @@ object EmbedIndex extends ChainedIndex {
             threshold: Double, nTables: Int = 8, expectedCorpus: Long = 5000000L,
             maxBucketSize: Int = 2000, seed: Long = 42L): Long = {
     val bits = autoBits(expectedCorpus, maxBucketSize)
-    store.commit(table, encode(vecs),
-      sortKey = Some("id"),
-      meta = chain.resetMeta ++ Map(
-        s"${P}dim" -> dim.toString,
-        s"${P}threshold" -> threshold.toString,
-        s"${P}nTables" -> nTables.toString,
-        s"${P}bits" -> bits.toString,
-        s"${P}seed" -> seed.toString,
-        s"${P}maxBucketSize" -> maxBucketSize.toString))
+    commitBuild(store, table, encode(vecs), Map(
+      "dim" -> dim.toString,
+      "threshold" -> threshold.toString,
+      "nTables" -> nTables.toString,
+      "bits" -> bits.toString,
+      "seed" -> seed.toString,
+      "maxBucketSize" -> maxBucketSize.toString))
   }
 
   /** Dedup `batchVecs` (id, vec) against the indexed corpus AND itself
@@ -222,63 +220,44 @@ object EmbedIndex extends ChainedIndex {
                       batchCountHint: Option[Long] = None,
                       keyProbeMaxKeys: Int = 0,
                       floatExchangeMinDim: Int = DefaultFloatExchangeMinDim)
-      : Option[DataFrame] = {
-    var result: Option[DataFrame] = None
-    var enc: DataFrame = null
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the embedding index before appending " +
-            "(EmbedIndex.build; vecs.limit(0) for an empty init)")
-      val meta = store.metaForVersion(table, v)
-      val key = s"stream.$streamId.lastBatchId"
-      if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
-      else {
-        def req(k: String): String = meta.getOrElse(P + k,
-          throw new IllegalStateException(
-            s"$table has no committed embed-index metadata '$P$k'"))
-        val (dim, nTables, bits, seed) = (req("dim").toInt,
-          req("nTables").toInt, req("bits").toInt, req("seed").toLong)
-        enc = encode(batchVecs)
-          .persist(StorageLevel.MEMORY_AND_DISK) // batch-sized, read 3×
-        // Gate sizing without a distinct() job: hint from the caller, or
-        // a narrow count on the persisted encoding (warms the cache).
-        val nBatch = batchCountHint.getOrElse(enc.count())
-        // In-scan prefilter via the shared decision ladder
-        // (LshKeyProbe): exact sorted key set when nBatch·nTables fits
-        // the clamped budget, ~1%-fpp Bloom up to the ceiling; tester
-        // false positives only widen the exact (table, bucket)
-        // semi-join input. One key per table per vector — the bound is
-        // tight, no rescue take.
-        val probeFilter: Option[Column] =
-          LshKeyProbe(
-            keysOf(enc, dim, nTables, bits, seed)
-              .select(col("table").as("part"), col("bucket")),
-            bound = nBatch * nTables,
-            keyProbeMaxKeys = keyProbeMaxKeys,
-            rescueTakeCeiling = 0L,
-            exact = arr => graft.plans.VectorExpressions
-              .hyperplaneKeyHits(col("uv"), dim, nTables, bits, seed, arr),
-            bloom = bf => graft.plans.VectorExpressions
-              .hyperplaneKeyHitsBloom(col("uv"), dim, nTables, bits, seed, bf))
-        val idxRows = chain.load(store, table, v, meta)
-        val idxSrc = probeFilter match {
-          case Some(p) => idxRows.filter(p)
-          case None => idxRows
-        }
-        result = Some(pairsVsIndex(
-          idxSrc, enc, nBatch, dim, nTables, bits, seed,
-          req("threshold").toDouble, req("maxBucketSize").toInt,
-          broadcastKeyLimit,
-          useFloat = floatExchangeActive(dim, floatExchangeMinDim)))
-        Right(chain.next(store, table, v, meta, enc, compactEvery,
-          Map(key -> batchId.toString)))
+      : Option[DataFrame] =
+    appendTx(store, table, Some((streamId, batchId)), compactEvery)(
+        _ => encode(batchVecs)) { (v, meta, enc) =>
+      val dim = param(meta, "dim").toInt
+      val nTables = param(meta, "nTables").toInt
+      val bits = param(meta, "bits").toInt
+      val seed = param(meta, "seed").toLong
+      // Gate sizing without a distinct() job: hint from the caller, or
+      // a narrow count on the persisted encoding (warms the cache).
+      val nBatch = batchCountHint.getOrElse(enc.count())
+      // In-scan prefilter via the shared decision ladder
+      // (LshKeyProbe): exact sorted key set when nBatch·nTables fits
+      // the clamped budget, ~1%-fpp Bloom up to the ceiling; tester
+      // false positives only widen the exact (table, bucket)
+      // semi-join input. One key per table per vector — the bound is
+      // tight, no rescue take.
+      val probeFilter: Option[Column] =
+        LshKeyProbe(
+          keysOf(enc, dim, nTables, bits, seed)
+            .select(col("table").as("part"), col("bucket")),
+          bound = nBatch * nTables,
+          keyProbeMaxKeys = keyProbeMaxKeys,
+          rescueTakeCeiling = 0L,
+          exact = arr => graft.plans.VectorExpressions
+            .hyperplaneKeyHits(col("uv"), dim, nTables, bits, seed, arr),
+          bloom = bf => graft.plans.VectorExpressions
+            .hyperplaneKeyHitsBloom(col("uv"), dim, nTables, bits, seed, bf))
+      val idxRows = chain.load(store, table, v, meta)
+      val idxSrc = probeFilter match {
+        case Some(p) => idxRows.filter(p)
+        case None => idxRows
       }
-    }
-    if (enc != null) enc.unpersist(blocking = false)
-    result
-  }
+      (pairsVsIndex(idxSrc, enc, nBatch, dim, nTables, bits, seed,
+        param(meta, "threshold").toDouble,
+        param(meta, "maxBucketSize").toInt, broadcastKeyLimit,
+        useFloat = floatExchangeActive(dim, floatExchangeMinDim)),
+        enc, Map.empty)
+    }.map(_._1)
 
   /** Key rows recomputed in-expression from the stored unit vector — the
     * scan reads only the flat (id, uv) columns; the nTables·bits·dim
@@ -329,11 +308,11 @@ object EmbedIndex extends ChainedIndex {
       : DataFrame = {
     val v = store.currentVersion(table)
     val meta = store.metaForVersion(table, v)
-    val threshold = meta(s"${P}threshold").toDouble
-    val maxBucketSize = meta(s"${P}maxBucketSize").toInt
-    val (dim, nTables, bits, seed) = (meta(s"${P}dim").toInt,
-      meta(s"${P}nTables").toInt, meta(s"${P}bits").toInt,
-      meta(s"${P}seed").toLong)
+    val threshold = param(meta, "threshold").toDouble
+    val maxBucketSize = param(meta, "maxBucketSize").toInt
+    val (dim, nTables, bits, seed) = (param(meta, "dim").toInt,
+      param(meta, "nTables").toInt, param(meta, "bits").toInt,
+      param(meta, "seed").toLong)
     val idx = chain.load(store, table, v, meta)
     val idRows = ids.select(col("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)

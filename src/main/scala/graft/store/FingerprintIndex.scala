@@ -67,9 +67,7 @@ object FingerprintIndex extends ChainedIndex {
             textCol: String, idCol: String): Long = {
     val survivors = encode(corpus, textCol, idCol)
       .groupBy(col("fp")).agg(min(col("id")).as("id"))
-    store.commit(table, survivors.select(col("fp"), col("id")),
-      sortKey = Some("fp"), meta = chain.resetMeta,
-      bloomCols = Seq("fp"))
+    commitBuild(store, table, survivors.select(col("fp"), col("id")), Map.empty)
   }
 
   /** The live index reduced to the files that MIGHT contain one of
@@ -199,56 +197,37 @@ object FingerprintIndex extends ChainedIndex {
                       broadcastKeyLimit: Long = BroadcastGate.DefaultKeyLimit,
                       batchCountHint: Option[Long] = None,
                       bloomProbeMaxKeys: Int = 0)
-      : Option[DataFrame] = {
-    var result: Option[DataFrame] = None
-    var enc: DataFrame = null
-    store.transactMeta[Unit](table, sortKey = Some("fp"),
-        bloomCols = Seq("fp")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the fingerprint index before appending " +
-            "(FingerprintIndex.build; corpus.limit(0) for an empty init)")
-      val meta = store.metaForVersion(table, v)
-      val key = s"stream.$streamId.lastBatchId"
-      if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
-      else {
-        enc = encode(batch, textCol, idCol)
-          .persist(StorageLevel.MEMORY_AND_DISK) // batch-sized, read 4×
-        // Collision probe + keep resolution (size-gated broadcasts —
-        // the corpus side never shuffles below the gate). Gate sizing is
-        // the caller's hint or a NARROW count on the persisted encoding
-        // (warms the cache) — never a distinct() exchange; the batch row
-        // count upper-bounds the distinct-fp count, which is the safe
-        // direction for the gate.
-        val nKeys = batchCountHint.getOrElse(enc.count())
-        val idx =
-          if (bloomProbeMaxKeys > 0 && nKeys <= bloomProbeMaxKeys) {
-            val fps = enc.select(col("fp")).distinct()
-              .collect().map(_.getLong(0))
-            bloomPrunedIndex(store, table, v, meta, fps)
-          } else chain.load(store, table, v, meta)
-        // No separate materializing count (r18): the commit below writes
-        // newSurvivors, which joins against this cached frame — the
-        // write action itself populates the cache (filter + projection
-        // over an InMemoryRelation materialize full cached batches), so
-        // the returned frame is eager by the time the transact returns,
-        // one job earlier. It stays a cache, not a checkpoint: a
-        // checkpoint would spend its own job on top of the commit's.
-        val resolved =
-          resolveAgainst(idx, enc, nKeys, broadcastKeyLimit)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        result = Some(resolved)
-        val newSurvivors = enc
-          .join(resolved.filter(col("is_new")).select(col("id")), Seq("id"))
-          .select(col("fp"), col("id"))
-        Right(chain.next(store, table, v, meta, newSurvivors,
-          compactEvery, Map(key -> batchId.toString)))
-      }
-    }
-    // The commit (inside transactMeta) consumed the encoding; the result
-    // has its own cache and re-derives enc from `batch` on block loss.
-    if (enc != null) enc.unpersist(blocking = false)
-    result
-  }
+      : Option[DataFrame] =
+    // The result has its own cache and re-derives the encoding from
+    // `batch` on block loss.
+    appendTx(store, table, Some((streamId, batchId)), compactEvery)(
+        _ => encode(batch, textCol, idCol)) { (v, meta, enc) =>
+      // Collision probe + keep resolution (size-gated broadcasts —
+      // the corpus side never shuffles below the gate). Gate sizing is
+      // the caller's hint or a NARROW count on the persisted encoding
+      // (warms the cache) — never a distinct() exchange; the batch row
+      // count upper-bounds the distinct-fp count, which is the safe
+      // direction for the gate.
+      val nKeys = batchCountHint.getOrElse(enc.count())
+      val idx =
+        if (bloomProbeMaxKeys > 0 && nKeys <= bloomProbeMaxKeys) {
+          val fps = enc.select(col("fp")).distinct()
+            .collect().map(_.getLong(0))
+          bloomPrunedIndex(store, table, v, meta, fps)
+        } else chain.load(store, table, v, meta)
+      // No separate materializing count (r18): the commit writes
+      // newSurvivors, which joins against this cached frame — the
+      // write action itself populates the cache (filter + projection
+      // over an InMemoryRelation materialize full cached batches), so
+      // the returned frame is eager by the time the transaction
+      // returns, one job earlier. It stays a cache, not a checkpoint: a
+      // checkpoint would spend its own job on top of the commit's.
+      val resolved =
+        resolveAgainst(idx, enc, nKeys, broadcastKeyLimit)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      val newSurvivors = enc
+        .join(resolved.filter(col("is_new")).select(col("id")), Seq("id"))
+        .select(col("fp"), col("id"))
+      (resolved, newSurvivors, Map.empty)
+    }.map(_._1)
 }

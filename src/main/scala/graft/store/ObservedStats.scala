@@ -1,6 +1,11 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Single-pass (nDocs, sumDl) stats for the text index build/append
@@ -36,17 +41,11 @@ private[graft] object ObservedStats {
   /** The observed (nDocs, sumDl), or `fallback` (an eager aggregate over
     * a re-derived frame) when the observation resolved empty or timed
     * out. Call AFTER the write action over the observed frame. */
-  def result(obs: Observation, fallback: => (Long, Long)): (Long, Long) = {
-    val row =
-      try Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(2000, "ms")))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    row match {
-      case Some(r) if r.length == 2 && !r.isNullAt(0) =>
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      case _ => fallback
+  def result(obs: Observation, fallback: => (Long, Long)): (Long, Long) =
+    observed(obs, 2) match {
+      case Some(r) => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      case None => fallback
     }
-  }
 
   /** A collect_set(struct(…)) observation's structs (the first field),
     * or None when the observation resolved empty (collapsed plan) or
@@ -56,17 +55,8 @@ private[graft] object ObservedStats {
     * constant per term, so the SET dedups the per-row repeats — and a
     * plan that evaluates the observed frame twice only re-adds
     * identical structs). */
-  def structSet(obs: Observation): Option[Seq[org.apache.spark.sql.Row]] = {
-    val row =
-      try Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(2000, "ms")))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    row match {
-      case Some(r) if r.length >= 1 && !r.isNullAt(0) =>
-        Some(r.getSeq[org.apache.spark.sql.Row](0))
-      case _ => None
-    }
-  }
+  def structSet(obs: Observation): Option[Seq[Row]] =
+    observed(obs, 1).map(_.getSeq[Row](0))
 
   /** A single observed LONG metric (the first field), or `fallback`
     * when the observation resolved empty (collapsed plan), null (sum
@@ -76,14 +66,36 @@ private[graft] object ObservedStats {
     * count on the round's eager checkpoint — measured
     * (OPTIMIZATION_r18.md): the observation fires on `localCheckpoint`
     * materializations with exact counts. */
-  def longMetric(obs: Observation, fallback: => Long): Long = {
+  def longMetric(obs: Observation, fallback: => Long): Long =
+    observed(obs, 1).fold(fallback)(_.getLong(0))
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The observation's row when it carries at least `width` fields and a
+    * non-null first one, waiting at most 2 s for it. Otherwise None, and
+    * the fallback is logged once with its consumer (the calling source
+    * line): a timeout at WARN, an empty or null observation — the
+    * documented collapsed-plan case — at INFO. */
+  private def observed(obs: Observation, width: Int): Option[Row] = {
     val row =
-      try Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(2000, "ms")))
-      catch { case _: java.util.concurrent.TimeoutException => None }
+      try Some(Await.result(obs.future, Duration(2000, "ms")))
+      catch { case _: TimeoutException => None }
     row match {
-      case Some(r) if r.length >= 1 && !r.isNullAt(0) => r.getLong(0)
-      case _ => fallback
+      case Some(r) if r.length >= width && !r.isNullAt(0) => Some(r)
+      case Some(_) =>
+        log.info(s"observation at $consumer resolved empty; running its eager fallback")
+        None
+      case None =>
+        log.warn(s"observation at $consumer timed out after 2 s; running its eager fallback")
+        None
     }
   }
+
+  /** The first stack frame outside this object: the consuming call. */
+  private def consumer: String =
+    Thread.currentThread.getStackTrace.iterator
+      .filter(f => f.getClassName.startsWith("graft.") &&
+        !f.getClassName.startsWith(getClass.getName))
+      .map(f => s"${f.getFileName}:${f.getLineNumber}")
+      .nextOption().getOrElse("unknown")
 }

@@ -303,10 +303,9 @@ object PhraseIndex {
       requireBuilt(v, table)
       val meta = store.metaForVersion(table, v)
       requireCompatible(meta, table)
-      val key = s"stream.$streamId.lastBatchId"
-      if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
+      if (DeltaChain.replayed(meta, streamId, batchId)) Left(())
       else Right(deltaFor(store, table, v, meta, docs, textCol, idCol,
-        compactEvery, Map(key -> batchId.toString)))
+        compactEvery, DeltaChain.mark(streamId, batchId)))
     }.isRight
 
   /** TAKEDOWN: delete documents from the positional store — the
@@ -321,7 +320,8 @@ object PhraseIndex {
     * caveat and idempotence as the TextIndex form. */
   def deleteDocs(store: SnapshotStore, table: String,
                  ids: DataFrame): Long = {
-    deleteInternal(store, table, ids, None)
+    TextIndex.takedown(store, table, ids, None, chain, requireBuilt,
+      requireCompatible)
     store.currentVersion(table)
   }
 
@@ -330,75 +330,8 @@ object PhraseIndex {
     * Returns true if applied, false if skipped as a replay. */
   def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
                      streamId: String, batchId: Long): Boolean =
-    deleteInternal(store, table, ids, Some((streamId, batchId)))
-
-  private def deleteInternal(store: SnapshotStore, table: String,
-                             ids: DataFrame,
-                             once: Option[(String, Long)]): Boolean = {
-    val tombs = ids.toDF("doc_id")
-    store.transactMetaDeferred[Unit](table, sortKey = Some("doc_id"),
-        statsCols = Seq("doc_id")) {
-      val v = store.currentVersion(table)
-      requireBuilt(v, table)
-      val meta = store.metaForVersion(table, v)
-      val replay = once.exists { case (sid, bid) =>
-        bid <= meta.get(s"stream.$sid.lastBatchId")
-          .map(_.toLong).getOrElse(-1L)
-      }
-      if (replay) Left(())
-      else {
-        requireCompatible(meta, table)
-        // ONE visible-row scan feeds the per-doc deleted-term payload
-        // (the champion delete-merge's O(tombstone) discovery) AND —
-        // r19, guide §1.2 — the exact stats delta, which RIDES the
-        // tombstone write as a CollectMetrics observation instead of a
-        // separate persisted aggregate action: per doc, the distinct-dl
-        // count/sum aggregate next to the term set, summed while the
-        // write streams the rows. Same arithmetic as the old
-        // distinct-(doc_id,dl) aggregate: Σ over docs of
-        // (count, sum) over that doc's distinct dl values.
-        val perDoc = chain.load(store, table, v, meta)
-          .join(tombs, Seq("doc_id"))
-          .groupBy(col("doc_id"))
-          .agg(collect_set(col("term")).as("terms"),
-            countDistinct(col("dl")).as("_ndl"),
-            coalesce(sum_distinct(col("dl").cast("long")), lit(0L)).as("_sdl"))
-        val obs = org.apache.spark.sql.Observation()
-        val observed = perDoc.observe(obs,
-          coalesce(sum(col("_ndl")), lit(0L)).as("n"),
-          coalesce(sum(col("_sdl")), lit(0L)).as("sdl"))
-        val tombRows = tombs
-          .join(observed.select(col("doc_id"), col("terms")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("terms"), array().cast("array<string>")).as("terms"))
-        val (rows, commitMeta) = chain.tombNext(v, meta, tombRows,
-          once.map { case (sid, bid) =>
-            Map(s"stream.$sid.lastBatchId" -> bid.toString)
-          }.getOrElse(Map.empty))
-        Right((rows, commitMeta, () => {
-          val (dDocs, dDl) = ObservedStats.result(obs, {
-            // eager fallback (collapsed plan / timeout): the pre-r19
-            // separate aggregate over the same visible-row scan
-            val r = chain.load(store, table, v, meta)
-              .join(tombs, Seq("doc_id"))
-              .select(col("doc_id"), col("dl")).distinct()
-              .agg(count(lit(1)),
-                coalesce(sum(col("dl").cast("long")), lit(0L)))
-              .head()
-            (r.getLong(0), r.getLong(1))
-          })
-          Map(
-            s"${P}nDocs" ->
-              (meta.getOrElse(s"${P}nDocs", "0").toLong - dDocs).toString,
-            s"${P}sumDl" ->
-              (meta.getOrElse(s"${P}sumDl", "0").toLong - dDl).toString,
-            s"${P}contentVersion" ->
-              (meta.getOrElse(s"${P}contentVersion", "0").toLong + 1).toString)
-        }))
-      }
-    }.isRight
-  }
+    TextIndex.takedown(store, table, ids, Some((streamId, batchId)), chain,
+      requireBuilt, requireCompatible)
 
   /** Keep the index current from a stream of document rows — the
     * index family's maintainFromStream contract verbatim: file inbox →

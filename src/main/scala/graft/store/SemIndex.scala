@@ -96,18 +96,15 @@ object SemIndex extends ChainedIndex {
       // the drift decision survives chain compaction (which erases the
       // build-vs-delta row split the chain shape used to carry)
       val n = enc.count()
-      store.commit(table, enc,
-        sortKey = Some("cluster_id"),
-        meta = chain.resetMeta ++ Map(
-          s"${P}dim" -> dim.toString,
-          s"${P}eps" -> eps.toString,
-          s"${P}nClusters" -> nClusters.toString,
-          s"${P}maxClusterSize" -> maxClusterSize.toString,
-          s"${P}seed" -> seed.toString,
-          s"${P}centroids" -> VectorIndex.encodeMatrix(centroids),
-          s"${P}trainedRows" -> n.toString,
-          s"${P}appendedSinceTrain" -> "0"),
-        statsCols = Seq("cluster_id"))
+      commitBuild(store, table, enc, Map(
+        "dim" -> dim.toString,
+        "eps" -> eps.toString,
+        "nClusters" -> nClusters.toString,
+        "maxClusterSize" -> maxClusterSize.toString,
+        "seed" -> seed.toString,
+        "centroids" -> VectorIndex.encodeMatrix(centroids),
+        "trainedRows" -> n.toString,
+        "appendedSinceTrain" -> "0"))
     } finally enc.unpersist(blocking = false)
   }
 
@@ -137,47 +134,32 @@ object SemIndex extends ChainedIndex {
                       batchCountHint: Option[Long] = None,
                       zoneProbeMaxClusters: Int = 0,
                       floatExchangeMinDim: Int = Int.MaxValue)
-      : Option[DataFrame] = {
-    var result: Option[DataFrame] = None
-    var enc: DataFrame = null
-    store.transactMeta[Unit](table, sortKey = Some("cluster_id"),
-      statsCols = Seq("cluster_id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the semantic index before appending " +
-            "(SemIndex.build; vecs.limit(0) + trainOn for an empty init)")
-      val meta = store.metaForVersion(table, v)
-      val key = s"stream.$streamId.lastBatchId"
-      if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
-      else {
-        def req(k: String): String = meta.getOrElse(P + k,
-          throw new IllegalStateException(
-            s"$table has no committed sem-index metadata '$P$k'"))
-        val centroids = VectorIndex.decodeMatrix(req("centroids"))
-        enc = encode(batchVecs, centroids)
-          .persist(StorageLevel.MEMORY_AND_DISK) // batch-sized, read 3×
-        val nBatch = batchCountHint.getOrElse(enc.count())
-        // Opt-in trickle fast path (the FingerprintIndex
-        // bloomProbeMaxKeys trade): one extra BOUNDED action collects
-        // the batch's touched clusters; if they fit, whole chain files
-        // outside their cluster_id zones are skipped before any footer
-        // opens, and the exact isin filter replaces the semi-join. The
-        // default path keeps the one-action budget.
-        val touched: Option[Seq[Long]] =
-          if (zoneProbeMaxClusters <= 0) None
-          else {
-            val t = enc.select(col("cluster_id")).distinct()
-              .take(zoneProbeMaxClusters + 1)
-            if (t.length > zoneProbeMaxClusters) None
-            else Some(t.map(_.getLong(0)).toSeq)
-          }
-        // drift counter for retrainIfDrifted — nBatch is already known,
-        // so the accumulation costs zero extra actions
-        val drift = Map(s"${P}appendedSinceTrain" ->
-          (meta.get(s"${P}appendedSinceTrain").map(_.toLong).getOrElse(0L)
-            + nBatch).toString)
-        if (nBatch == 0L || touched.exists(_.isEmpty)) {
+      : Option[DataFrame] =
+    appendTx(store, table, Some((streamId, batchId)), compactEvery)(meta =>
+        encode(batchVecs, VectorIndex.decodeMatrix(param(meta, "centroids")))) {
+        (v, meta, enc) =>
+      val nBatch = batchCountHint.getOrElse(enc.count())
+      // Opt-in trickle fast path (the FingerprintIndex
+      // bloomProbeMaxKeys trade): one extra BOUNDED action collects
+      // the batch's touched clusters; if they fit, whole chain files
+      // outside their cluster_id zones are skipped before any footer
+      // opens, and the exact isin filter replaces the semi-join. The
+      // default path keeps the one-action budget.
+      val touched: Option[Seq[Long]] =
+        if (zoneProbeMaxClusters <= 0) None
+        else {
+          val t = enc.select(col("cluster_id")).distinct()
+            .take(zoneProbeMaxClusters + 1)
+          if (t.length > zoneProbeMaxClusters) None
+          else Some(t.map(_.getLong(0)).toSeq)
+        }
+      // drift counter for retrainIfDrifted — nBatch is already known,
+      // so the accumulation costs zero extra actions
+      val drift = Map(s"${P}appendedSinceTrain" ->
+        (meta.get(s"${P}appendedSinceTrain").map(_.toLong).getOrElse(0L)
+          + nBatch).toString)
+      val pairs =
+        if (nBatch == 0L || touched.exists(_.isEmpty))
           // EMPTY batch (known from the count, the hint, or a probe
           // that returned zero touched clusters): no pair can involve
           // it, so skip the index load and the whole pairsVsIndex
@@ -186,10 +168,8 @@ object SemIndex extends ChainedIndex {
           // Before r12 this case mis-flagged the probe result as
           // pre-filtered and SELF-PAIRED THE FULL INDEX (SemIndexSpec
           // pins both the output and the no-index-scan plan shape).
-          result = Some(emptyPairs(enc))
-          Right(chain.next(store, table, v, meta, enc, compactEvery,
-            drift + (key -> batchId.toString)))
-        } else {
+          emptyPairs(enc)
+        else {
           val idxRows = touched match {
             case Some(ids) if ids.nonEmpty =>
               chain.loadPruned(store, table, v, meta,
@@ -200,20 +180,14 @@ object SemIndex extends ChainedIndex {
           // preFiltered only when the probe actually restricted the
           // load — a None probe (disabled, or too many clusters to
           // collect) keeps the gating semi-join.
-          result = Some(pairsVsIndex(
-            idxRows, enc, nBatch, touched.exists(_.nonEmpty),
-            req("eps").toDouble, req("maxClusterSize").toInt,
+          pairsVsIndex(idxRows, enc, nBatch, touched.exists(_.nonEmpty),
+            param(meta, "eps").toDouble, param(meta, "maxClusterSize").toInt,
             broadcastKeyLimit,
             useFloat = EmbedIndex.floatExchangeActive(
-              req("dim").toInt, floatExchangeMinDim)))
-          Right(chain.next(store, table, v, meta, enc, compactEvery,
-            drift + (key -> batchId.toString)))
+              param(meta, "dim").toInt, floatExchangeMinDim))
         }
-      }
-    }
-    if (enc != null) enc.unpersist(blocking = false)
-    result
-  }
+      (pairs, enc, drift)
+    }.map(_._1)
 
   /** The typed empty (id_a, id_b, cos) result under the EAGER contract
     * (persisted + counted — the caller unpersists like any other pair
@@ -339,7 +313,7 @@ object SemIndex extends ChainedIndex {
             total < nClusters) // too few rows to train nClusters lists
           Left(())
         else {
-          val seed = meta(s"${P}seed").toLong
+          val seed = param(meta, "seed").toLong
           // uv is already unit-norm, so re-encoding from it is exact:
           // unit(uv) = uv, and assignment is a pure function of uv.
           // nClusters == 1 keeps the trivial quantizer (see build) and
@@ -350,7 +324,7 @@ object SemIndex extends ChainedIndex {
             if (nClusters == 1) rows
             else rows.persist(StorageLevel.MEMORY_AND_DISK) // read 2×: train + assign
           val centroids =
-            if (nClusters == 1) trivialCentroids(meta(s"${P}dim").toInt)
+            if (nClusters == 1) trivialCentroids(param(meta, "dim").toInt)
             else Similarity.trainIvfCentroids(allCache, "vec", nClusters, seed)
           // full-snapshot rewrite from the VISIBLE rows: resets both
           // chain keys — pending tombstones are physically applied here

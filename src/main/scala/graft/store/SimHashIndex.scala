@@ -68,12 +68,9 @@ object SimHashIndex extends ChainedIndex {
   def build(store: SnapshotStore, table: String, hashed: DataFrame,
             nBlocks: Int, maxHamming: Int,
             maxBucketSize: Int = 1000): Long =
-    store.commit(table, encode(hashed),
-      sortKey = Some("id"),
-      meta = chain.resetMeta ++ Map(
-        s"${P}nBlocks" -> nBlocks.toString,
-        s"${P}maxHamming" -> maxHamming.toString,
-        s"${P}maxBucketSize" -> maxBucketSize.toString))
+    commitBuild(store, table, encode(hashed), Map(
+      "nBlocks" -> nBlocks.toString, "maxHamming" -> maxHamming.toString,
+      "maxBucketSize" -> maxBucketSize.toString))
 
   /** Dedup `batchHashed` (id, sh64) against the indexed corpus AND
     * itself under the COMMITTED banding parameters, then append its
@@ -111,75 +108,54 @@ object SimHashIndex extends ChainedIndex {
                       broadcastKeyLimit: Long = BroadcastGate.DefaultKeyLimit,
                       batchCountHint: Option[Long] = None,
                       keyProbeMaxKeys: Int = 0)
-      : Option[DataFrame] = {
-    var result: Option[DataFrame] = None
-    var enc: DataFrame = null
-    store.transactMeta[Unit](table, sortKey = Some("id")) {
-      val v = store.currentVersion(table)
-      if (v == 0)
-        throw new IllegalStateException(
-          s"$table: build the simhash index before appending " +
-            "(SimHashIndex.build; hashed.limit(0) for an empty init)")
-      val meta = store.metaForVersion(table, v)
-      val key = s"stream.$streamId.lastBatchId"
-      if (batchId <= meta.get(key).map(_.toLong).getOrElse(-1L)) Left(())
-      else {
-        def req(k: String): Int = meta.getOrElse(P + k,
-          throw new IllegalStateException(
-            s"$table has no committed simhash-index metadata '$P$k'")).toInt
-        val (nBlocks, maxHamming, maxBucketSize) =
-          (req("nBlocks"), req("maxHamming"), req("maxBucketSize"))
-        enc = encode(batchHashed)
-          .persist(StorageLevel.MEMORY_AND_DISK) // batch-sized, read 3×
-        // Gate sizing without a distinct() job: hint from the caller, or
-        // a narrow count on the persisted encoding (warms the cache).
-        val nBatch = batchCountHint.getOrElse(enc.count())
-        // Opt-in scan prefilter (the SemIndex zoneProbe / FingerprintIndex
-        // bloomProbe trade): one extra BOUNDED action collects the batch's
-        // mixed combo keys; the index scan then keeps only docs whose own
-        // keys can hit them — a pure in-expression map — instead of
-        // exploding every stored key array through the bucket semi-join
-        // (C(nBlocks, nBlocks−maxHamming) rows per indexed doc). The exact
-        // (band, bucket) semi-join still runs on the survivors, so bucket
-        // semantics (and tester false positives) never change the output.
-        // Batches whose key bound (nBatch·combosPerDoc) exceeds the budget
-        // keep the probe as a ~1%-fpp Bloom over the same keys (r14, the
-        // DedupIndex trade) instead of losing it. keyProbeMaxKeys = 0
-        // keeps the one-action job budget.
-        // Shared decision ladder (LshKeyProbe). combosPerDoc is a
-        // per-DOC over-count — near-dup-rich batches share most keys —
-        // so a bounded take-and-check past the budget can RESCUE the
-        // exact tester the bound alone would demote (r14 ADVICE). The
-        // rescue is itself ceilinged at 4× the Bloom bound: past that,
-        // even heavy sharing can't plausibly fit, and a true backfill
-        // must not pay a wasted cluster-side distinct just to learn it
-        // (the zero-job skip the a-priori bound buys).
-        val probeFilter: Option[org.apache.spark.sql.Column] =
-          LshKeyProbe(
-            keysOf(enc, nBlocks, maxHamming)
-              .select(col("band").as("part"), col("bucket")),
-            bound = nBatch * combosPerDoc(nBlocks, maxHamming),
-            keyProbeMaxKeys = keyProbeMaxKeys,
-            rescueTakeCeiling = DedupIndex.BloomProbeMaxKeys * 4,
-            exact = arr => graft.plans.VectorExpressions
-              .simhashKeyHits(col("sh64"), nBlocks, maxHamming, arr),
-            bloom = bf => graft.plans.VectorExpressions
-              .simhashKeyHitsBloom(col("sh64"), nBlocks, maxHamming, bf))
-        val idxRows = chain.load(store, table, v, meta)
-        val idxSrc = probeFilter match {
-          case Some(p) => idxRows.filter(p)
-          case None => idxRows
-        }
-        result = Some(pairsVsIndex(
-          idxSrc, enc, nBatch, nBlocks, maxHamming, maxBucketSize,
-          broadcastKeyLimit))
-        Right(chain.next(store, table, v, meta, enc, compactEvery,
-          Map(key -> batchId.toString)))
+      : Option[DataFrame] =
+    appendTx(store, table, Some((streamId, batchId)), compactEvery)(
+        _ => encode(batchHashed)) { (v, meta, enc) =>
+      val nBlocks = param(meta, "nBlocks").toInt
+      val maxHamming = param(meta, "maxHamming").toInt
+      val maxBucketSize = param(meta, "maxBucketSize").toInt
+      // Gate sizing without a distinct() job: hint from the caller, or
+      // a narrow count on the persisted encoding (warms the cache).
+      val nBatch = batchCountHint.getOrElse(enc.count())
+      // Opt-in scan prefilter (the SemIndex zoneProbe / FingerprintIndex
+      // bloomProbe trade): one extra BOUNDED action collects the batch's
+      // mixed combo keys; the index scan then keeps only docs whose own
+      // keys can hit them — a pure in-expression map — instead of
+      // exploding every stored key array through the bucket semi-join
+      // (C(nBlocks, nBlocks−maxHamming) rows per indexed doc). The exact
+      // (band, bucket) semi-join still runs on the survivors, so bucket
+      // semantics (and tester false positives) never change the output.
+      // Batches whose key bound (nBatch·combosPerDoc) exceeds the budget
+      // keep the probe as a ~1%-fpp Bloom over the same keys (r14, the
+      // DedupIndex trade) instead of losing it. keyProbeMaxKeys = 0
+      // keeps the one-action job budget.
+      // Shared decision ladder (LshKeyProbe). combosPerDoc is a
+      // per-DOC over-count — near-dup-rich batches share most keys —
+      // so a bounded take-and-check past the budget can RESCUE the
+      // exact tester the bound alone would demote (r14 ADVICE). The
+      // rescue is itself ceilinged at 4× the Bloom bound: past that,
+      // even heavy sharing can't plausibly fit, and a true backfill
+      // must not pay a wasted cluster-side distinct just to learn it
+      // (the zero-job skip the a-priori bound buys).
+      val probeFilter: Option[org.apache.spark.sql.Column] =
+        LshKeyProbe(
+          keysOf(enc, nBlocks, maxHamming)
+            .select(col("band").as("part"), col("bucket")),
+          bound = nBatch * combosPerDoc(nBlocks, maxHamming),
+          keyProbeMaxKeys = keyProbeMaxKeys,
+          rescueTakeCeiling = DedupIndex.BloomProbeMaxKeys * 4,
+          exact = arr => graft.plans.VectorExpressions
+            .simhashKeyHits(col("sh64"), nBlocks, maxHamming, arr),
+          bloom = bf => graft.plans.VectorExpressions
+            .simhashKeyHitsBloom(col("sh64"), nBlocks, maxHamming, bf))
+      val idxRows = chain.load(store, table, v, meta)
+      val idxSrc = probeFilter match {
+        case Some(p) => idxRows.filter(p)
+        case None => idxRows
       }
-    }
-    if (enc != null) enc.unpersist(blocking = false)
-    result
-  }
+      (pairsVsIndex(idxSrc, enc, nBatch, nBlocks, maxHamming,
+        maxBucketSize, broadcastKeyLimit), enc, Map.empty)
+    }.map(_._1)
 
   /** Key rows recomputed in-expression from the stored hash — the scan
     * reads only (id, sh64). */
@@ -235,9 +211,9 @@ object SimHashIndex extends ChainedIndex {
       : DataFrame = {
     val v = store.currentVersion(table)
     val meta = store.metaForVersion(table, v)
-    val maxHamming = meta(s"${P}maxHamming").toInt
-    val maxBucketSize = meta(s"${P}maxBucketSize").toInt
-    val nBlocks = meta(s"${P}nBlocks").toInt
+    val maxHamming = param(meta, "maxHamming").toInt
+    val maxBucketSize = param(meta, "maxBucketSize").toInt
+    val nBlocks = param(meta, "nBlocks").toInt
     val idx = chain.load(store, table, v, meta)
     val idRows = ids.select(col("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -365,18 +365,16 @@ object TextIndex {
         store.currentVersion(indexTable))))
       return PhraseIndex.appendBatchOnce(store, indexTable, batch, textCol,
         idCol, streamId, batchId, compactEvery)
-    val metaKey = s"stream.$streamId.lastBatchId"
     store.transactMetaDeferred[Unit](indexTable, sortKey = Some("term"),
         statsCols = Seq("term", "tf", "dl")) {
       val v = store.currentVersion(indexTable)
       requireBuilt(v, indexTable)
       val meta = store.metaForVersion(indexTable, v)
-      val last = meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-      if (batchId <= last) Left(())
+      if (DeltaChain.replayed(meta, streamId, batchId)) Left(())
       else {
         requireStillPostings(meta, indexTable)
         Right(deltaFor(store, indexTable, v, meta, batch, textCol, idCol,
-          compactEvery, Map(metaKey -> batchId.toString)))
+          compactEvery, DeltaChain.mark(streamId, batchId)))
       }
     }.isRight
   }
@@ -417,7 +415,8 @@ object TextIndex {
     if (isPositional(store.metaForVersion(indexTable,
         store.currentVersion(indexTable))))
       return PhraseIndex.deleteDocs(store, indexTable, ids)
-    deleteInternal(store, indexTable, ids, None)
+    takedown(store, indexTable, ids, None, chain, requireBuilt,
+      requireStillPostings)
     store.currentVersion(indexTable)
   }
 
@@ -434,36 +433,46 @@ object TextIndex {
         store.currentVersion(indexTable))))
       return PhraseIndex.deleteDocsOnce(store, indexTable, ids, streamId,
         batchId)
-    deleteInternal(store, indexTable, ids, Some((streamId, batchId)))
+    takedown(store, indexTable, ids, Some((streamId, batchId)), chain,
+      requireBuilt, requireStillPostings)
   }
 
-  private def deleteInternal(store: SnapshotStore, indexTable: String,
-                             ids: DataFrame,
-                             once: Option[(String, Long)]): Boolean = {
-    val tombs = ids.toDF("neighbor_id")
-    store.transactMetaDeferred[Unit](indexTable, sortKey = Some("neighbor_id"),
-        statsCols = Seq("neighbor_id")) {
-      val v = store.currentVersion(indexTable)
-      requireBuilt(v, indexTable)
-      val meta = store.metaForVersion(indexTable, v)
-      val replay = once.exists { case (sid, bid) =>
-        bid <= meta.get(s"stream.$sid.lastBatchId")
-          .map(_.toLong).getOrElse(-1L)
-      }
-      if (replay) Left(())
+  /** The text family's TAKEDOWN body, written once for both layouts
+    * ([[deleteDocs]] and [[PhraseIndex.deleteDocs]]). `docs` is the
+    * layout's chain: its `tombIdCol` is the document-id column and its
+    * key prefix holds the corpus stats. `requireBuilt` refuses an
+    * unbuilt table; `guard` is the layout check run under the lock
+    * after the replay test. Returns false for a replayed `once`. */
+  private[store] def takedown(store: SnapshotStore, table: String,
+                              ids: DataFrame, once: Option[(String, Long)],
+                              docs: DeltaChain,
+                              requireBuilt: (Long, String) => Unit,
+                              guard: (Map[String, String], String) => Unit)
+      : Boolean = {
+    val id = docs.tombIdCol
+    val p = docs.keyPrefix
+    val tombs = ids.toDF(id)
+    store.transactMetaDeferred[Unit](table, sortKey = Some(id),
+        statsCols = Seq(id)) {
+      val v = store.currentVersion(table)
+      requireBuilt(v, table)
+      val meta = store.metaForVersion(table, v)
+      if (once.exists { case (sid, bid) => DeltaChain.replayed(meta, sid, bid) })
+        Left(())
       else {
-        requireStillPostings(meta, indexTable)
+        guard(meta, table)
         // ONE visible-row scan feeds the per-doc deleted-TERM sets that
         // ride in the tombstone member (the champion delete-merge's
         // O(tombstone bytes) touched-term discovery) AND — r19, guide
         // §1.2 — the exact stats delta, riding the tombstone write as a
         // CollectMetrics observation instead of a separate persisted
-        // aggregate action (PhraseIndex.deleteInternal's recipe). Same
+        // aggregate action: per doc, the distinct-dl count/sum next to
+        // the term set, summed while the write streams the rows. Same
         // arithmetic as the old distinct-(id, dl) aggregate: Σ over docs
         // of (count, sum) over that doc's distinct dl values.
-        val perDoc = chain.load(store, indexTable, v, meta)
-          .join(tombs, Seq("neighbor_id"))
-          .groupBy(col("neighbor_id"))
+        val perDoc = docs.load(store, table, v, meta)
+          .join(tombs, Seq(id))
+          .groupBy(col(id))
           .agg(collect_set(col("term")).as("terms"),
             countDistinct(col("dl")).as("_ndl"),
             coalesce(sum_distinct(col("dl").cast("long")), lit(0L)).as("_sdl"))
@@ -472,34 +481,31 @@ object TextIndex {
           coalesce(sum(col("_ndl")), lit(0L)).as("n"),
           coalesce(sum(col("_sdl")), lit(0L)).as("sdl"))
         val tombRows = tombs
-          .join(observed.select(col("neighbor_id"), col("terms")),
-            Seq("neighbor_id"), "left")
-          .select(col("neighbor_id"),
-            coalesce(col("terms"), array().cast("array<string>"))
-              .as("terms"))
-        val (rows, commitMeta) = chain.tombNext(v, meta, tombRows,
-          once.map { case (sid, bid) =>
-            Map(s"stream.$sid.lastBatchId" -> bid.toString)
-          }.getOrElse(Map.empty))
+          .join(observed.select(col(id), col("terms")), Seq(id), "left")
+          .select(col(id),
+            coalesce(col("terms"), array().cast("array<string>")).as("terms"))
+        val (rows, commitMeta) = docs.tombNext(v, meta, tombRows,
+          once.map { case (sid, bid) => DeltaChain.mark(sid, bid) }
+            .getOrElse(Map.empty))
         Right((rows, commitMeta, () => {
           val (dDocs, dDl) = ObservedStats.result(obs, {
             // eager fallback (collapsed plan / timeout): the pre-r19
             // separate aggregate over the same visible-row scan
-            val r = chain.load(store, indexTable, v, meta)
-              .join(tombs, Seq("neighbor_id"))
-              .select(col("neighbor_id"), col("dl")).distinct()
+            val r = docs.load(store, table, v, meta)
+              .join(tombs, Seq(id))
+              .select(col(id), col("dl")).distinct()
               .agg(count(lit(1)),
                 coalesce(sum(col("dl").cast("long")), lit(0L)))
               .head()
             (r.getLong(0), r.getLong(1))
           })
           Map(
-            s"${P}nDocs" ->
-              (meta.getOrElse(s"${P}nDocs", "0").toLong - dDocs).toString,
-            s"${P}sumDl" ->
-              (meta.getOrElse(s"${P}sumDl", "0").toLong - dDl).toString,
-            s"${P}contentVersion" ->
-              (meta.getOrElse(s"${P}contentVersion", "0").toLong + 1).toString)
+            s"${p}nDocs" ->
+              (meta.getOrElse(s"${p}nDocs", "0").toLong - dDocs).toString,
+            s"${p}sumDl" ->
+              (meta.getOrElse(s"${p}sumDl", "0").toLong - dDl).toString,
+            s"${p}contentVersion" ->
+              (meta.getOrElse(s"${p}contentVersion", "0").toLong + 1).toString)
         }))
       }
     }.isRight

@@ -91,16 +91,15 @@ object VectorIndex extends ChainedIndex {
           seed, residualOf = Some(cents)))
       }
     val encoded = Similarity.ivfPqEncode(corpus, idCol, vecCol, centroids, codebooks)
-    store.commit(indexTable, encoded, sortKey = Some("list_id"),
-      meta = chain.resetMeta ++ Map(
-        s"${P}dim" -> dim.toString,
-        s"${P}nLists" -> nLists.toString,
-        s"${P}m" -> m.toString,
-        s"${P}kCodes" -> kCodes.toString,
-        s"${P}scheme" -> Scheme,
-        s"${P}centroids" -> encodeMatrix(centroids),
-        s"${P}codebooks" -> encodeCube(codebooks))
-        ++ corpusTag.map(t => s"${P}corpusTag" -> t))
+    commitBuild(store, indexTable, encoded, Map(
+      "dim" -> dim.toString,
+      "nLists" -> nLists.toString,
+      "m" -> m.toString,
+      "kCodes" -> kCodes.toString,
+      "scheme" -> Scheme,
+      "centroids" -> encodeMatrix(centroids),
+      "codebooks" -> encodeCube(codebooks))
+      ++ corpusTag.map("corpusTag" -> _))
   }
 
   /** The corpus content tag recorded when the current index version's
@@ -119,16 +118,8 @@ object VectorIndex extends ChainedIndex {
     * members the append folds the chain into a full snapshot instead. */
   def append(store: SnapshotStore, indexTable: String, newVectors: DataFrame,
              idCol: String, vecCol: String, compactEvery: Int = 8): Long =
-    store.transactMeta[Nothing](indexTable, sortKey = Some("list_id")) {
-      val v = store.currentVersion(indexTable)
-      val meta = store.metaForVersion(indexTable, v)
-      requireScheme(meta, indexTable)
-      val (centroids, codebooks, _) = paramsFrom(meta, indexTable)
-      val encoded = Similarity.ivfPqEncode(
-        newVectors, idCol, vecCol, centroids, codebooks)
-      Right(chain.next(store, indexTable, v, meta, encoded, compactEvery,
-        Map.empty))
-    }.merge
+    appendEncoded(store, indexTable, newVectors, idCol, vecCol, None,
+      compactEvery).get
 
   /** Exactly-once streaming append: the same batch-id watermark discipline
     * as the catalog ingest (Mutations.appendBatchOnce) — the last applied
@@ -139,23 +130,20 @@ object VectorIndex extends ChainedIndex {
   def appendBatchOnce(store: SnapshotStore, indexTable: String,
                       batch: DataFrame, idCol: String, vecCol: String,
                       streamId: String, batchId: Long,
-                      compactEvery: Int = 8): Boolean = {
-    val metaKey = s"stream.$streamId.lastBatchId"
-    store.transactMeta[Unit](indexTable, sortKey = Some("list_id")) {
-      val v = store.currentVersion(indexTable)
-      val meta = store.metaForVersion(indexTable, v)
-      val last = meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-      if (batchId <= last) Left(())
-      else {
-        requireScheme(meta, indexTable)
-        val (centroids, codebooks, _) = paramsFrom(meta, indexTable)
-        val encoded = Similarity.ivfPqEncode(
-          batch, idCol, vecCol, centroids, codebooks)
-        Right(chain.next(store, indexTable, v, meta, encoded, compactEvery,
-          Map(metaKey -> batchId.toString)))
-      }
-    }.isRight
-  }
+                      compactEvery: Int = 8): Boolean =
+    appendEncoded(store, indexTable, batch, idCol, vecCol,
+      Some((streamId, batchId)), compactEvery).isDefined
+
+  /** The encoded batch is written once, by the commit: nothing to cache. */
+  private def appendEncoded(store: SnapshotStore, indexTable: String,
+                            batch: DataFrame, idCol: String, vecCol: String,
+                            once: Option[(String, Long)],
+                            compactEvery: Int): Option[Long] =
+    appendTx(store, indexTable, once, compactEvery, persist = false) { meta =>
+      requireScheme(meta, indexTable)
+      val (centroids, codebooks, _) = trained(meta)
+      Similarity.ivfPqEncode(batch, idCol, vecCol, centroids, codebooks)
+    } { (_, _, encoded) => ((), encoded, Map.empty) }.map(_._2)
 
   /** Keep an index current from a stream of vectors: each micro-batch
     * encodes with the live parameters and appends exactly once. Caller
@@ -203,7 +191,7 @@ object VectorIndex extends ChainedIndex {
     val v = store.currentVersion(indexTable)
     val meta = store.metaForVersion(indexTable, v)
     requireScheme(meta, indexTable)
-    val (centroids, codebooks, kCodes) = paramsFrom(meta, indexTable)
+    val (centroids, codebooks, kCodes) = trained(meta)
     Similarity.ivfPqScore(chain.load(store, indexTable, v, meta), queries,
       queryIdCol, queryVecCol, centroids, codebooks, k, nProbe, kCodes,
       roundScore)
@@ -246,14 +234,10 @@ object VectorIndex extends ChainedIndex {
 
   /** Trained parameters recorded in a version's metadata:
     * (centroids, codebooks, kCodes). */
-  private def paramsFrom(meta: Map[String, String], table: String)
-      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Int) = {
-    def req(key: String): String = meta.getOrElse(P + key,
-      throw new IllegalStateException(
-        s"$table has no committed IVFPQ metadata '$P$key'"))
-    (decodeMatrix(req("centroids")), decodeCube(req("codebooks")),
-      req("kCodes").toInt)
-  }
+  private def trained(meta: Map[String, String])
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Int) =
+    (decodeMatrix(param(meta, "centroids")),
+      decodeCube(param(meta, "codebooks")), param(meta, "kCodes").toInt)
 
   // ---- metadata (de)serialization: single-line, Double.toString
   // round-trips bit-exactly; ',' components / ';' vectors / '|' subspaces.

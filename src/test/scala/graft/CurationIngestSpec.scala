@@ -415,13 +415,13 @@ class CurationIngestSpec extends SparkSpec {
     }
     // the takedown contract: pending tombstones fold whatever the length
     val policy = CurationIngest.MaintenancePolicy(maxChainLength = 100)
-    val report = CurationIngest.maintain(store, "td", regime, policy)
+    val report = CurationIngest.maintain(store, "td", policy)
     assert(report.compacted.toSet == Set("td_fp", "td_nd"))
     assert(report.after.forall(_.chainLength == 1), s"${report.after}")
     assert(report.after.map(_.rows) == after.map(_.rows))
     assert(store.loadVersion("td_fp", store.currentVersion("td_fp"))
       .filter(col("id").isin(0L, 1L, 2L)).count() == 0)
-    assert(CurationIngest.maintain(store, "td", regime, policy).compacted.isEmpty)
+    assert(CurationIngest.maintain(store, "td", policy).compacted.isEmpty)
   }
 
   test("a prefix rebuilt under another regime: stats, maintain and vacuum refuse it") {
@@ -438,9 +438,9 @@ class CurationIngestSpec extends SparkSpec {
     // _nd carries the stale minhash chain key beside its own; resolving
     // either chain would fold or vacuum away the other's members
     val versions = store.versions("sw_nd")
-    intercept[IllegalStateException](CurationIngest.vacuum(store, "sw", simhash))
+    intercept[IllegalStateException](CurationIngest.vacuum(store, "sw"))
     intercept[IllegalStateException](CurationIngest.stats(store, "sw"))
-    intercept[IllegalStateException](CurationIngest.maintain(store, "sw", simhash))
+    intercept[IllegalStateException](CurationIngest.maintain(store, "sw"))
     assert(store.versions("sw_nd") == versions, "a live chain member was dropped")
   }
 
@@ -461,7 +461,7 @@ class CurationIngestSpec extends SparkSpec {
           docsDF.filter(col("doc_id") % 5 === i), "text", "doc_id", "s", i.toLong)
         val rows = lin.as[(Long, Long, String)].collect()
         lin.unpersist(blocking = false)
-        if (withMaintain) CurationIngest.maintain(store, "mt", regime, policy)
+        if (withMaintain) CurationIngest.maintain(store, "mt", policy)
         rows
       }
       (store, "mt", out.map { case (id, k, r) => id -> (k, r) }.toMap)
@@ -481,7 +481,7 @@ class CurationIngestSpec extends SparkSpec {
     assert(maint.versions("mt_fp").size < plain.versions("mt_fp").size)
     // Idempotence: a maintain on an already-maintained store folds
     // nothing and leaves the stats untouched.
-    val again = CurationIngest.maintain(maint, "mt", regime, policy)
+    val again = CurationIngest.maintain(maint, "mt", policy)
     assert(again.compacted.isEmpty, s"second maintain refolded: $again")
     assert(again.after.map(t => (t.table, t.version, t.chainLength, t.rows))
       === sm.map(t => (t.table, t.version, t.chainLength, t.rows)))
@@ -489,12 +489,12 @@ class CurationIngestSpec extends SparkSpec {
     // between the two steps leaves behind) keeps every table readable,
     // and the next maintain finishes the vacuum.
     val (half, _, _) = ingest5(withMaintain = false)
-    val r1 = CurationIngest.maintain(half, "mt", regime,
+    val r1 = CurationIngest.maintain(half, "mt",
       policy.copy(vacuum = false))
     assert(r1.compacted.nonEmpty && !r1.vacuumed)
     val preVacuumStats = CurationIngest.stats(half, "mt")
     assert(preVacuumStats.forall(_.chainLength == 1))
-    val r2 = CurationIngest.maintain(half, "mt", regime, policy)
+    val r2 = CurationIngest.maintain(half, "mt", policy)
     assert(r2.compacted.isEmpty && r2.vacuumed)
     // and the final state answers a fresh ingest identically
     val lin6 = CurationIngest.ingestBatchOnce(half, "mt", regime,

@@ -492,25 +492,29 @@ class TombstoneSpec extends SparkSpec {
     val d = docs(20)
     val store = newStore("delonce")
     TextIndex.build(store, "t", d, "text", "doc_id")
-    // takedown queue applies batch 0: delete doc 7
-    assert(TextIndex.deleteDocsOnce(store, "t", ids(7L), "tdq", 0L))
-    // doc 7's content is re-ingested later (a corrected version)
-    TextIndex.append(store, "t",
-      Seq((7L, "alpha w0 beta w0 gamma tok7b end")).toDF("doc_id", "text"),
-      "text", "doc_id")
-    // the queue REDELIVERS batch 0 (at-least-once) — without the
-    // watermark this tombstone would land at a higher epoch and hide
-    // the reinsert; with it the replay is skipped
-    assert(!TextIndex.deleteDocsOnce(store, "t", ids(7L), "tdq", 0L))
-    val got = ranked(TextIndex.query(store, "t", queries(d), "query_id",
-      "qtext", k = 50))
-    assert(got.exists(_._2 == 7L), "replayed delete hid the reinsert")
-    // a GENUINE second delete (next batch id) applies normally
-    assert(TextIndex.deleteDocsOnce(store, "t", ids(7L), "tdq", 1L))
-    assert(!ranked(TextIndex.query(store, "t", queries(d), "query_id",
-      "qtext", k = 50)).exists(_._2 == 7L))
-    // the Graft dispatch form shares the same watermark namespace
-    assert(!Graft.deleteDocsOnce(store, "t", ids(7L), "tdq", 1L))
+    PhraseIndex.build(store, "p", d, "text", "doc_id")
+    // the postings ("t") and positional ("p") layouts share one protocol
+    for (t <- Seq("t", "p")) {
+      // takedown queue applies batch 0: delete doc 7
+      assert(TextIndex.deleteDocsOnce(store, t, ids(7L), "tdq", 0L))
+      // doc 7's content is re-ingested later (a corrected version)
+      TextIndex.append(store, t,
+        Seq((7L, "alpha w0 beta w0 gamma tok7b end")).toDF("doc_id", "text"),
+        "text", "doc_id")
+      // the queue REDELIVERS batch 0 (at-least-once) — without the
+      // watermark this tombstone would land at a higher epoch and hide
+      // the reinsert; with it the replay is skipped
+      assert(!TextIndex.deleteDocsOnce(store, t, ids(7L), "tdq", 0L))
+      val got = ranked(TextIndex.query(store, t, queries(d), "query_id",
+        "qtext", k = 50))
+      assert(got.exists(_._2 == 7L), s"$t: replayed delete hid the reinsert")
+      // a GENUINE second delete (next batch id) applies normally
+      assert(TextIndex.deleteDocsOnce(store, t, ids(7L), "tdq", 1L))
+      assert(!ranked(TextIndex.query(store, t, queries(d), "query_id",
+        "qtext", k = 50)).exists(_._2 == 7L))
+      // the Graft dispatch form shares the same watermark namespace
+      assert(!Graft.deleteDocsOnce(store, t, ids(7L), "tdq", 1L))
+    }
     // the simple-index form: same protocol on the fingerprint chain
     FingerprintIndex.build(store, "fp", d, "text", "doc_id")
     assert(Graft.deleteDocsOnce(store, "fp", ids(3L).toDF("id"), "tdq", 0L))
