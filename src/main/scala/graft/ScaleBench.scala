@@ -1209,7 +1209,7 @@ object ScaleBench {
       // 5M-doc postings chain bm25_champ_refresh above paid for. Runs
       // AFTER every 5M-corpus serving entry so their corpus is
       // untouched. Depends on text_index_build — filter "text_index,bm25".
-      // Since r17 this append DELEGATES to the positional writer: the
+      // Since r17 this append goes to the positional layout: the
       // 100k batch pays position encoding too — the honest cost of the
       // one unified append path.
       timed("bm25_append_100k") {

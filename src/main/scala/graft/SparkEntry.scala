@@ -621,7 +621,7 @@ object SparkEntry {
     // The persistent-index path (build on even ids + one append of the
     // odd ids, then probe) must produce the identical ranking — same
     // truth as the scan path. _indexed serves from the UNIFIED
-    // positional store (r17: PhraseIndex build + delegated append);
+    // positional store (r17: PhraseIndex build + a positional append);
     // _postings keeps the standalone postings layout pinned to the
     // same oracle.
     "retrieve_bm25_indexed" -> Bm25RankSql,
@@ -696,8 +696,8 @@ object SparkEntry {
     // the merged-table query carries the identical from-scratch oracle —
     // and the query refuses to answer unless the merge path really ran
     "retrieve_bm25_merged" -> Bm25ChampRankSql,
-    // the full unified-store maintenance cycle (r17: delegated append →
-    // maintainAll's champion merge + PhraseIndex fold + vacuum →
+    // the full unified-store maintenance cycle (r17: positional append →
+    // maintainAll's champion merge + positional fold + vacuum →
     // STRICT champion serve) must land on the same from-scratch
     // selection — the fixture refuses unless the merge and the fold
     // really ran

@@ -381,7 +381,7 @@ object ExtensionQueries {
   def dedupIncrOracle(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d).filter(col("doc_id") < 300)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-dedupincr").toString
+    val root = graft.TempDirs.create("graft-dedupincr").toString
     val store = new SnapshotStore(root, s)
     DedupIndex.build(store, "docs_minhash", base.limit(0), "text", "doc_id")
     val parts = (0 until 2).map { i =>
@@ -415,7 +415,7 @@ object ExtensionQueries {
       .select((col("doc_id") + 10000).as("doc_id"),
         regexp_replace(col("text"), " ", "\t ").as("text"))
     val u = base.unionByName(variants)
-    val root = java.nio.file.Files.createTempDirectory("graft-fpincr").toString
+    val root = graft.TempDirs.create("graft-fpincr").toString
     val store = new SnapshotStore(root, s)
     FingerprintIndex.build(store, "docs_fp", u.limit(0), "text", "doc_id")
     val parts = Seq(u.filter(col("doc_id") < 250), u.filter(col("doc_id") >= 250))
@@ -441,7 +441,7 @@ object ExtensionQueries {
       .select((col("doc_id") + 10000).as("doc_id"),
         regexp_replace(col("text"), " ", "\t ").as("text"))
     val u = base.unionByName(variants)
-    val root = java.nio.file.Files.createTempDirectory("graft-fpbloom").toString
+    val root = graft.TempDirs.create("graft-fpbloom").toString
     val store = new SnapshotStore(root, s)
     FingerprintIndex.build(store, "docs_fp", u.limit(0), "text", "doc_id")
     val parts = Seq(u.filter(col("doc_id") < 250), u.filter(col("doc_id") >= 250))
@@ -559,7 +559,7 @@ object ExtensionQueries {
     val hashed = docs(s, d)
       .filter(col("doc_id") < 300 && size(TF.tokens(col("text"))) > 0)
       .select(col("doc_id").as("id"), Dedup.simhash64Md5(col("text")).as("sh64"))
-    val root = java.nio.file.Files.createTempDirectory("graft-shincr").toString
+    val root = graft.TempDirs.create("graft-shincr").toString
     val store = new SnapshotStore(root, s)
     SimHashIndex.build(store, "docs_simhash", hashed.limit(0),
       nBlocks = Dedup.simhashAutoBlocks(300L, 6), maxHamming = 6)
@@ -603,7 +603,7 @@ object ExtensionQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .unionByName(embs(s, d).filter(col("vec_id") === 0)
         .select((col("vec_id") + 10300).as("id"), col("embedding").as("vec")))
-    val root = java.nio.file.Files.createTempDirectory("graft-embincr").toString
+    val root = graft.TempDirs.create("graft-embincr").toString
     val store = new SnapshotStore(root, s)
     EmbedIndex.build(store, "vecs_embed", base, dim = 64, threshold = 0.99,
       expectedCorpus = 360L)
@@ -672,7 +672,7 @@ object ExtensionQueries {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .unionByName(embs(s, d).filter(col("vec_id") === 0)
         .select((col("vec_id") + 10300).as("id"), col("embedding").as("vec")))
-    val root = java.nio.file.Files.createTempDirectory("graft-semincr").toString
+    val root = graft.TempDirs.create("graft-semincr").toString
     val store = new SnapshotStore(root, s)
     SemIndex.build(store, "vecs_sem", base, dim = 64, eps = 0.99,
       nClusters = 1)
@@ -708,7 +708,7 @@ object ExtensionQueries {
         regexp_replace(col("text"), " ", "\t ").as("text"))
     val u = base.unionByName(variants)
       .filter(size(TF.tokens(col("text"))) > 0)
-    val root = java.nio.file.Files.createTempDirectory("graft-curing").toString
+    val root = graft.TempDirs.create("graft-curing").toString
     val store = new SnapshotStore(root, s)
     val regime = SimHashRegime(hash = Dedup.simhash64Md5(_),
       maxHamming = 6, expectedCorpus = 300L)
@@ -741,7 +741,7 @@ object ExtensionQueries {
         regexp_replace(col("text"), " ", "\t ").as("text"))
     val u = base.unionByName(variants)
       .filter(size(TF.tokens(col("text"))) > 0)
-    val root = java.nio.file.Files.createTempDirectory("graft-curlin").toString
+    val root = graft.TempDirs.create("graft-curlin").toString
     val store = new SnapshotStore(root, s)
     val regime = SimHashRegime(hash = Dedup.simhash64Md5(_),
       maxHamming = 6, expectedCorpus = 300L)
@@ -940,7 +940,7 @@ object ExtensionQueries {
   private def phraseFixture(s: SparkSession, d: String,
                             incremental: Boolean): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-phraseidx").toString
+    val root = graft.TempDirs.create("graft-phraseidx").toString
     val store = new SnapshotStore(root, s)
     if (incremental) {
       PhraseIndex.build(store, "docs_pos",
@@ -977,7 +977,7 @@ object ExtensionQueries {
     * engine-stability argument. */
   def retrievePhraseRanked(s: SparkSession, d: String): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-phraserk").toString
+    val root = graft.TempDirs.create("graft-phraserk").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_pos", ds, "text", "doc_id")
     PhraseIndex.phraseQueryRanked(store, "docs_pos", phraseQueryBatch(ds),
@@ -992,7 +992,7 @@ object ExtensionQueries {
     * in-window successor. */
   def retrieveProximity(s: SparkSession, d: String): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-proxidx").toString
+    val root = graft.TempDirs.create("graft-proxidx").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_pos", ds, "text", "doc_id")
     val tk = TF.tokens(lower(col("text")))
@@ -1025,7 +1025,7 @@ object ExtensionQueries {
     // unified read must be score-identical to the postings layout
     // (retrieve_bm25_postings keeps that layout's own oracle pin).
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25idx").toString
+    val root = graft.TempDirs.create("graft-bm25idx").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_text",
       ds.filter(col("doc_id") % 2 === 0), "text", "doc_id")
@@ -1044,7 +1044,7 @@ object ExtensionQueries {
     * never pay for positions at rest. */
   def retrieveBm25Postings(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25pst").toString
+    val root = graft.TempDirs.create("graft-bm25pst").toString
     val store = new SnapshotStore(root, s)
     TextIndex.build(store, "docs_bm25",
       ds.filter(col("doc_id") % 2 === 0), "text", "doc_id")
@@ -1066,7 +1066,7 @@ object ExtensionQueries {
     * plain BM25, but bit-identical between the two engines. */
   def retrieveBm25Champ(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25champ").toString
+    val root = graft.TempDirs.create("graft-bm25champ").toString
     val store = new SnapshotStore(root, s)
     // champions over the UNIFIED positional store (r17) — the refresh
     // aggregates the slim projection; the committed champion table and
@@ -1092,7 +1092,7 @@ object ExtensionQueries {
     * full corpus. */
   def retrieveBm25ChampMerged(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25cm").toString
+    val root = graft.TempDirs.create("graft-bm25cm").toString
     val store = new SnapshotStore(root, s)
     // unified store (r17): the second refresh must anchor the merge on
     // the POSITIONAL table's content counter across the delegated
@@ -1130,7 +1130,7 @@ object ExtensionQueries {
     * together. */
   def retrieveBm25Maintained(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25mnt").toString
+    val root = graft.TempDirs.create("graft-bm25mnt").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_text",
       ds.filter(col("doc_id") % 2 === 0), "text", "doc_id")
@@ -1169,7 +1169,7 @@ object ExtensionQueries {
     * without handing the probe the full postings. */
   def retrieveBm25MaxScore(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25ms").toString
+    val root = graft.TempDirs.create("graft-bm25ms").toString
     val store = new SnapshotStore(root, s)
     // unified store (r17): the bounded probe's zone skips read the
     // positional table's term/tf/dl sidecars through the slim chain
@@ -1486,7 +1486,7 @@ object ExtensionQueries {
       (0 until 8).map(i => concat(lit("zq"), idS, lit("x" + i))): _*)
     val planted = docs(s, d).select(col("doc_id"),
       when(col("doc_id") % 11 === 7, junk).otherwise(col("text")).as("t"))
-    val root = java.nio.file.Files.createTempDirectory("graft-lmstore").toString
+    val root = graft.TempDirs.create("graft-lmstore").toString
     val model = graft.functions.NgramLm.train(
       planted.filter(col("doc_id") % 7 < 3), "t", minCount = 1)
     graft.functions.NgramLm.commitModel(
@@ -1705,7 +1705,7 @@ object ExtensionQueries {
     * stats adjustment, both pinned externally here). */
   def retrieveBm25Deleted(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25del").toString
+    val root = graft.TempDirs.create("graft-bm25del").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_text", ds, "text", "doc_id")
     TextIndex.deleteDocs(store, "docs_text", textDeleteIds(s, d))
@@ -1723,7 +1723,7 @@ object ExtensionQueries {
     * the oracle filters the match side by the delete predicate. */
   def retrievePhraseDeleted(s: SparkSession, d: String): DataFrame = {
     val ds = docs(s, d).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-phdel").toString
+    val root = graft.TempDirs.create("graft-phdel").toString
     val store = new SnapshotStore(root, s)
     PhraseIndex.build(store, "docs_text", ds, "text", "doc_id")
     TextIndex.deleteDocs(store, "docs_text", textDeleteIds(s, d))
@@ -1746,7 +1746,7 @@ object ExtensionQueries {
   def dedupIncrFpDeleted(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d).filter(col("doc_id") < 500)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-fpdel").toString
+    val root = graft.TempDirs.create("graft-fpdel").toString
     val store = new SnapshotStore(root, s)
     FingerprintIndex.build(store, "docs_fp", base, "text", "doc_id")
     // unique-text ids under the fingerprint key (the index's own notion
@@ -1773,7 +1773,7 @@ object ExtensionQueries {
   def dedupMinhashDeleted(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d).filter(col("doc_id") < 300)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-mhdel").toString
+    val root = graft.TempDirs.create("graft-mhdel").toString
     val store = new SnapshotStore(root, s)
     DedupIndex.build(store, "docs_minhash", base, "text", "doc_id")
     DedupIndex.deleteDocs(store, "docs_minhash",
@@ -1791,7 +1791,7 @@ object ExtensionQueries {
     val hashed = docs(s, d)
       .filter(col("doc_id") < 300 && size(TF.tokens(col("text"))) > 0)
       .select(col("doc_id").as("id"), Dedup.simhash64Md5(col("text")).as("sh64"))
-    val root = java.nio.file.Files.createTempDirectory("graft-shdel").toString
+    val root = graft.TempDirs.create("graft-shdel").toString
     val store = new SnapshotStore(root, s)
     SimHashIndex.build(store, "docs_simhash", hashed,
       nBlocks = Dedup.simhashAutoBlocks(300L, 6), maxHamming = 6)
@@ -1814,7 +1814,7 @@ object ExtensionQueries {
       col("embedding").as("vec"))
     val p2 = planted.select((col("vec_id") + 10301).as("id"),
       col("embedding").as("vec"))
-    val root = java.nio.file.Files.createTempDirectory("graft-embdel").toString
+    val root = graft.TempDirs.create("graft-embdel").toString
     val store = new SnapshotStore(root, s)
     EmbedIndex.build(store, "vecs_embed", base.unionByName(p2), dim = 64,
       threshold = 0.99, expectedCorpus = 360L)
@@ -1841,7 +1841,7 @@ object ExtensionQueries {
       col("embedding").as("vec"))
     val p2 = planted.select((col("vec_id") + 10301).as("id"),
       col("embedding").as("vec"))
-    val root = java.nio.file.Files.createTempDirectory("graft-semdel").toString
+    val root = graft.TempDirs.create("graft-semdel").toString
     val store = new SnapshotStore(root, s)
     SemIndex.build(store, "vecs_sem", base.unionByName(p2), dim = 64,
       eps = 0.99, nClusters = 1)
@@ -1859,7 +1859,7 @@ object ExtensionQueries {
     * per-invocation store: a delete mutates, so the shared cached
     * index of `sim_index_topk` must not be reused. */
   def simIndexDeleted(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-videl").toString
+    val root = graft.TempDirs.create("graft-videl").toString
     val store = new SnapshotStore(root, s)
     VectorIndex.build(store, "emb_ivfpq", embs(s, d), "vec_id", "embedding",
       dim = 64, nLists = 16, m = 16, kCodes = 16)

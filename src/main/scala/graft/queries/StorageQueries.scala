@@ -28,7 +28,7 @@ object StorageQueries {
     * tile the key space, so a narrow range keeps ~1-2 of 16 files. */
   def storePruneRange(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-zones").toString
+    val root = graft.TempDirs.create("graft-zones").toString
     val store = new SnapshotStore(root, s)
     store.commit("li", li.repartitionByRange(16, col("l_orderkey")),
       sortKey = Some("l_orderkey"), statsCols = Seq("l_orderkey"))
@@ -48,7 +48,7 @@ object StorageQueries {
     * ns-vs-µs truncation at the window edges. */
   def storePruneTime(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-tzones").toString
+    val root = graft.TempDirs.create("graft-tzones").toString
     val store = new SnapshotStore(root, s)
     store.commit("ev", ev.repartitionByRange(16, col("ts")),
       sortKey = Some("ts"), statsCols = Seq("ts"))
@@ -67,7 +67,7 @@ object StorageQueries {
     * would leave one dimension's zones spanning the whole domain. */
   def storeZorderRect(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val root = graft.TempDirs.create("graft-zorder").toString
     val store = new SnapshotStore(root, s)
     val zk = ZOrder.zkey(col("l_partkey"), col("l_suppkey"))
     store.commit("liz",

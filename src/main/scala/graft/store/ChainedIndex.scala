@@ -4,46 +4,60 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
 
-/** The [[DeltaChain]] lifecycle of a compact-only persistent index,
-  * written once for the six that share it ([[DedupIndex]],
-  * [[SimHashIndex]], [[EmbedIndex]], [[SemIndex]], [[FingerprintIndex]],
-  * [[VectorIndex]]): the exactly-once APPEND transaction, the committed
-  * parameter read, the live read, the tombstone TAKEDOWN (plain and
-  * exactly-once), the on-demand fold, the chain-aware vacuum and the
-  * maintenance fold policy. An index keeps only what is its own —
-  * encode, keys, verify, the body of its append — and declares here its
-  * chain and its commit layout, which every append and fold commit uses.
+/** The [[DeltaChain]] lifecycle of a persistent index, written once for
+  * the eight that share it — the six compact-only indexes
+  * ([[DedupIndex]], [[SimHashIndex]], [[EmbedIndex]], [[SemIndex]],
+  * [[FingerprintIndex]], [[VectorIndex]]) and the two text layouts
+  * ([[TextLayout]]: TextIndex's postings, [[PhraseIndex]]'s positions):
+  * the exactly-once APPEND transaction, the committed parameter read,
+  * the live read, the tombstone TAKEDOWN (plain and exactly-once), the
+  * on-demand fold, the chain-aware vacuum and the maintenance fold
+  * policy. An index keeps only what is its own — encode, keys, verify,
+  * the body of its append — and declares here its chain, its commit
+  * layout (sort key, zone and bloom columns, and the fold's physical
+  * layout) and its compatibility check, which every entry point runs.
   *
-  * [[TextIndex]] and [[PhraseIndex]] are not members: their deletes
-  * adjust corpus statistics and carry payload tombstones, and their
-  * maintenance refreshes champions. They join the marker registry
-  * ([[ChainedIndex.kinds]]) only. */
+  * The text layouts override the takedown (their deletes adjust corpus
+  * statistics and carry payload tombstones) and keep their maintenance
+  * (the champion refresh) in [[TextIndex]]; their registry rows route
+  * through TextIndex's layout-aware entry points and stay out of the
+  * compact-only count ([[ChainedIndex.kindOf]]). */
 trait ChainedIndex {
 
   /** The index's delta chain; its `partsKey` is the table's marker. */
   private[store] def chain: DeltaChain
 
   /** Physical layout of the index's commits (build, append, fold): sort
-    * key, zone-map columns, bloom columns. */
+    * key, zone-map columns, bloom columns, and the layout a FOLD
+    * re-establishes over the chain union ([[DeltaChain.next]]). */
   protected def foldSortKey: String = "id"
   protected def foldStatsCols: Seq[String] = Nil
   protected def foldBloomCols: Seq[String] = Nil
+  protected def foldLayout: DataFrame => DataFrame = identity
 
-  /** Safety check a takedown runs on the committed metadata before it
-    * writes anything (VectorIndex refuses a foreign encoding scheme). */
-  protected def checkDelete(meta: Map[String, String], table: String): Unit = ()
+  /** Compatibility check on the committed metadata, run by every entry
+    * point before it touches the chain — writes run it under the table
+    * lock. VectorIndex refuses a foreign encoding scheme; a text layout
+    * refuses a table whose latest build is the other layout, or a
+    * foreign tokenizer. */
+  private[store] def checkCompatible(meta: Map[String, String],
+                                     table: String): Unit = ()
 
-  private def name: String = getClass.getSimpleName.stripSuffix("$")
+  /** The index's name in refusals. */
+  protected def name: String = getClass.getSimpleName.stripSuffix("$")
 
   /** The current version and its metadata, refusing a table the index
-    * was never built on. Run under the table lock. */
-  private def built(store: SnapshotStore, table: String, doing: String)
+    * was never built on or is not compatible with. Writes run it under
+    * the table lock. */
+  private[store] def built(store: SnapshotStore, table: String, doing: String)
       : (Long, Map[String, String]) = {
     val v = store.currentVersion(table)
     if (v == 0)
       throw new IllegalStateException(
         s"$table: build the index before $doing ($name.build)")
-    (v, store.metaForVersion(table, v))
+    val meta = store.metaForVersion(table, v)
+    checkCompatible(meta, table)
+    (v, meta)
   }
 
   /** One committed build parameter (`<prefix><key>`, e.g. `dedup.bands`),
@@ -66,13 +80,16 @@ trait ChainedIndex {
       statsCols = foldStatsCols, bloomCols = foldBloomCols)
 
   /** The APPEND transaction, written once for the family. Under the table
-    * lock it refuses an unbuilt table and skips a replayed `once`
-    * (streamId, batchId) — None is the plain, non-idempotent form. It
-    * then encodes the batch from the committed metadata, persisted when
-    * `persist` (the body reads it several times) and unpersisted once
-    * the commit returns. `body` maps (version, metadata, encoding) to
-    * (result, delta, extra metadata); the delta commits through
-    * [[DeltaChain.next]] with the watermark, in the index's layout.
+    * lock it refuses an unbuilt or incompatible table and skips a
+    * replayed `once` (streamId, batchId) — None is the plain,
+    * non-idempotent form. It then encodes the batch from the committed
+    * metadata, persisted when `persist` (the body reads it several
+    * times) and unpersisted once the commit returns. `body` maps
+    * (version, metadata, encoding) to (result, delta, extra metadata);
+    * the delta commits through [[DeltaChain.next]] with the watermark,
+    * in the index's layout. `metaDeferred` maps the pre-append metadata
+    * to entries the commit's own write pass computes (the text layouts'
+    * observed nDocs/sumDl), evaluated after the parquet write.
     *
     * The body runs against the pre-append version (its dirs are
     * immutable, so its plans stay valid after the pointer flips) and
@@ -81,27 +98,32 @@ trait ChainedIndex {
     * Returns (result, committed version), or None for a replay. */
   protected final def appendTx[R](store: SnapshotStore, table: String,
                                   once: Option[(String, Long)],
-                                  compactEvery: Int, persist: Boolean = true)
+                                  compactEvery: Int, persist: Boolean = true,
+                                  metaDeferred: Map[String, String] => Map[String, String] =
+                                    _ => Map.empty)
                                  (encode: Map[String, String] => DataFrame)
                                  (body: (Long, Map[String, String], DataFrame) =>
                                    (R, DataFrame, Map[String, String]))
       : Option[(R, Long)] = {
     var enc: DataFrame = null
     var result: Option[R] = None
+    var before = Map.empty[String, String]
     val committed =
       try store.transactMeta[Unit](table, sortKey = Some(foldSortKey),
-          statsCols = foldStatsCols, bloomCols = foldBloomCols) {
+          statsCols = foldStatsCols, bloomCols = foldBloomCols,
+          metaDeferred = () => metaDeferred(before)) {
         val (v, meta) = built(store, table, "appending")
         if (once.exists { case (s, b) => DeltaChain.replayed(meta, s, b) })
           Left(())
         else {
+          before = meta
           enc = encode(meta)
           if (persist) enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
           val (r, delta, extraMeta) = body(v, meta, enc)
           result = Some(r)
           Right(chain.next(store, table, v, meta, delta, compactEvery,
             extraMeta ++ once.map { case (s, b) => DeltaChain.mark(s, b) }
-              .getOrElse(Map.empty)))
+              .getOrElse(Map.empty), layout = foldLayout))
         }
       } finally if (persist && enc != null) enc.unpersist(blocking = false)
     for (cv <- committed.toOption; r <- result) yield (r, cv)
@@ -111,7 +133,9 @@ trait ChainedIndex {
     * of the current version. */
   def load(store: SnapshotStore, table: String): DataFrame = {
     val v = store.currentVersion(table)
-    chain.load(store, table, v, store.metaForVersion(table, v))
+    val meta = store.metaForVersion(table, v)
+    if (v > 0) checkCompatible(meta, table)
+    chain.load(store, table, v, meta)
   }
 
   /** TAKEDOWN: delete rows by id (`ids` is a single-column frame of the
@@ -145,7 +169,6 @@ trait ChainedIndex {
     store.transactMeta[A](table, sortKey = Some(chain.tombIdCol),
         statsCols = Seq(chain.tombIdCol)) {
       val (v, meta) = built(store, table, "deleting")
-      checkDelete(meta, table)
       rows(v, meta)
     }
 
@@ -159,17 +182,26 @@ trait ChainedIndex {
         statsCols = foldStatsCols, bloomCols = foldBloomCols) {
       val v = store.currentVersion(table)
       if (v == 0) Left(())
-      else chain.compactNow(store, table, v, store.metaForVersion(table, v))
-        .toRight(())
+      else {
+        val meta = store.metaForVersion(table, v)
+        checkCompatible(meta, table)
+        chain.compactNow(store, table, v, meta, layout = foldLayout).toRight(())
+      }
     }.isRight
 
   /** Drop every version dir NOT referenced by the current version's
     * chain (data members and pending tombstones) — the chain-aware
     * replacement for SnapshotStore.vacuum, which assumes every version
-    * is a full snapshot. Time travel to the dropped versions is gone. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit =
+    * is a full snapshot. Time travel to the dropped versions is gone.
+    * The compatibility check runs first: "live" computed from a chain
+    * the latest build no longer writes (a text table migrated in place
+    * to the other layout) would drop the current chain's members. */
+  def vacuumIndex(store: SnapshotStore, table: String): Unit = {
+    val v = store.currentVersion(table)
+    if (v > 0) checkCompatible(store.metaForVersion(table, v), table)
     store.dropVersions(table,
       store.versions(table).toSet -- chain.liveVersions(store, table))
+  }
 
   /** The maintenance fold policy: fold when the current chain has more
     * than `maxChainLength` data members, or whenever tombstones are

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.{col, lit}
 /** Delta-chain versioning over a [[SnapshotStore]] table — the one
   * parser of a chained table's `*.parts` metadata, and (companion
   * object) the one owner of the exactly-once stream watermark every
-  * append and takedown path commits beside it. The compact-only indexes
-  * use it through [[ChainedIndex]]; [[TextIndex]] (postings and
-  * champion chains) and [[PhraseIndex]] use it directly.
+  * append and takedown path commits beside it. The indexes use it
+  * through [[ChainedIndex]] (both text layouts included); [[TextIndex]]
+  * uses it directly for its takedown and its champion chain.
   *
   * A chained table's version directory holds only that commit's DELTA
   * rows; the version's metadata records (under `partsKey`) the parent
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * Version dirs and their metadata are immutable once the LATEST pointer
   * has flipped, so resolving one version number and reading both its
   * chain and its data is a consistent lock-free read. Chain WRITES
-  * (`next`) must run under the table lock (SnapshotStore.transactWith) —
+  * (`next`) must run under the table lock (SnapshotStore.transactMeta) —
   * a concurrent commit invalidates a chain read taken before locking.
   *
   * `canonCols` (when non-empty) projects EVERY chain member to those
@@ -62,12 +62,11 @@ import org.apache.spark.sql.functions.{col, lit}
   * Physical removal happens at the next FOLD (compaction, retrain, or
   * any full-snapshot rewrite): the fold unions the chain through the
   * visibility filter, so tombstoned bytes leave disk and both keys
-  * reset — the takedown completes. Every maintenance fold policy
-  * ([[ChainedIndex.foldDue]], TextIndex's own) folds a chain with
-  * pending tombstones unconditionally (a takedown must not wait out
-  * `maxChainLength`). Tombstone members count toward the chain length
-  * ([[fanIn]]) and are kept by the chain-aware vacuum until the fold
-  * retires them.
+  * reset — the takedown completes. The maintenance fold policy
+  * ([[ChainedIndex.foldDue]]) folds a chain with pending tombstones
+  * unconditionally (a takedown must not wait out `maxChainLength`).
+  * Tombstone members count toward the chain length ([[fanIn]]) and
+  * are kept by the chain-aware vacuum until the fold retires them.
   *
   * Scale shape of the visibility filter: the tombstone side is the
   * accumulated UNRESOLVED takedown set — bounded by delete traffic

@@ -80,17 +80,21 @@ import graft.functions.TextFunctions
   * (binary-search probes of the slot position lists). The corpus never
   * shuffles; only postings of the phrases' terms leave the scan.
   *
-  * Appends are O(batch) [[DeltaChain]] deltas under the shared
+  * This object is the positional layout's declaration over the text
+  * family's one writer ([[TextLayout]]: build, append and
+  * appendBatchOnce, takedown, fold, vacuum and live read; the stream
+  * is [[TextIndex.maintainFromStream]]'s): appends are O(batch)
+  * [[DeltaChain]] deltas under the shared
   * exactly-once (streamId, batchId) watermark; positions are per-doc
-  * facts (no cross-batch resolution), so the append is the simplest of
-  * the index family — encode and chain. [[Graft.maintainAll]] folds and
-  * vacuums it via the `phrase.parts` marker. Unique-doc-id contract as
+  * facts (no cross-batch resolution), so the append is encode and
+  * chain. [[Graft.maintainAll]] folds and vacuums it via the
+  * `phrase.parts` marker. Unique-doc-id contract as
   * every index: re-ingesting a doc id yields duplicate (term, doc) rows
   * and phrase_tf degrades to 0 for affected docs (PhraseTf rejects
   * duplicate slots) rather than silently double-counting. */
-object PhraseIndex {
+object PhraseIndex extends TextLayout("phrase.", "doc_id",
+    Seq("term", "doc_id", "posns", "tf", "dl")) {
 
-  private val P = "phrase." // metadata key prefix
   private val Tokenizer = "ws-lower-v1" // TextIndex's contract tag
   /** Row-layout tag: delta-varint positions + denormalized tf + per-row
     * dl + corpus stats in metadata. A table carrying another tag (the
@@ -99,8 +103,6 @@ object PhraseIndex {
     * failure (or a silent mis-decode) into the same "rebuild the
     * index" contract the tokenizer check gives. */
   private val Layout = "pos-vb-v2"
-  private val chain = new DeltaChain(s"${P}parts",
-    Seq("term", "doc_id", "posns", "tf", "dl"), tombIdCol = "doc_id")
 
   /** Containment-candidate sets at/below this collect to the driver
     * (one slim pass, local-relation broadcast — see [[matchTail]]);
@@ -110,11 +112,15 @@ object PhraseIndex {
     * 200k (query_id, doc_id) rows ≈ a few MB. */
   private val LocalCandCap = 200000
 
-  /** Shared with [[TextIndex]] (r17 unification): a pos-vb-v2 table is
-    * a strict superset of the BM25 postings layout, so TextIndex serves
-    * postings/champions/MaxScore from it through a slim projection and
-    * must enforce the same layout/tokenizer contract on load. */
-  private[store] def requireCompatible(meta: Map[String, String], table: String): Unit = {
+  /** The positional layout's compatibility check — every lifecycle entry
+    * point runs it ([[ChainedIndex]]; writes under the table lock, where
+    * it also refuses a table migrated to the postings layout
+    * concurrently), and so does every serving path: a pos-vb-v2 table
+    * is a strict superset of the BM25 postings layout, so TextIndex
+    * serves postings/champions/MaxScore from it through a slim
+    * projection and must enforce the same layout/tokenizer contract. */
+  override private[store] def checkCompatible(meta: Map[String, String],
+                                             table: String): Unit = {
     // the authoritative layout key wins over any carried-forward
     // phrase.* metadata: after an in-place TextIndex.build over a
     // former positional table, the latest rows are postings-shaped and
@@ -126,24 +132,17 @@ object PhraseIndex {
             "positions; rebuild the index (PhraseIndex.build) for " +
             "phrase serving")
       }
-    val tok = meta.getOrElse(s"${P}tokenizer", "unknown")
+    val tok = meta.getOrElse(s"${prefix}tokenizer", "unknown")
     if (tok != Tokenizer)
       throw new IllegalStateException(
         s"$table was tokenized with scheme '$tok', this library uses " +
           s"'$Tokenizer' — rebuild the index (PhraseIndex.build)")
-    val lay = meta.getOrElse(s"${P}layout", "pre-dl")
+    val lay = meta.getOrElse(s"${prefix}layout", "pre-dl")
     if (lay != Layout)
       throw new IllegalStateException(
         s"$table carries row layout '$lay', this library reads/writes " +
           s"'$Layout' — rebuild the index (PhraseIndex.build)")
   }
-
-  /** The tokenized frame both the stats action and the positional
-    * encode read — persist it (read 2×), the TextIndex.build recipe. */
-  private def tokenized(docs: DataFrame, textCol: String,
-                        idCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      TextFunctions.tokens(lower(col(textCol))).as("toks"))
 
   /** Positional rows of a tokenized frame: term → sorted 0-based token
     * positions, one row per (term, doc), with the document length
@@ -182,177 +181,32 @@ object PhraseIndex {
         size(col("plist")).as("tf"), col("dl"))
   }
 
+  // ---- the positional layout's declaration (the writer: TextLayout) --
 
-  /** (nDocs, sumDl) of a tokenized frame — ONE aggregate action, the
-    * TextIndex stats recipe (avgdl's exact numerator rides in the
-    * metadata and ACCUMULATES across appends). */
-  private def statsOf(tok: DataFrame): (Long, Long) = {
-    val r = tok.select(size(col("toks")).cast("long").as("dl"))
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def rowsOf(tok: DataFrame): DataFrame = posRowsOf(tok)
 
-  /** Encode `docs` and commit as a fresh full snapshot (or a
-    * chain-resetting rebuild); `docs.limit(0)` for an empty init.
-    *
-    * Single-pass stats (r18): nDocs/sumDl ride the positional write as
-    * an [[ObservedStats]] observation instead of a separate aggregate
-    * action over a persisted tokenized copy — one tokenize pass over
-    * the corpus where there were two, and no MEMORY_AND_DISK
-    * materialization of the tokenized frame. */
-  def build(store: SnapshotStore, table: String, docs: DataFrame,
-            textCol: String, idCol: String,
-            corpusTag: Option[String] = None): Long = {
-    val (tok, obs) = ObservedStats.attach(
-      tokenized(docs, textCol, idCol), size(col("toks")))
-    // content counter (r17, the TextIndex.build convention): bumped
-    // past any replaced build's — under EITHER layout prefix, so a
-    // champion cache refreshed against the old content can never
-    // read as fresh for the new, including across an in-place
-    // migration from the postings layout
-    val prevContent = if (store.exists(table))
-      TextIndex.crossLayoutContent(
-        store.metaForVersion(table, store.currentVersion(table)))
-    else 0L
-    store.commit(table, posRowsOf(tok),
-      sortKey = Some("term"), statsCols = Seq("term", "tf", "dl"),
-      meta = chain.resetMeta ++ Map(
-        TextIndex.LayoutKey -> TextIndex.LayoutPositional,
-        s"${P}tokenizer" -> Tokenizer,
-        s"${P}layout" -> Layout,
-        s"${P}contentVersion" -> (prevContent + 1).toString)
-        // content-version identifier of the build corpus — the same
-        // drift-detection contract as TextIndex/VectorIndex.build
-        ++ corpusTag.map(t => s"${P}corpusTag" -> t),
-      metaDeferred = () => {
-        val (nDocs, sumDl) = ObservedStats.result(obs,
-          statsOf(tokenized(docs, textCol, idCol)))
-        Map(s"${P}nDocs" -> nDocs.toString, s"${P}sumDl" -> sumDl.toString)
-      })
-  }
+  /** Not persisted: posRowsOf hash-partitions through the groupBy's own
+    * exchange, so the write pass evaluates the observed tokenization
+    * exactly once (r18 single-pass stats — no MEMORY_AND_DISK copy of
+    * the tokenized corpus). */
+  protected def persistTokens: Boolean = false
 
-  /** The live index contents (delta-chain union) as of the current
-    * version. Refuses foreign tokenizer/layout tags (the canonical
-    * column projection would otherwise die on a missing `tf` column
-    * with an opaque AnalysisException — r16 review). */
-  def load(store: SnapshotStore, table: String): DataFrame = {
-    val v = store.currentVersion(table)
-    val meta = store.metaForVersion(table, v)
-    if (v > 0) requireCompatible(meta, table)
-    chain.load(store, table, v, meta)
-  }
-
-  /** Delta rows + accumulated stats for one append — runs inside the
-    * table transaction (shared by [[append]] and [[appendBatchOnce]]).
-    * Appends bump the content counter; folds/vacuums never do, so a
-    * champion cache built over this table survives maintenance. */
-  private def deltaFor(store: SnapshotStore, table: String, v: Long,
-                       meta: Map[String, String], docs: DataFrame,
-                       textCol: String, idCol: String, compactEvery: Int,
-                       extraMeta: Map[String, String])
-      : (DataFrame, Map[String, String], () => Map[String, String]) = {
-    // Single-pass stats (r18): the batch's (docs, tokens) ride the delta
-    // write as an ObservedStats observation (see build) — the deferred
-    // thunk folds them into the accumulated metadata after the write.
-    val (tok, obs) = ObservedStats.attach(
-      tokenized(docs, textCol, idCol), size(col("toks")))
-    val (rows, nextMeta) =
-      chain.next(store, table, v, meta, posRowsOf(tok), compactEvery,
-        extraMeta + (s"${P}contentVersion" ->
-          (meta.getOrElse(s"${P}contentVersion", "0").toLong + 1).toString))
-    (rows, nextMeta, () => {
-      val (bDocs, bDl) = ObservedStats.result(obs,
-        statsOf(tokenized(docs, textCol, idCol)))
-      Map(
-        s"${P}nDocs" -> (meta.getOrElse(s"${P}nDocs", "0").toLong + bDocs).toString,
-        s"${P}sumDl" -> (meta.getOrElse(s"${P}sumDl", "0").toLong + bDl).toString)
-    })
-  }
-
-  private def requireBuilt(v: Long, table: String): Unit =
-    if (v == 0)
-      throw new IllegalStateException(
-        s"$table: build the phrase index before appending " +
-          "(PhraseIndex.build; docs.limit(0) for an empty init)")
-
-  /** Append new documents as an O(batch) delta (the plain,
-    * non-watermarked form — TextIndex.append parity; streaming ingest
-    * uses [[appendBatchOnce]]). Returns the committed version. */
-  def append(store: SnapshotStore, table: String, docs: DataFrame,
-             textCol: String, idCol: String, compactEvery: Int = 8): Long =
-    store.transactMetaDeferred[Nothing](table, sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(table)
-      requireBuilt(v, table)
-      val meta = store.metaForVersion(table, v)
-      requireCompatible(meta, table)
-      Right(deltaFor(store, table, v, meta, docs, textCol, idCol,
-        compactEvery, Map.empty))
-    }.merge
-
-  /** Append `docs` as an O(batch) delta — exactly-once via
-    * (streamId, batchId); a replayed batch returns false. */
-  def appendBatchOnce(store: SnapshotStore, table: String, docs: DataFrame,
-                      textCol: String, idCol: String,
-                      streamId: String, batchId: Long,
-                      compactEvery: Int = 8): Boolean =
-    store.transactMetaDeferred[Unit](table, sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(table)
-      requireBuilt(v, table)
-      val meta = store.metaForVersion(table, v)
-      requireCompatible(meta, table)
-      if (DeltaChain.replayed(meta, streamId, batchId)) Left(())
-      else Right(deltaFor(store, table, v, meta, docs, textCol, idCol,
-        compactEvery, DeltaChain.mark(streamId, batchId)))
-    }.isRight
-
-  /** TAKEDOWN: delete documents from the positional store — the
-    * [[TextIndex.deleteDocs]] contract verbatim (that method delegates
-    * here for unified positional tables): O(ids) tombstone commit,
-    * every phrase AND ranked/BM25 serving path stops returning the
-    * deleted docs immediately (the visibility filter sits under the
-    * chain union both layouts read through), corpus stats adjusted
-    * exactly (phrase_tf's df and BM25's idf equal a fresh build over
-    * the survivors), content bumped so champion caches refuse
-    * staleness, physical removal at the next fold. Same empty-token
-    * caveat and idempotence as the TextIndex form. */
-  def deleteDocs(store: SnapshotStore, table: String,
-                 ids: DataFrame): Long = {
-    TextIndex.takedown(store, table, ids, None, chain, requireBuilt,
-      requireCompatible)
-    store.currentVersion(table)
-  }
-
-  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
-    * watermark ([[DeltaChain.tombNextOnce]]'s correctness rationale).
-    * Returns true if applied, false if skipped as a replay. */
-  def deleteDocsOnce(store: SnapshotStore, table: String, ids: DataFrame,
-                     streamId: String, batchId: Long): Boolean =
-    TextIndex.takedown(store, table, ids, Some((streamId, batchId)), chain,
-      requireBuilt, requireCompatible)
+  protected def buildTags: Map[String, String] = Map(
+    TextIndex.LayoutKey -> TextIndex.LayoutPositional,
+    s"${prefix}tokenizer" -> Tokenizer,
+    s"${prefix}layout" -> Layout)
 
   /** Keep the index current from a stream of document rows — the
-    * index family's maintainFromStream contract verbatim: file inbox →
-    * foreachBatch → [[appendBatchOnce]] under the exactly-once
-    * (streamId, batchId) watermark, so a replayed micro-batch is a
-    * no-op. */
+    * text family's stream ([[TextIndex.maintainFromStream]], without
+    * periodic maintenance): file inbox → foreachBatch → the layout's
+    * exactly-once append, so a replayed micro-batch is a no-op. */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, textCol: String, idCol: String,
                          checkpointDir: String,
                          streamId: String = "phrase-inbox")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          appendBatchOnce(store, table, batch, textCol, idCol,
-            streamId, batchId)
-          ()
-        }
-      }
-      .start()
+    TextIndex.maintainFromStream(store, table, stream, textCol, idCol,
+      checkpointDir, streamId)
 
   /** Phrase matches of a query batch against the indexed corpus:
     * one row per (query, matching document) —
@@ -373,7 +227,7 @@ object PhraseIndex {
     val v = store.currentVersion(table)
     require(v > 0, s"$table: no committed phrase index")
     val meta = store.metaForVersion(table, v)
-    requireCompatible(meta, table)
+    checkCompatible(meta, table)
     val (slots, termFilter, terms, maxK) = slotsOf(phrases, queryIdCol, phraseCol)
     // Zone-pruned chain read (r19, guide §6 — the TextIndex.query
     // discipline applied here too): rows commit term-sorted with term
@@ -571,10 +425,10 @@ object PhraseIndex {
     val v = store.currentVersion(table)
     require(v > 0, s"$table: no committed phrase index")
     val meta = store.metaForVersion(table, v)
-    requireCompatible(meta, table)
-    val nDocs = meta.getOrElse(s"${P}nDocs", "0").toLong
+    checkCompatible(meta, table)
+    val nDocs = meta.getOrElse(s"${prefix}nDocs", "0").toLong
     val avgdl =
-      if (nDocs > 0) meta.getOrElse(s"${P}sumDl", "0").toDouble / nDocs
+      if (nDocs > 0) meta.getOrElse(s"${prefix}sumDl", "0").toDouble / nDocs
       else 1.0 // empty index: no matches exist, the value is never used
     val m = phraseQuery(store, table, phrases, queryIdCol, phraseCol, slop,
         prefilter)
@@ -599,34 +453,5 @@ object PhraseIndex {
       .localCheckpoint()
     m.unpersist(blocking = false)
     out
-  }
-
-  /** On-demand chain fold (maintenance; appends also self-fold every
-    * `compactEvery`) — idempotent, atomic version flip. */
-  def compactIndex(store: SnapshotStore, table: String): Boolean =
-    store.transactMeta[Unit](table, sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(table)
-      if (v == 0) Left(())
-      else {
-        val meta = store.metaForVersion(table, v)
-        // a pre-v2 table must surface the rebuild contract here too —
-        // maintenance runs before any query on upgrade (r16 review)
-        requireCompatible(meta, table)
-        chain.compactNow(store, table, v, meta).toRight(())
-      }
-    }.isRight
-
-  /** Drop version dirs outside the live delta chain. Layout-gated like
-    * every other entry point (r17 review): on a table whose LATEST
-    * build is postings-layout, the carried-forward `phrase.parts`
-    * chain is STALE — computing "live" from it would vacuum the
-    * postings chain's own members (data loss), so refuse instead. */
-  def vacuumIndex(store: SnapshotStore, table: String): Unit = {
-    val v = store.currentVersion(table)
-    if (v == 0) return
-    requireCompatible(store.metaForVersion(table, v), table)
-    store.dropVersions(table,
-      store.versions(table).toSet -- chain.liveVersions(store, table))
   }
 }

@@ -262,29 +262,21 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     } finally l.unlock()
   }
 
-  /** Like transactEither, but `fn` also returns the metadata entries to
-    * commit — for metadata that must be COMPUTED under the table lock
-    * (e.g. a delta chain's parent-version list, which a concurrent commit
-    * would invalidate if read before locking). */
-  def transactWith[A](table: String, sortKey: Option[String] = None)
-      (fn: Option[DataFrame] => Either[A, (DataFrame, Map[String, String])])
-      : Either[A, Long] = {
-    val l = lockFor(table)
-    l.lock()
-    try fn(loadIfExists(table)) match {
-      case Left(a) => Left(a)
-      case Right((df, meta)) => Right(commit(table, df, sortKey, meta))
-    } finally l.unlock()
-  }
-
-  /** [[transactWith]] for callers that do NOT need the locked snapshot
-    * handed to them (the delta-chain index appends read their table via
-    * currentVersion/metaForVersion/loadVersion themselves): skips the
-    * eager loadIfExists, whose schema-inference job was pure overhead —
-    * one fewer driver round trip per append. */
+  /** Abortable transaction for metadata that must be COMPUTED under the
+    * table lock (e.g. a delta chain's parent-version list, which a
+    * concurrent commit would invalidate if read before locking): `fn`
+    * returns Right(rows, metadata) to commit or Left(a) to abort. It
+    * does not hand `fn` the locked snapshot — the delta-chain indexes
+    * read their table via currentVersion/metaForVersion/loadVersion
+    * themselves, so an eager load's schema-inference job would be pure
+    * overhead. `metaDeferred` is [[commit]]'s: metadata computed BY the
+    * write pass itself (the ObservedStats nDocs/sumDl observation
+    * resolves only once the write job has streamed the rows), evaluated
+    * after the parquet write — and only when `fn` commits. */
   def transactMeta[A](table: String, sortKey: Option[String] = None,
                       statsCols: Seq[String] = Nil,
-                      bloomCols: Seq[String] = Nil)
+                      bloomCols: Seq[String] = Nil,
+                      metaDeferred: () => Map[String, String] = () => Map.empty)
       (fn: => Either[A, (DataFrame, Map[String, String])])
       : Either[A, Long] = {
     val l = lockFor(table)
@@ -292,26 +284,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     try fn match {
       case Left(a) => Left(a)
       case Right((df, meta)) =>
-        Right(commit(table, df, sortKey, meta, statsCols, bloomCols))
-    } finally l.unlock()
-  }
-
-  /** [[transactMeta]] whose Right additionally carries a DEFERRED
-    * metadata thunk, evaluated after the commit's parquet write — for
-    * metadata computed BY the write pass itself (ObservedStats: the
-    * nDocs/sumDl observation resolves only once the write job has
-    * streamed the tokenized rows). */
-  def transactMetaDeferred[A](table: String, sortKey: Option[String] = None,
-                              statsCols: Seq[String] = Nil,
-                              bloomCols: Seq[String] = Nil)
-      (fn: => Either[A, (DataFrame, Map[String, String], () => Map[String, String])])
-      : Either[A, Long] = {
-    val l = lockFor(table)
-    l.lock()
-    try fn match {
-      case Left(a) => Left(a)
-      case Right((df, meta, deferred)) =>
-        Right(commit(table, df, sortKey, meta, statsCols, bloomCols, deferred))
+        Right(commit(table, df, sortKey, meta, statsCols, bloomCols, metaDeferred))
     } finally l.unlock()
   }
 

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,11 +19,14 @@ import graft.functions.{Retrieval, TextFunctions}
   * that wants both phrase and ranked retrieval builds ONE store
   * (PhraseIndex.build) and maintains one append path and one champion
   * cycle; TextIndex.build remains the slimmer postings-only layout for
-  * corpora that will never pay for positions at rest. Writes split by
-  * layout: positional tables delegate append/fold/vacuum to
-  * PhraseIndex (the owner of the fat rows), postings tables use this
-  * object's own chain. TextIndexSpec pins unified ≡ standalone
-  * score-for-score across the exact, champion, and MaxScore paths.
+  * corpora that will never pay for positions at rest. Writes have ONE
+  * writer for both layouts ([[TextLayout]], over [[ChainedIndex]]'s
+  * append transaction, fold, vacuum and live read): each layout is a
+  * declaration — this object's private `Postings` and [[PhraseIndex]] —
+  * and the layout-agnostic entry points here route to the layout of
+  * the table's latest build ([[layoutOf]]). TextIndexSpec pins unified
+  * ≡ standalone score-for-score across the exact, champion, and
+  * MaxScore paths.
   *
   * `Retrieval.bm25TopK` re-tokenizes the corpus on every invocation; at
   * corpus scale that tokenize+explode scan IS the cost (172 s of 177 s
@@ -50,9 +53,9 @@ import graft.functions.{Retrieval, TextFunctions}
   *
   * Appends are [[DeltaChain]] delta versions (O(batch) write, compacted
   * every `compactEvery`); the metadata stats accumulate exactly
-  * (integer adds). One blocking action per append (the batch stats
-  * aggregate — it must be exact, it changes scores) + the commit write,
-  * the same job budget as the dedup indexes (AppendJobCountSpec).
+  * (integer adds). The commit write is the one blocking action per
+  * append: the batch stats (exact — they change scores) ride it as an
+  * observation (AppendJobCountSpec pins the budget).
   *
   * Contract: ids globally unique across build+appends (the curation
   * pipeline's exactly-once ingest provides this) — re-appending an id
@@ -67,7 +70,6 @@ private[store] case class UbRow(term: String, value: Double)
 object TextIndex {
 
   private val P = "text." // metadata key prefix (standalone postings)
-  private val chain = new DeltaChain(s"${P}parts", tombIdCol = "neighbor_id")
 
   // ---- unified positional source (r17) ----------------------------
   //
@@ -77,12 +79,13 @@ object TextIndex {
   // and reads it through the slim projection below. The read chain's
   // canonical columns EXCLUDE `posns`, so parquet column pruning keeps
   // the position bytes out of every BM25 scan structurally (the
-  // projection sits under the chain union, not above it). Writes are
-  // the split: postings-layout tables append/fold through this
-  // object's own chain; positional tables DELEGATE append/fold/vacuum
-  // to PhraseIndex (folding through the slim chain would silently drop
-  // the positions from the store). The champion cache is TextIndex's
-  // own derived table either way — same layout, same text.champ.* keys.
+  // projection sits under the chain union, not above it). Writes go
+  // through the layout's own declaration ([[layoutOf]]): the positional
+  // layout's chain keeps `posns` in its canonical projection, so its
+  // appends and folds carry the positions (folding through the slim
+  // read chain would silently drop them from the store). The champion
+  // cache is TextIndex's own derived table either way — same layout,
+  // same text.champ.* keys.
 
   private val PosP = "phrase." // the positional table's key prefix
   private val posChain = new DeltaChain(s"${PosP}parts",
@@ -103,8 +106,8 @@ object TextIndex {
   /** Is this table a unified positional store? Decided by the
     * authoritative layout key; pre-r17 tables (no key, necessarily
     * single-layout) fall back to the phrase-tokenizer sniff. The
-    * layout/tokenizer contract is then enforced by
-    * PhraseIndex.requireCompatible — pre-v2 positional tables refuse
+    * layout/tokenizer contract is then enforced by the positional
+    * layout's compatibility check — pre-v2 positional tables refuse
     * with the rebuild contract. */
   private def isPositional(meta: Map[String, String]): Boolean =
     meta.get(LayoutKey) match {
@@ -124,9 +127,27 @@ object TextIndex {
         phrase
     }
 
+  /** The layout of a table's latest build: its writer, and (through
+    * its chain's key prefix) where its stats/content metadata live. */
+  private[store] def layoutOf(meta: Map[String, String]): TextLayout =
+    if (isPositional(meta)) PhraseIndex else Postings
+
+  /** [[layoutOf]] the table's latest version. Decided outside the table
+    * lock: each layout's compatibility check re-runs under it, so a
+    * concurrent in-place migration surfaces as a retryable refusal. */
+  private def writerOf(store: SnapshotStore, table: String): TextLayout =
+    layoutOf(store.latestMeta(table))
+
+  /** The current version and metadata of a readable text table — the
+    * refusal every serving path runs first (unbuilt, foreign tokenizer,
+    * stale row layout). */
+  private def readable(store: SnapshotStore, table: String, doing: String)
+      : (Long, Map[String, String]) =
+    writerOf(store, table).built(store, table, doing)
+
   /** Key prefix of the SOURCE table's stats/content metadata. */
   private def srcP(meta: Map[String, String]): String =
-    if (isPositional(meta)) PosP else P
+    layoutOf(meta).chain.keyPrefix
 
   /** The source's content counter under the CURRENT layout's prefix —
     * never the other prefix's carried-forward leftover (a migration
@@ -144,9 +165,6 @@ object TextIndex {
     math.max(meta.getOrElse(s"${P}contentVersion", "0").toLong,
       meta.getOrElse(s"${PosP}contentVersion", "0").toLong)
 
-  private def srcChain(meta: Map[String, String]): DeltaChain =
-    if (isPositional(meta)) posChain else chain
-
   /** Postings-shaped view of positional rows (column rename + the
     * postings layout's types; cheap casts, exact: dl is a token count,
     * tf a position count). */
@@ -154,17 +172,12 @@ object TextIndex {
     df.select(col("term"), col("doc_id").as("neighbor_id"),
       col("dl").cast("int").as("dl"), col("tf").cast("long").as("tf"))
 
-  /** Mode-aware layout/tokenizer gate for every read/serve path. */
-  private def requireReadable(meta: Map[String, String], table: String): Unit =
-    if (isPositional(meta)) PhraseIndex.requireCompatible(meta, table)
-    else requireTokenizer(meta, table)
-
   /** The live postings-shaped rows of version `v` — chain union,
     * projected when the source is positional. */
   private def srcLoad(store: SnapshotStore, table: String, v: Long,
                       meta: Map[String, String]): DataFrame =
     if (isPositional(meta)) asPostings(posChain.load(store, table, v, meta))
-    else chain.load(store, table, v, meta)
+    else Postings.chain.load(store, table, v, meta)
 
   /** Zone-pruned postings-shaped chain read (each member pruned by its
     * own sidecar — both layouts commit term/tf/dl zones). */
@@ -175,7 +188,7 @@ object TextIndex {
                               ZoneMap.KeepAll): DataFrame =
     if (isPositional(meta))
       asPostings(posChain.loadPruned(store, table, v, meta, preds, keepFile))
-    else chain.loadPruned(store, table, v, meta, preds, keepFile)
+    else Postings.chain.loadPruned(store, table, v, meta, preds, keepFile)
 
   /** Tokenization contract tag: case-folded whitespace tokens
     * (`TextFunctions.tokens(lower(text))` — the exact recipe
@@ -192,14 +205,14 @@ object TextIndex {
           s"queries '$Tokenizer' postings — rebuild the index (TextIndex.build)")
   }
 
-  /** IN-TRANSACTION guard for the postings-layout write paths: the
-    * layout-delegation decision (append/appendBatchOnce/deleteDocs →
-    * PhraseIndex) reads metadata OUTSIDE the table lock, and the
-    * tokenizer check alone would still pass after a concurrent
-    * in-place postings→positional migration (`text.tokenizer` is
-    * carried forward by the commit's meta merge) — a racing writer
-    * could then commit slim postings rows onto the stale text.parts
-    * chain of a now-positional table, invisible to all serving (r17
+  /** The postings layout's compatibility check — the IN-TRANSACTION
+    * guard of its write paths: the layout decision ([[writerOf]]) reads
+    * metadata OUTSIDE the table lock, and the tokenizer check alone
+    * would still pass after a concurrent in-place postings→positional
+    * migration (`text.tokenizer` is carried forward by the commit's
+    * meta merge) — a racing writer could then commit slim postings rows
+    * onto the stale text.parts chain of a now-positional table (or fold
+    * or vacuum that stale chain), invisible to all serving (r17
     * review). Re-checking the authoritative layout key under the lock
     * turns that silent loss into a retryable refusal; single-writer
     * deployments never hit it. */
@@ -208,14 +221,30 @@ object TextIndex {
     if (isPositional(meta))
       throw new IllegalStateException(
         s"$table migrated to the positional layout concurrently — retry " +
-          "(the operation will delegate to the positional writer)")
+          "(the retry routes to the positional writer)")
     requireTokenizer(meta, table)
   }
 
-  /** (id, toks) — the shared tokenization. */
-  private def tokenized(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("neighbor_id"),
-      TextFunctions.tokens(lower(col(textCol))).as("toks"))
+  /** The postings layout: (term, neighbor_id, dl, tf) rows under `text.`
+    * keys — its declaration over the text family's one writer. */
+  private object Postings extends TextLayout(P, "neighbor_id") {
+    override protected def name: String = "TextIndex"
+    protected def rowsOf(tok: DataFrame): DataFrame = postingsOf(tok)
+    /** Persisted: postingsOf range-partitions, and the
+      * RangePartitioner's sampling job re-evaluates its child — over an
+      * unpersisted batch the observation would count every row twice
+      * (sampling pass + shuffle pass; measured as doubled nDocs in
+      * TextIndexSpec). With the cache the sampling pass materializes
+      * the observed rows once and the shuffle pass reads the cache
+      * above the metrics node. */
+    protected def persistTokens: Boolean = true
+    override protected def foldLayout: DataFrame => DataFrame = termLayout _
+    protected def buildTags: Map[String, String] =
+      Map(LayoutKey -> LayoutPostings, s"${P}tokenizer" -> Tokenizer)
+    override private[store] def checkCompatible(meta: Map[String, String],
+                                               table: String): Unit =
+      requireStillPostings(meta, table)
+  }
 
   /** Postings rows of a tokenized batch: explode → per-(term, doc) count.
     * Empty-token docs contribute no postings (no terms — correct: they
@@ -239,15 +268,8 @@ object TextIndex {
 
   /** Term-range layout for compaction folds (chain unions lose the
     * per-version range layout; re-establish it when folding). */
-  private val termLayout: DataFrame => DataFrame =
-    _.repartitionByRange(col("term"), col("neighbor_id"))
-
-  /** (nDocs, sumDl) of a tokenized frame — ONE aggregate action. */
-  private def statsOf(tok: DataFrame): (Long, Long) = {
-    val r = tok.agg(count(lit(1)).as("n"),
-      sum(size(col("toks")).cast("long")).as("sdl")).collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  private def termLayout(df: DataFrame): DataFrame =
+    df.repartitionByRange(col("term"), col("neighbor_id"))
 
   /** Tokenize + index `corpus`, commit as the next version of
     * `indexTable` (a full snapshot — empty delta chain). Returns the
@@ -260,43 +282,8 @@ object TextIndex {
     * [[VectorIndex.build]]. */
   def build(store: SnapshotStore, indexTable: String, corpus: DataFrame,
             textCol: String, idCol: String,
-            corpusTag: Option[String] = None): Long = {
-    // Single-pass stats (r18): nDocs/sumDl ride the postings write as an
-    // ObservedStats observation instead of a separate aggregate action.
-    // The observed frame stays PERSISTED here (unlike PhraseIndex's
-    // hash-partitioned writer): postingsOf range-partitions, and the
-    // RangePartitioner's sampling job re-evaluates the child — without
-    // the cache the CollectMetrics node would count every row twice
-    // (sampling pass + shuffle pass; measured as doubled nDocs in
-    // TextIndexSpec). With the cache the sampling pass materializes the
-    // observed rows once, the shuffle pass reads the cache above the
-    // metrics node, and the separate stats job is still gone.
-    val (tok0, obs) = ObservedStats.attach(
-      tokenized(corpus, textCol, idCol), size(col("toks")))
-    val tok = tok0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // content counter: bumped past any previous build's — under
-      // EITHER layout prefix (commit meta merges over the old
-      // version's, so a rebuild, including an in-place migration from
-      // the positional layout, must not collide with a champion
-      // refresh of the replaced content)
-      val prevContent = if (store.exists(indexTable))
-        crossLayoutContent(
-          store.metaForVersion(indexTable, store.currentVersion(indexTable)))
-      else 0L
-      store.commit(indexTable, postingsOf(tok), sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl"),
-        meta = chain.resetMeta ++ Map(
-          LayoutKey -> LayoutPostings,
-          s"${P}tokenizer" -> Tokenizer,
-          s"${P}contentVersion" -> (prevContent + 1).toString)
-          ++ corpusTag.map(t => s"${P}corpusTag" -> t),
-        metaDeferred = () => {
-          val (nDocs, sumDl) = ObservedStats.result(obs, statsOf(tok))
-          Map(s"${P}nDocs" -> nDocs.toString, s"${P}sumDl" -> sumDl.toString)
-        })
-    } finally tok.unpersist(blocking = false)
-  }
+            corpusTag: Option[String] = None): Long =
+    Postings.build(store, indexTable, corpus, textCol, idCol, corpusTag)
 
   /** The corpus content tag recorded at build (None if none given) —
     * read under the CURRENT layout's prefix, so a tag carried forward
@@ -313,7 +300,7 @@ object TextIndex {
   def load(store: SnapshotStore, indexTable: String): DataFrame = {
     val v = store.currentVersion(indexTable)
     val meta = store.metaForVersion(indexTable, v)
-    if (v > 0) requireReadable(meta, indexTable)
+    if (v > 0) layoutOf(meta).checkCompatible(meta, indexTable)
     srcLoad(store, indexTable, v, meta)
   }
 
@@ -327,31 +314,17 @@ object TextIndex {
     (n, if (n == 0) 0.0 else sdl.toDouble / n)
   }
 
-  /** Append new documents: tokenize the batch, commit ONLY its postings
-    * as a delta version, and fold the batch's (docs, tokens) into the
-    * metadata stats — read and accumulated INSIDE the transaction, so
-    * concurrent appends serialize under the table lock and the stats
-    * can never drop a batch. Every `compactEvery` chain members the
-    * append folds the chain into a full snapshot instead. */
+  /** Append new documents: tokenize the batch, commit ONLY its rows as a
+    * delta version of the table's layout, and fold the batch's (docs,
+    * tokens) into the metadata stats — accumulated INSIDE the
+    * transaction, so concurrent appends serialize under the table lock
+    * and the stats can never drop a batch. Every `compactEvery` chain
+    * members the append folds the chain into a full snapshot instead.
+    * A unified positional table appends positions ([[layoutOf]]). */
   def append(store: SnapshotStore, indexTable: String, newDocs: DataFrame,
-             textCol: String, idCol: String, compactEvery: Int = 8): Long = {
-    // unified positional table: the append must encode positions or the
-    // store would silently degrade — delegate to the one writer that
-    // owns the layout (same tokenizer contract, same O(batch) shape)
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.append(store, indexTable, newDocs, textCol, idCol,
-        compactEvery)
-    store.transactMetaDeferred[Nothing](indexTable, sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(indexTable)
-      requireBuilt(v, indexTable)
-      val meta = store.metaForVersion(indexTable, v)
-      requireStillPostings(meta, indexTable)
-      Right(deltaFor(store, indexTable, v, meta, newDocs, textCol, idCol,
-        compactEvery, Map.empty))
-    }.merge
-  }
+             textCol: String, idCol: String, compactEvery: Int = 8): Long =
+    writerOf(store, indexTable).append(store, indexTable, newDocs, textCol,
+      idCol, compactEvery)
 
   /** Exactly-once streaming append — the shared batch-id watermark
     * discipline (see VectorIndex.appendBatchOnce): a replayed
@@ -360,24 +333,9 @@ object TextIndex {
   def appendBatchOnce(store: SnapshotStore, indexTable: String,
                       batch: DataFrame, textCol: String, idCol: String,
                       streamId: String, batchId: Long,
-                      compactEvery: Int = 8): Boolean = {
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.appendBatchOnce(store, indexTable, batch, textCol,
-        idCol, streamId, batchId, compactEvery)
-    store.transactMetaDeferred[Unit](indexTable, sortKey = Some("term"),
-        statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(indexTable)
-      requireBuilt(v, indexTable)
-      val meta = store.metaForVersion(indexTable, v)
-      if (DeltaChain.replayed(meta, streamId, batchId)) Left(())
-      else {
-        requireStillPostings(meta, indexTable)
-        Right(deltaFor(store, indexTable, v, meta, batch, textCol, idCol,
-          compactEvery, DeltaChain.mark(streamId, batchId)))
-      }
-    }.isRight
-  }
+                      compactEvery: Int = 8): Boolean =
+    writerOf(store, indexTable).appendBatchOnce(store, indexTable, batch,
+      textCol, idCol, streamId, batchId, compactEvery)
 
   /** TAKEDOWN: delete documents from the index without a rebuild — an
     * O(ids) tombstone commit under the [[DeltaChain]] epoch rule (class
@@ -411,14 +369,8 @@ object TextIndex {
     * again from its new rows (epoch rule). Returns the committed
     * tombstone version. */
   def deleteDocs(store: SnapshotStore, indexTable: String,
-                 ids: DataFrame): Long = {
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.deleteDocs(store, indexTable, ids)
-    takedown(store, indexTable, ids, None, chain, requireBuilt,
-      requireStillPostings)
-    store.currentVersion(indexTable)
-  }
+                 ids: DataFrame): Long =
+    writerOf(store, indexTable).deleteDocs(store, indexTable, ids)
 
   /** [[deleteDocs]] under the exactly-once (streamId, batchId)
     * watermark — the takedown-QUEUE form (see
@@ -428,88 +380,9 @@ object TextIndex {
     * applied, false if skipped as a replay. */
   def deleteDocsOnce(store: SnapshotStore, indexTable: String,
                      ids: DataFrame, streamId: String,
-                     batchId: Long): Boolean = {
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.deleteDocsOnce(store, indexTable, ids, streamId,
-        batchId)
-    takedown(store, indexTable, ids, Some((streamId, batchId)), chain,
-      requireBuilt, requireStillPostings)
-  }
-
-  /** The text family's TAKEDOWN body, written once for both layouts
-    * ([[deleteDocs]] and [[PhraseIndex.deleteDocs]]). `docs` is the
-    * layout's chain: its `tombIdCol` is the document-id column and its
-    * key prefix holds the corpus stats. `requireBuilt` refuses an
-    * unbuilt table; `guard` is the layout check run under the lock
-    * after the replay test. Returns false for a replayed `once`. */
-  private[store] def takedown(store: SnapshotStore, table: String,
-                              ids: DataFrame, once: Option[(String, Long)],
-                              docs: DeltaChain,
-                              requireBuilt: (Long, String) => Unit,
-                              guard: (Map[String, String], String) => Unit)
-      : Boolean = {
-    val id = docs.tombIdCol
-    val p = docs.keyPrefix
-    val tombs = ids.toDF(id)
-    store.transactMetaDeferred[Unit](table, sortKey = Some(id),
-        statsCols = Seq(id)) {
-      val v = store.currentVersion(table)
-      requireBuilt(v, table)
-      val meta = store.metaForVersion(table, v)
-      if (once.exists { case (sid, bid) => DeltaChain.replayed(meta, sid, bid) })
-        Left(())
-      else {
-        guard(meta, table)
-        // ONE visible-row scan feeds the per-doc deleted-TERM sets that
-        // ride in the tombstone member (the champion delete-merge's
-        // O(tombstone bytes) touched-term discovery) AND — r19, guide
-        // §1.2 — the exact stats delta, riding the tombstone write as a
-        // CollectMetrics observation instead of a separate persisted
-        // aggregate action: per doc, the distinct-dl count/sum next to
-        // the term set, summed while the write streams the rows. Same
-        // arithmetic as the old distinct-(id, dl) aggregate: Σ over docs
-        // of (count, sum) over that doc's distinct dl values.
-        val perDoc = docs.load(store, table, v, meta)
-          .join(tombs, Seq(id))
-          .groupBy(col(id))
-          .agg(collect_set(col("term")).as("terms"),
-            countDistinct(col("dl")).as("_ndl"),
-            coalesce(sum_distinct(col("dl").cast("long")), lit(0L)).as("_sdl"))
-        val obs = org.apache.spark.sql.Observation()
-        val observed = perDoc.observe(obs,
-          coalesce(sum(col("_ndl")), lit(0L)).as("n"),
-          coalesce(sum(col("_sdl")), lit(0L)).as("sdl"))
-        val tombRows = tombs
-          .join(observed.select(col(id), col("terms")), Seq(id), "left")
-          .select(col(id),
-            coalesce(col("terms"), array().cast("array<string>")).as("terms"))
-        val (rows, commitMeta) = docs.tombNext(v, meta, tombRows,
-          once.map { case (sid, bid) => DeltaChain.mark(sid, bid) }
-            .getOrElse(Map.empty))
-        Right((rows, commitMeta, () => {
-          val (dDocs, dDl) = ObservedStats.result(obs, {
-            // eager fallback (collapsed plan / timeout): the pre-r19
-            // separate aggregate over the same visible-row scan
-            val r = docs.load(store, table, v, meta)
-              .join(tombs, Seq(id))
-              .select(col(id), col("dl")).distinct()
-              .agg(count(lit(1)),
-                coalesce(sum(col("dl").cast("long")), lit(0L)))
-              .head()
-            (r.getLong(0), r.getLong(1))
-          })
-          Map(
-            s"${p}nDocs" ->
-              (meta.getOrElse(s"${p}nDocs", "0").toLong - dDocs).toString,
-            s"${p}sumDl" ->
-              (meta.getOrElse(s"${p}sumDl", "0").toLong - dDl).toString,
-            s"${p}contentVersion" ->
-              (meta.getOrElse(s"${p}contentVersion", "0").toLong + 1).toString)
-        }))
-      }
-    }.isRight
-  }
+                     batchId: Long): Boolean =
+    writerOf(store, indexTable).deleteDocsOnce(store, indexTable, ids,
+      streamId, batchId)
 
   /** Keep the index current from a document stream (see
     * VectorIndex.maintainFromStream). Caller stops the query.
@@ -550,49 +423,6 @@ object TextIndex {
       .start()
   }
 
-  private def requireBuilt(v: Long, table: String): Unit =
-    if (v == 0)
-      throw new IllegalStateException(
-        s"$table: build the text index before appending/querying " +
-          "(TextIndex.build; corpus.limit(0) for an empty init)")
-
-  /** Delta rows + accumulated stats for one append — shared by append
-    * and appendBatchOnce. Runs inside the table transaction.
-    *
-    * Single-pass stats (r18): the batch's (docs, tokens) ride the delta
-    * write as an ObservedStats observation (see [[build]]) — the
-    * deferred thunk folds them into the accumulated metadata after the
-    * write, so an append costs ONE tokenize pass and zero persists. */
-  private def deltaFor(store: SnapshotStore, table: String, v: Long,
-                       meta: Map[String, String], newDocs: DataFrame,
-                       textCol: String, idCol: String,
-                       compactEvery: Int, extraMeta: Map[String, String])
-      : (DataFrame, Map[String, String], () => Map[String, String]) = {
-    // Persisted for the same reason as [[build]]: postingsOf
-    // range-partitions, and without the cache the RangePartitioner's
-    // sampling pass would run the metrics node twice (doubled stats).
-    // The deferred thunk runs after the commit's write — the one place
-    // that can both read the observation and release the cache.
-    val (tok0, obs) = ObservedStats.attach(
-      tokenized(newDocs, textCol, idCol), size(col("toks")))
-    val tok = tok0.persist(StorageLevel.MEMORY_AND_DISK)
-    // appends bump the CONTENT counter; pure compaction/vacuum do not —
-    // champion freshness rides on content, not the version number
-    val content = meta.getOrElse(s"${P}contentVersion", "0").toLong + 1
-    val (rows, nextMeta) =
-      chain.next(store, table, v, meta, postingsOf(tok), compactEvery,
-        extraMeta + (s"${P}contentVersion" -> content.toString),
-        layout = termLayout)
-    (rows, nextMeta, () => {
-      try {
-        val (bDocs, bDl) = ObservedStats.result(obs, statsOf(tok))
-        Map(
-          s"${P}nDocs" -> (meta.getOrElse(s"${P}nDocs", "0").toLong + bDocs).toString,
-          s"${P}sumDl" -> (meta.getOrElse(s"${P}sumDl", "0").toLong + bDl).toString)
-      } finally tok.unpersist(blocking = false)
-    })
-  }
-
   /** BM25 top-k over the latest committed index version: term probe +
     * candidate-sized scoring only — no corpus tokenization.
     *
@@ -617,10 +447,7 @@ object TextIndex {
             queryIdCol: String, queryTextCol: String,
             k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val v = store.currentVersion(indexTable)
-    requireBuilt(v, indexTable)
-    val meta = store.metaForVersion(indexTable, v)
-    requireReadable(meta, indexTable)
+    val (v, meta) = readable(store, indexTable, "querying")
     val pfx = srcP(meta)
     val nDocs = meta.getOrElse(s"${pfx}nDocs", "0").toLong
     val sumDl = meta.getOrElse(s"${pfx}sumDl", "0").toLong
@@ -763,10 +590,7 @@ object TextIndex {
   def refreshChampions(store: SnapshotStore, indexTable: String,
                        m: Int = 1024, champCompactEvery: Int = 8): Long = {
     require(m > 0, s"champion list size must be positive, got $m")
-    val v = store.currentVersion(indexTable)
-    requireBuilt(v, indexTable)
-    val meta = store.metaForVersion(indexTable, v)
-    requireReadable(meta, indexTable)
+    val (v, meta) = readable(store, indexTable, "refreshing champions")
     val ct = champTable(indexTable)
     // The champion chain parts are read and committed under the champion
     // table's lock (the DeltaChain discipline: a chain read taken before
@@ -1060,9 +884,9 @@ object TextIndex {
     val cCols = store.loadVersion(ct, cv).schema.fieldNames.toSet
     if (!cCols.contains("max_tf") || !cCols.contains("min_dl"))
       return ChampRebuild
-    val sc = srcChain(meta)
+    val sc = layoutOf(meta).chain
     val positional = isPositional(meta)
-    val idName = if (positional) "doc_id" else "neighbor_id"
+    val idName = sc.tombIdCol
     val newChain = sc.chainOf(meta, v)
     val newSet = newChain.toSet
     val tombsNow = sc.tombVersionsOf(meta)
@@ -1246,10 +1070,7 @@ object TextIndex {
                      k1: Double = 1.2, b: Double = 0.75,
                      fallbackToExact: Boolean = true): DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val v = store.currentVersion(indexTable)
-    requireBuilt(v, indexTable)
-    val meta = store.metaForVersion(indexTable, v)
-    requireReadable(meta, indexTable)
+    val (v, meta) = readable(store, indexTable, "querying")
     val ct = champTable(indexTable)
     val cv = store.currentVersion(ct)
     val fresh = freshAt(store, indexTable, v, ct, cv)
@@ -1398,10 +1219,7 @@ object TextIndex {
       k1: Double = 1.2, b: Double = 0.75): (DataFrame, Option[(Int, Int)]) = {
     import graft.functions.{TextFunctions => TF}
     import org.apache.spark.sql.expressions.Window
-    val v = store.currentVersion(indexTable)
-    requireBuilt(v, indexTable)
-    val meta = store.metaForVersion(indexTable, v)
-    requireReadable(meta, indexTable)
+    val (v, meta) = readable(store, indexTable, "querying")
     val ct = champTable(indexTable)
     val cv = store.currentVersion(ct)
     val fresh = freshAt(store, indexTable, v, ct, cv)
@@ -1576,7 +1394,7 @@ object TextIndex {
       val essPreds = Seq(ZoneMap.stringIn("term", essTerms))
       val nonEssPreds = Seq(ZoneMap.stringIn("term", nonEssTerms))
       // IO accounting for the spec: same pure selection, sidecar-only
-      val io = srcChain(meta).chainOf(meta, v).map { m =>
+      val io = layoutOf(meta).chain.chainOf(meta, v).map { m =>
         val eb = ZoneMap.selectedFilesAt(store, indexTable, m, essPreds,
           keepFile)._1.size
         val e0 = ZoneMap.selectedFilesAt(store, indexTable, m, essPreds)._1.size
@@ -1629,10 +1447,7 @@ object TextIndex {
   def maintain(store: SnapshotStore, indexTable: String,
                maxChainLength: Int = 4,
                championM: Option[Int] = None): Unit = {
-    val v = store.currentVersion(indexTable)
-    if (v == 0) return
-    val meta0 = store.metaForVersion(indexTable, v)
-    val members = srcChain(meta0).chainOf(meta0, v)
+    if (store.currentVersion(indexTable) == 0) return
     // Champion refresh FIRST (r15): the incremental merge needs the
     // delta chain intact (a fold collapses it and forces the full
     // rebuild), and under content-version freshness the fold below no
@@ -1643,11 +1458,13 @@ object TextIndex {
       if (!championsFresh(store, indexTable))
         refreshChampions(store, indexTable, m)
     }
-    // pending tombstones fold unconditionally — physical removal of
-    // taken-down documents must not wait out maxChainLength
-    if (members.size > maxChainLength || srcChain(meta0).tombsPending(meta0))
-      compactIndex(store, indexTable)
-    vacuumIndex(store, indexTable)
+    // the shared fold policy: pending tombstones fold unconditionally —
+    // physical removal of taken-down documents must not wait out
+    // maxChainLength
+    val layout = writerOf(store, indexTable)
+    if (layout.foldDue(store, indexTable, maxChainLength))
+      layout.compactIndex(store, indexTable)
+    layout.vacuumIndex(store, indexTable)
     // champion chain fold + chain-aware vacuum: merge-mode refreshes
     // are touched-term delta commits (r16), so the champion table has
     // its own chain to bound and its live members to keep
@@ -1668,28 +1485,233 @@ object TextIndex {
     * a compacting commit happened, false if already compact — IDEMPOTENT,
     * and the commit is the store's atomic version flip, so a crash
     * mid-compaction leaves the old chain fully live. */
-  def compactIndex(store: SnapshotStore, indexTable: String): Boolean = {
-    // a unified positional table folds through PhraseIndex — folding
-    // through this object's slim read chain would drop the positions
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.compactIndex(store, indexTable)
-    store.transactMeta[Unit](indexTable, sortKey = Some("term"),
-          statsCols = Seq("term", "tf", "dl")) {
-      val v = store.currentVersion(indexTable)
-      if (v == 0) Left(())
-      else chain.compactNow(store, indexTable, v,
-        store.metaForVersion(indexTable, v), layout = termLayout).toRight(())
-    }.isRight
-  }
+  def compactIndex(store: SnapshotStore, indexTable: String): Boolean =
+    writerOf(store, indexTable).compactIndex(store, indexTable)
 
   /** Drop version dirs outside the live delta chain (see
-    * VectorIndex.vacuumIndex). */
-  def vacuumIndex(store: SnapshotStore, indexTable: String): Unit = {
-    if (isPositional(store.metaForVersion(indexTable,
-        store.currentVersion(indexTable))))
-      return PhraseIndex.vacuumIndex(store, indexTable)
-    store.dropVersions(indexTable,
-      store.versions(indexTable).toSet -- chain.liveVersions(store, indexTable))
+    * [[ChainedIndex.vacuumIndex]]). */
+  def vacuumIndex(store: SnapshotStore, indexTable: String): Unit =
+    writerOf(store, indexTable).vacuumIndex(store, indexTable)
+}
+
+/** One physical layout of the text index, declared over the text
+  * family's ONE writer: the postings layout (`TextIndex`'s private
+  * `Postings`, `text.` keys) and the positional layout ([[PhraseIndex]],
+  * `phrase.` keys). Both tokenize under the library-wide contract
+  * (`TextFunctions.tokens(lower(text))`), commit term-sorted rows with
+  * term/tf/dl zones, keep their corpus statistics (nDocs, sumDl —
+  * avgdl's exact numerator) and content counter under their own key
+  * prefix, and share [[ChainedIndex]]'s append transaction, fold,
+  * vacuum and live read; the takedown here replaces ChainedIndex's
+  * (it adjusts the corpus statistics and records each deleted doc's
+  * terms in the tombstone member). A layout declares:
+  *  - its key prefix and [[DeltaChain]] (`idName` is the document-id
+  *    column, `canonCols` the chain's canonical projection);
+  *  - its row encoder, [[rowsOf]];
+  *  - [[persistTokens]]: whether the tokenized batch is persisted for
+  *    the write its statistics observation rides;
+  *  - its fold layout and its compatibility check (ChainedIndex's
+  *    `foldLayout` and `checkCompatible`);
+  *  - [[buildTags]], the contract tags every build stamps.
+  * [[TextIndex]]'s layout-agnostic entry points route to the layout of
+  * the table's latest build ([[TextIndex.layoutOf]]). */
+private[store] abstract class TextLayout(protected val prefix: String,
+                                         idName: String,
+                                         canonCols: Seq[String] = Nil)
+    extends ChainedIndex {
+
+  private[store] final val chain =
+    new DeltaChain(s"${prefix}parts", canonCols, tombIdCol = idName)
+
+  override protected def foldSortKey: String = "term"
+  override protected def foldStatsCols: Seq[String] = Seq("term", "tf", "dl")
+
+  /** Index rows of a tokenized (id, toks) batch. */
+  protected def rowsOf(tok: DataFrame): DataFrame
+
+  /** Persist the tokenized batch for the write? The observed statistics
+    * count every row the write pass evaluates, so an encoder that
+    * evaluates its input twice needs the cache. */
+  protected def persistTokens: Boolean
+
+  /** Metadata every build stamps: the authoritative layout key and the
+    * tokenizer/row-layout contract tags its compatibility check reads. */
+  protected def buildTags: Map[String, String]
+
+  /** (id, toks) — the library-wide tokenization. */
+  protected def tokenized(docs: DataFrame, textCol: String,
+                          idCol: String): DataFrame =
+    docs.select(col(idCol).as(idName),
+      TextFunctions.tokens(lower(col(textCol))).as("toks"))
+
+  /** The tokenized batch with its (docs, tokens) observation attached —
+    * single-pass stats (r18): nDocs/sumDl ride the write as an
+    * [[ObservedStats]] observation instead of a separate aggregate
+    * action, one tokenize pass per build or append. */
+  private def observedTokens(docs: DataFrame, textCol: String,
+                             idCol: String): (DataFrame, Observation) =
+    ObservedStats.attach(tokenized(docs, textCol, idCol), size(col("toks")))
+
+  /** `prior`'s corpus statistics plus the observed batch's (`prior` is
+    * empty for a build). The eager fallback (collapsed plan, timeout)
+    * is ONE aggregate action over the same tokenized frame. */
+  private def statsAfter(prior: Map[String, String], tok: DataFrame,
+                         obs: Observation): Map[String, String] = {
+    val (n, sdl) = ObservedStats.result(obs, {
+      val r = tok.agg(count(lit(1)).as("n"),
+        sum(size(col("toks")).cast("long")).as("sdl")).collect()(0)
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    })
+    def plus(k: String, d: Long) =
+      s"$prefix$k" -> (prior.getOrElse(s"$prefix$k", "0").toLong + d).toString
+    Map(plus("nDocs", n), plus("sumDl", sdl))
+  }
+
+  /** The content counter after one more content change — appends and
+    * deletes bump it; folds and vacuums never do, so a champion cache
+    * built over the table survives maintenance. */
+  private def contentBump(meta: Map[String, String]): (String, String) =
+    s"${prefix}contentVersion" ->
+      (meta.getOrElse(s"${prefix}contentVersion", "0").toLong + 1).toString
+
+  /** Tokenize + index `docs`, commit as a fresh full snapshot (or a
+    * chain-resetting rebuild, including an in-place migration from the
+    * other layout). Returns the committed version; `docs.limit(0)` for
+    * an empty init when everything arrives via appends.
+    *
+    * `corpusTag` (optional): content-version identifier of the build
+    * corpus, rides in the metadata atomically with the rows and
+    * survives appends — same drift-detection contract as
+    * [[VectorIndex.build]]. */
+  def build(store: SnapshotStore, table: String, docs: DataFrame,
+            textCol: String, idCol: String,
+            corpusTag: Option[String] = None): Long = {
+    // content counter: bumped past any replaced build's — under EITHER
+    // layout prefix (commit meta merges over the old version's), so a
+    // champion cache refreshed against the old content can never read
+    // as fresh for the new, including across an in-place migration
+    val prevContent = TextIndex.crossLayoutContent(store.latestMeta(table))
+    val (tok0, obs) = observedTokens(docs, textCol, idCol)
+    val tok =
+      if (persistTokens) tok0.persist(StorageLevel.MEMORY_AND_DISK) else tok0
+    try store.commit(table, rowsOf(tok), sortKey = Some(foldSortKey),
+        statsCols = foldStatsCols,
+        meta = chain.resetMeta ++ buildTags +
+          (s"${prefix}contentVersion" -> (prevContent + 1).toString) ++
+          corpusTag.map(t => s"${prefix}corpusTag" -> t),
+        metaDeferred = () => statsAfter(Map.empty, tok, obs))
+    finally if (persistTokens) tok.unpersist(blocking = false)
+  }
+
+  /** Append new documents as an O(batch) delta (the plain,
+    * non-watermarked form; streaming ingest uses [[appendBatchOnce]]).
+    * Returns the committed version. */
+  def append(store: SnapshotStore, table: String, docs: DataFrame,
+             textCol: String, idCol: String, compactEvery: Int = 8): Long =
+    appendDocs(store, table, docs, textCol, idCol, None, compactEvery).get
+
+  /** Append `docs` as an O(batch) delta — exactly-once via
+    * (streamId, batchId); a replayed batch returns false. */
+  def appendBatchOnce(store: SnapshotStore, table: String, docs: DataFrame,
+                      textCol: String, idCol: String,
+                      streamId: String, batchId: Long,
+                      compactEvery: Int = 8): Boolean =
+    appendDocs(store, table, docs, textCol, idCol,
+      Some((streamId, batchId)), compactEvery).isDefined
+
+  /** Both append forms, through the shared transaction: the delta rows
+    * and the content bump commit under the lock, the batch's observed
+    * statistics accumulate onto the pre-append metadata after the
+    * write. Returns the committed version, None for a replay. */
+  private def appendDocs(store: SnapshotStore, table: String,
+                         docs: DataFrame, textCol: String, idCol: String,
+                         once: Option[(String, Long)],
+                         compactEvery: Int): Option[Long] = {
+    val (tok, obs) = observedTokens(docs, textCol, idCol)
+    appendTx(store, table, once, compactEvery, persist = persistTokens,
+        metaDeferred = statsAfter(_, tok, obs))(_ => tok) { (_, meta, enc) =>
+      ((), rowsOf(enc), Map(contentBump(meta)))
+    }.map(_._2)
+  }
+
+  /** TAKEDOWN: [[TextIndex.deleteDocs]]'s contract, the one body of
+    * both layouts. Returns the committed tombstone version. */
+  override def deleteDocs(store: SnapshotStore, table: String,
+                          ids: DataFrame): Long = {
+    takedown(store, table, ids, None)
+    store.currentVersion(table)
+  }
+
+  /** [[deleteDocs]] under the exactly-once (streamId, batchId)
+    * watermark ([[DeltaChain.tombNextOnce]]'s correctness rationale).
+    * Returns true if applied, false if skipped as a replay. */
+  override def deleteDocsOnce(store: SnapshotStore, table: String,
+                              ids: DataFrame, streamId: String,
+                              batchId: Long): Boolean =
+    takedown(store, table, ids, Some((streamId, batchId)))
+
+  /** The text family's TAKEDOWN body: under the table lock it refuses an
+    * unbuilt or incompatible table, skips a replayed `once`, and commits
+    * a tombstone member carrying each deleted doc's term set, with the
+    * corpus stats adjusted exactly and the content counter bumped.
+    * Returns false for a replayed `once`. */
+  private def takedown(store: SnapshotStore, table: String, ids: DataFrame,
+                       once: Option[(String, Long)]): Boolean = {
+    val id = idName
+    val tombs = ids.toDF(id)
+    var deferred: () => Map[String, String] = () => Map.empty
+    store.transactMeta[Unit](table, sortKey = Some(id),
+        statsCols = Seq(id), metaDeferred = () => deferred()) {
+      val (v, meta) = built(store, table, "deleting")
+      if (once.exists { case (sid, bid) => DeltaChain.replayed(meta, sid, bid) })
+        Left(())
+      else {
+        // ONE visible-row scan feeds the per-doc deleted-TERM sets that
+        // ride in the tombstone member (the champion delete-merge's
+        // O(tombstone bytes) touched-term discovery) AND — r19, guide
+        // §1.2 — the exact stats delta, riding the tombstone write as a
+        // CollectMetrics observation instead of a separate persisted
+        // aggregate action: per doc, the distinct-dl count/sum next to
+        // the term set, summed while the write streams the rows. Same
+        // arithmetic as the old distinct-(id, dl) aggregate: Σ over docs
+        // of (count, sum) over that doc's distinct dl values.
+        val perDoc = chain.load(store, table, v, meta)
+          .join(tombs, Seq(id))
+          .groupBy(col(id))
+          .agg(collect_set(col("term")).as("terms"),
+            countDistinct(col("dl")).as("_ndl"),
+            coalesce(sum_distinct(col("dl").cast("long")), lit(0L)).as("_sdl"))
+        val obs = Observation()
+        val observed = perDoc.observe(obs,
+          coalesce(sum(col("_ndl")), lit(0L)).as("n"),
+          coalesce(sum(col("_sdl")), lit(0L)).as("sdl"))
+        val tombRows = tombs
+          .join(observed.select(col(id), col("terms")), Seq(id), "left")
+          .select(col(id),
+            coalesce(col("terms"), array().cast("array<string>")).as("terms"))
+        deferred = () => {
+          val (dDocs, dDl) = ObservedStats.result(obs, {
+            // eager fallback (collapsed plan / timeout): the pre-r19
+            // separate aggregate over the same visible-row scan
+            val r = chain.load(store, table, v, meta)
+              .join(tombs, Seq(id))
+              .select(col(id), col("dl")).distinct()
+              .agg(count(lit(1)),
+                coalesce(sum(col("dl").cast("long")), lit(0L)))
+              .head()
+            (r.getLong(0), r.getLong(1))
+          })
+          Map(
+            s"${prefix}nDocs" ->
+              (meta.getOrElse(s"${prefix}nDocs", "0").toLong - dDocs).toString,
+            s"${prefix}sumDl" ->
+              (meta.getOrElse(s"${prefix}sumDl", "0").toLong - dDl).toString,
+            contentBump(meta))
+        }
+        Right(chain.tombNext(v, meta, tombRows,
+          once.map { case (sid, bid) => DeltaChain.mark(sid, bid) }
+            .getOrElse(Map.empty)))
+      }
+    }.isRight
   }
 }

@@ -56,8 +56,8 @@ object VectorIndex extends ChainedIndex {
           s"'$Scheme' codes — rebuild the index (VectorIndex.build)")
   }
 
-  override protected def checkDelete(meta: Map[String, String],
-                                     table: String): Unit =
+  override private[store] def checkCompatible(meta: Map[String, String],
+                                             table: String): Unit =
     requireScheme(meta, table)
 
   /** Train quantizers, encode the corpus, commit as the next version of
@@ -140,7 +140,6 @@ object VectorIndex extends ChainedIndex {
                             once: Option[(String, Long)],
                             compactEvery: Int): Option[Long] =
     appendTx(store, indexTable, once, compactEvery, persist = false) { meta =>
-      requireScheme(meta, indexTable)
       val (centroids, codebooks, _) = trained(meta)
       Similarity.ivfPqEncode(batch, idCol, vecCol, centroids, codebooks)
     } { (_, _, encoded) => ((), encoded, Map.empty) }.map(_._2)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -58,7 +56,7 @@ class AppendJobCountSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(4)
 
   private def freshStore(): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory("graft-jobs").toString, spark)
+    new SnapshotStore(TempDirs.create("graft-jobs").toString, spark)
 
   test("DedupIndex append (probe off): one blocking action, no sizing/schema jobs") {
     val store = freshStore()
@@ -73,8 +71,8 @@ class AppendJobCountSpec extends SparkSpec {
     // The ONLY named action callsite may be the eager pair
     // materialization in pairsAmong — a reintroduced sizing count
     // (distinct/count at another line), a schema-inference read
-    // ("parquet at SnapshotStore"), or the old transactWith eager load
-    // would each surface as an extra callsite here.
+    // ("parquet at SnapshotStore"), or an eager snapshot load under the
+    // transaction lock would each surface as an extra callsite here.
     assert(sites.forall(_.startsWith("count at DedupIndex")),
       s"unexpected driver actions in the append path: $sites")
     // Absolute ceiling on total jobs (AQE stage jobs included): r9 code

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +13,7 @@ class BloomSkipSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): (SnapshotStore, java.nio.file.Path) = {
-    val root = Files.createTempDirectory("graft-bloom")
+    val root = TempDirs.create("graft-bloom")
     (new SnapshotStore(root.toString, spark), root)
   }
 

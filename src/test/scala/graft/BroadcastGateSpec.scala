@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -90,7 +88,7 @@ class BroadcastGateSpec extends SparkSpec {
 
   test("limit 0 forces every append through the fallback with unchanged output") {
     def collectPairs(limit: Long): (Set[(Long, Long)], Set[(Long, Long)], Set[(Long, Long, Boolean)]) = {
-      val root = Files.createTempDirectory("graft-gate").toString
+      val root = TempDirs.create("graft-gate").toString
       val store = new SnapshotStore(root, spark)
       DedupIndex.build(store, "mh", docs.limit(0), "text", "doc_id")
       SimHashIndex.build(store, "sh", docs.limit(0)

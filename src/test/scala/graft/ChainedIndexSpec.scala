@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,7 @@ import graft.store._
   * exists once, so one row per declaration that differs is enough:
   * SimHashIndex (the default fold layout), SemIndex (its own fold sort
   * and zone-map columns, and its own maintain row) and VectorIndex
-  * (`neighbor_id` tombstones and the `checkDelete` scheme check). Only
+  * (`neighbor_id` tombstones and the `checkCompatible` scheme check). Only
   * what TombstoneSpec and GraftMaintainSpec leave open is pinned here:
   *  - a replayed `deleteDocsOnce` returns false and commits nothing;
   *  - a vacuum before the fold keeps the tombstone member (and so the
@@ -36,7 +34,7 @@ class ChainedIndexSpec extends SparkSpec {
 
   /** One store for every case; each case owns its tables. */
   private lazy val store = new SnapshotStore(
-    Files.createTempDirectory("graft-chained").toString, spark)
+    TempDirs.create("graft-chained").toString, spark)
 
   /** (kind tag, index, the id column of its live rows, build `table`). */
   private val rows: Seq[(String, ChainedIndex, String, String => Unit)] = Seq(

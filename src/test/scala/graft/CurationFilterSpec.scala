@@ -95,8 +95,8 @@ class CurationFilterSpec extends SparkSpec {
     val docs = spark.read.parquet(docsPath)
     val bench = docs.filter(col("doc_id") % 23 === 0)
     val train = docs.filter(col("doc_id") % 23 =!= 0)
-    val inDir = Files.createTempDirectory("graft-decon-in")
-    val ckpt = Files.createTempDirectory("graft-decon-ck")
+    val inDir = TempDirs.create("graft-decon-in")
+    val ckpt = TempDirs.create("graft-decon-ck")
     val results = scala.collection.mutable.Map[Long, Long]()
     val query = spark.readStream.schema(docs.schema).parquet(inDir.toString)
       .writeStream
@@ -112,7 +112,7 @@ class CurationFilterSpec extends SparkSpec {
       .start()
     try {
       def arrive(half: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-        val stage = Files.createTempDirectory(s"graft-decon-$tag")
+        val stage = TempDirs.create(s"graft-decon-$tag")
         half.coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
           .findFirst().get()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -81,7 +79,7 @@ class CurationIngestSpec extends SparkSpec {
   }
 
   private def freshStore(regime: NearDupRegime): (SnapshotStore, String) = {
-    val root = Files.createTempDirectory("graft-curing").toString
+    val root = TempDirs.create("graft-curing").toString
     val store = new SnapshotStore(root, spark)
     CurationIngest.init(store, "cur", regime, docsDF, "text", "doc_id")
     (store, "cur")
@@ -195,7 +193,7 @@ class CurationIngestSpec extends SparkSpec {
         Seq[Long => Boolean](_ < 120, _ >= 120))
       // bootstrap path: batch 0 committed via build (pair-free), then
       // batch 1 appended — its lineage must match the clean run's
-      val root = Files.createTempDirectory("graft-curb").toString
+      val root = TempDirs.create("graft-curb").toString
       val store = new SnapshotStore(root, spark)
       CurationIngest.build(store, "cur", regime,
         docsDF.filter(col("doc_id") < 120), "text", "doc_id")
@@ -213,7 +211,7 @@ class CurationIngestSpec extends SparkSpec {
     val regime = regimes.head._2
     val want = expected(regime)
     val (store, t) = freshStore(regime)
-    val inbox = Files.createTempDirectory("graft-curing-inbox").toString
+    val inbox = TempDirs.create("graft-curing-inbox").toString
     // ascending-id micro-batches; path order b0 < b1 matches arrival order
     docsDF.filter(col("doc_id") < 120).coalesce(1)
       .write.parquet(s"$inbox/b0.parquet")
@@ -225,7 +223,7 @@ class CurationIngestSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
     val q = CurationIngest.maintainFromStream(store, t, regime, stream,
-      "text", "doc_id", s"$inbox-ckpt",
+      "text", "doc_id", TempDirs.create("graft-ckpt").toString,
       onLineage = (lin, _) => got.synchronized {
         got ++= lin.as[(Long, Long, String)].collect()
           .map { case (id, k, r) => id -> (k, r) }
@@ -342,7 +340,7 @@ class CurationIngestSpec extends SparkSpec {
   }
 
   test("closeLineage on a real composed ingest: every keep chain compacts to a surviving root") {
-    val store = new SnapshotStore(Files.createTempDirectory("graft-cls").toString, spark)
+    val store = new SnapshotStore(TempDirs.create("graft-cls").toString, spark)
     val regime = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
     CurationIngest.init(store, "cl", regime, docsDF, "text", "doc_id")
     val parts = Seq(docsDF.filter(col("doc_id") < 60), docsDF.filter(col("doc_id") >= 60))
@@ -367,7 +365,7 @@ class CurationIngestSpec extends SparkSpec {
   }
 
   test("stats: versions, chain fan-in, row counts, watermarks track the ingest protocol") {
-    val store = new SnapshotStore(Files.createTempDirectory("graft-stats").toString, spark)
+    val store = new SnapshotStore(TempDirs.create("graft-stats").toString, spark)
     val regime = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
     CurationIngest.init(store, "st", regime, docsDF, "text", "doc_id")
     val s0 = CurationIngest.stats(store, "st")
@@ -395,7 +393,7 @@ class CurationIngestSpec extends SparkSpec {
   }
 
   test("stats and maintain after a takedown: visible rows, tombstone fan-in, tombstones fold") {
-    val store = new SnapshotStore(Files.createTempDirectory("graft-stats-td").toString, spark)
+    val store = new SnapshotStore(TempDirs.create("graft-stats-td").toString, spark)
     val regime = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
     CurationIngest.init(store, "td", regime, docsDF, "text", "doc_id")
     val lin = CurationIngest.ingestBatchOnce(store, "td", regime, docsDF,
@@ -425,7 +423,7 @@ class CurationIngestSpec extends SparkSpec {
   }
 
   test("a prefix rebuilt under another regime: stats, maintain and vacuum refuse it") {
-    val store = new SnapshotStore(Files.createTempDirectory("graft-regime-swap").toString, spark)
+    val store = new SnapshotStore(TempDirs.create("graft-regime-swap").toString, spark)
     val small = corpus.take(12).toDF("doc_id", "text")
     val simhash = SimHashRegime(maxHamming = 6, expectedCorpus = 300L)
     CurationIngest.build(store, "sw", MinHashRegime(threshold = 0.5), small,
@@ -453,7 +451,7 @@ class CurationIngestSpec extends SparkSpec {
     // consume-before-vacuum contract), the other never maintains.
     def ingest5(withMaintain: Boolean)
         : (SnapshotStore, String, Map[Long, (Long, String)]) = {
-      val root = Files.createTempDirectory("graft-maint").toString
+      val root = TempDirs.create("graft-maint").toString
       val store = new SnapshotStore(root, spark)
       CurationIngest.init(store, "mt", regime, docsDF, "text", "doc_id")
       val out = (0 until 5).flatMap { i =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -56,7 +54,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(want.exists { case (a, b, _) => (a < 100 && b >= 100) },
       "planted structure must include cross-batch pairs")
 
-    val root = Files.createTempDirectory("graft-dedupidx").toString
+    val root = TempDirs.create("graft-dedupidx").toString
     val store = new SnapshotStore(root, spark)
     DedupIndex.build(store, "docs", docs.limit(0), "text", "doc_id")
     val got = batches(docs).zipWithIndex.flatMap { case (b, i) =>
@@ -80,7 +78,7 @@ class DedupIndexSpec extends SparkSpec {
     val want = pairSet(truth)
     truth.unpersist(blocking = false)
 
-    val root = Files.createTempDirectory("graft-dedupidx-split").toString
+    val root = TempDirs.create("graft-dedupidx-split").toString
     val store = new SnapshotStore(root, spark)
     DedupIndex.build(store, "docs", docs.limit(0), "text", "doc_id")
     val splits = Seq(docs.filter(col("doc_id") < 40),
@@ -106,7 +104,7 @@ class DedupIndexSpec extends SparkSpec {
     val docs = corpus.toDF("doc_id", "text").repartition(4)
     def run(probe: Int): Set[(Long, Long, Double)] = {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-dedupidx-probe").toString, spark)
+        TempDirs.create("graft-dedupidx-probe").toString, spark)
       DedupIndex.build(store, "docs", docs.limit(0), "text", "doc_id")
       batches(docs).map { b =>
         val p = DedupIndex.appendBatch(store, "docs", b, "text", "doc_id",
@@ -146,7 +144,7 @@ class DedupIndexSpec extends SparkSpec {
       ids0.contains(a) || ids0.contains(b) },
       "planted structure must include fat-base-vs-new-batch pairs")
 
-    val root = Files.createTempDirectory("graft-dedupidx-fat").toString
+    val root = TempDirs.create("graft-dedupidx-fat").toString
     val store = new SnapshotStore(root, spark)
     val fat = bs.head
       .select(col("doc_id").as("id"),
@@ -176,7 +174,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("appends are O(batch) deltas; compaction folds; vacuum keeps the chain") {
     val docs = corpus.toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-dedupidx-delta").toString
+    val root = TempDirs.create("graft-dedupidx-delta").toString
     val store = new SnapshotStore(root, spark)
     DedupIndex.build(store, "docs", docs.limit(0), "text", "doc_id")
     val bs = batches(docs)
@@ -202,7 +200,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("appendBatchOnce skips a replayed batch id; appending before build fails") {
     val docs = corpus.toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-dedupidx-once").toString
+    val root = TempDirs.create("graft-dedupidx-once").toString
     val store = new SnapshotStore(root, spark)
     intercept[IllegalStateException] {
       DedupIndex.appendBatch(store, "docs", docs, "text", "doc_id")
@@ -226,11 +224,11 @@ class DedupIndexSpec extends SparkSpec {
     val want = pairSet(truth)
     truth.unpersist(blocking = false)
 
-    val inbox = Files.createTempDirectory("graft-dedupidx-inbox").toString
+    val inbox = TempDirs.create("graft-dedupidx-inbox").toString
     batches(docs).zipWithIndex.foreach { case (b, i) =>
       b.coalesce(1).write.parquet(s"$inbox/b$i.parquet")
     }
-    val root = Files.createTempDirectory("graft-dedupidx-stream").toString
+    val root = TempDirs.create("graft-dedupidx-stream").toString
     val store = new SnapshotStore(root, spark)
     DedupIndex.build(store, "docs", docs.limit(0), "text", "doc_id")
 
@@ -239,7 +237,7 @@ class DedupIndexSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
     val q = DedupIndex.maintainFromStream(store, "docs", stream,
-      "text", "doc_id", s"$inbox-ckpt",
+      "text", "doc_id", TempDirs.create("graft-ckpt").toString,
       onPairs = (pairs, _) => got.synchronized { got ++= pairSet(pairs) })
     q.processAllAvailable()
     q.stop()

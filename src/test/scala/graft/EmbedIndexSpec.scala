@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -70,7 +68,7 @@ class EmbedIndexSpec extends SparkSpec {
       "far plant must not pair")
 
     for (nBatches <- Seq(2, 3)) {
-      val root = Files.createTempDirectory("graft-embidx").toString
+      val root = TempDirs.create("graft-embidx").toString
       val store = new SnapshotStore(root, spark)
       EmbedIndex.build(store, "t", vecsDf.limit(0), Dim, Threshold,
         NTables, Expected, MaxBucket, Seed)
@@ -93,7 +91,7 @@ class EmbedIndexSpec extends SparkSpec {
     // on twin stores per path, compared pair-for-pair (ids AND cosine).
     def run(probe: Int): Set[(Long, Long, Double)] = {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-embidx-probe").toString, spark)
+        TempDirs.create("graft-embidx-probe").toString, spark)
       EmbedIndex.build(store, "t", vecsDf.limit(0), Dim, Threshold,
         NTables, Expected, MaxBucket, Seed)
       (0 until 2).map { i =>
@@ -122,7 +120,7 @@ class EmbedIndexSpec extends SparkSpec {
     // twin.
     def run(minDim: Int): Set[(Long, Long, Double)] = {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-embidx-flt").toString, spark)
+        TempDirs.create("graft-embidx-flt").toString, spark)
       EmbedIndex.build(store, "t", vecsDf.limit(0), Dim, Threshold,
         NTables, Expected, MaxBucket, Seed)
       val perBatch = (0 until 2).map { i =>
@@ -170,7 +168,7 @@ class EmbedIndexSpec extends SparkSpec {
 
     def run(threshold: Double, minDim: Int): Set[(Long, Long, Double)] = {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-embidx-band").toString, spark)
+        TempDirs.create("graft-embidx-band").toString, spark)
       EmbedIndex.build(store, "t", df.limit(0), Dim, threshold,
         NTables, Expected, MaxBucket, Seed)
       val p = EmbedIndex.appendBatchOnce(store, "t", df, "s", 0L,
@@ -197,7 +195,7 @@ class EmbedIndexSpec extends SparkSpec {
     // canonical (id, uv) projection must read, append, and compact it
     // into the slim layout (the SimHashIndex r13 / DedupIndex r14
     // migration contract, completed for the last fat index).
-    val root = Files.createTempDirectory("graft-embidx-fat").toString
+    val root = TempDirs.create("graft-embidx-fat").toString
     val store = new SnapshotStore(root, spark)
     val fat = vecsDf.filter(col("id") < 50)
       .select(col("id"), Similarity.unitVector(col("vec")).as("uv"),
@@ -233,7 +231,7 @@ class EmbedIndexSpec extends SparkSpec {
   }
 
   test("replay skipped; append before build throws; recovery twin matches") {
-    val root = Files.createTempDirectory("graft-embidx2").toString
+    val root = TempDirs.create("graft-embidx2").toString
     val store = new SnapshotStore(root, spark)
     intercept[IllegalStateException] {
       EmbedIndex.appendBatchOnce(store, "t", vecsDf, "s", 0L)
@@ -261,12 +259,12 @@ class EmbedIndexSpec extends SparkSpec {
 
   test("streaming maintenance delivers the same pairs exactly once") {
     val want = batchTruth
-    val inbox = Files.createTempDirectory("graft-embidx-inbox").toString
+    val inbox = TempDirs.create("graft-embidx-inbox").toString
     (0 until 3).foreach { i =>
       vecsDf.filter(col("id") % 3 === i).coalesce(1)
         .write.parquet(s"$inbox/b$i.parquet")
     }
-    val root = Files.createTempDirectory("graft-embidx-stream").toString
+    val root = TempDirs.create("graft-embidx-stream").toString
     val store = new SnapshotStore(root, spark)
     EmbedIndex.build(store, "t", vecsDf.limit(0), Dim, Threshold,
       NTables, Expected, MaxBucket, Seed)
@@ -275,7 +273,7 @@ class EmbedIndexSpec extends SparkSpec {
     val stream = spark.readStream.schema(vecsDf.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
-    val q = EmbedIndex.maintainFromStream(store, "t", stream, s"$inbox-ckpt",
+    val q = EmbedIndex.maintainFromStream(store, "t", stream, TempDirs.create("graft-ckpt").toString,
       onPairs = (pairs, _) => got.synchronized { got ++= pairSet(pairs) })
     q.processAllAvailable()
     q.stop()

@@ -25,7 +25,7 @@ class EventAnalyticsSpec extends SparkSpec {
     * Week spread for retention: u1 events span weeks 0,1,3 (gap at 2);
     * everyone else stays in week 0. */
   private lazy val craftedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = TempDirs.create("graft-funnel").toString
     val base = 1704067200000L // 2024-01-01 00:00:00 UTC — a Monday
     def ts(offsetSec: Long) = new Timestamp(base + offsetSec * 1000L)
     val day = 86400L

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ class FingerprintIndexSpec extends SparkSpec {
 
   private def run(splits: Seq[Long => Boolean]): (Seq[DataFrame], SnapshotStore, String) = {
     val docs = corpus.toDF("doc_id", "text").repartition(4)
-    val root = Files.createTempDirectory("graft-fpidx").toString
+    val root = TempDirs.create("graft-fpidx").toString
     val store = new SnapshotStore(root, spark)
     FingerprintIndex.build(store, "t", docs.limit(0), "text", "doc_id")
     val parts = splits.zipWithIndex.map { case (p, i) =>
@@ -70,7 +68,7 @@ class FingerprintIndexSpec extends SparkSpec {
 
   test("replayed batch id is skipped; append before build throws") {
     val docs = corpus.toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-fpidx2").toString
+    val root = TempDirs.create("graft-fpidx2").toString
     val store = new SnapshotStore(root, spark)
     intercept[IllegalStateException] {
       FingerprintIndex.appendBatchOnce(store, "t", docs, "text", "doc_id", "s", 0L)
@@ -87,7 +85,7 @@ class FingerprintIndexSpec extends SparkSpec {
 
   test("appends are O(batch) deltas; compaction folds the chain") {
     val docs = corpus.toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-fpidx3").toString
+    val root = TempDirs.create("graft-fpidx3").toString
     val store = new SnapshotStore(root, spark)
     FingerprintIndex.build(store, "t", docs.filter(col("doc_id") < 5), "text", "doc_id")
     // compactEvery = 3: the third append folds into a full snapshot

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,7 +35,7 @@ class GraftMaintainSpec extends SparkSpec {
     store.metaForVersion(t, store.currentVersion(t)).getOrElse(key, "<absent>")
 
   test("buildTextIndex: the documented default is the unified positional layout") {
-    val root = Files.createTempDirectory("graft-deftext").toString
+    val root = TempDirs.create("graft-deftext").toString
     val store = new SnapshotStore(root, spark)
     val d = docs.toDF("doc_id", "text")
     Graft.buildTextIndex(store, "t", d, "text", "doc_id")
@@ -60,7 +58,7 @@ class GraftMaintainSpec extends SparkSpec {
   }
 
   test("maintainAll: discovers every index type, folds+refreshes+retrains+vacuums, idempotent") {
-    val root = Files.createTempDirectory("graft-maintainall").toString
+    val root = TempDirs.create("graft-maintainall").toString
     val store = new SnapshotStore(root, spark)
 
     // text postings + committed champions, then 3 appends → long chain,
@@ -179,13 +177,13 @@ class GraftMaintainSpec extends SparkSpec {
       }
 
     val seqStore = new SnapshotStore(
-      Files.createTempDirectory("graft-ma-seq").toString, spark)
+      TempDirs.create("graft-ma-seq").toString, spark)
     DedupIndex.build(seqStore, "mix", docBatch(0), "text", "doc_id")
     val seqPairs = appendAll(seqStore)
     Graft.maintainAll(seqStore, maxChainLength = 1)
 
     val raceStore = new SnapshotStore(
-      Files.createTempDirectory("graft-ma-race").toString, spark)
+      TempDirs.create("graft-ma-race").toString, spark)
     DedupIndex.build(raceStore, "mix", docBatch(0), "text", "doc_id")
     // aggressive maintenance loop: maxChainLength=1 compacts + vacuums
     // on ~every pass, maximizing lock contention with the appends. A
@@ -246,8 +244,8 @@ class GraftMaintainSpec extends SparkSpec {
       }
       store
     }
-    val crashed = build(Files.createTempDirectory("graft-ma-crash").toString)
-    val clean = build(Files.createTempDirectory("graft-ma-clean").toString)
+    val crashed = build(TempDirs.create("graft-ma-crash").toString)
+    val clean = build(TempDirs.create("graft-ma-clean").toString)
     // the "dying pass" maintained mix, then the process died
     DedupIndex.compactIndex(crashed, "mix")
     DedupIndex.vacuumIndex(crashed, "mix")

@@ -268,7 +268,7 @@ class MultimodalCodecSpec extends SparkSpec {
   }
 
   test("binaryFile ingest routes by extension and decodes real pixels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
+    val dir = TempDirs.create("graft-media")
     java.nio.file.Files.write(dir.resolve("a.png"), solidPng(8, 6, 0xFFFFFF))
     java.nio.file.Files.write(dir.resolve("b.PNG"), gradientPng(16, 8))
     java.nio.file.Files.write(dir.resolve("c.wav"), Array[Byte](1, 2, 3))
@@ -297,7 +297,7 @@ class MultimodalCodecSpec extends SparkSpec {
   }
 
   test("streaming media ingest lands waves of files exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft-mstream")
+    val base = TempDirs.create("graft-mstream")
     val inbox = java.nio.file.Files.createDirectory(base.resolve("inbox"))
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString

@@ -83,7 +83,7 @@ class NgramLmSpec extends SparkSpec {
 
   test("persistent model: commit, cold reopen, score ≡ direct; versioned retrain") {
     import graft.store.SnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("graft-lmspec").toString
+    val root = TempDirs.create("graft-lmspec").toString
     val m0 = NgramLm.train(train, "text", minCount = 0)
     val v1 = NgramLm.commitModel(new SnapshotStore(root, spark), "lm", m0, minCount = 0)
     assert(v1 === 1L)

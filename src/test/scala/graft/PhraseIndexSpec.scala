@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -72,7 +70,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("index phrase_tf equals the naive backtracking count (slop 0, 1, 2)") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase").toString, spark)
+      TempDirs.create("graft-phrase").toString, spark)
     PhraseIndex.build(store, "pos", corpus.toDF("doc_id", "text"),
       "text", "doc_id")
     val exact = naive(0)
@@ -92,7 +90,7 @@ class PhraseIndexSpec extends SparkSpec {
   test("multi-batch appends equal the one-shot build; replay skipped") {
     for (nBatches <- Seq(2, 3)) {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-phrase-app").toString, spark)
+        TempDirs.create("graft-phrase-app").toString, spark)
       val df = corpus.toDF("doc_id", "text")
       PhraseIndex.build(store, "pos", df.limit(0), "text", "doc_id")
       (0 until nBatches).foreach { i =>
@@ -115,7 +113,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("ranked phrase retrieval matches a JVM BM25 recompute (ties by id)") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-rank").toString, spark)
+      TempDirs.create("graft-phrase-rank").toString, spark)
     PhraseIndex.build(store, "pos", corpus.toDF("doc_id", "text"),
       "text", "doc_id")
     def toks(s: String): Array[String] =
@@ -145,7 +143,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("scan path (no index) equals the indexed path at every slop") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-scan").toString, spark)
+      TempDirs.create("graft-phrase-scan").toString, spark)
     val df = corpus.toDF("doc_id", "text")
     PhraseIndex.build(store, "pos", df, "text", "doc_id")
     for (slop <- Seq(0, 1)) {
@@ -168,7 +166,7 @@ class PhraseIndexSpec extends SparkSpec {
     val ph = Seq((0L, "the needle"), (1L, "the w7"), (2L, "absent the"))
       .toDF("query_id", "phrase")
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-pre").toString, spark)
+      TempDirs.create("graft-phrase-pre").toString, spark)
     PhraseIndex.build(store, "pos", contrast.toDF("doc_id", "text"),
       "text", "doc_id")
     for (slop <- Seq(0, 1)) {
@@ -207,7 +205,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("duplicate query ids in a phrase batch refuse loudly") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-dup").toString, spark)
+      TempDirs.create("graft-phrase-dup").toString, spark)
     PhraseIndex.build(store, "pos", corpus.toDF("doc_id", "text"),
       "text", "doc_id")
     val dup = Seq((1L, "a b"), (1L, "b c"), (2L, "dd"))
@@ -231,7 +229,7 @@ class PhraseIndexSpec extends SparkSpec {
       Seq.fill(20000)("filler") ++ Seq("beta", "gamma") ++
       Seq.fill(5)("filler")).mkString(" ")
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-vb").toString, spark)
+      TempDirs.create("graft-phrase-vb").toString, spark)
     PhraseIndex.build(store, "pos", Seq((0L, text)).toDF("doc_id", "text"),
       "text", "doc_id")
     val ph = Seq((0L, "beta gamma"), (1L, "filler filler"),
@@ -248,7 +246,7 @@ class PhraseIndexSpec extends SparkSpec {
     // the prefilter silently — it is an optimization, never semantics
     val toks = (0 until 64).map(i => s"t$i")
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-long").toString, spark)
+      TempDirs.create("graft-phrase-long").toString, spark)
     PhraseIndex.build(store, "pos",
       Seq((0L, toks.mkString(" "))).toDF("doc_id", "text"), "text", "doc_id")
     val ph = Seq((0L, toks.take(63).mkString(" ")),
@@ -260,7 +258,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("pre-v2 layout tables refuse load and compaction with the rebuild contract") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-v1").toString, spark)
+      TempDirs.create("graft-phrase-v1").toString, spark)
     // an r15-shaped table: array<int> posns, no tf, tagged pos-dl-v1
     store.commit("pos",
       Seq(("a", 0L, Seq(0, 2), 3L)).toDF("term", "doc_id", "posns", "dl"),
@@ -277,19 +275,19 @@ class PhraseIndexSpec extends SparkSpec {
   }
 
   test("streaming maintenance: micro-batches land exactly once") {
-    val inbox = Files.createTempDirectory("graft-phrase-inbox").toString
+    val inbox = TempDirs.create("graft-phrase-inbox").toString
     val df = corpus.toDF("doc_id", "text")
     (0 until 3).foreach { i =>
       df.filter(col("doc_id") % 3 === i).coalesce(1)
         .write.parquet(s"$inbox/b$i.parquet")
     }
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-stream").toString, spark)
+      TempDirs.create("graft-phrase-stream").toString, spark)
     PhraseIndex.build(store, "pos", df.limit(0), "text", "doc_id")
     val stream = spark.readStream.schema(df.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$inbox/*.parquet")
     val q = PhraseIndex.maintainFromStream(store, "pos", stream,
-      "text", "doc_id", s"$inbox-ckpt")
+      "text", "doc_id", TempDirs.create("graft-ckpt").toString)
     q.processAllAvailable()
     q.stop()
     assert(got(PhraseIndex.phraseQuery(store, "pos",
@@ -298,7 +296,7 @@ class PhraseIndexSpec extends SparkSpec {
     // one-shot build's RANKED output exactly (scores depend on
     // nDocs/sumDl, so a drifted accumulator would reorder or rescore)
     val oneShot = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-oneshot").toString, spark)
+      TempDirs.create("graft-phrase-oneshot").toString, spark)
     PhraseIndex.build(oneShot, "pos", df, "text", "doc_id")
     def ranked(s: SnapshotStore): Set[(Long, Long, Double, Int)] =
       PhraseIndex.phraseQueryRanked(s, "pos",
@@ -312,7 +310,7 @@ class PhraseIndexSpec extends SparkSpec {
 
   test("maintainAll folds an over-length phrase chain via its marker") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-phrase-maint").toString, spark)
+      TempDirs.create("graft-phrase-maint").toString, spark)
     val df = corpus.toDF("doc_id", "text")
     PhraseIndex.build(store, "pos", df.limit(0), "text", "doc_id")
     (0 until 3).foreach { i =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -72,12 +70,12 @@ class PipelineComposeSpec extends SparkSpec {
       // ascending id ranges — the first-arrival ≡ keep-min precondition
       val cut1 = total / 3; val cut2 = 2 * total / 3
       val trickle = lineageMap(
-        new SnapshotStore(Files.createTempDirectory("graft-pipe1").toString, spark),
+        new SnapshotStore(TempDirs.create("graft-pipe1").toString, spark),
         Seq(corpus.filter(col("doc_id") < cut1),
           corpus.filter(col("doc_id") >= cut1 && col("doc_id") < cut2),
           corpus.filter(col("doc_id") >= cut2)))
       val oneShot = lineageMap(
-        new SnapshotStore(Files.createTempDirectory("graft-pipe2").toString, spark),
+        new SnapshotStore(TempDirs.create("graft-pipe2").toString, spark),
         Seq(corpus))
       assert(trickle === oneShot,
         "stateless gates must compose with ingest batching-invariance")

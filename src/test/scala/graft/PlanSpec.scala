@@ -352,7 +352,7 @@ class PlanSpec extends SparkSpec {
     // means the corpus started moving for a 3-phrase batch.
     import org.apache.spark.sql.functions._
     val store = new graft.store.SnapshotStore(
-      java.nio.file.Files.createTempDirectory("graft-phraseplan").toString, spark)
+      TempDirs.create("graft-phraseplan").toString, spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     graft.store.PhraseIndex.build(store, "pos", docs, "text", "doc_id")
@@ -509,7 +509,7 @@ class PlanSpec extends SparkSpec {
     // takedown-sized, the data side is the corpus — a shuffled or
     // nested-loop plan here would turn every between-delete-and-fold
     // read into a corpus shuffle at 100 TB.
-    val root = java.nio.file.Files.createTempDirectory("graft-plan-tomb").toString
+    val root = TempDirs.create("graft-plan-tomb").toString
     val store = new graft.store.SnapshotStore(root, spark)
     import spark.implicits._
     val docs = (0L until 200L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -68,7 +66,7 @@ class SemIndexSpec extends SparkSpec {
 
   test("incremental appends equal batch semDedupPairs pair-for-pair") {
     for (nBatches <- Seq(1, 2, 3)) {
-      val root = Files.createTempDirectory("graft-semidx").toString
+      val root = TempDirs.create("graft-semidx").toString
       val store = buildOn(root)
       val want = committedTruth(store)
       assert(want.size >= 10, "the 10 planted near-identical pairs must pair")
@@ -91,8 +89,8 @@ class SemIndexSpec extends SparkSpec {
     // rounded cos — and their union must equal the one-shot batch
     // truth under the committed centroids (the incremental ≡ batch
     // contract is mode-independent)
-    val rootF = Files.createTempDirectory("graft-semidxF").toString
-    val rootD = Files.createTempDirectory("graft-semidxD").toString
+    val rootF = TempDirs.create("graft-semidxF").toString
+    val rootD = TempDirs.create("graft-semidxD").toString
     val (f, d) = (buildOn(rootF), buildOn(rootD))
     def run(store: SnapshotStore, minDim: Int): Set[(Long, Long, Double)] =
       (0 until 2).map { i =>
@@ -110,8 +108,8 @@ class SemIndexSpec extends SparkSpec {
   }
 
   test("zone-probe trickle path ≡ default probe; replay skipped") {
-    val rootA = Files.createTempDirectory("graft-semidxA").toString
-    val rootB = Files.createTempDirectory("graft-semidxB").toString
+    val rootA = TempDirs.create("graft-semidxA").toString
+    val rootB = TempDirs.create("graft-semidxB").toString
     val (a, b) = (buildOn(rootA), buildOn(rootB))
     val batch0 = vecsDf.filter(col("id") % 2 === 0)
     val batch1 = vecsDf.filter(col("id") % 2 === 1)
@@ -137,7 +135,7 @@ class SemIndexSpec extends SparkSpec {
     // loaded, so the returned frame's lineage may not reference the
     // store root at all — a reintroduced full-index pairing (or a
     // needless chain.load) fails the plan assertion below.
-    val root = Files.createTempDirectory("graft-semidx-empty").toString
+    val root = TempDirs.create("graft-semidx-empty").toString
     val store = buildOn(root)
     SemIndex.appendBatchOnce(store, "t", vecsDf, "s", 0L)
       .foreach(_.unpersist(blocking = false)) // populate the index
@@ -170,7 +168,7 @@ class SemIndexSpec extends SparkSpec {
     // a fresh build over today's full contents (same seed/params,
     // deterministic trainer), reset the drift counters, and preserve
     // the exactly-once stream watermarks.
-    val root = Files.createTempDirectory("graft-semidx-drift").toString
+    val root = TempDirs.create("graft-semidx-drift").toString
     val store = new SnapshotStore(root, spark)
     val baseDf = vecsDf.filter(col("id") < 20)
     SemIndex.build(store, "t", baseDf, Dim, Eps, NClusters, MaxCluster,
@@ -219,7 +217,7 @@ class SemIndexSpec extends SparkSpec {
   }
 
   test("maintain: retrain subsumes compaction, else fold; vacuum always") {
-    val root = Files.createTempDirectory("graft-semidx-maint").toString
+    val root = TempDirs.create("graft-semidx-maint").toString
     val store = buildOn(root) // empty init, trained on the full corpus
     (0 until 3).foreach { i =>
       SemIndex.appendBatchOnce(store, "t",
@@ -241,11 +239,11 @@ class SemIndexSpec extends SparkSpec {
 
   test("append before build throws; compact + vacuum keep contents") {
     val store = new SnapshotStore(
-      Files.createTempDirectory("graft-semidx3").toString, spark)
+      TempDirs.create("graft-semidx3").toString, spark)
     intercept[IllegalStateException] {
       SemIndex.appendBatchOnce(store, "t", vecsDf, "s", 0L)
     }
-    val root2 = Files.createTempDirectory("graft-semidx4").toString
+    val root2 = TempDirs.create("graft-semidx4").toString
     val s2 = buildOn(root2)
     (0 until 3).foreach { i =>
       SemIndex.appendBatchOnce(s2, "t",

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -21,7 +19,7 @@ class ServeResultSpec extends SparkSpec {
   private def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 
   private def freshStore(name: String): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory(s"graft-$name").toString, spark)
+    new SnapshotStore(TempDirs.create(s"graft-$name").toString, spark)
 
   private def assertCheckpointLeaf(df: DataFrame): Unit = {
     val plan = df.queryExecution.analyzed

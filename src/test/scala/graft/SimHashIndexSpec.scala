@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,7 +46,7 @@ class SimHashIndexSpec extends SparkSpec {
       "outside-radius plant must not pair")
 
     for (nBatches <- Seq(2, 3)) {
-      val root = Files.createTempDirectory("graft-shidx").toString
+      val root = TempDirs.create("graft-shidx").toString
       val store = new SnapshotStore(root, spark)
       SimHashIndex.build(store, "t", hashed.limit(0), NBlocks, MaxHamming)
       val parts = (0 until nBatches).map { i =>
@@ -78,7 +76,7 @@ class SimHashIndexSpec extends SparkSpec {
     assert(want.nonEmpty && want.exists(_._3 == MaxHamming))
     val hashed = corpus.toDF("id", "sh64").repartition(4)
     for (nb <- Seq(MaxHamming + 1, NBlocks, 10)) {
-      val root = Files.createTempDirectory(s"graft-shreg$nb").toString
+      val root = TempDirs.create(s"graft-shreg$nb").toString
       val store = new SnapshotStore(root, spark)
       SimHashIndex.build(store, "t", hashed.limit(0), nb, MaxHamming)
       val parts = (0 until 2).map { i =>
@@ -100,7 +98,7 @@ class SimHashIndexSpec extends SparkSpec {
     val hashed = corpus.toDF("id", "sh64").repartition(4)
     def run(probe: Int): Set[(Long, Long, Int)] = {
       val store = new SnapshotStore(
-        Files.createTempDirectory("graft-shidx-probe").toString, spark)
+        TempDirs.create("graft-shidx-probe").toString, spark)
       SimHashIndex.build(store, "t", hashed.limit(0), NBlocks, MaxHamming)
       (0 until 2).map { i =>
         val p = SimHashIndex.appendBatchOnce(store, "t",
@@ -124,7 +122,7 @@ class SimHashIndexSpec extends SparkSpec {
     // projection (r13 advice, medium). Must read, append, and compact
     // into the slim layout.
     val hashed = corpus.toDF("id", "sh64").repartition(4)
-    val root = Files.createTempDirectory("graft-shidx-fat").toString
+    val root = TempDirs.create("graft-shidx-fat").toString
     val store = new SnapshotStore(root, spark)
     val fat = hashed.filter(col("id") < 50)
       .select(col("id"), col("sh64"),
@@ -154,7 +152,7 @@ class SimHashIndexSpec extends SparkSpec {
 
   test("replay is skipped; append before build throws; deltas are O(batch)") {
     val hashed = corpus.toDF("id", "sh64")
-    val root = Files.createTempDirectory("graft-shidx2").toString
+    val root = TempDirs.create("graft-shidx2").toString
     val store = new SnapshotStore(root, spark)
     intercept[IllegalStateException] {
       SimHashIndex.appendBatchOnce(store, "t", hashed, "s", 0L)
@@ -181,12 +179,12 @@ class SimHashIndexSpec extends SparkSpec {
     val want = pairSet(Dedup.simhashPairsFromHashes(
       hashed, MaxHamming, nBlocks = NBlocks))
 
-    val inbox = Files.createTempDirectory("graft-shidx-inbox").toString
+    val inbox = TempDirs.create("graft-shidx-inbox").toString
     (0 until 3).foreach { i =>
       hashed.filter(col("id") % 3 === i).coalesce(1)
         .write.parquet(s"$inbox/b$i.parquet")
     }
-    val root = Files.createTempDirectory("graft-shidx-stream").toString
+    val root = TempDirs.create("graft-shidx-stream").toString
     val store = new SnapshotStore(root, spark)
     SimHashIndex.build(store, "t", hashed.limit(0), NBlocks, MaxHamming)
 
@@ -194,7 +192,7 @@ class SimHashIndexSpec extends SparkSpec {
     val stream = spark.readStream.schema(hashed.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
-    val q = SimHashIndex.maintainFromStream(store, "t", stream, s"$inbox-ckpt",
+    val q = SimHashIndex.maintainFromStream(store, "t", stream, TempDirs.create("graft-ckpt").toString,
       onPairs = (pairs, _) => got.synchronized { got ++= pairSet(pairs) })
     q.processAllAvailable()
     q.stop()

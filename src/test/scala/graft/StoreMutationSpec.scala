@@ -15,7 +15,7 @@ class StoreMutationSpec extends SparkSpec {
   import MutationResult._
 
   private def freshStore(): (SnapshotStore, Mutations, CatalogQueries) = {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = TempDirs.create("graft-store").toString
     val store = new SnapshotStore(dir, spark)
     (store, new Mutations(store, spark), new CatalogQueries(store, spark))
   }
@@ -168,7 +168,7 @@ class StoreMutationSpec extends SparkSpec {
 
   test("commit recovers from an orphaned next-version directory (crash liveness)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-orphan")
+    val dir = TempDirs.create("graft-orphan")
     val store = new SnapshotStore(dir.toString, spark)
     store.commit("t", Seq((1, "a")).toDF("k", "v"))
     // Simulate a writer that died after v2's parquet write but before the
@@ -199,7 +199,7 @@ class StoreMutationSpec extends SparkSpec {
 
   test("schema-in-metadata: loadVersion plans without footer inference, per-version schemas survive evolution, pre-upgrade dirs fall back") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-schema").toString
+    val dir = TempDirs.create("graft-schema").toString
     val store = new SnapshotStore(dir, spark)
     val v1 = store.commit("t", Seq((1L, "a")).toDF("id", "name"))
     val v2 = store.commit("t",

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingFunnel
@@ -24,7 +22,7 @@ class StreamingFunnelSpec extends SparkSpec {
     val c1 = tsMin + (tsMax - tsMin) / 3
     val c2 = tsMin + 2 * (tsMax - tsMin) / 3
 
-    val inbox = Files.createTempDirectory("graft-funnel-in").toString
+    val inbox = TempDirs.create("graft-funnel-in").toString
     val slices = Seq(
       col("ts_us") < c1,
       col("ts_us") >= c1 && col("ts_us") < c2,
@@ -42,7 +40,7 @@ class StreamingFunnelSpec extends SparkSpec {
         .parquet(s"$inbox/*.parquet"))
     val query = StreamingFunnel
       .funnelSteps(stream, horizonUs = HorizonUs).writeStream
-      .option("checkpointLocation", s"$inbox-ckpt")
+      .option("checkpointLocation", TempDirs.create("graft-ckpt").toString)
       .outputMode("append")
       .format("memory")
       .queryName("funnel_stream")

@@ -18,8 +18,8 @@ class StreamingScoreSpec extends SparkSpec {
   private def streamDocs(name: String)(
       score: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val inDir = Files.createTempDirectory(s"graft-$name-in")
-    val ckpt = Files.createTempDirectory(s"graft-$name-ckpt")
+    val inDir = TempDirs.create(s"graft-$name-in")
+    val ckpt = TempDirs.create(s"graft-$name-ckpt")
     val src = Paths.get(s"$sfDir/documents.parquet")
     Files.copy(src, inDir.resolve("documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)

@@ -40,8 +40,8 @@ class StreamingSessionSpec extends SparkSpec {
   }
 
   test("streamed closed sessions match the batch sessionization") {
-    val eventsDir = Files.createTempDirectory("graft-sess-in")
-    val ckpt = Files.createTempDirectory("graft-sess-ckpt")
+    val eventsDir = TempDirs.create("graft-sess-in")
+    val ckpt = TempDirs.create("graft-sess-ckpt")
     val src = Paths.get(s"$sfDir/events.parquet")
     Files.copy(src, eventsDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -78,8 +78,8 @@ class StreamingSessionSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark removes replayed rows") {
-    val eventsDir = Files.createTempDirectory("graft-dd-in")
-    val ckpt = Files.createTempDirectory("graft-dd-ckpt")
+    val eventsDir = TempDirs.create("graft-dd-in")
+    val ckpt = TempDirs.create("graft-dd-ckpt")
     val src = Paths.get(s"$sfDir/events.parquet")
     // the same file twice = an at-least-once source replaying its batch
     Files.copy(src, eventsDir.resolve("a.parquet"),

@@ -13,9 +13,9 @@ import graft.streaming.StreamingIngest
 class StreamingSpec extends SparkSpec {
 
   test("ST1: files dropped in inbox flow into the store per micro-batch") {
-    val inbox = Files.createTempDirectory("graft-inbox")
-    val ckpt = Files.createTempDirectory("graft-ckpt")
-    val storeDir = Files.createTempDirectory("graft-sstore")
+    val inbox = TempDirs.create("graft-inbox")
+    val ckpt = TempDirs.create("graft-ckpt")
+    val storeDir = TempDirs.create("graft-sstore")
     val store = new SnapshotStore(storeDir.toString, spark)
     val mut = new Mutations(store, spark)
     val q = new CatalogQueries(store, spark)
@@ -39,8 +39,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST3: watermarked 1h tumbling window aggregates an event stream") {
-    val eventsDir = Files.createTempDirectory("graft-events")
-    val ckpt = Files.createTempDirectory("graft-eckpt")
+    val eventsDir = TempDirs.create("graft-events")
+    val ckpt = TempDirs.create("graft-eckpt")
     // stage the real events parquet as the "arriving" file
     val src = Paths.get(s"$sfDir/events.parquet")
     Files.copy(src, eventsDir.resolve("events.parquet"),
@@ -68,8 +68,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST3 sliding: overlapping 10m/5m windows close and match batch") {
-    val eventsDir = Files.createTempDirectory("graft-sevents")
-    val ckpt = Files.createTempDirectory("graft-seckpt")
+    val eventsDir = TempDirs.create("graft-sevents")
+    val ckpt = TempDirs.create("graft-seckpt")
     val src = Paths.get(s"$sfDir/events.parquet")
     Files.copy(src, eventsDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)

@@ -99,7 +99,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("chunkDocs: overlap-windowed chunks cover every token exactly") {
     import graft.queries.ExtensionQueries
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk")
+    val dir = TempDirs.create("graft-chunk")
     val docs = Seq(
       (1L, (1 to 100).map(i => s"t$i").mkString(" ")), // 2 chunks: [0,64) [48,100)
       (2L, (1 to 64).map(i => s"u$i").mkString(" ")),  // exactly one full chunk

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,7 +26,7 @@ class TextIndexSpec extends SparkSpec {
     .select(col("doc_id").as("query_id"), col("text").as("qtext"))
 
   private def freshStore(): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory("graft-textidx").toString, spark)
+    new SnapshotStore(TempDirs.create("graft-textidx").toString, spark)
 
   /** The scan path's result, the exact-equality reference. */
   private def scanRanked(k: Int = 10): Seq[(Long, Long, Double, Int)] =
@@ -104,21 +102,26 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("appendBatchOnce skips a replayed batch id (exactly-once)") {
-    val store = freshStore()
-    TextIndex.build(store, "idx", corpusDF.filter(col("doc_id") < 30),
-      "text", "doc_id")
-    val batch = corpusDF.filter(col("doc_id") >= 30)
-    assert(TextIndex.appendBatchOnce(store, "idx", batch, "text", "doc_id",
-      "s", 0L))
-    val ranked = indexRanked(store)
-    val statsApplied = TextIndex.stats(store, "idx")
-    // the replay: same batchId — must be skipped, postings AND stats
-    // unchanged (a double-count would shift avgdl and every df/tf)
-    assert(!TextIndex.appendBatchOnce(store, "idx", batch, "text", "doc_id",
-      "s", 0L))
-    assert(indexRanked(store) === ranked)
-    assert(TextIndex.stats(store, "idx") === statsApplied)
-    assert(ranked === scanRanked())
+    // both layouts, each through TextIndex.appendBatchOnce: the postings
+    // build and the positional one (PhraseIndex.build)
+    val builds = Seq[(SnapshotStore, String, DataFrame, String, String) => Long](
+      TextIndex.build(_, _, _, _, _), graft.store.PhraseIndex.build(_, _, _, _, _))
+    for (build <- builds) {
+      val store = freshStore()
+      build(store, "idx", corpusDF.filter(col("doc_id") < 30), "text", "doc_id")
+      val batch = corpusDF.filter(col("doc_id") >= 30)
+      assert(TextIndex.appendBatchOnce(store, "idx", batch, "text", "doc_id",
+        "s", 0L))
+      val ranked = indexRanked(store)
+      val statsApplied = TextIndex.stats(store, "idx")
+      // the replay: same batchId — must be skipped, postings AND stats
+      // unchanged (a double-count would shift avgdl and every df/tf)
+      assert(!TextIndex.appendBatchOnce(store, "idx", batch, "text", "doc_id",
+        "s", 0L))
+      assert(indexRanked(store) === ranked)
+      assert(TextIndex.stats(store, "idx") === statsApplied)
+      assert(ranked === scanRanked())
+    }
   }
 
   test("empty index and empty-term queries return typed empty results") {
@@ -510,7 +513,7 @@ class TextIndexSpec extends SparkSpec {
   test("streaming ingest with periodic maintenance keeps champions fresh") {
     val store = freshStore()
     TextIndex.build(store, "idx", corpusDF.limit(0), "text", "doc_id")
-    val inbox = Files.createTempDirectory("graft-textidx-inbox").toString
+    val inbox = TempDirs.create("graft-textidx-inbox").toString
     (0 until 4).foreach { i =>
       corpusDF.filter(col("doc_id") % 4 === i)
         .coalesce(1).write.parquet(s"$inbox/b$i.parquet")
@@ -519,7 +522,7 @@ class TextIndexSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
     val q = TextIndex.maintainFromStream(store, "idx", stream,
-      "text", "doc_id", s"$inbox-ckpt",
+      "text", "doc_id", TempDirs.create("graft-ckpt").toString,
       maintainEvery = 2, maxChainLength = 2, championM = Some(60))
     q.processAllAvailable()
     q.stop()
@@ -824,6 +827,12 @@ class TextIndexSpec extends SparkSpec {
     // a refresh over the migrated table restores champion freshness
     TextIndex.refreshChampions(store, "idx", m = 60)
     assert(TextIndex.championsFresh(store, "idx"))
+    assert(champRanked(store) === scanRanked())
+    // the registry path over a table carrying both chain markers:
+    // maintainAll routes it to the positional layout's maintenance
+    Graft.maintainAll(store)
+    assert(TextIndex.championsFresh(store, "idx"))
+    assert(indexRanked(store) === scanRanked())
     assert(champRanked(store) === scanRanked())
   }
 

@@ -22,7 +22,7 @@ class TombstoneSpec extends SparkSpec {
     }.toDF("doc_id", "text")
 
   private def newStore(tag: String): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory(s"graft-tomb-$tag").toString,
+    new SnapshotStore(TempDirs.create(s"graft-tomb-$tag").toString,
       spark)
 
   private def ids(vals: Long*): DataFrame = vals.toDF("doc_id")
@@ -323,7 +323,7 @@ class TombstoneSpec extends SparkSpec {
 
   test("crash recovery: an orphaned dir past LATEST does not block a delete") {
     val d = docs(10)
-    val root = Files.createTempDirectory("graft-tomb-crash").toString
+    val root = TempDirs.create("graft-tomb-crash").toString
     val store = new SnapshotStore(root, spark)
     TextIndex.build(store, "t", d, "text", "doc_id")
     val v = store.currentVersion("t")
@@ -529,7 +529,7 @@ class TombstoneSpec extends SparkSpec {
     TextIndex.build(store, "docs_text", d, "text", "doc_id")
     FingerprintIndex.build(store, "docs_fp", d, "text", "doc_id")
     // the takedown queue: two micro-batches of deletion ids
-    val inbox = Files.createTempDirectory("graft-td-inbox").toString
+    val inbox = TempDirs.create("graft-td-inbox").toString
     Seq(4L, 9L).toDF("doc_id").coalesce(1).write.parquet(s"$inbox/b0.parquet")
     Seq(14L).toDF("doc_id").coalesce(1).write.parquet(s"$inbox/b1.parquet")
     // simulate a crash window: batch 0 already applied to docs_text
@@ -545,7 +545,7 @@ class TombstoneSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inbox/*.parquet")
     val q = Graft.takedownFromStream(store, Seq("docs_text", "docs_fp"),
-      stream, s"$inbox-ckpt")
+      stream, TempDirs.create("graft-ckpt").toString)
     q.processAllAvailable()
     q.stop()
     // docs_text: batch 0 skipped as replay (ONE tombstone commit for

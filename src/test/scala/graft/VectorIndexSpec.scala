@@ -30,7 +30,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("build persists; query probes without retraining; reopen works") {
-    val dir = Files.createTempDirectory("graft-vindex").toString
+    val dir = TempDirs.create("graft-vindex").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(31)
     val corpus = points.toDF("vec_id", "embedding").repartition(8)
@@ -78,7 +78,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("rebuild commits a new version; time travel keeps the old one") {
-    val dir = Files.createTempDirectory("graft-vindex2").toString
+    val dir = TempDirs.create("graft-vindex2").toString
     val store = new SnapshotStore(dir, spark)
     val corpus = clustered(32).toDF("vec_id", "embedding").repartition(4)
     val v1 = VectorIndex.build(store, "idx", corpus,
@@ -91,7 +91,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("append encodes with existing params and versions the index") {
-    val dir = Files.createTempDirectory("graft-vindex3").toString
+    val dir = TempDirs.create("graft-vindex3").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(33)
     val (seed, late) = points.partition(_._1 % 5 != 0L) // hold out 20%
@@ -112,7 +112,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("corpusTag is recorded at build and survives appends") {
-    val dir = Files.createTempDirectory("graft-vindex-tag").toString
+    val dir = TempDirs.create("graft-vindex-tag").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(37)
     val corpus = points.toDF("vec_id", "embedding").repartition(4)
@@ -132,7 +132,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("simIndexTopK rebuilds when the corpus content drifts") {
     import graft.queries.ExtensionQueries
-    val dir = Files.createTempDirectory("graft-simindex-drift").toString
+    val dir = TempDirs.create("graft-simindex-drift").toString
     def writeCorpus(n: Int, planted: Boolean): Unit = {
       val rnd = new scala.util.Random(64)
       def unit(v: Array[Float]): Array[Float] = {
@@ -175,7 +175,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("simIndexTopK's index root is durable: a fresh driver reuses the build") {
     import graft.queries.ExtensionQueries
-    val dir = Files.createTempDirectory("graft-simindex-durable").toString
+    val dir = TempDirs.create("graft-simindex-durable").toString
     val rnd = new scala.util.Random(77)
     def unit(v: Array[Float]): Array[Float] = {
       val nm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
@@ -206,7 +206,7 @@ class VectorIndexSpec extends SparkSpec {
     // the vector; an index entry from a post-build append that the corpus
     // predates must NOT silently vanish (the old inner-join failure mode)
     // — it stays in the result ranked by its ADC estimate.
-    val dir = Files.createTempDirectory("graft-vindex6").toString
+    val dir = TempDirs.create("graft-vindex6").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(36)
     // interleaved holdout so the trained quantizers saw every cluster
@@ -248,15 +248,15 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("streamed vector batches append exactly once") {
-    val dir = Files.createTempDirectory("graft-vindex4").toString
+    val dir = TempDirs.create("graft-vindex4").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(34)
     val (seed, late) = points.partition(_._1 < 900L)
     VectorIndex.build(store, "idx", seed.toDF("vec_id", "embedding").repartition(4),
       "vec_id", "embedding", dim = 16, nLists = 20, m = 4, kCodes = 16)
 
-    val inbox = Files.createTempDirectory("graft-vinbox")
-    val ckpt = Files.createTempDirectory("graft-vckpt")
+    val inbox = TempDirs.create("graft-vinbox")
+    val ckpt = TempDirs.create("graft-vckpt")
     val lateDf = late.toDF("vec_id", "embedding")
     val schema = lateDf.schema
     val stream = spark.readStream.schema(schema).parquet(inbox.toString)
@@ -265,7 +265,7 @@ class VectorIndexSpec extends SparkSpec {
     try {
       // stage a single parquet file at the inbox ROOT (the file source
       // does not recurse into subdirectories)
-      val tmp = Files.createTempDirectory("graft-vstage")
+      val tmp = TempDirs.create("graft-vstage")
       lateDf.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).iterator()
       val found = Iterator.continually(part)
@@ -284,7 +284,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("append writes O(batch) deltas; compaction folds; vacuum keeps the chain") {
-    val dir = Files.createTempDirectory("graft-vindex5").toString
+    val dir = TempDirs.create("graft-vindex5").toString
     val store = new SnapshotStore(dir, spark)
     val points = clustered(35)
     // interleaved holdout: every 8th point (150 of 1200), so the trained

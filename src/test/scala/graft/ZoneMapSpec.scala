@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +15,7 @@ class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): SnapshotStore =
-    new SnapshotStore(Files.createTempDirectory("graft-zm").toString, spark)
+    new SnapshotStore(TempDirs.create("graft-zm").toString, spark)
 
   /** 1000 rows, k in [0,1000), two extra dims for rectangle tests. */
   private def table(): DataFrame =
