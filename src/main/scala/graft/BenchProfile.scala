@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Optimization-round measurement harness (guide §1: measure first).
   *
@@ -18,8 +19,24 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Prints one line per query:
   *   PROFILE q=<name> jobs=N stages=N tasks=N shufW=bytes shufR=bytes
   *           input=bytes spillMem=bytes spillDisk=bytes wall_ms=N
+  *           planChars=N
+  * `planChars` is the physical-plan text Spark rendered for the query:
+  * the summed [[planDescription]] lengths. It follows the plan's size,
+  * and varies by a few characters between runs (expression ids).
   */
 object BenchProfile {
+
+  /** The physical plan text an event carries: Spark renders the whole
+    * plan at each SQL execution start and at each AQE re-plan, and its
+    * SQL status store keeps the last one of every execution. */
+  private[graft] def planDescription(e: SparkListenerEvent): Option[String] =
+    e match {
+      case s: SparkListenerSQLExecutionStart => Some(s.physicalPlanDescription)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+        Some(u.physicalPlanDescription)
+      case _ => None
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -34,6 +51,7 @@ object BenchProfile {
     val shufW = new LongAdder; val shufR = new LongAdder
     val input = new LongAdder
     val spillMem = new LongAdder; val spillDisk = new LongAdder
+    val planChars = new LongAdder
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
@@ -50,6 +68,8 @@ object BenchProfile {
           spillDisk.add(m.diskBytesSpilled)
         }
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        planDescription(e).foreach(d => planChars.add(d.length))
     }
     spark.sparkContext.addSparkListener(listener)
     def drain(): Unit = {
@@ -67,7 +87,7 @@ object BenchProfile {
         drain()
         jobs.set(0); stages.set(0); tasks.set(0)
         shufW.reset(); shufR.reset(); input.reset()
-        spillMem.reset(); spillDisk.reset()
+        spillMem.reset(); spillDisk.reset(); planChars.reset()
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
@@ -79,7 +99,8 @@ object BenchProfile {
         println(s"PROFILE q=$name jobs=${jobs.get} stages=${stages.get} " +
           s"tasks=${tasks.get} shufW=${shufW.sum} shufR=${shufR.sum} " +
           s"input=${input.sum} spillMem=${spillMem.sum} " +
-          s"spillDisk=${spillDisk.sum} wall_ms=$wallMs")
+          s"spillDisk=${spillDisk.sum} wall_ms=$wallMs " +
+          s"planChars=${planChars.sum}")
         spark.sparkContext.setJobDescription(null)
       }
     spark.stop()

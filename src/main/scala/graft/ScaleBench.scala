@@ -1735,8 +1735,7 @@ object ScaleBench {
         val schema = spark.read.parquet(s"$dir/events.parquet").schema
         val stream = spark.readStream.schema(schema)
           .parquet(s"$dir/events.parquet")
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-funnel-ckpt").toString
+        val ckpt = TempDirs.create("graft-funnel-ckpt").toString
         val acc = spark.sparkContext.longAccumulator("stepRows")
         val q = graft.streaming.StreamingFunnel
           .funnelSteps(stream, horizonUs = horizon)

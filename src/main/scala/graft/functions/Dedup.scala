@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.ExprUtils.let
+import graft.store.EagerCut
 
 /** Deduplication operators for web-scale corpora (builder prompt's
   * training-data-pipeline extension).
@@ -17,12 +18,29 @@ import graft.functions.ExprUtils.let
   * `maxBucketSize` (degenerate buckets — e.g. boilerplate-heavy shingles —
   * are dropped rather than allowed to produce quadratic pair blowup).
   *
-  * Shared intermediates are `persist(MEMORY_AND_DISK)`, not
+  * Shared intermediates here are `persist(MEMORY_AND_DISK)`, not
   * `localCheckpoint`: cache substitution swaps the subtree for an
   * InMemoryRelation before the consuming self-join is optimized (same fix
   * for the measured Catalyst plan-duplication blowup), and cached blocks
   * are RECOMPUTABLE from lineage on executor loss — localCheckpoint blocks
   * die with their executor on a real cluster.
+  *
+  * The cache has a driver cost: an InMemoryRelation carries its whole
+  * cached plan, and Spark renders that text into every plan that reads
+  * it, at each SQL execution start and each AQE re-plan (its status
+  * store keeps the last description of up to 1,000 executions). Nested
+  * caches multiply it. The store's incremental appends paid this per
+  * micro-batch: with their candidate, signature and pair frames cached,
+  * three perfbench `curate_serve` ingests (seed 1, untraced, 4 cores)
+  * rendered 58.2 M plan chars, and one small-fixture micro-batch
+  * rendered a single 1.3 M-char plan (IngestPlanTextSpec). Those
+  * frames are now [[graft.store.EagerCut]] checkpoints: 2.4 M chars
+  * for the three ingests, and no 1 MB plan.
+  * EagerCut keeps the recomputability rule above where it can: a
+  * reliable checkpoint (files, readable after an executor loss) when
+  * the session has a checkpoint dir, a local one otherwise. The batch
+  * generators in this object keep their caches (PlanSpec reads their
+  * plans through them).
   */
 object Dedup {
 
@@ -876,9 +894,9 @@ object Dedup {
     // times, so WITHOUT truncation the logical plan grows ~3^k nodes by
     // round k and Catalyst analysis — not the data — becomes the cost
     // (measured: a 64-node chain ran minutes before the cut, seconds
-    // after). Checkpointing (reliable if a checkpoint dir is set, local
-    // otherwise) resets the lineage to the materialized blocks each
-    // round, the same discipline GraphX applies to iterative graphs.
+    // after). Checkpointing resets the lineage to the materialized
+    // blocks each round, the same discipline GraphX applies to
+    // iterative graphs.
     // EAGER only — `eager = false` looked like a free job saved (let the
     // convergence count materialize the round), but the 2M-node chain
     // flagship measured it at 180 s vs 43 s eager, same result. Suspected
@@ -886,19 +904,14 @@ object Dedup {
     // action's doCheckpoint pass, and under AQE most of the round's work
     // runs inside stage materializations that bypass that pass — so the
     // round boundary the checkpoint is supposed to pin down isn't. The
-    // measured fact is what this code encodes: cut eagerly, every round.
-    def cut(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    // The emptiness probe rides the edges checkpoint as an observation
-    // (r18): one job instead of checkpoint + isEmpty.
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edges = cut(
+    // measured fact is what this code encodes: cut eagerly, every round
+    // (graft.store.EagerCut: reliable with a checkpoint dir, local
+    // otherwise). The emptiness probe rides the edges cut: one job
+    // instead of checkpoint + isEmpty.
+    val (edges, nEdges) = EagerCut.counted(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
-        .observe(edgeObs, count(lit(1)).as("n")))
-    val nEdges = graft.store.ObservedStats.longMetric(edgeObs, edges.count())
+        .distinct())
     val noEdges = nEdges == 0L
     val idType = edges.schema("src").dataType
     if (!noEdges && nEdges <= driverSolveMaxEdges && isDriverSolvable(idType)) {
@@ -922,7 +935,7 @@ object Dedup {
         .select(col("id").cast(idType).as("id"),
           col("component_id").cast(idType).as("component_id"))
     }
-    var labels = cut(edges.select(col("src").as("id")).distinct()
+    var labels = EagerCut(edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label")))
     var iter = 0
     var converged = noEdges
@@ -942,7 +955,7 @@ object Dedup {
       val newLabel = least(col("label"), coalesce(col("nlabel"), col("label")),
         coalesce(col("jlabel"), col("label")))
       val obs = org.apache.spark.sql.Observation()
-      val next = cut(labels
+      val next = EagerCut(labels
         .join(nbrMin, Seq("id"), "left")
         .join(labels.select(col("id").as("label"), col("label").as("jlabel")),
           Seq("label"), "left")

@@ -1360,7 +1360,7 @@ object ExtensionQueries {
     * the committed LATEST pointer, and serves from the existing codes
     * (the content-version tag below still forces a rebuild when the
     * corpus data itself drifts). The previous driver-JVM TrieMap +
-    * createTempDirectory scheme kept the amortization only within one
+    * per-session temp-dir scheme kept the amortization only within one
     * session. The root lives beside the JVM temp dir (the testdata dirs
     * are read-only here; a deployment would point this at its lake) —
     * name = sanitized dir + a hash so distinct dirs can never collide. */

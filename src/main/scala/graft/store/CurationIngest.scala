@@ -222,14 +222,13 @@ object CurationIngest {
 
   /** Ingest one micro-batch through fingerprint → near-dup gating and
     * return the unified lineage frame (id, keep_id, regime) — an EAGER
-    * localCheckpoint: materialized, plan-severed, and SELF-CONTAINED
+    * [[EagerCut]] checkpoint: materialized, plan-severed, SELF-CONTAINED
     * (safe to consume even after a vacuum/compaction drops old version
-    * dirs — unlike the raw index append results, see their
-    * consume-before-vacuum contracts). Its storage is released when the
-    * frame is garbage-collected (ContextCleaner); `unpersist` is a
-    * harmless no-op. Idempotent: a replayed (streamId, batchId) returns
-    * the SAME frame, reconstructed read-only from whichever stages
-    * already committed. */
+    * dirs) and carrying its measured stats. A local checkpoint's storage
+    * is released when the frame is garbage-collected (ContextCleaner);
+    * `unpersist` is a harmless no-op. Idempotent: a replayed (streamId,
+    * batchId) returns the SAME frame, reconstructed read-only from
+    * whichever stages already committed. */
   def ingestBatchOnce(store: SnapshotStore, prefix: String,
                       regime: NearDupRegime, batch: DataFrame,
                       textCol: String, idCol: String,
@@ -248,17 +247,12 @@ object CurationIngest {
     // needs no commit and leaves the two-commit crash matrix untouched —
     // the CONTRACT is that a replayed (streamId, batchId) passes the
     // SAME benchmark, so the committed stages see the same clean subset.
-    // The contaminated-id count rides the checkpoint materialization as
-    // an observation (r18): it only sizes the BroadcastGate below, so
-    // the separate count job was pure overhead.
+    // The contaminated-id count rides the cut (hit-sized; severs the
+    // lineage into bench): it only sizes the BroadcastGate below.
     val contaminated: Option[(DataFrame, Long)] = benchmark.map { bench =>
-      val obs = org.apache.spark.sql.Observation()
-      val ids = graft.functions.Dedup
+      EagerCut.counted(graft.functions.Dedup
         .benchmarkOverlap(b0, bench, textCol, idCol, deconN, broadcastKeyLimit)
-        .select(col(idCol).as("id"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint() // eager, hit-sized; severs lineage into bench
-      (ids, ObservedStats.longMetric(obs, ids.count()))
+        .select(col(idCol).as("id")))
     }
     val b = contaminated match {
       case None => b0
@@ -273,7 +267,7 @@ object CurationIngest {
     // against the committed index (identical frame, see
     // FingerprintIndex.resolve).
     //
-    // The stage result is localCheckpoint'ed (eager), NOT merely cached:
+    // The stage result is cut (EagerCut), NOT merely cached:
     // a cache dedups EXECUTION but keeps the full logical plan, and this
     // frame feeds every downstream branch (survivor filter, near-dup
     // encode, final lineage join). Spark renders the plan DAG as a TREE
@@ -288,12 +282,11 @@ object CurationIngest {
     // The survivor count rides the checkpoint materialization as an
     // observation (r18): it only sizes the near-dup gates below.
     val fpObs = org.apache.spark.sql.Observation()
-    val fpRes = fpAppend
+    val fpRes = EagerCut(fpAppend
       .getOrElse(FingerprintIndex.resolve(store, fpT, b, textCol, idCol,
         broadcastKeyLimit))
       .observe(fpObs, coalesce(sum(col("is_new").cast("long")), lit(0L))
-        .as("nnew"))
-      .localCheckpoint() // eager
+        .as("nnew")))
     fpAppend.foreach(_.unpersist(blocking = false))
 
     // Stage 2 — near-dup gating of the fingerprint survivors only (the
@@ -354,23 +347,15 @@ object CurationIngest {
         when(!col("is_new"), lit("exact"))
           .when(col("near_keep").isNotNull, lit("near"))
           .otherwise(lit("new")).as("regime"))
-    val lineage = contaminated
+    val lineage = EagerCut(contaminated
       .map { case (ids, _) => gated.unionByName(ids.select(col("id"),
         col("id").as("keep_id"), lit("contaminated").as("regime"))) }
-      .getOrElse(gated)
-      .localCheckpoint() // eager; plan-cut + self-contained, see above
+      .getOrElse(gated)) // plan-cut + self-contained, see above
     pairs.unpersist(blocking = false)
     if (!(b eq b0)) b.unpersist(blocking = false)
     b0.unpersist(blocking = false)
     lineage
   }
-
-  /** The eager, plan-severing materialization of [[closeLineage]] and
-    * [[takedownLineage]]: a reliable checkpoint when the session has a
-    * checkpoint dir, else a local one. */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** Transitive closure of accumulated one-hop lineage — the periodic
     * COMPACTION that turns [[ingestBatchOnce]]'s one-hop `keep_id` into
@@ -411,12 +396,11 @@ object CurationIngest {
                    driverSolveMaxRows: Long =
                      graft.functions.Dedup.DriverSolveMaxEdges): DataFrame = {
     val spark = lineage.sparkSession
-    // The emptiness probe rides the initial checkpoint as an observation
-    // (r18): one job instead of checkpoint + isEmpty.
-    val ptrObs = org.apache.spark.sql.Observation()
-    var ptr = cut(lineage.select(col("id"), col("keep_id"))
-      .observe(ptrObs, count(lit(1)).as("n")))
-    val nRows = ObservedStats.longMetric(ptrObs, ptr.count())
+    // The emptiness probe rides the initial cut: one job instead of
+    // checkpoint + isEmpty.
+    val (ptr0, nRows) =
+      EagerCut.counted(lineage.select(col("id"), col("keep_id")))
+    var ptr = ptr0
     val idType = ptr.schema("id").dataType
     val integralIds = idType match {
       case org.apache.spark.sql.types.ByteType |
@@ -475,7 +459,7 @@ object CurationIngest {
           java.util.Arrays.asList(rows: _*), longSchema)
         .select(col("id").cast(idType).as("id"),
           col("keep_id").cast(idType).as("keep_id"))
-      val closed = cut(lineage.drop("keep_id").join(closedPtr, Seq("id")))
+      val closed = EagerCut(lineage.drop("keep_id").join(closedPtr, Seq("id")))
       ptr.unpersist(blocking = false)
       return closed
     }
@@ -490,7 +474,7 @@ object CurationIngest {
       // observation (r18, the connectedComponents discipline): one job
       // per round instead of checkpoint + count.
       val obs = org.apache.spark.sql.Observation()
-      val next = cut(ptr
+      val next = EagerCut(ptr
         .join(jump, Seq("keep_id"), "left")
         .select(col("id"),
           coalesce(col("jumped"), col("keep_id")).as("keep_id"),
@@ -521,7 +505,7 @@ object CurationIngest {
     // (when a checkpoint dir is set) are not deleted by unpersist and
     // accumulate for the session lifetime; `maintain`'s vacuum step and
     // session teardown are the places to clean the checkpoint dir.
-    val closed = cut(lineage.drop("keep_id").join(ptr, Seq("id")))
+    val closed = EagerCut(lineage.drop("keep_id").join(ptr, Seq("id")))
     ptr.unpersist(blocking = false)
     closed
   }
@@ -569,7 +553,7 @@ object CurationIngest {
         "left_semi")
       .groupBy(col("keep_id"))
       .agg(min(col("id")).as("_new_root"))
-    val out = cut(live
+    val out = EagerCut(live
       .join(promos, Seq("keep_id"), "left")
       .withColumn("_promoted", col("_new_root").isNotNull)
       .withColumn("keep_id",

@@ -2,7 +2,6 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Dedup
 
@@ -100,9 +99,9 @@ import graft.functions.Dedup
   * Contract: document ids must be globally unique across the corpus and
   * all batches (they are join keys and pair members). Pair outputs match
   * [[Dedup.nearDuplicatePairs]]: (id_a, id_b, jaccard) with id_a < id_b,
-  * jaccard ≥ threshold, EAGER (persisted + materialized — unpersist when
-  * done). Takedown, fold and vacuum are the shared [[ChainedIndex]]
-  * lifecycle. */
+  * jaccard ≥ threshold, EAGER (a self-contained [[EagerCut]] checkpoint
+  * with measured stats). Takedown, fold and vacuum are the shared
+  * [[ChainedIndex]] lifecycle. */
 object DedupIndex extends ChainedIndex {
 
   private val P = "dedup." // metadata key prefix
@@ -163,11 +162,9 @@ object DedupIndex extends ChainedIndex {
     * encodings as an O(batch) delta version. Returns the new near-dup
     * pairs — every (id_a, id_b, jaccard ≥ threshold) pair with at least
     * one member in the batch (corpus-internal pairs were returned by the
-    * appends that introduced them). EAGER like nearDuplicatePairs: the
-    * result is persisted and materialized; unpersist it when done.
-    * Consume-before-vacuum: the frame's lineage reads the pre-append
-    * snapshot dirs — materialize it before vacuumIndex/compaction can
-    * drop them, or cache eviction makes recomputation FileNotFound.
+    * appends that introduced them). EAGER: the result is a
+    * self-contained [[EagerCut]] checkpoint — no cache to unpersist, and
+    * no lineage into the snapshot dirs a later vacuum may drop.
     *
     * NOT idempotent — a retried call double-appends the batch (and then
     * pairs it against its own first copy). Use [[appendBatchOnce]] from
@@ -325,9 +322,7 @@ object DedupIndex extends ChainedIndex {
     val k = param(meta, "k").toInt
     val bands = param(meta, "bands").toInt
     val idx = chain.load(store, table, v, meta)
-    val idRows = ids.select(col("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nIds = idRows.count()
+    val (idRows, nIds) = EagerCut.counted(ids.select(col("id")).distinct())
     val batchRows = idx.join(BroadcastGate(idRows, nIds, broadcastKeyLimit),
       Seq("id"), "left_semi")
     // nIds × bands bounds the touched-bucket count — no second action,
@@ -339,10 +334,8 @@ object DedupIndex extends ChainedIndex {
     val allKeys = keysOf(idx, k, bands)
       .join(BroadcastGate(bBuckets, nIds * bands, broadcastKeyLimit),
         Seq("band", "bucket"), "left_semi")
-    val out = pairsAmong(allKeys, idx.select(col("id"), col("h_arr")),
+    pairsAmong(allKeys, idx.select(col("id"), col("h_arr")),
       idRows, nIds, threshold, maxBucketSize, broadcastKeyLimit)
-    idRows.unpersist(blocking = false)
-    out
   }
 
   /** Candidate generation + exact verify over the touched-bucket
@@ -373,10 +366,11 @@ object DedupIndex extends ChainedIndex {
     // Keep only pairs touching the batch: corpus-corpus pairs inside a
     // touched bucket were emitted by the append that introduced their
     // younger member. ONE shared broadcast for both membership probes.
-    val candidates = BroadcastGate
+    // Candidate-sized and read 3×: cut, so the verify plans below start
+    // from a leaf instead of re-rendering the bucket pipeline.
+    val candidates = EagerCut(BroadcastGate
       .restrictToTouching(allCand, newIds.select(col("id")), nIds,
-        broadcastKeyLimit)
-      .persist(StorageLevel.MEMORY_AND_DISK) // candidate-sized, read 3×
+        broadcastKeyLimit))
 
     // Exact verify on the stored hash sets — the semi-join keeps the
     // h_arr column read candidate-restricted before the arrays ride any
@@ -387,15 +381,14 @@ object DedupIndex extends ChainedIndex {
     // exchange instead of two.
     val candIds = candidates
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-    // The persist is load-bearing (r19 A/B): dropping it and relying on
-    // the planner's exchange reuse across the two membership joins
-    // MEASURED WORSE — append0 24->27, append1 27->32 jobs (AQE re-ran
-    // the semi-join subtree per consumer instead of reusing one build).
-    val sigs = sigSource
-      .join(candIds, Seq("id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Materialized once for both membership joins (r19 A/B: relying on
+    // the planner's exchange reuse instead MEASURED WORSE — append0
+    // 24->27, append1 27->32 jobs, AQE re-ran the semi-join subtree per
+    // consumer). A cut rather than a cache: both joins read a leaf
+    // with measured stats, not the semi-join plan twice over.
+    val sigs = EagerCut(sigSource.join(candIds, Seq("id"), "left_semi"))
 
-    val verified = candidates
+    EagerCut(candidates
       .join(sigs, col("id_a") === col("id"))
       .select(col("id_a"), col("id_b"), col("h_arr").as("h_a"))
       .join(sigs, col("id_b") === col("id"))
@@ -403,21 +396,14 @@ object DedupIndex extends ChainedIndex {
         size(array_intersect(col("h_a"), col("h_arr"))).cast("double") /
           size(array_union(col("h_a"), col("h_arr"))))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
-    // the LSH appends' count callsite; CurationIngest unpersists it.
-    verified.count()
-    candidates.unpersist(blocking = false)
-    sigs.unpersist(blocking = false)
-    verified
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")))
   }
 
   /** Keep the index current from a stream of documents: each micro-batch
     * is deduplicated against the corpus-so-far and appended exactly once;
-    * its new pairs go to `onPairs` (the pair DataFrame is unpersisted
-    * after the callback returns — materialize inside it). A replayed
-    * micro-batch is skipped entirely: its pairs were already delivered. */
+    * its new pairs (a self-contained checkpoint) go to `onPairs`. A
+    * replayed micro-batch is skipped entirely: its pairs were already
+    * delivered. */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, textCol: String, idCol: String,
                          checkpointDir: String,

@@ -2,7 +2,6 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Similarity
 
@@ -192,10 +191,12 @@ object EmbedIndex extends ChainedIndex {
     * under the COMMITTED parameters, then append its encodings as an
     * O(batch) delta. Returns the new pairs — (id_a, id_b, cos ≥
     * committed threshold, rounded to 6 places like the batch operator)
-    * with at least one member in the batch — EAGER (persisted +
-    * materialized; unpersist when done), or None for a replayed
-    * (streamId, batchId). Consume-before-vacuum contract as the other
-    * indexes.
+    * with at least one member in the batch — EAGER, or None for a
+    * replayed (streamId, batchId). The double path returns a
+    * self-contained [[EagerCut]] checkpoint; the float path returns
+    * `Similarity.exactReverify`'s persisted frame (unpersist it when
+    * done, and read it before a vacuum drops the snapshot dirs its
+    * lineage reads).
     *
     * `keyProbeMaxKeys` (OPT-IN, default 0 — see the class scaladoc's
     * measured rationale: coarse 2^bits bucket spaces make the probe a
@@ -314,9 +315,7 @@ object EmbedIndex extends ChainedIndex {
       param(meta, "nTables").toInt, param(meta, "bits").toInt,
       param(meta, "seed").toLong)
     val idx = chain.load(store, table, v, meta)
-    val idRows = ids.select(col("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nIds = idRows.count()
+    val (idRows, nIds) = EagerCut.counted(ids.select(col("id")).distinct())
     val batchRows = idx.join(BroadcastGate(idRows, nIds, broadcastKeyLimit),
       Seq("id"), "left_semi")
     // nIds × nTables bounds the touched-bucket count — no second action,
@@ -334,13 +333,10 @@ object EmbedIndex extends ChainedIndex {
         Seq("id"), "left_outer")
       .withColumn("fresh", coalesce(col("fresh_f"), lit(false)))
       .drop("fresh_f")
-    val out =
-      if (floatExchangeActive(dim, floatExchangeMinDim))
-        pairsAmongF(flagged, idx.select(col("id"), col("uv")),
-          threshold, maxBucketSize, broadcastKeyLimit)
-      else pairsAmong(flagged, threshold, maxBucketSize)
-    idRows.unpersist(blocking = false)
-    out
+    if (floatExchangeActive(dim, floatExchangeMinDim))
+      pairsAmongF(flagged, idx.select(col("id"), col("uv")),
+        threshold, maxBucketSize, broadcastKeyLimit)
+    else pairsAmong(flagged, threshold, maxBucketSize)
   }
 
   /** In-bucket pair generation over the touched-bucket membership
@@ -362,7 +358,7 @@ object EmbedIndex extends ChainedIndex {
     // identical to the row_number window it replaces, which sorted the
     // full touched-key stream with the ~8·dim-byte unit vector riding
     // every row just to discard everything past m+1.
-    val verified = allKeys
+    EagerCut(allKeys
       .groupBy(col("table"), col("bucket"))
       .agg(graft.plans.TopKAggregate
         .boundedVecMembers(col("id"), col("uv"), col("fresh"),
@@ -374,12 +370,7 @@ object EmbedIndex extends ChainedIndex {
       .select(explode(graft.plans.VectorExpressions
         .cosinePairs(col("members"), threshold)).as("p"))
       .select(col("p.id_a"), col("p.id_b"), round(col("p.cos"), 6).as("cos"))
-      .dropDuplicates("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
-    // the LSH appends' count callsite; CurationIngest unpersists it.
-    verified.count()
-    verified
+      .dropDuplicates("id_a", "id_b"))
   }
 
   /** The float-exchange twin of [[pairsAmong]] (class scaladoc): the
@@ -391,12 +382,13 @@ object EmbedIndex extends ChainedIndex {
     * every id in `allKeys`): one candidate-restricted broadcast-semi
     * columnar re-scan, no corpus shuffle, then two broadcast joins of
     * the candidate-sized uv lookup. Output — ids, exact cos, rounding,
-    * dedup, persistence contract — is pair-for-pair [[pairsAmong]]'s;
-    * the margin-band false candidates die on the exact filter. */
+    * dedup — is pair-for-pair [[pairsAmong]]'s; the margin-band false
+    * candidates die on the exact filter. The candidates are cut; the
+    * result is exactReverify's persisted frame. */
   private def pairsAmongF(allKeys: DataFrame, uvSource: DataFrame,
                           threshold: Double, maxBucketSize: Int,
                           broadcastKeyLimit: Long): DataFrame = {
-    val cand = allKeys
+    val (cand, nCand) = EagerCut.counted(allKeys
       .groupBy(col("table"), col("bucket"))
       .agg(graft.plans.TopKAggregate
         .boundedVecMembersF(col("id"),
@@ -408,9 +400,7 @@ object EmbedIndex extends ChainedIndex {
         .cosineCandidatesF(col("members"), threshold - FloatVerifyMargin))
         .as("p"))
       .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nCand = cand.count()
+      .dropDuplicates("id_a", "id_b"))
     // Shared exact tail (r16, one implementation across EmbedIndex /
     // SemIndex / batch operators): candidate-restricted (id, uv)
     // lookup, deterministic per-id resolve (lexicographic max — under
@@ -420,10 +410,8 @@ object EmbedIndex extends ChainedIndex {
     // threshold. Both intermediates persist inside — without that the
     // "one re-scan" claim depends on the planner's exchange reuse
     // recognizing differently-aliased subplans.
-    val verified = Similarity.exactReverify(cand, nCand, uvSource,
-      threshold, broadcastKeyLimit)
-    cand.unpersist(blocking = false)
-    verified
+    Similarity.exactReverify(cand, nCand, uvSource, threshold,
+      broadcastKeyLimit)
   }
 
   /** Keep the index current from a stream of (id, vec) rows — the

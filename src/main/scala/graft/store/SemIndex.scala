@@ -111,10 +111,12 @@ object SemIndex extends ChainedIndex {
   /** SemDeDup `batchVecs` (id, vec) against the indexed corpus AND
     * itself under the COMMITTED centroids/eps, then append its
     * assignments as an O(batch) delta. Returns the new pairs —
-    * (id_a, id_b, cos) with at least one member in the batch — EAGER
-    * (persisted + materialized; unpersist when done), or None for a
-    * replayed (streamId, batchId). Consume-before-vacuum contract as
-    * the other indexes.
+    * (id_a, id_b, cos) with at least one member in the batch — EAGER, or
+    * None for a replayed (streamId, batchId). The double path returns a
+    * self-contained [[EagerCut]] checkpoint; the opt-in float path
+    * returns `Similarity.semPairsTouchingF`'s persisted frame (unpersist
+    * it when done, and read it before a vacuum drops the snapshot dirs
+    * its lineage reads).
     *
     * `floatExchangeMinDim` is OPT-IN here (default disabled), the
     * opposite of EmbedIndex's gate — measured, not assumed (r16
@@ -163,11 +165,12 @@ object SemIndex extends ChainedIndex {
           // EMPTY batch (known from the count, the hint, or a probe
           // that returned zero touched clusters): no pair can involve
           // it, so skip the index load and the whole pairsVsIndex
-          // persist/count pipeline — but still commit the (empty)
+          // pipeline — but still commit the (empty)
           // delta so the batch-id watermark advances exactly-once.
           // Before r12 this case mis-flagged the probe result as
           // pre-filtered and SELF-PAIRED THE FULL INDEX (SemIndexSpec
-          // pins both the output and the no-index-scan plan shape).
+          // pins both the output and that the append reads no index
+          // bytes).
           emptyPairs(enc)
         else {
           val idxRows = touched match {
@@ -190,21 +193,15 @@ object SemIndex extends ChainedIndex {
     }.map(_._1)
 
   /** The typed empty (id_a, id_b, cos) result under the EAGER contract
-    * (persisted + counted — the caller unpersists like any other pair
-    * set). Derived from the batch encoding only: its plan must never
-    * reference the index table, which is what lets the empty-batch
-    * regression spec assert the short-circuit by plan shape. */
-  private def emptyPairs(batchEnc: DataFrame): DataFrame = {
-    val e = batchEnc
+    * (cut like any other pair set). Derived from the batch encoding
+    * only: it never reads the index table, which is what lets the
+    * empty-batch regression spec assert the short-circuit by the
+    * append's input bytes. */
+  private def emptyPairs(batchEnc: DataFrame): DataFrame =
+    EagerCut(batchEnc
       .select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0.0d).as("cos"))
-      .limit(0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Stays persist + count, not a checkpoint: SemIndexSpec reads this
-    // frame's analyzed plan, which a checkpoint would hide.
-    e.count()
-    e
-  }
+      .limit(0))
 
   /** Pairs of `batchEnc` against `idx` ∪ itself: the corpus enters
     * through a size-gated broadcast cluster-set semi-join; the unit
@@ -250,12 +247,7 @@ object SemIndex extends ChainedIndex {
     // the multi-table LSH indexes there is no cross-table collision to
     // dedup, and the exchange bought nothing (SemIndexSpec pins
     // incremental ≡ batch pair-for-pair).
-    val verified = Similarity.semPairsTouching(tagged, eps, maxClusterSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Stays persist + count, not a checkpoint: SemIndexSpec reads this
-    // frame's analyzed plan, which a checkpoint would hide.
-    verified.count()
-    verified
+    EagerCut(Similarity.semPairsTouching(tagged, eps, maxClusterSize))
   }
 
   /** Keep the index current from a stream of (id, vec) rows — the

@@ -2,7 +2,6 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Persistent SimHash combo-key index — INCREMENTAL batch-vs-corpus
   * near-dup dedup for the Hamming-distance regime, the simhash twin of
@@ -76,13 +75,9 @@ object SimHashIndex extends ChainedIndex {
     * itself under the COMMITTED banding parameters, then append its
     * encodings as an O(batch) delta. Returns the new pairs —
     * (id_a, id_b, hamming ≤ committed maxHamming) with at least one
-    * member in the batch — EAGER (persisted + materialized; unpersist
-    * when done), or None for a replayed (streamId, batchId).
-    *
-    * Consume-before-vacuum: the pair frame's lineage reads the
-    * pre-append snapshot dirs; cache eviction after a vacuum/compaction
-    * that dropped them makes recomputation fail. Materialize the result
-    * before vacuuming (same contract as FingerprintIndex).
+    * member in the batch — EAGER (a self-contained [[EagerCut]]
+    * checkpoint, safe to read after a vacuum), or None for a replayed
+    * (streamId, batchId).
     *
     * Cost envelope (r17 adjudication — profiled and A/B'd, all quiet
     * targeted windows at the 5M-doc flagship, 100k batch, nBlocks=8/
@@ -215,9 +210,7 @@ object SimHashIndex extends ChainedIndex {
     val maxBucketSize = param(meta, "maxBucketSize").toInt
     val nBlocks = param(meta, "nBlocks").toInt
     val idx = chain.load(store, table, v, meta)
-    val idRows = ids.select(col("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nIds = idRows.count()
+    val (idRows, nIds) = EagerCut.counted(ids.select(col("id")).distinct())
     val batchRows = idx.join(BroadcastGate(idRows, nIds, broadcastKeyLimit),
       Seq("id"), "left_semi")
     // nIds × combos bounds the touched-bucket count — no second action,
@@ -230,10 +223,8 @@ object SimHashIndex extends ChainedIndex {
       .join(BroadcastGate(bBuckets, nIds * combosPerDoc(nBlocks, maxHamming),
           broadcastKeyLimit),
         Seq("band", "bucket"), "left_semi")
-    val out = pairsAmong(allKeys, idRows, nIds, maxHamming, maxBucketSize,
+    pairsAmong(allKeys, idRows, nIds, maxHamming, maxBucketSize,
       broadcastKeyLimit)
-    idRows.unpersist(blocking = false)
-    out
   }
 
   /** In-bucket pair generation over the touched-bucket membership
@@ -263,22 +254,17 @@ object SimHashIndex extends ChainedIndex {
     // Keep only pairs touching the batch (corpus-internal pairs were
     // emitted by the append that introduced their younger member).
     // ONE shared broadcast for both membership probes.
-    val verified = BroadcastGate
+    EagerCut(BroadcastGate
       .restrictToTouching(allPairs, newIds.select(col("id")), nIds,
         broadcastKeyLimit)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Stays persist + count, not a checkpoint: AppendJobCountSpec pins
-    // the LSH appends' count callsite; CurationIngest unpersists it.
-    verified.count()
-    verified
+      .select(col("id_a"), col("id_b"), col("hamming")))
   }
 
   /** Keep the index current from a stream of (id, sh64) rows: each
     * micro-batch is deduplicated against the corpus-so-far and appended
-    * exactly once; its new pairs go to `onPairs` (unpersisted after the
-    * callback — materialize inside it). Replayed micro-batches are
-    * skipped entirely (same contract as DedupIndex.maintainFromStream). */
+    * exactly once; its new pairs (a self-contained checkpoint) go to
+    * `onPairs`. Replayed micro-batches are skipped entirely (same
+    * contract as DedupIndex.maintainFromStream). */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, checkpointDir: String,
                          streamId: String = "sh-inbox",

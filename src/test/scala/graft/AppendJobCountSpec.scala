@@ -48,6 +48,12 @@ class AppendJobCountSpec extends SparkSpec {
     (count.get, scala.jdk.CollectionConverters.SetHasAsScala(sites).asScala.toSet)
   }
 
+  /** The eager cut's job callsite: the near-dup append materializes its
+    * candidates, signatures and verified pairs through
+    * [[graft.store.EagerCut]] (a local checkpoint here — the spec
+    * session has no checkpoint dir). */
+  private val Cut = "localCheckpoint at EagerCut.scala"
+
   private def docs: DataFrame =
     ((0 until 60).map(i => i.toLong ->
       s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i") ++
@@ -68,18 +74,18 @@ class AppendJobCountSpec extends SparkSpec {
       pairs.unpersist(blocking = false)
     }
     info(s"DedupIndex hinted append: $jobs jobs, action callsites=$sites")
-    // The ONLY named action callsite may be the eager pair
-    // materialization in pairsAmong — a reintroduced sizing count
-    // (distinct/count at another line), a schema-inference read
-    // ("parquet at SnapshotStore"), or an eager snapshot load under the
-    // transaction lock would each surface as an extra callsite here.
-    assert(sites.forall(_.startsWith("count at DedupIndex")),
+    // The ONLY named action callsite may be pairsAmong's eager cuts —
+    // a reintroduced sizing count (distinct/count at another line), a
+    // schema-inference read ("parquet at SnapshotStore"), or an eager
+    // snapshot load under the transaction lock would each surface as
+    // an extra callsite here.
+    assert(sites == Set(Cut),
       s"unexpected driver actions in the append path: $sites")
     // Absolute ceiling on total jobs (AQE stage jobs included): r9 code
-    // measured 31 on this fixture; post-cut it measures ~29. The budget
-    // catches a regression that adds blocking actions without tripping
-    // on AQE stage-count jitter.
-    assert(jobs <= 32, s"append spent $jobs jobs (budget 32)")
+    // measured 31 on this fixture, the persisted pair intermediates
+    // 25, the cuts 17. The budget catches a regression that adds
+    // blocking actions without tripping on AQE stage-count jitter.
+    assert(jobs <= 20, s"append spent $jobs jobs (budget 20)")
   }
 
   test("DedupIndex append (default probe): exactly one extra bounded take") {
@@ -97,12 +103,9 @@ class AppendJobCountSpec extends SparkSpec {
     info(s"DedupIndex default append: $jobs jobs, action callsites=$sites")
     // the probe's one bounded take lives in the shared LshKeyProbe
     // helper since r15 (one decision ladder for all three indexes)
-    assert(sites.forall(s => s.startsWith("count at DedupIndex") ||
-        s.startsWith("take at LshKeyProbe")),
+    assert(sites == Set(Cut, "take at LshKeyProbe.scala"),
       s"unexpected driver actions in the probe append path: $sites")
-    assert(sites.exists(_.startsWith("take at LshKeyProbe")),
-      s"the default append should spend the probe take: $sites")
-    assert(jobs <= 36, s"probe append spent $jobs jobs (budget 36)")
+    assert(jobs <= 20, s"probe append spent $jobs jobs (budget 20)")
   }
 
   test("FingerprintIndex append: one blocking action besides the eager result") {

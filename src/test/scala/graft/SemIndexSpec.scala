@@ -48,6 +48,28 @@ class SemIndexSpec extends SparkSpec {
     df.select(col("id_a"), col("id_b"), col("cos"))
       .as[(Long, Long, Double)].collect().toSet
 
+  /** `body`'s result and the input bytes its tasks read (the listener
+    * feed is async; it is polled until quiet). */
+  private def inputBytesIn[T](body: => T): (T, Long) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        if (t.taskMetrics != null)
+          bytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+        tasks.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      var prev = -1L
+      while (tasks.get != prev) { prev = tasks.get; Thread.sleep(400) }
+      (r, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   private def buildOn(root: String): SnapshotStore = {
     val store = new SnapshotStore(root, spark)
     SemIndex.build(store, "t", vecsDf.limit(0), Dim, Eps, NClusters,
@@ -132,21 +154,23 @@ class SemIndexSpec extends SparkSpec {
     // SELF-PAIR THE WHOLE INDEX (the r11 guard at b8a1b02 missed the
     // Some(Nil) case). The fixed contract is stronger than "empty
     // output": the append must short-circuit before the index is even
-    // loaded, so the returned frame's lineage may not reference the
-    // store root at all — a reintroduced full-index pairing (or a
-    // needless chain.load) fails the plan assertion below.
+    // loaded. The result is an eager checkpoint whose plan no longer
+    // shows its lineage, so the pin is the append's own input bytes: a
+    // reintroduced full-index pairing (or a needless chain.load that
+    // gets scanned) reads the index files. The non-empty append below
+    // is the control: it reads them.
     val root = TempDirs.create("graft-semidx-empty").toString
     val store = buildOn(root)
     SemIndex.appendBatchOnce(store, "t", vecsDf, "s", 0L)
       .foreach(_.unpersist(blocking = false)) // populate the index
-    val p = SemIndex.appendBatchOnce(store, "t", vecsDf.limit(0), "s", 1L,
-      zoneProbeMaxClusters = 64).get
-    try {
-      assert(p.count() === 0L, "an empty batch can produce no pairs")
-      val lineage = p.queryExecution.analyzed.toString
-      assert(!lineage.contains(root),
-        s"empty-batch append must not load the index:\n$lineage")
-    } finally p.unpersist(blocking = false)
+    val (p, emptyBytes) = inputBytesIn {
+      SemIndex.appendBatchOnce(store, "t", vecsDf.limit(0), "s", 1L,
+        zoneProbeMaxClusters = 64).get
+    }
+    assert(emptyBytes === 0L,
+      s"empty-batch append must not read the index: $emptyBytes input bytes")
+    try assert(p.count() === 0L, "an empty batch can produce no pairs")
+    finally p.unpersist(blocking = false)
     // the empty delta still advanced the exactly-once watermark
     assert(SemIndex.appendBatchOnce(store, "t", vecsDf.limit(0), "s", 1L,
       zoneProbeMaxClusters = 64).isEmpty, "replay must be skipped")
@@ -154,8 +178,11 @@ class SemIndexSpec extends SparkSpec {
     // and the index remains fully usable: a fresh near-identical vector
     // appended afterwards pairs against its planted original
     val fresh = Seq((500L, corpus.toMap.apply(5L))).toDF("id", "vec")
-    val p2 = SemIndex.appendBatchOnce(store, "t", fresh, "s", 2L,
-      zoneProbeMaxClusters = 64).get
+    val (p2, freshBytes) = inputBytesIn {
+      SemIndex.appendBatchOnce(store, "t", fresh, "s", 2L,
+        zoneProbeMaxClusters = 64).get
+    }
+    assert(freshBytes > 0L, "a non-empty append reads the index")
     try assert(pairSet(p2).exists(t => t._1 == 5L && t._2 == 500L),
       "post-empty append must still pair against the index")
     finally p2.unpersist(blocking = false)
