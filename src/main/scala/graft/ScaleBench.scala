@@ -1663,7 +1663,8 @@ object ScaleBench {
         q.stop()
         VectorIndex.load(store, "emb_idx").count()
       }
-    ).flatten ++ eventBenches(spark, dir, timed)
+    ).flatten ++ eventBenches(spark, dir, timed) ++
+      catalogBenches(spark, storeDir, timed)
 
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -1671,6 +1672,80 @@ object ScaleBench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     println(s"""{"metric":"scale_total","value":$total,"unit":"sec","queries":$qs,"rows":$rows,"nDocs":$nDocs,"nVecs":$nVecs,"dir":"$dir"}""")
+  }
+
+  /** Catalog mutations at scale: a catalog of N rows committed as 16
+    * files, then 20 updates, 20 hard deletes and 20 creates on seeded
+    * keys, each followed by a vacuum to the current version so one
+    * version stays on disk. Prints each mutation's wall, jobs and
+    * written bytes (task output metrics) and the per-kind medians: a
+    * whole-snapshot rewrite grows with N, a file-granular one with the
+    * size of the file it touches. Two sizes show which. */
+  private def catalogBenches(
+      spark: SparkSession, storeDir: String,
+      timed: String => (=> Long) => Option[(String, Double, Long)])
+      : Seq[(String, Double, Long)] =
+    Seq(250000L -> "250k", 1000000L -> "1m").flatMap { case (n, label) =>
+      val name = s"catalog_mutations_$label"
+      timed(name) {
+        val store = new SnapshotStore(s"$storeDir/$name", spark)
+        val mut = new graft.operators.Mutations(store, spark)
+        mut.appendBatch(spark.range(0L, n, 1L, 16).select(
+          concat(lit("Tool "), col("id")).as("tool_name"),
+          concat(lit("team"), col("id") % 40).as("team_name"),
+          concat(lit("login"), col("id") % 1000).as("login"),
+          concat(lit("a catalog entry for tool "), col("id")).as("description")))
+        val rnd = new scala.util.Random(7)
+        val picked = rnd.shuffle((1 to n.toInt).toVector).take(40)
+        val ops: Seq[(String, () => graft.operators.MutationResult)] =
+          picked.take(20).map(k => "update" -> (() =>
+            mut.update(k, Map("remarks" -> s"reviewed $k")))) ++
+          picked.drop(20).map(k => "hard_delete" -> (() => mut.hardDelete(k))) ++
+          (1 to 20).map(i => "create" -> (() =>
+            mut.create(Map("tool_name" -> s"New tool $i"))))
+        val byKind = ops.map { case (kind, op) =>
+          val (ms, jobs, outBytes) = workOf(spark) {
+            val res = op()
+            require(res.status / 100 == 2, s"$kind returned $res")
+          }
+          store.vacuum("csp_tools_data", store.currentVersion("csp_tools_data"))
+          System.err.println(f"[scalebench] $name $kind%-11s wall_ms=$ms%6d " +
+            s"jobs=$jobs output_bytes=$outBytes")
+          kind -> (ms, jobs, outBytes)
+        }.groupBy(_._1)
+        Seq("update", "hard_delete", "create").foreach { kind =>
+          def med(f: ((Long, Long, Long)) => Long): Long = {
+            val xs = byKind(kind).map(r => f(r._2)).sorted
+            xs(xs.size / 2)
+          }
+          System.err.println(s"[scalebench] $name $kind median: " +
+            s"wall_ms=${med(_._1)} jobs=${med(_._2)} output_bytes=${med(_._3)}")
+        }
+        store.load("csp_tools_data").count()
+      }
+    }
+
+  /** (wall ms, jobs, task output bytes) of `body`, through a listener
+    * drained after the body returns (the listener bus is asynchronous). */
+  private def workOf(spark: SparkSession)(body: => Unit): (Long, Long, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val out = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => out.addAndGet(m.outputMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val t0 = System.nanoTime()
+      body
+      val ms = (System.nanoTime() - t0) / 1000000
+      Thread.sleep(500)
+      (ms, jobs.get, out.get)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   /** Event-analytics flagship (50M events, 150k users, 1 % whale skew):

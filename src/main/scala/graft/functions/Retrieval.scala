@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.plans.TopKAggregate
 
@@ -65,6 +66,51 @@ object Retrieval {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
+  /** The (query_id, term) pairs of a query batch — each query's
+    * distinct lower-cased tokens — collected once by the BM25 top-k
+    * entries, which broadcast them or rebuild them as a LocalRelation.
+    * The collect is gated at the rows a forced broadcast of the pairs
+    * admits (`BroadcastGate.maxRows` at the default key limit): it is ONE
+    * job over every partition in which each task reads at most one row
+    * past the gate and ships its rows only within it, the driver keeps
+    * rows only while the total stays within it, and a larger batch is
+    * refused naming `caller` — before any corpus or index is read. (A `limit(max + 1)` collect scans one
+    * partition first and then the rest: a second job on every call.)
+    * Rows come back in partition order, as `collect` returns them. */
+  private[graft] def queryTermPairs(queries: DataFrame, queryIdCol: String,
+                                    queryTextCol: String, caller: String)
+      : (Array[Row], StructType) = {
+    import graft.functions.{TextFunctions => TF}
+    import graft.store.BroadcastGate
+    val schema = StructType(Seq(
+      StructField("query_id", queries.schema(queryIdCol).dataType),
+      StructField("term", StringType)))
+    val max = BroadcastGate.maxRows(schema, BroadcastGate.DefaultKeyLimit)
+    val pairs = queries
+      .select(col(queryIdCol).as("query_id"),
+        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
+      .rdd
+    val parts = new Array[Array[Row]](pairs.getNumPartitions)
+    var total = 0L
+    val take = max.toInt + 1
+    queries.sparkSession.sparkContext.runJob(pairs,
+      (it: Iterator[Row]) => {
+        val rows = it.take(take).toArray
+        (rows.length, if (rows.length > max) Array.empty[Row] else rows)
+      },
+      (i: Int, counted: (Int, Array[Row])) => {
+        total += counted._1
+        if (total <= max) parts(i) = counted._2
+      })
+    require(total <= max,
+      s"$caller: the query batch yields more than $max (query_id, " +
+        "term) pairs, the BroadcastGate ceiling (DefaultKeyLimit " +
+        s"${BroadcastGate.DefaultKeyLimit} rows, DefaultByteLimit " +
+        s"${BroadcastGate.DefaultByteLimit} bytes) they are broadcast " +
+        "under; split the query batch")
+    (parts.flatten, schema)
+  }
+
   /** BM25 ranked retrieval (Robertson/Spärck Jones; the Okapi scorer
     * Lucene and every production text index default to).
     *
@@ -126,9 +172,7 @@ object Retrieval {
                k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
                corpusStats: Option[(Long, Double)] = None): DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import org.apache.spark.storage.StorageLevel
-    import graft.store.BroadcastGate
     val spark = corpus.sparkSession
     val corpusIdType = corpus.schema(corpusIdCol).dataType
 
@@ -139,23 +183,9 @@ object Retrieval {
     // as LocalRelations from the collected pairs. The term set must be
     // exactly-deduplicated either way (qTerms feeds an INNER join, where
     // a duplicate term would double tf), which the local distinct does.
-    // The pairs are broadcast below, so the collect stops one row past
-    // the broadcast ceiling and refuses — before the corpus is touched.
     val qIdType = queries.schema(queryIdCol).dataType
-    val pairSchema = StructType(Seq(StructField("query_id", qIdType),
-      StructField("term", StringType)))
-    val maxPairs = BroadcastGate.maxRows(pairSchema, BroadcastGate.DefaultKeyLimit)
-    val qPairs = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
-      .limit(maxPairs.toInt + 1)
-      .collect()
-    require(qPairs.length <= maxPairs,
-      s"bm25TopK: the query batch yields more than $maxPairs (query_id, " +
-        "term) pairs, the BroadcastGate ceiling (DefaultKeyLimit " +
-        s"${BroadcastGate.DefaultKeyLimit} rows, DefaultByteLimit " +
-        s"${BroadcastGate.DefaultByteLimit} bytes) they are broadcast " +
-        "under; split the query batch")
+    val (qPairs, pairSchema) =
+      queryTermPairs(queries, queryIdCol, queryTextCol, "bm25TopK")
     if (qPairs.isEmpty)
       return emptyRanked(spark, qIdType, corpusIdType)
 

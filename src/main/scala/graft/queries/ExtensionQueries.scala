@@ -1354,23 +1354,22 @@ object ExtensionQueries {
       queryVectors(s, d), "query_id", "qvec",
       dim = 64, k = 10, nLists = 16, nProbe = 4)
 
-  /** Durable per-corpus root for the persisted IVFPQ index: a PURE
-    * FUNCTION of the data directory, so build-once/query-many holds
-    * across driver restarts — a fresh JVM derives the same root, finds
-    * the committed LATEST pointer, and serves from the existing codes
-    * (the content-version tag below still forces a rebuild when the
-    * corpus data itself drifts). The previous driver-JVM TrieMap +
-    * per-session temp-dir scheme kept the amortization only within one
-    * session. The root lives beside the JVM temp dir (the testdata dirs
-    * are read-only here; a deployment would point this at its lake) —
-    * name = sanitized dir + a hash so distinct dirs can never collide. */
+  /** Per-corpus root for the persisted IVFPQ index, under one
+    * [[graft.TempDirs]] directory per process: a pure function of the
+    * data directory within the process, so build-once/query-many holds
+    * across calls (the content-version tag below still forces a rebuild
+    * when the corpus data itself drifts), while every process starts
+    * cold, so the query's Spark work does not depend on what an earlier
+    * run left behind, and the store is deleted at exit. Name =
+    * sanitized dir + a hash, so distinct dirs can never collide. */
   private[graft] def indexRootFor(d: String): String = {
     val safe = d.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(60)
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(d))
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft-simindex", s"$safe-$tag").toString
+    simIndexRoot.resolve(s"$safe-$tag").toString
   }
+
+  private lazy val simIndexRoot = graft.TempDirs.create("graft-simindex")
 
   /** Content-version tag for the embeddings corpus under `d`: a hash of
     * the file listing (name, length, modification time) of

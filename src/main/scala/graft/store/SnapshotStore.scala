@@ -23,9 +23,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   root/<table>/LATEST           pointer file, atomically replaced
   * }}}
   *
+  * Every version directory is a complete parquet snapshot. A
+  * file-granular commit (`carry` in [[commit]]) writes only the files
+  * its change touches and hard-links every untouched data file of the
+  * base version into the new directory (a copy where the filesystem
+  * cannot link) — the copy-on-write-by-file that Delta Lake runs
+  * UPDATE/DELETE with (Armbrust et al., VLDB 2020). Linking is safe
+  * because no version file is ever modified in place: a file is written
+  * once, then only linked or unlinked. Readers, time travel and the
+  * zone maps see an ordinary directory, and [[vacuum]] still means
+  * "drop these versions": it unlinks their paths, and the data a newer
+  * version links to survives under that version's name.
+  *
   * Guarantees:
   *  - readers always see a complete snapshot (the pointer flips only after
-  *    the parquet write finished),
+  *    the parquet write and the links finished),
   *  - writers serialize per table (JVM lock here ≙ the reference's
   *    LOCK TABLE; on a real multi-driver deployment the lock would live in a
   *    catalog service — the snapshot layout itself needs no change),
@@ -113,12 +125,20 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     * inference. */
   def loadVersion(table: String, version: Long): DataFrame = {
     require(version > 0, s"table $table has no committed snapshot")
-    val dir = versionDir(table, version).toString
-    recordedSchema(table, version) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dir)
-      case None         => spark.read.parquet(dir)
-    }
+    readAt(table, version, Seq(versionDir(table, version).toString))
   }
+
+  /** The named data files of a committed version, read like
+    * [[loadVersion]] — the input of a file-granular rewrite and of a
+    * zone-pruned scan. */
+  def loadFiles(table: String, version: Long, names: Seq[String]): DataFrame =
+    readAt(table, version, names.map(n => versionDir(table, version).resolve(n).toString))
+
+  private def readAt(table: String, version: Long, paths: Seq[String]): DataFrame =
+    recordedSchema(table, version) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None         => spark.read.parquet(paths: _*)
+    }
 
   def loadIfExists(table: String): Option[DataFrame] =
     if (exists(table)) Some(load(table)) else None
@@ -139,50 +159,78 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     * atomicity. `bloomCols` turns on the parquet writer's per-column
     * bloom sketches ([[BloomSkip]] — for hash-uniform keys zones cannot
     * prune; built inline by the writer, no extra pass). Empty (the
-    * defaults) cost nothing. */
+    * defaults) cost nothing.
+    *
+    * `carry` makes the commit file-granular: the named data files of the
+    * CURRENT version are linked unchanged into the new version beside
+    * the files `df` writes, so the new version holds `df` plus every
+    * carried row. `df` must have the carried files' schema; the zone
+    * sidecar reuses the base version's lines for carried files.
+    * `sidecar` runs after the data, links and zones are in place and
+    * before the metadata and the pointer flip: a hook for per-version
+    * files such as [[KeySet]]'s, which must not outlive their version
+    * the way carried `_graft_meta` entries do. */
   def commit(table: String, df: DataFrame, sortKey: Option[String] = None,
              meta: Map[String, String] = Map.empty,
              statsCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil,
-             metaDeferred: () => Map[String, String] = () => Map.empty): Long = {
-    val l = lockFor(table)
-    l.lock()
-    try {
-      val next = currentVersion(table) + 1
-      val dest = versionDir(table, next)
-      // Crash recovery: a writer that died after the parquet write but
-      // before the pointer flip leaves an orphaned next-version directory.
-      // Anything past LATEST is by construction an aborted commit (the
-      // pointer flips last, under this lock), so clear it rather than wedge
-      // every future commit on SaveMode.ErrorIfExists — the liveness half
-      // of exactly-once replay (the replayed batch must be able to land).
-      if (Files.exists(dest)) deleteRecursively(dest)
-      val sorted = sortKey match {
-        case Some(k) if df.columns.contains(k) => df.sortWithinPartitions(k)
-        case _ => df
-      }
-      sorted.write.mode(SaveMode.ErrorIfExists)
-        .options(BloomSkip.writeOptions(bloomCols.distinct))
-        .parquet(dest.toString)
-      if (statsCols.nonEmpty) ZoneMap.writeSidecar(dest, statsCols.distinct, spark)
-      // Record THIS version's schema (all-nullable, matching what parquet
-      // inference would report) so loadVersion skips the footer job. Set
-      // fresh every commit — never carried forward — so schema evolution
-      // (M6) stays per-version correct.
-      val schema64 = java.util.Base64.getEncoder.encodeToString(
-        allNullable(sorted.schema).json.getBytes("UTF-8"))
-      // `metaDeferred` runs AFTER the parquet write, before the pointer
-      // flip: metadata whose values ride the write pass itself (the
-      // ObservedStats single-pass nDocs/sumDl) lands as atomically as
-      // the eager map. Same crash window as `meta` — a writer dying
-      // here leaves an orphaned dir, cleared by the next commit.
-      val merged = latestMeta(table) ++ meta ++ metaDeferred() +
-        (SchemaKey -> schema64)
-      writeMeta(dest, merged)
-      writePointerAtomically(table, next)
-      next
-    } finally l.unlock()
+             metaDeferred: () => Map[String, String] = () => Map.empty,
+             carry: Seq[String] = Nil,
+             sidecar: Path => Unit = _ => ()): Long = locked(table) {
+    val base = currentVersion(table)
+    require(carry.isEmpty || base > 0, s"table $table has no version to carry files from")
+    val next = base + 1
+    val dest = versionDir(table, next)
+    // Crash recovery: a writer that died after the parquet write but
+    // before the pointer flip leaves an orphaned next-version directory.
+    // Anything past LATEST is by construction an aborted commit (the
+    // pointer flips last, under this lock), so clear it rather than wedge
+    // every future commit on SaveMode.ErrorIfExists — the liveness half
+    // of exactly-once replay (the replayed batch must be able to land).
+    if (Files.exists(dest)) deleteRecursively(dest)
+    val sorted = sortKey match {
+      case Some(k) if df.columns.contains(k) => df.sortWithinPartitions(k)
+      case _ => df
+    }
+    sorted.write.mode(SaveMode.ErrorIfExists)
+      .options(BloomSkip.writeOptions(bloomCols.distinct))
+      .parquet(dest.toString)
+    val baseDir = versionDir(table, base)
+    carry.foreach(f => linkFile(baseDir, dest, f))
+    if (statsCols.nonEmpty) ZoneMap.writeSidecar(dest, statsCols.distinct, spark,
+      if (carry.isEmpty) None else Some(baseDir -> carry.toSet))
+    sidecar(dest)
+    // Record THIS version's schema (all-nullable, matching what parquet
+    // inference would report) so loadVersion skips the footer job. Set
+    // fresh every commit — never carried forward — so schema evolution
+    // (M6) stays per-version correct.
+    val schema64 = java.util.Base64.getEncoder.encodeToString(
+      allNullable(sorted.schema).json.getBytes("UTF-8"))
+    // `metaDeferred` runs AFTER the parquet write, before the pointer
+    // flip: metadata whose values ride the write pass itself (the
+    // ObservedStats single-pass nDocs/sumDl) lands as atomically as
+    // the eager map. Same crash window as `meta` — a writer dying
+    // here leaves an orphaned dir, cleared by the next commit.
+    val merged = latestMeta(table) ++ meta ++ metaDeferred() +
+      (SchemaKey -> schema64)
+    writeMeta(dest, merged)
+    writePointerAtomically(table, next)
+    next
   }
+
+  /** Link data file `name` (and its checksum, if any) from `from` into
+    * `to`; copy where the filesystem cannot hard-link. Spark names every
+    * written file with its job's unique id, so a carried name never
+    * collides with a file the commit wrote. */
+  private def linkFile(from: Path, to: Path, name: String): Unit =
+    Seq(name, s".$name.crc").map(from.resolve).filter(Files.exists(_)).foreach { src =>
+      val dst = to.resolve(src.getFileName)
+      try Files.createLink(dst, src)
+      catch {
+        case _: UnsupportedOperationException | _: java.io.IOException =>
+          Files.copy(src, dst)
+      }
+    }
 
   private val SchemaKey = "_graft.schema64"
 
@@ -231,35 +279,17 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     }
   }
 
-  /** Run `fn` on the current snapshot and commit its result as the next
-    * version — the `BEGIN … COMMIT` read-modify-write transaction analog.
-    * The per-table lock makes concurrent transactions serialize, so
-    * max+1 key generation (M1/M2) is race-free like the reference's
-    * LOCK TABLE discipline. */
-  def transact(table: String, sortKey: Option[String] = None)
-              (fn: Option[DataFrame] => DataFrame): Long = {
+  /** Run `body` holding `table`'s writer lock — the `BEGIN … COMMIT`
+    * read-modify-write analog. Guards evaluated inside see the SAME
+    * snapshot the commit builds on ([[commit]] re-enters the lock), so
+    * the check-then-act window of a guard outside the lock (two
+    * concurrent creates both passing a duplicate-name check, the race
+    * the reference's `LOCK TABLE` closes, lambda_function.py:267-272)
+    * cannot occur, and max+1 key generation is race-free. */
+  def locked[T](table: String)(body: => T): T = {
     val l = lockFor(table)
     l.lock()
-    try commit(table, fn(loadIfExists(table)), sortKey)
-    finally l.unlock()
-  }
-
-  /** Abortable transaction: `fn` sees the locked snapshot and returns
-    * Right(df) to commit or Left(a) to abort (nothing is written). Guards
-    * evaluated inside `fn` see the SAME snapshot the commit builds on —
-    * the check-then-act window of guard-outside-transact (two concurrent
-    * creates both passing a duplicate-name check, the exact race the
-    * reference's `LOCK TABLE` closes, lambda_function.py:267-272) cannot
-    * occur. */
-  def transactEither[A](table: String, sortKey: Option[String] = None,
-                        meta: Map[String, String] = Map.empty)
-              (fn: Option[DataFrame] => Either[A, DataFrame]): Either[A, Long] = {
-    val l = lockFor(table)
-    l.lock()
-    try fn(loadIfExists(table)) match {
-      case Left(a)   => Left(a)
-      case Right(df) => Right(commit(table, df, sortKey, meta))
-    } finally l.unlock()
+    try body finally l.unlock()
   }
 
   /** Abortable transaction for metadata that must be COMPUTED under the
@@ -278,14 +308,10 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
                       bloomCols: Seq[String] = Nil,
                       metaDeferred: () => Map[String, String] = () => Map.empty)
       (fn: => Either[A, (DataFrame, Map[String, String])])
-      : Either[A, Long] = {
-    val l = lockFor(table)
-    l.lock()
-    try fn match {
-      case Left(a) => Left(a)
-      case Right((df, meta)) =>
-        Right(commit(table, df, sortKey, meta, statsCols, bloomCols, metaDeferred))
-    } finally l.unlock()
+      : Either[A, Long] = locked(table) {
+    fn.map { case (df, meta) =>
+      commit(table, df, sortKey, meta, statsCols, bloomCols, metaDeferred)
+    }
   }
 
   private def writePointerAtomically(table: String, version: Long): Unit = {
@@ -300,26 +326,20 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   /** Drop all versions strictly older than `keepFrom` (vacuum). NOT for
     * delta-chained index tables — a chained version references older dirs;
     * use VectorIndex.vacuumIndex there, which keeps the live chain. */
-  def vacuum(table: String, keepFrom: Long): Unit = {
-    val l = lockFor(table)
-    l.lock()
-    try versions(table).filter(_ < keepFrom).foreach { v =>
+  def vacuum(table: String, keepFrom: Long): Unit = locked(table) {
+    versions(table).filter(_ < keepFrom).foreach { v =>
       deleteRecursively(versionDir(table, v))
-    } finally l.unlock()
+    }
   }
 
   /** Drop a specific set of committed versions (chain-aware vacuum
     * support). The current version is never dropped; the caller computes
     * which versions are safe (VectorIndex.vacuumIndex keeps the live
     * delta chain). */
-  def dropVersions(table: String, drop: Set[Long]): Unit = {
-    val l = lockFor(table)
-    l.lock()
-    try {
-      val cur = currentVersion(table)
-      versions(table).filter(v => drop.contains(v) && v != cur)
-        .foreach(v => deleteRecursively(versionDir(table, v)))
-    } finally l.unlock()
+  def dropVersions(table: String, drop: Set[Long]): Unit = locked(table) {
+    val cur = currentVersion(table)
+    versions(table).filter(v => drop.contains(v) && v != cur)
+      .foreach(v => deleteRecursively(versionDir(table, v)))
   }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -446,7 +446,6 @@ object TextIndex {
   def query(store: SnapshotStore, indexTable: String, queries: DataFrame,
             queryIdCol: String, queryTextCol: String,
             k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
     val (v, meta) = readable(store, indexTable, "querying")
     val pfx = srcP(meta)
     val nDocs = meta.getOrElse(s"${pfx}nDocs", "0").toLong
@@ -463,20 +462,14 @@ object TextIndex {
     // query side, rebuilt as a LocalRelation (r19, guide §1.2 — the
     // queryMaxScore one-collect discipline): the query subtree is
     // evaluated once instead of once per consumer.
-    val qPairs = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
-      .collect()
+    val (qPairs, qPairSchema) = Retrieval.queryTermPairs(queries,
+      queryIdCol, queryTextCol, "TextIndex.query")
     if (qPairs.isEmpty)
       return Retrieval.emptyRanked(queries.sparkSession, qIdType,
         postings.schema("neighbor_id").dataType)
     val terms = qPairs.map(_.getString(1)).distinct.toSeq
     val qSide = queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qPairs: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id", qIdType),
-        org.apache.spark.sql.types.StructField("term",
-          org.apache.spark.sql.types.StringType))))
+      java.util.Arrays.asList(qPairs: _*), qPairSchema)
     // Two pruning layers share the term probe: the zone map drops whole
     // chain files whose [min,max] term range misses every query term
     // (term-sorted layout → tight zones; no footer is even opened), and
@@ -1069,7 +1062,6 @@ object TextIndex {
                      queryTextCol: String, k: Int = 10,
                      k1: Double = 1.2, b: Double = 0.75,
                      fallbackToExact: Boolean = true): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
     val (v, meta) = readable(store, indexTable, "querying")
     val ct = champTable(indexTable)
     val cv = store.currentVersion(ct)
@@ -1092,20 +1084,14 @@ object TextIndex {
         store.loadVersion(ct, cv).schema("neighbor_id").dataType)
     // one bounded (query_id, term) collect feeds probe + query side
     // (see [[query]] — the r19 one-collect discipline)
-    val qPairs = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
-      .collect()
+    val (qPairs, qPairSchema) = Retrieval.queryTermPairs(queries,
+      queryIdCol, queryTextCol, "TextIndex.queryChampions")
     if (qPairs.isEmpty)
       return Retrieval.emptyRanked(queries.sparkSession, qIdType,
         store.loadVersion(ct, cv).schema("neighbor_id").dataType)
     val terms = qPairs.map(_.getString(1)).distinct.toSeq
     val qSide = queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qPairs: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id", qIdType),
-        org.apache.spark.sql.types.StructField("term",
-          org.apache.spark.sql.types.StringType))))
+      java.util.Arrays.asList(qPairs: _*), qPairSchema)
     val hits = champRowsAt(store, ct, cv,
       Seq(ZoneMap.stringIn("term", terms)))
     Retrieval.bm25ScoreWithDf(hits, queries, queryIdCol, queryTextCol,
@@ -1217,7 +1203,6 @@ object TextIndex {
       queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): (DataFrame, Option[(Int, Int)]) = {
-    import graft.functions.{TextFunctions => TF}
     import org.apache.spark.sql.expressions.Window
     val (v, meta) = readable(store, indexTable, "querying")
     val ct = champTable(indexTable)
@@ -1240,19 +1225,13 @@ object TextIndex {
     // tails' qSide (r19, extending the r18 one-collect discipline): the
     // query subtree — often a filtered corpus read — is evaluated once,
     // not once per consumer.
-    val qPairRows = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(array_distinct(TF.tokens(lower(col(queryTextCol))))).as("term"))
-      .collect()
+    val (qPairRows, qPairSchema) = Retrieval.queryTermPairs(queries,
+      queryIdCol, queryTextCol, "TextIndex.queryMaxScore")
     val terms = qPairRows.map(_.getString(1)).distinct.toSeq
     if (terms.isEmpty)
       return (Retrieval.emptyRanked(queries.sparkSession, qIdType,
         postingsIdType), None)
     val spark = queries.sparkSession
-    val qPairSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", qIdType),
-      org.apache.spark.sql.types.StructField("term",
-        org.apache.spark.sql.types.StringType)))
     val qSide = spark.createDataFrame(
       java.util.Arrays.asList(qPairRows: _*), qPairSchema)
 

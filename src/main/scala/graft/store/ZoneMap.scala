@@ -117,7 +117,7 @@ object ZoneMap {
 
   // ---------------------------------------------------------------- harvest
 
-  private def dataFiles(dir: Path): Seq[Path] = {
+  private[graft] def dataFiles(dir: Path): Seq[Path] = {
     val s = Files.list(dir) // close the directory fd (harvest runs per commit)
     try s.iterator().asScala
       .filter { p =>
@@ -131,12 +131,26 @@ object ZoneMap {
     * write the `_graft_zones` sidecar there. Footer-only: no data pages
     * are read, no Spark job below [[DistributedThreshold]] files.
     * Columns that yield no harvestable stats simply produce no lines
-    * (conservatively kept at scan time). */
+    * (conservatively kept at scan time).
+    *
+    * `carried` = (base version dir, file names linked from it unchanged):
+    * those files keep the base sidecar's lines instead of a second
+    * footer read, so a file-granular commit harvests only the files it
+    * wrote. A base without a sidecar over the same columns is harvested
+    * in full. */
   private[store] def writeSidecar(dir: Path, cols: Seq[String],
-                                  spark: SparkSession): Unit = {
+                                  spark: SparkSession,
+                                  carried: Option[(Path, Set[String])] = None): Unit = {
     if (cols.isEmpty) return
-    val files = dataFiles(dir)
-    val zones: Seq[Zone] =
+    val reused: Seq[Zone] = carried.flatMap { case (baseDir, names) =>
+      readSidecar(baseDir).collect {
+        case (baseCols, zones) if baseCols == cols.toSet =>
+          zones.filter(z => names.contains(z.file))
+      }
+    }.getOrElse(Seq.empty)
+    val reusedFiles = reused.map(_.file).toSet
+    val files = dataFiles(dir).filterNot(f => reusedFiles(f.getFileName.toString))
+    val harvested: Seq[Zone] =
       if (files.size >= DistributedThreshold) {
         val names = files.map(_.toAbsolutePath.toString)
         val colsB = cols.toArray
@@ -144,6 +158,7 @@ object ZoneMap {
           .flatMap { f => harvestFile(Paths.get(f), colsB.toSeq) }
           .collect().toSeq
       } else files.flatMap(f => harvestFile(f, cols))
+    val zones = (reused ++ harvested).sortBy(_.file)
     val header = s"#graft-zones v1\tcols=${cols.mkString(",")}"
     val b64 = java.util.Base64.getEncoder
     val lines = zones.map { z =>
@@ -300,6 +315,14 @@ object ZoneMap {
     Some((cols, zones))
   }
 
+  /** Every zone line of `table`'s `version` (empty without a sidecar):
+    * per file and column, its bounds and its footer row count. */
+  def zonesAt(store: SnapshotStore, table: String, version: Long): Seq[Zone] =
+    zonesIn(store.versionDirOf(table, version))
+
+  private[graft] def zonesIn(dir: Path): Seq[Zone] =
+    readSidecar(dir).map(_._2).getOrElse(Seq.empty)
+
   /** Can a file whose zone is `z` contain a row matching `pred`? */
   private def mayMatch(z: Zone, pred: ZonePred): Boolean = (z.kind, pred) match {
     case ("null", _) => false // all-null column never matches a range
@@ -424,16 +447,11 @@ object ZoneMap {
       : DataFrame = {
     val spark = store.session
     val (kept, _) = selectedFilesAt(store, table, version, preds, keepFile)
-    val schema = store.recordedSchema(table, version)
     if (kept.isEmpty) {
-      val s = schema.getOrElse(store.loadVersion(table, version).schema)
+      val s = store.recordedSchema(table, version)
+        .getOrElse(store.loadVersion(table, version).schema)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-    } else {
-      val base = schema match {
-        case Some(s) => spark.read.schema(s).parquet(kept.map(_.toString): _*)
-        case None    => spark.read.parquet(kept.map(_.toString): _*)
-      }
-      base.filter(residual(preds))
-    }
+    } else store.loadFiles(table, version, kept.map(_.getFileName.toString))
+      .filter(residual(preds))
   }
 }

@@ -161,4 +161,44 @@ class AppendJobCountSpec extends SparkSpec {
     assert(hinted == unhinted && hinted.nonEmpty,
       "gate-sizing mode must not change the pair set")
   }
+
+  test("catalog mutations: key guards cost no job, a keyed mutation rewrites one file") {
+    import graft.operators.{MutationResult, Mutations}
+    val store = freshStore()
+    val mut = new Mutations(store, spark)
+    // a four-file catalog (keys 1..200, one contiguous run per file)
+    mut.appendBatch((1 to 200).map(i => s"Tool$i").toDF("tool_name").repartition(4))
+    def one(label: String, budget: Int, exact: Boolean)
+           (call: => MutationResult, status: Int): Unit = {
+      var res: MutationResult = null
+      val (jobs, sites) = jobsIn { res = call }
+      info(s"$label: $jobs jobs, action callsites=$sites")
+      assert(res.status === status, s"$label returned $res")
+      if (exact) assert(jobs === budget, s"$label spent $jobs jobs, pinned at $budget")
+      else assert(jobs <= budget, s"$label spent $jobs jobs (budget $budget)")
+    }
+    // the key set answers EXISTS: the write of the one file holding the
+    // key is the only job; an unknown key is refused before any job
+    one("update", 1, exact = true)(mut.update(17, Map("remarks" -> "x")), 200)
+    one("softDelete", 1, exact = true)(mut.softDelete(18), 200)
+    one("hardDelete", 1, exact = true)(mut.hardDelete(19), 200)
+    one("update 404", 0, exact = true)(mut.update(999, Map("remarks" -> "x")), 404)
+    one("hardDelete 404", 0, exact = true)(mut.hardDelete(19), 404)
+    // create: the duplicate-name scan plus the tail-file write; the next
+    // key comes from the key set
+    one("create", 3, exact = false)(mut.create(Map("tool_name" -> "New")), 201)
+    // a 5-row one-file CSV drop, as the S3-event ingest sees it
+    val inbox = TempDirs.create("graft-jobs-csv")
+    val csv = inbox.resolve("batch.csv")
+    java.nio.file.Files.writeString(csv,
+      "tool_name,team_name\n" + (1 to 5).map(i => s"Csv$i,FCS").mkString("\n") + "\n")
+    val (jobs, sites) = jobsIn {
+      assert(mut.appendBatchOnce(
+        graft.sources.Ingest.catalogBatch(spark, csv.toString), "inbox", 0L))
+    }
+    info(s"appendBatchOnce (5-row CSV): $jobs jobs, action callsites=$sites")
+    assert(jobs <= 3, s"CSV append spent $jobs jobs (budget 3)")
+    val keys = store.load("csp_tools_data").select("s_no").as[Int].collect().sorted
+    assert(keys.toSeq === ((1 to 201) ++ (202 to 206)).filter(_ != 19))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -155,5 +157,39 @@ class ServeResultSpec extends SparkSpec {
     }
     assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("corpus evaluated")), e2)
+  }
+
+  test("TextIndex query entries refuse an over-bound query batch before reading the index") {
+    val dir = TempDirs.create("graft-serve-gate")
+    val text = new SnapshotStore(dir.toString, spark)
+    TextIndex.build(text, "idx", Seq(1L -> "alpha beta", 2L -> "beta gamma")
+      .toDF("doc_id", "text"), "text", "doc_id")
+    TextIndex.refreshChampions(text, "idx", m = 10)
+    // garble every data file: any read of the index now fails with a
+    // parquet error instead of the gate's
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.writeString(f, "garbage"))
+    finally walk.close()
+    val bound = BroadcastGate.maxRows(StructType(Seq(
+      StructField("query_id", LongType), StructField("term", StringType))),
+      BroadcastGate.DefaultKeyLimit)
+    val queries = spark.range(0L, bound + 1, 1L, 1)
+      .select(col("id").as("query_id"), lit("alpha").as("qtext"))
+    val entries = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "TextIndex.query" ->
+        (TextIndex.query(text, "idx", _, "query_id", "qtext").collect()),
+      "TextIndex.queryMaxScore" ->
+        (TextIndex.queryMaxScore(text, "idx", _, "query_id", "qtext").collect()),
+      "TextIndex.queryChampions" ->
+        (TextIndex.queryChampions(text, "idx", _, "query_id", "qtext").collect()))
+    entries.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call(queries))
+      assert(e.getMessage.contains(s"$name: the query batch yields more than $bound"),
+        e.getMessage)
+      // within the bound the garbled index is read and fails
+      val e2 = intercept[Exception](call(queries.limit(1)))
+      assert(!e2.isInstanceOf[IllegalArgumentException], s"$name: $e2")
+    }
   }
 }

@@ -223,4 +223,127 @@ class StoreMutationSpec extends SparkSpec {
     assert(store.loadVersion("t", v1).as[(Long, String)].collect()
       .toSeq == Seq((1L, "a")))
   }
+
+  // ---- file-granular commits -------------------------------------------
+
+  private val T = "csp_tools_data"
+
+  /** A four-file catalog: keys 1..40, one contiguous run per file. */
+  private def fourFiles(): (java.nio.file.Path, SnapshotStore, Mutations) = {
+    import spark.implicits._
+    val dir = TempDirs.create("graft-files")
+    val store = new SnapshotStore(dir.toString, spark)
+    val mut = new Mutations(store, spark)
+    mut.appendBatch((1 to 40).map(i => s"F$i").toDF("tool_name").repartition(4))
+    (dir, store, mut)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  private def dataFiles(store: SnapshotStore, dir: java.nio.file.Path,
+                        v: Long): Map[String, java.nio.file.Path] =
+    graft.store.ZoneMap.dataFiles(dir.resolve(T).resolve(f"v$v%05d"))
+      .map(p => p.getFileName.toString -> p).toMap
+
+  test("file-granular commits: a mutation writes one file, links the rest, and every older version reads back unchanged") {
+    import spark.implicits._
+    val (dir, store, mut) = fourFiles()
+    val history = scala.collection.mutable.LinkedHashMap(
+      store.currentVersion(T) -> rowsOf(store.load(T)))
+    def step(expectWritten: Int)(op: => Any): Unit = {
+      val before = store.currentVersion(T)
+      op
+      val v = store.currentVersion(T)
+      assert(v === before + 1)
+      val (old, cur) = (dataFiles(store, dir, before), dataFiles(store, dir, v))
+      val written = cur.keySet -- old.keySet
+      assert(written.size === expectWritten, s"v$v wrote $written")
+      (cur.keySet -- written).foreach { f =>
+        assert(Files.isSameFile(cur(f), old(f)), s"$f is not the base's file")
+      }
+      history(v) = rowsOf(store.load(T))
+    }
+    step(1)(assert(mut.update(5, Map("remarks" -> "patched")) === Ok(5)))
+    step(1)(assert(mut.hardDelete(12) === Ok(12)))
+    step(1)(assert(mut.softDelete(33) === Ok(33)))
+    step(1)(assert(mut.create(Map("tool_name" -> "Folded")) === Created(41)))
+    step(1)(assert(mut.appendBatchOnce(Seq("Trickle").toDF("tool_name")
+      .coalesce(1), "s", 0L)))
+    // time travel: every version, old and new, reads back row for row
+    history.foreach { case (v, rows) =>
+      assert(rowsOf(store.loadVersion(T, v)) === rows, s"v$v changed")
+    }
+    val latest = store.load(T)
+    assert(latest.filter(col("s_no") === 5).select("remarks").as[String]
+      .collect().toSeq === Seq("patched"))
+    assert(latest.select("s_no").as[Int].collect().sorted.toSeq ===
+      (1 to 42).filter(_ != 12))
+  }
+
+  test("file-granular commits: vacuum to the current version leaves a complete snapshot equal to the model") {
+    import spark.implicits._
+    val (_, store, mut) = fourFiles()
+    def table = store.load(T).select("s_no", "tool_name", "is_display")
+      .as[(Int, String, Boolean)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val model = scala.collection.mutable.TreeMap(table.toSeq: _*)
+    assert(model.keySet === (1 to 40).toSet)
+    assert(mut.update(3, Map("tool_name" -> "Renamed")) === Ok(3))
+    model(3) = ("Renamed", true)
+    assert(mut.softDelete(20) === Ok(20))
+    model(20) = (model(20)._1, false)
+    assert(mut.hardDelete(40) === Ok(40))
+    model.remove(40)
+    assert(mut.create(Map("tool_name" -> "Reused")) === Created(40))
+    model(40) = ("Reused", true)
+    store.vacuum(T, keepFrom = store.currentVersion(T))
+    assert(store.versions(T) === Seq(store.currentVersion(T)))
+    assert(table === model.toMap)
+    // the surviving version still serves the guards and further writes
+    assert(mut.hardDelete(99) === NotFound(99))
+    assert(mut.update(7, Map("tool_name" -> "Later")) === Ok(7))
+    model(7) = ("Later", true)
+    assert(table === model.toMap)
+    assert(mut.keySetRebuilds === 0L)
+  }
+
+  test("file-granular commits: an orphaned next version of linked files is cleared without touching its base") {
+    val (dir, store, mut) = fourFiles()
+    assert(mut.update(2, Map("remarks" -> "v2")) === Ok(2))
+    val v = store.currentVersion(T)
+    val before = rowsOf(store.loadVersion(T, v))
+    // a writer that died after linking v+1's carried files, before the flip
+    val orphan = dir.resolve(T).resolve(f"v${v + 1}%05d")
+    Files.createDirectories(orphan)
+    dataFiles(store, dir, v).foreach { case (n, p) => Files.createLink(orphan.resolve(n), p) }
+    Files.writeString(orphan.resolve("part-99999-junk.parquet"), "garbage")
+    assert(mut.update(9, Map("remarks" -> "v3")) === Ok(9))
+    assert(store.currentVersion(T) === v + 1)
+    assert(rowsOf(store.loadVersion(T, v)) === before, "the orphan's links took base data")
+    assert(store.load(T).count() === 40L)
+    assert(store.load(T).filter(col("remarks") === "v3").count() === 1L)
+  }
+
+  test("key set: rebuilt by one counted scan after M6 and for a pre-upgrade version; guards stay exact") {
+    import spark.implicits._
+    val (dir, store, mut) = fourFiles()
+    mut.addColumn("extra_col")
+    assert(mut.update(3, Map("remarks" -> "a")) === Ok(3))
+    assert(mut.keySetRebuilds === 1L)
+    assert(mut.update(999, Map("remarks" -> "a")) === NotFound(999))
+    assert(mut.keySetRebuilds === 1L, "the committed update recorded a key set")
+    mut.dropColumn("extra_col")
+    assert(mut.hardDelete(40) === Ok(40))
+    assert(mut.keySetRebuilds === 2L)
+    // a version without the sidecar, as written before key sets existed
+    Files.delete(dir.resolve(T).resolve(f"v${store.currentVersion(T)}%05d")
+      .resolve("_graft_keys"))
+    assert(mut.hardDelete(40) === NotFound(40))
+    assert(mut.keyExists(39) && !mut.keyExists(40))
+    assert(mut.create(Map("tool_name" -> "Next")) === Created(40))
+    assert(mut.keySetRebuilds === 4L) // the 404 committed nothing to carry it
+    assert(mut.create(Map("tool_name" -> "After")) === Created(41))
+    assert(mut.keySetRebuilds === 4L)
+    assert(store.load(T).select("s_no").as[Int].collect().sorted.toSeq === (1 to 41))
+  }
 }

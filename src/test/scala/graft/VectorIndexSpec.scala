@@ -173,7 +173,7 @@ class VectorIndexSpec extends SparkSpec {
       "post-drift index query differs from brute force on the new corpus")
   }
 
-  test("simIndexTopK's index root is durable: a fresh driver reuses the build") {
+  test("simIndexTopK's index root is per process: a second call reuses the build") {
     import graft.queries.ExtensionQueries
     val dir = TempDirs.create("graft-simindex-durable").toString
     val rnd = new scala.util.Random(77)
@@ -186,11 +186,10 @@ class VectorIndexSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label").repartition(2)
       .write.parquet(s"$dir/embeddings.parquet")
 
-    // The root is a pure function of the data dir — no JVM state. A
-    // "fresh driver" is therefore just another call: if it could see
-    // state the first call left only in memory, this derivation would
-    // not be deterministic. Assert the first call commits version 1 and
-    // the second serves from it without a rebuild (version unchanged).
+    // The root is a pure function of the data dir within the process
+    // (under its TempDirs directory, so every process starts cold).
+    // Assert the first call commits version 1 and the second serves from
+    // it without a rebuild (version unchanged).
     val root = ExtensionQueries.indexRootFor(dir)
     assert(root === ExtensionQueries.indexRootFor(dir))
     assert(ExtensionQueries.simIndexTopK(spark, dir).count() === 50L)
@@ -198,7 +197,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(store.currentVersion("emb_ivfpq") === 1L)
     assert(ExtensionQueries.simIndexTopK(spark, dir).count() === 50L)
     assert(store.currentVersion("emb_ivfpq") === 1L,
-      "second driver/session must reuse the committed index, not rebuild")
+      "a second call must reuse the committed index, not rebuild")
   }
 
   test("queryRefined keeps appended neighbors when the corpus misses them") {
