@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.ExprUtils.let
-import graft.store.EagerCut
+import graft.store.{BandedPairs, EagerCut}
 
 /** Deduplication operators for web-scale corpora (builder prompt's
   * training-data-pipeline extension).
@@ -295,20 +295,24 @@ object Dedup {
   }
 
   /** Candidate pairs from MinHash-LSH banding, verified with exact n-gram
-    * Jaccard over the shingle sets. Returns (id_a, id_b, jaccard) with
-    * id_a < id_b, jaccard ≥ `threshold`.
+    * Jaccard over the shingle sets (as their distinct xxhash64 shingle
+    * hashes — the stored form of the MinHash index, so both verify the
+    * same rational Jaccard; a hash collision, ~2⁻⁶⁴ per shingle pair,
+    * is the only way the two can differ from a string compare). Returns
+    * (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ `threshold`.
     *
     * Plan shape at scale — NOTHING corpus-sized is ever cached or
     * shuffled with payload:
-    *  1. ONE streaming scan: tokenize → shingle → signature → band keys →
-    *    explode to (band, bucket, id). Only 24-byte key rows shuffle.
-    *  2. One hash exchange on the bucket key; a row_number window caps
+    *  1. ONE streaming scan: tokenize → shingle hashes → signature → band
+    *    keys → explode to (band, bucket, id). Only 24-byte key rows
+    *    shuffle.
+    *  2. One hash exchange on the bucket key; a bounded heap caps
     *    degenerate buckets (truncated at maxBucketSize+1, dropped whole)
-    *    at bounded memory; collect_list rides the same partitioning and
-    *    AllPairs emits the candidate id pairs in-bucket — the same
-    *    single-shuffle shape as the simhash/embedding paths.
-    *  3. Verify re-shingles ONLY the candidate docs (a semi-join of the
-    *    input by candidate id, then the shingle expression over that
+    *    with map-side partials, and AllPairs emits the candidate id
+    *    pairs in-bucket — the shared in-bucket stage of the
+    *    simhash/embedding paths and the indexes.
+    *  3. Verify re-hashes ONLY the candidate docs (a semi-join of the
+    *    input by candidate id, then the shingle-hash expression over that
     *    ~few-% subset). The previous shape cached (id, shingles, sig)
     *    for the WHOLE corpus to share shingles with the verify join —
     *    tens of GB at 5M docs (array<string> of ~400 shingles per doc),
@@ -332,58 +336,30 @@ object Dedup {
                          shingleN: Int = 3, k: Int = 32, bands: Int = 16,
                          threshold: Double = 0.5,
                          maxBucketSize: Int = 1000): DataFrame = {
-    val banded = df
-      .select(col(idCol).as("id"),
-        explode(lshBandKeys(
-          // pre-hashed shingles: same signatures (same XXH64 seed), no
-          // shingle strings materialized on the corpus scan
-          minhashSignature(shingleHashes(col(textCol), shingleN), k), k, bands))
-          .as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"), col("id"))
-
-    // Bucket capping as a BOUNDED-HEAP aggregate, not a window: with a
-    // constant score the heap's (score desc, id asc) tie-break keeps
-    // exactly the maxBucketSize+1 SMALLEST ids per bucket — the same
-    // member set the row_number window produced — but map-side partials
-    // bound every group BEFORE the exchange and nothing ever sorts the
-    // full banded key stream (the window sorted all ~80M rows at 5M
-    // docs just to discard everything past position m+1).
-    val candidates = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(graft.plans.TopKAggregate
-        .boundedTopK(col("id"), lit(0.0), maxBucketSize + 1).as("ch"))
-      .select(transform(col("ch"), c => c.getField("neighbor_id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .select(explode(graft.plans.VectorExpressions.allPairs(col("members"))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b")
+    // The shared in-bucket stage (graft.store.BandedPairs.inBucket)
+    // over the whole corpus: pre-hashed shingles (no shingle strings on
+    // the corpus scan), band keys, the bounded-heap cap, AllPairs, the
+    // cross-bucket dedup — the index's MinHash regime
+    // (DedupIndex.regime), whose Jaccard verify this one shares.
+    val regime = graft.store.DedupIndex.regime(k, bands, threshold,
+      maxBucketSize)
+    val candidates = BandedPairs.inBucket(regime,
+        regime.keyRows(df.select(col(idCol).as("id"),
+          shingleHashes(col(textCol), shingleN).as("h_arr"))), lit(true))
       .persist(StorageLevel.MEMORY_AND_DISK) // candidate-sized, read 3×
 
-    // Shingles for candidate docs only. Computed once per verify side —
-    // the semi-join keeps the scan, the shingling, and this cache all
-    // candidate-sized. No distinct() on the semi-join's probe side (r19,
-    // guide §2.4): a left_semi dedups by construction, so the exchange
-    // the distinct paid bought nothing.
+    // Shingle hashes for candidate docs only. The semi-join keeps the
+    // scan, the hashing, and this cache all candidate-sized. No
+    // distinct() on the semi-join's probe side (r19, guide §2.4): a
+    // left_semi dedups by construction.
     val candIds = candidates
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
     val candSh = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), shingles(col("text"), shingleN).as("sh"))
+      .select(col("id"), shingleHashes(col("text"), shingleN).as("h_arr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Both verify joins build from the SAME (id, sh) child — renames sit
-    // ABOVE the join, so the planner's exchange reuse ships ONE build of
-    // candSh instead of two (r19, guide §2.4; each build is a separate
-    // driver-blocking job). Join order and output are unchanged.
-    val verified = candidates
-      .join(candSh, col("id_a") === col("id"))
-      .select(col("id_a"), col("id_b"), col("sh").as("sh_a"))
-      .join(candSh, col("id_b") === col("id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    val verified = jaccardPairs(candidates, candSh, threshold)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Materialize, then release the (already candidate-sized) helper
     // caches now rather than pinning them for the session.
@@ -394,6 +370,26 @@ object Dedup {
     candSh.unpersist(blocking = false)
     verified
   }
+
+  /** Exact Jaccard of candidate pairs (id_a, id_b) over per-doc shingle
+    * hash sets `sets` (id, h_arr): (id_a, id_b, jaccard rounded to 4
+    * places) with jaccard ≥ threshold — the verify of
+    * [[nearDuplicatePairs]] and of the MinHash index appends. Both joins
+    * build from the same `sets` child and the renames sit ABOVE the
+    * joins, so the planner's exchange reuse ships ONE build instead of
+    * two (r19, guide §2.4; each build is a separate driver-blocking
+    * job). */
+  private[graft] def jaccardPairs(candidates: DataFrame, sets: DataFrame,
+                                  threshold: Double): DataFrame =
+    candidates
+      .join(sets, col("id_a") === col("id"))
+      .select(col("id_a"), col("id_b"), col("h_arr").as("h_a"))
+      .join(sets, col("id_b") === col("id"))
+      .withColumn("jaccard",
+        size(array_intersect(col("h_a"), col("h_arr"))).cast("double") /
+          size(array_union(col("h_a"), col("h_arr"))))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
 
   /** Near-dedup: drop every doc that near-duplicates a lower-id doc. No
     * broadcast hint on the duplicate-id side: at web-scale dedup rates
@@ -1150,19 +1146,6 @@ object Dedup {
     math.pow(2.0, widths.take(nBlocks - maxHamming).sum.toDouble)
   }
 
-  /** Per-combo (band, bucket) keys for a 64-bit simhash: one key per
-    * block combination, with the selected blocks' bits packed into one
-    * long (total packed width = (nBlocks−maxHamming)·64/nBlocks < 64).
-    *
-    * Native expression (graft.plans.SimHashComboKeys): the Column-tree
-    * formulation (one struct builder per combo, a fold of bitwise ops
-    * each) is 210–495 structs ≈ 10k expression nodes — it broke janino,
-    * took Catalyst minutes to optimize, and its interpreted fallback
-    * hung the planted-pair spec. The compiled loop is one node. */
-  private[functions] def simhashComboKeys(sh64: Column, nBlocks: Int,
-                                          maxHamming: Int): Column =
-    graft.plans.VectorExpressions.simhashComboKeys(sh64, nBlocks, maxHamming)
-
   /** SimHash near-dup pairs over precomputed (id, sh64) rows.
     *
     * Soundness AND scale: multi-block combination banding (the pigeonhole
@@ -1196,42 +1179,23 @@ object Dedup {
       else simhashAutoBlocks(
         if (corpusSize > 0) corpusSize else hashed.count(),
         maxHamming, maxBucketSize)
-    val banded = hashed.select(col("id"), col("sh64"),
-      explode(simhashComboKeys(col("sh64"), blocks, maxHamming)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"),
-        col("id"), col("sh64"))
-
-    // ONE shuffle on the bucket key. The r9 shape (groupBy count →
-    // broadcast anti-join cap → bucket-key self-join → dropDuplicates →
-    // hamming filter) passed the exploded key rows through THREE
-    // shuffles, and worse, aggregated the unfiltered O(bucket²) candidate
-    // set: at 5M docs / h=6 (210 combos, 1.05B key rows) one
-    // dropDuplicates task burned 25 CPU-minutes on candidates the ham ≤ h
-    // test would discard. The r11 shape fixed that with a row_number
-    // window — which still SORTED the full key stream; the r13 shape
-    // caps in-aggregate instead: map-side-bounded heaps keep each
-    // bucket's maxBucketSize+1 smallest (id, sh64) members (lazy buffer
-    // capacity — eager k-sized buffers over singleton-dominated groups
-    // measured 3× worse than the window), and HammingPairs emits only
-    // VERIFIED pairs, so the final distinct sees ≤ combos × true-pairs
-    // rows (flagship before/after in NOTES.md: h6 24.7 → 19.6 s).
-    val members = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(graft.plans.TopKAggregate
-        .boundedMembers(col("id"), col("sh64"), maxBucketSize + 1)
-        .as("members"))
-      // size == maxBucketSize+1 marks a truncated degenerate bucket:
-      // dropped whole, same cap semantics as the anti-join version.
-      // The bounded-heap aggregate keeps the m+1 SMALLEST ids per
-      // bucket — identical members to the old row_number window,
-      // without sorting the full banded key stream.
-      .filter(size(col("members")).between(2, maxBucketSize))
-
-    members
-      .select(explode(graft.plans.VectorExpressions
-        .hammingPairs(col("members"), maxHamming)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
-      .dropDuplicates("id_a", "id_b")
+    // ONE shuffle on the bucket key: the shared in-bucket stage
+    // (graft.store.BandedPairs.inBucket) under the index's SimHash
+    // regime. The r9 shape (groupBy count → broadcast anti-join cap →
+    // bucket-key self-join → dropDuplicates → hamming filter) passed the
+    // exploded key rows through THREE shuffles and aggregated the
+    // unfiltered O(bucket²) candidate set: at 5M docs / h=6 (210 combos,
+    // 1.05B key rows) one dropDuplicates task burned 25 CPU-minutes on
+    // candidates the ham ≤ h test would discard. Here map-side-bounded
+    // heaps keep each bucket's maxBucketSize+1 smallest (id, sh64)
+    // members (lazy buffer capacity — eager k-sized buffers over
+    // singleton-dominated groups measured 3× worse than the row_number
+    // window they replaced), and HammingPairs emits only VERIFIED
+    // pairs, so the final distinct sees ≤ combos × true-pairs rows
+    // (flagship before/after in NOTES.md: h6 24.7 → 19.6 s).
+    val regime = graft.store.SimHashIndex.regime(blocks, maxHamming,
+      maxBucketSize)
+    BandedPairs.inBucket(regime, regime.keyRows(hashed), lit(true))
   }
 
   /** Oracle-portable 64-bit SimHash: the same bit-vote recipe as

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.ExprUtils.{let, let2}
@@ -699,76 +698,52 @@ object Similarity {
         math.min(24, math.max(8,
           math.ceil(math.log(n * 8.0 / maxBucketSize) / math.log(2)).toInt))
       }
-    // ONE shuffle, verify INSIDE the bucket. The previous shape (keys-only
-    // buckets → count/anti-join cap → bucket-key self-join → dropDuplicates
-    // → join vectors back → dot filter) was built on the assumption that
-    // candidate pairs are sparse. On clustered corpora — the realistic
-    // embedding distribution, and the flagship 1M-vector bench (1024 tight
-    // clusters, within-cluster cos ≈ 0.986) — every bucket holds a whole
-    // cluster (~1000 members, under the cap), so the self-join emitted
-    // billions of candidate rows into a dropDuplicates that OOM'd
-    // execution memory. Here the unit vectors ride the single bucket
-    // shuffle (nTables × corpus rows — linear, spillable), a row_number
-    // window caps degenerate buckets at bounded memory, and CosinePairs
-    // computes the verify dot products in-bucket, emitting ONLY true
-    // near-dups. The final distinct sees ≤ nTables × true-pair rows.
-    // Cross-table duplicate verify work costs ≤ nTables× CPU on in-bucket
-    // pairs — linear state, no quadratic materialization anywhere.
-    // fused per-table keys (r15): one vector extraction + plain-array
-    // plane dots for all nTables buckets, bit-identical to the
-    // per-table lshBucket builder array it replaces
-    val tableKeys = graft.plans.VectorExpressions
-      .hyperplaneTableKeys(col(vecCol), dim, nTables, bits, seed)
-    val rows = corpus
-      .select(col(idCol).as("id"), unitVector(col(vecCol)).as("uv"),
-        explode(tableKeys).as("tk"))
-      .select(col("tk.table").as("table"), col("tk.bucket").as("bucket"),
-        col("id"), col("uv"))
-    if (graft.store.EmbedIndex.floatExchangeActive(dim, floatExchangeMinDim)) {
+    // ONE shuffle, verify INSIDE the bucket: the shared in-bucket stage
+    // (graft.store.BandedPairs.inBucket) under the index's hyperplane
+    // regime over the whole corpus, every member fresh. The previous
+    // shape (keys-only buckets → count/anti-join cap → bucket-key
+    // self-join → dropDuplicates → join vectors back → dot filter) was
+    // built on the assumption that candidate pairs are sparse. On
+    // clustered corpora — the realistic embedding distribution, and the
+    // flagship 1M-vector bench (1024 tight clusters, within-cluster
+    // cos ≈ 0.986) — every bucket holds a whole cluster (~1000 members,
+    // under the cap), so the self-join emitted billions of candidate
+    // rows into a dropDuplicates that OOM'd execution memory. Here the
+    // unit vectors ride the single bucket shuffle (nTables × corpus
+    // rows — linear, spillable), a bounded heap caps degenerate buckets
+    // (the maxBucketSize+1 smallest ids, member-for-member the
+    // row_number window it replaced), and CosinePairs computes the
+    // verify dot products in-bucket, emitting ONLY true near-dups. The
+    // final distinct sees ≤ nTables × true-pair rows. The keys come
+    // from the raw vector (bit-identical fused per-table keys, r15).
+    val useFloat =
+      graft.store.EmbedIndex.floatExchangeActive(dim, floatExchangeMinDim)
+    val regime = graft.store.EmbedIndex.regime(dim, nTables, bits, seed,
+      threshold, maxBucketSize, useFloat)
+    val pairs = graft.store.BandedPairs.inBucket(regime,
+      regime.keyRows(corpus.select(col(idCol).as("id"),
+          unitVector(col(vecCol)).as("uv"), col(vecCol).as("key_src")),
+        col("key_src")),
+      lit(true))
+    if (!useFloat) pairs
+    else {
       // FLOAT exchange (r16, extending the r15 index-append mechanism
       // to the batch shape): the bucket exchange — here paid nTables
-      // times per row — ships a float copy of the unit vector (the
-      // bounded heap keeps the same smallest-id member set as the
-      // row_number cap below), CosineCandidatesF emits candidates at
-      // threshold − margin, and the shared exactReverify resolves them
-      // against the double vectors re-derived from the corpus (one
-      // candidate-restricted columnar scan). Output is pair-for-pair
-      // the double path's; eager-persisted per the opt-in contract in
-      // the scaladoc above — callers unpersist when done.
-      val cand = rows
-        .groupBy(col("table"), col("bucket"))
-        .agg(TopKAggregate.boundedVecMembersF(col("id"),
-          col("uv").cast("array<float>"), lit(true), maxBucketSize + 1)
-          .as("members"))
-        .filter(size(col("members")).between(2, maxBucketSize))
-        .select(explode(graft.plans.VectorExpressions
-          .cosineCandidatesF(col("members"),
-            threshold - graft.store.EmbedIndex.FloatVerifyMargin)).as("p"))
-        .select(col("p.id_a"), col("p.id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // times per row — ships a float copy of the unit vector,
+      // CosineCandidatesF emits candidates at threshold − margin, and
+      // the shared exactReverify resolves them against the double
+      // vectors re-derived from the corpus (one candidate-restricted
+      // columnar scan). Output is pair-for-pair the double path's;
+      // eager-persisted per the opt-in contract in the scaladoc above —
+      // callers unpersist when done.
+      val cand = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nCand = cand.count()
       val verified = exactReverify(cand, nCand,
         corpus.select(col(idCol).as("id"), unitVector(col(vecCol)).as("uv")),
         threshold, graft.store.BroadcastGate.DefaultKeyLimit)
       cand.unpersist(blocking = false)
-      return verified
+      verified
     }
-    val w = Window.partitionBy(col("table"), col("bucket")).orderBy(col("id"))
-    val members = rows
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxBucketSize + 1)
-      .groupBy(col("table"), col("bucket"))
-      .agg(collect_list(struct(col("id"), col("uv"))).as("members"))
-      // size == maxBucketSize+1 marks a truncated degenerate bucket:
-      // dropped whole, same cap semantics as the anti-join version.
-      .filter(size(col("members")).between(2, maxBucketSize))
-
-    members
-      .select(explode(graft.plans.VectorExpressions
-        .cosinePairs(col("members"), threshold)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), round(col("p.cos"), 6).as("cos"))
-      .dropDuplicates("id_a", "id_b")
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC
@@ -813,22 +788,13 @@ object Similarity {
 
   /** Within-cluster cosine pairs over an assigned frame — the pair
     * stage [[semDedup]] closes into components, shared with the
-    * incremental index: (id_a, id_b, cos rounded to 6 places). */
+    * incremental index: (id_a, id_b, cos rounded to 6 places). Every
+    * member is fresh: the bounded heap keeps each cluster's
+    * maxClusterSize+1 smallest ids, the member set of the row_number
+    * window it replaced. */
   private[graft] def semPairsOfAssigned(assigned: DataFrame, eps: Double,
-                                        maxClusterSize: Int): DataFrame = {
-    val w = Window.partitionBy(col("cluster_id")).orderBy(col("id"))
-    assigned
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxClusterSize + 1)
-      .groupBy(col("cluster_id"))
-      .agg(collect_list(struct(col("id"), col("uv"))).as("members"))
-      // size == maxClusterSize+1 marks a truncated degenerate cluster:
-      // dropped whole (members kept), same semantics as the LSH caps.
-      .filter(size(col("members")).between(2, maxClusterSize))
-      .select(explode(graft.plans.VectorExpressions
-        .cosinePairs(col("members"), eps)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), round(col("p.cos"), 6).as("cos"))
-  }
+                                        maxClusterSize: Int): DataFrame =
+    semPairsTouching(assigned, eps, maxClusterSize, fresh = lit(true))
 
   /** [[semPairsOfAssigned]] with a freshness flag riding through the
     * member cap (r15, the EmbedIndex trade): pairs where neither member
@@ -836,8 +802,8 @@ object Similarity {
     * only emits batch-touching pairs, and on clustered corpora the
     * corpus-corpus dot products the old post-hoc restrict discarded are
     * ~(corpus/union)² of the in-cluster work. Member sets (and so the
-    * cap semantics) are identical to the window form: the bounded heap
-    * keeps the maxClusterSize+1 smallest ids.
+    * cap semantics) do not depend on the flag: the bounded heap keeps
+    * the maxClusterSize+1 smallest ids.
     *
     * r15 recorded a reasoned negative on applying EmbedIndex's FLOAT
     * exchange here (one cluster per vector ⇒ the payload rides the
@@ -850,11 +816,12 @@ object Similarity {
     * opposite verdict: its payload ships nTables times and the float
     * path won 0.57× there (embdedup_hidim_batch_*). */
   private[graft] def semPairsTouching(tagged: DataFrame, eps: Double,
-                                      maxClusterSize: Int): DataFrame =
+                                      maxClusterSize: Int,
+                                      fresh: Column = col("fresh")): DataFrame =
     tagged
       .groupBy(col("cluster_id"))
       .agg(graft.plans.TopKAggregate
-        .boundedVecMembers(col("id"), col("uv"), col("fresh"),
+        .boundedVecMembers(col("id"), col("uv"), fresh,
           maxClusterSize + 1).as("members"))
       // size == maxClusterSize+1 marks a truncated degenerate cluster:
       // dropped whole (members kept), same semantics as the LSH caps.

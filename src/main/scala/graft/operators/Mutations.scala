@@ -156,9 +156,14 @@ final class Mutations(store: SnapshotStore, spark: SparkSession,
     }
 
   /** EXISTS guard against a specific snapshot (P7 shape,
-    * lambda_function.py:172-178,652-658). */
+    * lambda_function.py:172-178,652-658): each partition reports whether
+    * it holds a matching row — one job over the scan. A global
+    * `limit(1).count()` plans an exchange, which is two jobs under AQE. */
   private def existsIn(df: DataFrame, cond: org.apache.spark.sql.Column): Boolean =
-    df.filter(cond).limit(1).count() > 0
+    df.filter(cond).select()
+      .mapPartitions(rows => Iterator.single(rows.hasNext))(
+        org.apache.spark.sql.Encoders.scalaBoolean)
+      .collect().contains(true)
 
   /** Read-only EXISTS by tool_name — API surface; mutations re-check
     * inside their transaction. */

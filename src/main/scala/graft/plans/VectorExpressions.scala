@@ -916,14 +916,13 @@ case class AllPairs(child: Expression) extends UnaryExpression {
   * bucket keeps the quadratic part pure CPU on ≤ maxBucketSize vectors
   * and emits only true near-dups.
   *
-  * Two input arities share the expression: the 2-field
-  * array<struct<id, uv>> form pairs EVERY member (the batch operator's
-  * shape), and the 3-field array<struct<id, uv, fresh>> form (r15, the
-  * incremental append's shape via [[BoundedVecMembers]]) SKIPS pairs
-  * where neither member is fresh — corpus-corpus pairs were emitted by
-  * the append that introduced their younger member, and on a 100k batch
-  * against a 1M corpus they are ~91% of the in-bucket dot products the
-  * old shape computed only for restrictToTouching to discard. */
+  * Members are array<struct<id, uv, fresh>> ([[BoundedVecMembers]]):
+  * pairs where neither member is fresh are SKIPPED (r15) — in an
+  * incremental append corpus-corpus pairs were emitted by the append
+  * that introduced their younger member, and on a 100k batch against a
+  * 1M corpus they are ~91% of the in-bucket dot products the old shape
+  * computed only for restrictToTouching to discard. A whole-corpus
+  * caller marks every member fresh. */
 case class CosinePairs(child: Expression, threshold: Double)
     extends UnaryExpression {
 
@@ -934,22 +933,12 @@ case class CosinePairs(child: Expression, threshold: Double)
       StructField("cos", DoubleType, nullable = false))),
     containsNull = false)
 
-  private lazy val hasFresh: Boolean = child.dataType match {
-    case ArrayType(s: StructType, _) => s.length == 3
-    case _ => false
-  }
-
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
       // compute() reads members via getArray(1).toDoubleArray(), which
       // misreads any non-double element type (e.g. the raw array<float>
       // embedding column) — require double elements; unitVector already
       // widens float embeddings to double.
-      case ArrayType(StructType(Array(a, b)), _)
-        if a.dataType == LongType &&
-          b.dataType.isInstanceOf[ArrayType] &&
-          b.dataType.asInstanceOf[ArrayType].elementType == DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case ArrayType(StructType(Array(a, b, f)), _)
         if a.dataType == LongType &&
           b.dataType.isInstanceOf[ArrayType] &&
@@ -958,21 +947,20 @@ case class CosinePairs(child: Expression, threshold: Double)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cosine_pairs needs array<struct<bigint,array<double>[,boolean]>>, got ${other.simpleString}")
+          s"cosine_pairs needs array<struct<bigint,array<double>,boolean>>, got ${other.simpleString}")
     }
 
   def compute(members: ArrayData): ArrayData = {
     val n = members.numElements()
-    val fields = if (hasFresh) 3 else 2
     val ids = new Array[Long](n)
     val vecs = new Array[Array[Double]](n)
     val fresh = new Array[Boolean](n)
     var i = 0
     while (i < n) {
-      val row = members.getStruct(i, fields)
+      val row = members.getStruct(i, 3)
       ids(i) = row.getLong(0)
       vecs(i) = row.getArray(1).toDoubleArray()
-      fresh(i) = if (hasFresh) row.getBoolean(2) else true
+      fresh(i) = row.getBoolean(2)
       i += 1
     }
     val out = new scala.collection.mutable.ArrayBuffer[Any]()

@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
 
 /** The [[DeltaChain]] lifecycle of a persistent index, written once for
@@ -13,7 +12,8 @@ import org.apache.spark.storage.StorageLevel
   * the live read, the tombstone TAKEDOWN (plain and exactly-once), the
   * on-demand fold, the chain-aware vacuum and the maintenance fold
   * policy. An index keeps only what is its own — encode, keys, verify,
-  * the body of its append — and declares here its chain, its commit
+  * the body of its append (the three LSH indexes share theirs through
+  * [[BandedPairs]]) — and declares here its chain, its commit
   * layout (sort key, zone and bloom columns, and the fold's physical
   * layout) and its compatibility check, which every entry point runs.
   *
@@ -298,23 +298,4 @@ object ChainedIndex {
     kindOf(store, table).flatMap(_.index).getOrElse(
       throw new IllegalArgumentException(
         s"$table carries no compact-only index marker"))
-
-  /** Stream wiring shared by the pair-returning indexes: each non-empty
-    * micro-batch goes through `appendOnce` exactly once (None = a
-    * replayed batch, whose pairs were already delivered) and its pairs
-    * to `onPairs`, unpersisted after the callback returns — materialize
-    * inside it. Caller stops the query. */
-  private[store] def pairStream(stream: DataFrame, checkpointDir: String,
-                                onPairs: (DataFrame, Long) => Unit)
-                               (appendOnce: (DataFrame, Long) => Option[DataFrame])
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) appendOnce(batch, batchId).foreach { pairs =>
-          try onPairs(pairs, batchId)
-          finally pairs.unpersist(blocking = false)
-        }
-      }
-      .start()
 }

@@ -39,23 +39,14 @@ import graft.functions.Dedup
   * parquet per append, periodic compaction, exactly-once via the same
   * batch-id watermark the vector index and catalog ingest use.
   *
-  * Incremental ≡ batch (DedupIndexSpec proves it pair-for-pair): for any
-  * split of a corpus into batches, the union of every append's pair set
-  * equals `nearDuplicatePairs` over the union corpus —
-  *  - band keys are a pure per-doc function, so "two docs share a bucket"
-  *    is split-independent; the append sees every (corpus member ∪ batch
-  *    member) of each batch-touched bucket, which covers every pair whose
-  *    younger member is in the batch; pairs between older docs were
-  *    emitted by the append that introduced THEIR younger member;
-  *  - verify compares the same rational jaccard — on hash sets here vs
-  *    shingle strings in batch mode, equal counts modulo xxhash64
-  *    collisions (~2⁻⁶⁴ per shingle pair; an honest caveat, not a
-  *    theorem — see the ngramJaccardPairs recall note);
-  *  - cap semantics: a bucket's members are capped in id order over the
-  *    union membership, identical in both modes while the FINAL bucket
-  *    size stays ≤ maxBucketSize. A bucket that outgrows the cap later is
-  *    dropped whole by batch mode, while incremental already emitted its
-  *    early pairs — in the degenerate regime incremental is a superset.
+  * Pairs, recovery and streaming are the shared [[BandedPairs]]
+  * skeleton (its class doc carries the contract, incremental ≡ batch
+  * and the cap semantics); this index declares the MinHash regime:
+  * `bands` band keys per doc, members capped by id alone, AllPairs
+  * candidates restricted to the batch, then the exact Jaccard over the
+  * candidates' stored hash sets — the same rational Jaccard as the
+  * batch operator, which verifies over the same xxhash64 shingle
+  * hashes (DedupIndexSpec pins incremental ≡ batch pair-for-pair).
   *
   * Scale shape of one append (batch b against corpus N):
   *  - batch side: shingle+minhash+band O(b) — the only text processing;
@@ -96,13 +87,10 @@ import graft.functions.Dedup
   *    appends (the floor is per append, not per document), and the
   *    delta chain still keeps a future layout change open.
   *
-  * Contract: document ids must be globally unique across the corpus and
-  * all batches (they are join keys and pair members). Pair outputs match
-  * [[Dedup.nearDuplicatePairs]]: (id_a, id_b, jaccard) with id_a < id_b,
-  * jaccard ≥ threshold, EAGER (a self-contained [[EagerCut]] checkpoint
-  * with measured stats). Takedown, fold and vacuum are the shared
-  * [[ChainedIndex]] lifecycle. */
-object DedupIndex extends ChainedIndex {
+  * Pair outputs match [[Dedup.nearDuplicatePairs]]: (id_a, id_b,
+  * jaccard) with id_a < id_b, jaccard ≥ threshold. Takedown, fold and
+  * vacuum are the shared [[ChainedIndex]] lifecycle. */
+object DedupIndex extends BandedPairs {
 
   private val P = "dedup." // metadata key prefix
 
@@ -123,15 +111,6 @@ object DedupIndex extends ChainedIndex {
     * Bloom false positives only widen the exact semi-join input. */
   val DefaultKeyProbeMaxKeys: Int = 4000000
 
-  /** Ceiling on the BLOOM probe's key bound (nBatch·bands): above it
-    * the probe is skipped entirely. A Bloom at 1% fpp costs ~9.6 bits
-    * per expected key, and the filter rides in the scan expression's
-    * task binary — 16.7M keys ≈ 20 MB is the acceptable edge; a batch
-    * big enough to exceed it (≥ ~1M docs at 16 bands) is a backfill
-    * whose append cost is amortized by its own size, not a trickle
-    * that needs the prefilter. Guards the driver and the task binary
-    * from a multi-GB sketch on a corpus-sized "batch". */
-  val BloomProbeMaxKeys: Long = 1L << 24
   // Canonical columns: pre-r14 tables carry the stored `bks` key column;
   // projecting every chain member keeps mixed old-fat/new-slim chains
   // unioning cleanly, and the next compaction rewrites the table slim.
@@ -177,9 +156,9 @@ object DedupIndex extends ChainedIndex {
                   batchCountHint: Option[Long] = None,
                   keyProbeMaxKeys: Int = DefaultKeyProbeMaxKeys)
       : DataFrame =
-    appendInternal(store, table, batch, textCol, idCol, threshold,
-      maxBucketSize, compactEvery, None, broadcastKeyLimit,
-      batchCountHint, keyProbeMaxKeys).get
+    appendPairs(store, table, None, compactEvery, broadcastKeyLimit,
+        batchCountHint, keyProbeMaxKeys)(encodeBatch(batch, textCol, idCol))(
+      committed(_, threshold, maxBucketSize)).get
 
   /** [[appendBatch]] with the exactly-once batch-id watermark discipline
     * (same as VectorIndex.appendBatchOnce / Mutations.appendBatchOnce):
@@ -195,215 +174,78 @@ object DedupIndex extends ChainedIndex {
                       batchCountHint: Option[Long] = None,
                       keyProbeMaxKeys: Int = DefaultKeyProbeMaxKeys)
       : Option[DataFrame] =
-    appendInternal(store, table, batch, textCol, idCol, threshold,
-      maxBucketSize, compactEvery, Some((streamId, batchId)),
-      broadcastKeyLimit, batchCountHint, keyProbeMaxKeys)
+    appendPairs(store, table, Some((streamId, batchId)), compactEvery,
+        broadcastKeyLimit, batchCountHint, keyProbeMaxKeys)(
+        encodeBatch(batch, textCol, idCol))(
+      committed(_, threshold, maxBucketSize))
 
-  private def appendInternal(store: SnapshotStore, table: String,
-                             batch: DataFrame, textCol: String, idCol: String,
-                             threshold: Double, maxBucketSize: Int,
-                             compactEvery: Int,
-                             onceKey: Option[(String, Long)],
-                             broadcastKeyLimit: Long,
-                             batchCountHint: Option[Long],
-                             keyProbeMaxKeys: Int)
-      : Option[DataFrame] =
-    // The pair result has its own cache, and its lineage re-derives the
-    // encoding if an executor loses blocks.
-    appendTx(store, table, onceKey, compactEvery)(meta =>
-        encode(batch, textCol, idCol, param(meta, "shingleN").toInt)) {
-        (v, meta, enc) =>
-      val k = param(meta, "k").toInt
-      val bands = param(meta, "bands").toInt
-      // One driver action at most for gate sizing: callers that already
-      // know the batch size (CurationIngest counts its survivors) pass
-      // it through; the fallback is a NARROW count on the persisted
-      // encoding (also warms the cache) — never a distinct() exchange
-      // (r9 verdict: each blocking action is a separate job whose
-      // latency multiplies under host degradation).
-      val nBatch = batchCountHint.getOrElse(enc.count())
-      // Scan prefilter (ON by default — see DefaultKeyProbeMaxKeys):
-      // one extra BOUNDED action collects the batch's band keys; the
-      // index scan then keeps only docs whose recomputed keys can hit
-      // them — a pure in-codegen map of ≤ bands membership tests per
-      // row — before anything explodes through the bucket semi-join.
-      // The exact (band, bucket) semi-join still runs on the
-      // survivors, so tester false positives never change the output.
-      // Batches whose key bound (nBatch·bands) fits the budget get
-      // the exact sorted set; bigger (backfill-sized) batches get a
-      // ~1%-fpp BLOOM over the same keys instead of losing the probe
-      // entirely (measured: an unprobed 500k-doc append pays the full
-      // ~80M-row recomputed-key explode — curate_ungated_500k 92.5 s
-      // vs ~40 s probed). keyProbeMaxKeys = 0 disables the probe and
-      // keeps the strict one-action job budget.
-      // Shared decision ladder (LshKeyProbe): exact sorted set within
-      // the clamped budget, ~1%-fpp Bloom up to the ceiling, nothing
-      // past it. MinHash band keys are near-unique (64-bit buckets),
-      // so the a-priori bound is tight and no rescue take is run.
-      val probeFilter: Option[org.apache.spark.sql.Column] =
-        LshKeyProbe(
-          keysOf(enc, k, bands).select(col("band").as("part"), col("bucket")),
-          bound = nBatch * bands,
-          keyProbeMaxKeys = keyProbeMaxKeys,
-          rescueTakeCeiling = 0L,
-          exact = arr => graft.plans.VectorExpressions
-            .minhashKeyHits(col("h_arr"), k, bands, arr),
-          bloom = bf => graft.plans.VectorExpressions
-            .minhashKeyHitsBloom(col("h_arr"), k, bands, bf))
-      val idxRows = chain.load(store, table, v, meta)
-      val idxSrc = probeFilter match {
-        case Some(p) => idxRows.filter(p)
-        case None => idxRows
-      }
-      (pairsVsIndex(idxSrc, enc, nBatch, k, bands, threshold,
-        maxBucketSize, broadcastKeyLimit), enc, Map.empty)
-    }.map(_._1)
+  /** A batch's encoding under the committed shingle width. */
+  private def encodeBatch(batch: DataFrame, textCol: String, idCol: String)
+                         (meta: Map[String, String]): DataFrame =
+    encode(batch, textCol, idCol, param(meta, "shingleN").toInt)
 
-  /** Key rows recomputed in-expression from the stored shingle hashes —
-    * the scan reads only the flat (id, h_arr) columns; signature and
-    * band keys ride inside whole-stage codegen. */
-  private def keysOf(e: DataFrame, k: Int, bands: Int): DataFrame =
-    e.select(col("id"),
-        explode(Dedup.lshBandKeys(
-          Dedup.minhashSignature(col("h_arr"), k), k, bands)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"),
-        col("id"))
+  /** The regime under the committed minhash parameters. */
+  private def committed(meta: Map[String, String], threshold: Double,
+                        maxBucketSize: Int): BandedPairs.Regime =
+    regime(param(meta, "k").toInt, param(meta, "bands").toInt, threshold,
+      maxBucketSize)
 
-  /** Near-dup pairs of `batchEnc` against `idx` ∪ itself — the same
-    * candidate shape as nearDuplicatePairs, with the corpus side entering
-    * through a size-gated broadcast bucket filter instead of a full
-    * re-band. */
-  private def pairsVsIndex(idx: DataFrame, batchEnc: DataFrame,
-                           nBatch: Long, k: Int, bands: Int,
-                           threshold: Double, maxBucketSize: Int,
-                           broadcastKeyLimit: Long): DataFrame = {
-    val bKeys = keysOf(batchEnc, k, bands)
-    // The batch's bucket set (batch-sized) broadcasts into the corpus
-    // keys scan below the gate: index rows stream through the semi-join
-    // — no shuffle — and only members of batch-touched buckets survive.
-    // Gate sizing costs no driver action: each doc emits exactly `bands`
-    // keys, so nBatch × bands bounds the distinct bucket count from
-    // above (over-estimating only flips broadcast→shuffle, the safe
-    // side — and the byte gate in BroadcastGate caps the width too).
-    // No distinct() (r19, guide §2.4): the keys feed a left_semi, which
-    // dedups by construction — the distinct's exchange bought nothing
-    // (minhash band buckets are near-unique, so the broadcast width is
-    // the same bound either way).
-    val bBuckets = bKeys.select(col("band"), col("bucket"))
-    pairsAmong(
-      keysOf(idx, k, bands)
-        .join(BroadcastGate(bBuckets, nBatch * bands, broadcastKeyLimit),
-          Seq("band", "bucket"), "left_semi")
-        .unionByName(bKeys),
-      idx.select(col("id"), col("h_arr"))
-        .unionByName(batchEnc.select(col("id"), col("h_arr"))),
-      batchEnc.select(col("id")), nBatch,
-      threshold, maxBucketSize, broadcastKeyLimit)
+  /** The MinHash regime over (id, h_arr) rows: band keys recomputed
+    * in-expression from the shingle hashes (signature and keys ride
+    * inside whole-stage codegen), the members capped by id alone (a
+    * constant score: the heap's (score desc, id asc) tie-break keeps
+    * exactly the cap smallest ids), AllPairs candidates. The payload
+    * stays out of the bucket: the candidates are cut, and the exact
+    * Jaccard reads the hash sets of the candidate docs only — a
+    * semi-join keeps that read candidate-sized before the arrays ride
+    * any join (no broadcast hint: AQE decides, the batch operator's
+    * policy). The MinHash key probe ([[graft.plans.MinHashKeyHits]]):
+    * band keys are near-unique 64-bit buckets, so the a-priori bound is
+    * tight and no rescue take runs. */
+  private[graft] def regime(k: Int, bands: Int, threshold: Double,
+                            maxBucketSize: Int): BandedPairs.Regime = {
+    import graft.plans.VectorExpressions
+    BandedPairs.Regime(
+      part = "band",
+      keys = h => Dedup.lshBandKeys(Dedup.minhashSignature(h, k), k, bands),
+      keysPerDoc = bands, payload = "h_arr", carry = false,
+      maxBucketSize = maxBucketSize,
+      members = (_, cap) =>
+        graft.plans.TopKAggregate.boundedTopK(col("id"), lit(0.0), cap),
+      verify = m => VectorExpressions.allPairs(
+        transform(m, c => c.getField("neighbor_id"))),
+      pairCols = Seq(col("p.id_a"), col("p.id_b")),
+      fresh = false,
+      exactProbe = arr =>
+        VectorExpressions.minhashKeyHits(col("h_arr"), k, bands, arr),
+      bloomProbe = bf =>
+        VectorExpressions.minhashKeyHitsBloom(col("h_arr"), k, bands, bf),
+      finish = { (restricted, sets, _) =>
+        // candidate-sized and read 3×: cut, so the verify plans start
+        // from a leaf. The candidate docs' hash sets are cut once for
+        // both membership joins (r19 A/B: relying on the planner's
+        // exchange reuse instead MEASURED WORSE — AQE re-ran the
+        // semi-join subtree per consumer).
+        val candidates = EagerCut(restricted)
+        val sigs = EagerCut(sets.join(
+          candidates.select(explode(array(col("id_a"), col("id_b"))).as("id")),
+          Seq("id"), "left_semi"))
+        EagerCut(Dedup.jaccardPairs(candidates, sigs, threshold))
+      })
   }
 
-  /** READ-ONLY recovery twin of [[appendBatchOnce]]'s pair result: the
-    * pairs touching `ids` recomputed from the COMMITTED index alone —
-    * for replaying a batch whose append already committed (its shingle
-    * hashes are read back from the index — band keys recomputed from
-    * them in-expression — rather than re-derived from text). Reproduces
-    * the original append's pair set
-    * exactly (same touched-bucket membership and id-ordered cap, same
-    * stored-hash jaccard) PROVIDED no later batch was appended in
-    * between — guaranteed under the sequential-batchId streaming
-    * discipline. `threshold`/`maxBucketSize` must match the original
-    * call (they are per-call, not committed metadata). EAGER like the
-    * append result. */
+  /** The recovery twin of [[appendBatchOnce]]'s pair result
+    * ([[BandedPairs]] contract); `threshold`/`maxBucketSize` must match
+    * the original call (they are per-call, not committed metadata). */
   def pairsForCommitted(store: SnapshotStore, table: String, ids: DataFrame,
                         threshold: Double = 0.5, maxBucketSize: Int = 1000,
                         broadcastKeyLimit: Long = BroadcastGate.DefaultKeyLimit)
-      : DataFrame = {
-    val v = store.currentVersion(table)
-    val meta = store.metaForVersion(table, v)
-    val k = param(meta, "k").toInt
-    val bands = param(meta, "bands").toInt
-    val idx = chain.load(store, table, v, meta)
-    val (idRows, nIds) = EagerCut.counted(ids.select(col("id")).distinct())
-    val batchRows = idx.join(BroadcastGate(idRows, nIds, broadcastKeyLimit),
-      Seq("id"), "left_semi")
-    // nIds × bands bounds the touched-bucket count — no second action,
-    // and no distinct() on a semi-join probe side (r19, guide §2.4).
-    val bBuckets = keysOf(batchRows, k, bands)
-      .select(col("band"), col("bucket"))
-    // Batch rows are ALREADY in idx — membership and signatures both
-    // come from the committed columns, no union.
-    val allKeys = keysOf(idx, k, bands)
-      .join(BroadcastGate(bBuckets, nIds * bands, broadcastKeyLimit),
-        Seq("band", "bucket"), "left_semi")
-    pairsAmong(allKeys, idx.select(col("id"), col("h_arr")),
-      idRows, nIds, threshold, maxBucketSize, broadcastKeyLimit)
-  }
+      : DataFrame =
+    forCommitted(store, table, ids, broadcastKeyLimit)(
+      committed(_, threshold, maxBucketSize))
 
-  /** Candidate generation + exact verify over the touched-bucket
-    * membership `allKeys` (band, bucket, id), restricted to pairs
-    * touching `newIds`, with shingle-hash signatures looked up in
-    * `sigSource` (id, h_arr). Shared by the append path (membership and
-    * signatures = corpus ∪ batch) and the replay-recovery path (both
-    * read back from the committed index). */
-  private def pairsAmong(allKeys: DataFrame, sigSource: DataFrame,
-                         newIds: DataFrame, nIds: Long,
-                         threshold: Double, maxBucketSize: Int,
-                         broadcastKeyLimit: Long): DataFrame = {
-    // Union membership of every touched bucket, capped in id order —
-    // bit-identical semantics to the batch path over the union corpus
-    // (bounded-heap aggregate with a constant score: the (score desc,
-    // id asc) tie-break keeps exactly the m+1 smallest ids, without
-    // the row_number window's sort of the full touched-key stream).
-    val allCand = allKeys
-      .groupBy(col("band"), col("bucket"))
-      .agg(graft.plans.TopKAggregate
-        .boundedTopK(col("id"), lit(0.0), maxBucketSize + 1).as("ch"))
-      .select(transform(col("ch"), c => c.getField("neighbor_id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .select(explode(graft.plans.VectorExpressions.allPairs(col("members"))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    // Keep only pairs touching the batch: corpus-corpus pairs inside a
-    // touched bucket were emitted by the append that introduced their
-    // younger member. ONE shared broadcast for both membership probes.
-    // Candidate-sized and read 3×: cut, so the verify plans below start
-    // from a leaf instead of re-rendering the bucket pipeline.
-    val candidates = EagerCut(BroadcastGate
-      .restrictToTouching(allCand, newIds.select(col("id")), nIds,
-        broadcastKeyLimit))
-
-    // Exact verify on the stored hash sets — the semi-join keeps the
-    // h_arr column read candidate-restricted before the arrays ride any
-    // join (no broadcast hint: AQE decides, same policy as the batch
-    // path's candidate semi-join). r19, guide §2.4: no distinct() on the
-    // semi-join's probe side (a semi dedups by construction), and the
-    // verify renames sit ABOVE the joins so both builds reuse ONE sigs
-    // exchange instead of two.
-    val candIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-    // Materialized once for both membership joins (r19 A/B: relying on
-    // the planner's exchange reuse instead MEASURED WORSE — append0
-    // 24->27, append1 27->32 jobs, AQE re-ran the semi-join subtree per
-    // consumer). A cut rather than a cache: both joins read a leaf
-    // with measured stats, not the semi-join plan twice over.
-    val sigs = EagerCut(sigSource.join(candIds, Seq("id"), "left_semi"))
-
-    EagerCut(candidates
-      .join(sigs, col("id_a") === col("id"))
-      .select(col("id_a"), col("id_b"), col("h_arr").as("h_a"))
-      .join(sigs, col("id_b") === col("id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("h_a"), col("h_arr"))).cast("double") /
-          size(array_union(col("h_a"), col("h_arr"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")))
-  }
-
-  /** Keep the index current from a stream of documents: each micro-batch
-    * is deduplicated against the corpus-so-far and appended exactly once;
-    * its new pairs (a self-contained checkpoint) go to `onPairs`. A
-    * replayed micro-batch is skipped entirely: its pairs were already
-    * delivered. */
+  /** Keep the index current from a stream of documents
+    * ([[BandedPairs]] contract). */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, textCol: String, idCol: String,
                          checkpointDir: String,
@@ -411,8 +253,9 @@ object DedupIndex extends ChainedIndex {
                          threshold: Double = 0.5,
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
-      appendBatchOnce(store, table, batch, textCol, idCol, streamId, batchId,
-        threshold)
+    BandedPairs.maintainFromStream(stream, checkpointDir, onPairs) {
+      (batch, batchId) =>
+        appendBatchOnce(store, table, batch, textCol, idCol, streamId, batchId,
+          threshold)
     }
 }

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -53,7 +53,7 @@ import graft.functions.Similarity
   * The verify payload (the unit vector, ~8·dim bytes) rides WITH the
   * key rows — one append costs one columnar scan of the index, a
   * size-gated broadcast bucket-set semi-join (no corpus shuffle), a
-  * capped window over the touched-bucket membership, and in-bucket
+  * capped heap over the touched-bucket membership, and in-bucket
   * dot-product verification (CosinePairs) — no second corpus scan.
   * DedupIndex-style deferred payload lookup was considered and
   * rejected: clustered embeddings make bucket pair sets DENSE
@@ -109,20 +109,16 @@ import graft.functions.Similarity
   * wide-uv bucket exchange plus in-bucket CosinePairs, not the key
   * column), build 5.1-5.5 s fat vs 3.8-4.2 s slim, and the at-rest index
   * sheds the ~nTables·16 B/row nested key column (~20% at dim 64). The
-  * freshness-tagged pair generation (see [[pairsAmong]]) then cut the
+  * freshness-tagged pair generation (see [[regime]]) then cut the
   * same-window append to 11.7-12.3 s by skipping the ~91% of in-bucket
   * dot products whose pairs the batch restriction would discard.
   *
-  * Incremental ≡ batch: bucket keys are a pure per-vector function of
-  * committed parameters; an append sees the union membership of every
-  * batch-touched bucket, and pairs between older vectors were emitted
-  * by the append that introduced their younger member. Cap semantics
-  * match the batch operator's while final bucket sizes stay under
-  * maxBucketSize (same degenerate-regime caveat as the other indexes).
+  * Pairs, recovery and streaming are the shared [[BandedPairs]]
+  * skeleton (contract, incremental ≡ batch and cap semantics there);
   * EmbedIndexSpec pins pair-for-pair equality with
   * `Similarity.embeddingNearDupPairs` across batchings. Takedown, fold
   * and vacuum are the shared [[ChainedIndex]] lifecycle. */
-object EmbedIndex extends ChainedIndex {
+object EmbedIndex extends BandedPairs {
 
   /** Committed dims at/above which appends ship the float exchange by
     * default (class scaladoc): below it the 4·dim-byte saving cannot
@@ -158,17 +154,6 @@ object EmbedIndex extends ChainedIndex {
     * which the table keys are recomputed in-expression. */
   private def encode(vecs: DataFrame): DataFrame =
     vecs.select(col("id"), Similarity.unitVector(col("vec")).as("uv"))
-
-  /** The per-table bucket keys of a unit-vector column, recomputed from
-    * the committed parameters — the one key construction every path
-    * (batch keys, corpus keys, probe) shares. The fused expression
-    * extracts the vector once and runs plain-array plane dots
-    * (bit-identical to the per-table `Similarity.lshBucket` builder
-    * form, which re-reads the ArrayData for every plane). */
-  private def tableKeys(uv: Column, dim: Int, nTables: Int, bits: Int,
-                        seed: Long): Column =
-    graft.plans.VectorExpressions
-      .hyperplaneTableKeys(uv, dim, nTables, bits, seed)
 
   /** Encode `vecs` (id, vec) and commit as a fresh full snapshot with
     * every structural parameter in the metadata. Computes NO pairs (run
@@ -222,206 +207,95 @@ object EmbedIndex extends ChainedIndex {
                       keyProbeMaxKeys: Int = 0,
                       floatExchangeMinDim: Int = DefaultFloatExchangeMinDim)
       : Option[DataFrame] =
-    appendTx(store, table, Some((streamId, batchId)), compactEvery)(
-        _ => encode(batchVecs)) { (v, meta, enc) =>
-      val dim = param(meta, "dim").toInt
-      val nTables = param(meta, "nTables").toInt
-      val bits = param(meta, "bits").toInt
-      val seed = param(meta, "seed").toLong
-      // Gate sizing without a distinct() job: hint from the caller, or
-      // a narrow count on the persisted encoding (warms the cache).
-      val nBatch = batchCountHint.getOrElse(enc.count())
-      // In-scan prefilter via the shared decision ladder
-      // (LshKeyProbe): exact sorted key set when nBatch·nTables fits
-      // the clamped budget, ~1%-fpp Bloom up to the ceiling; tester
-      // false positives only widen the exact (table, bucket)
-      // semi-join input. One key per table per vector — the bound is
-      // tight, no rescue take.
-      val probeFilter: Option[Column] =
-        LshKeyProbe(
-          keysOf(enc, dim, nTables, bits, seed)
-            .select(col("table").as("part"), col("bucket")),
-          bound = nBatch * nTables,
-          keyProbeMaxKeys = keyProbeMaxKeys,
-          rescueTakeCeiling = 0L,
-          exact = arr => graft.plans.VectorExpressions
-            .hyperplaneKeyHits(col("uv"), dim, nTables, bits, seed, arr),
-          bloom = bf => graft.plans.VectorExpressions
-            .hyperplaneKeyHitsBloom(col("uv"), dim, nTables, bits, seed, bf))
-      val idxRows = chain.load(store, table, v, meta)
-      val idxSrc = probeFilter match {
-        case Some(p) => idxRows.filter(p)
-        case None => idxRows
-      }
-      (pairsVsIndex(idxSrc, enc, nBatch, dim, nTables, bits, seed,
-        param(meta, "threshold").toDouble,
-        param(meta, "maxBucketSize").toInt, broadcastKeyLimit,
-        useFloat = floatExchangeActive(dim, floatExchangeMinDim)),
-        enc, Map.empty)
-    }.map(_._1)
+    appendPairs(store, table, Some((streamId, batchId)), compactEvery,
+        broadcastKeyLimit, batchCountHint, keyProbeMaxKeys)(
+        _ => encode(batchVecs))(committed(_, floatExchangeMinDim))
 
-  /** Key rows recomputed in-expression from the stored unit vector — the
-    * scan reads only the flat (id, uv) columns; the nTables·bits·dim
-    * projections ride inside whole-stage codegen. */
-  private def keysOf(e: DataFrame, dim: Int, nTables: Int, bits: Int,
-                     seed: Long): DataFrame =
-    e.select(col("id"), col("uv"),
-        explode(tableKeys(col("uv"), dim, nTables, bits, seed)).as("bk"))
-      .select(col("bk.table").as("table"), col("bk.bucket").as("bucket"),
-        col("id"), col("uv"))
-
-  /** Pairs of `batchEnc` against `idx` ∪ itself — the corpus enters
-    * through a size-gated broadcast bucket filter; the unit vector rides
-    * with the key rows, so verification (CosinePairs dot products)
-    * happens in-bucket with no extra corpus scan. */
-  private def pairsVsIndex(idx: DataFrame, batchEnc: DataFrame,
-                           nBatch: Long, dim: Int, nTables: Int, bits: Int,
-                           seed: Long, threshold: Double, maxBucketSize: Int,
-                           broadcastKeyLimit: Long,
-                           useFloat: Boolean = false): DataFrame = {
-    val bKeys = keysOf(batchEnc, dim, nTables, bits, seed)
-    // nBatch × nTables bounds the distinct bucket count (one key per
-    // hash table per vector) — gate sized with zero driver actions.
-    // No distinct() on a semi-join probe side (r19, guide §2.4).
-    val bBuckets = bKeys.select(col("table"), col("bucket"))
-    val cKeys = keysOf(idx, dim, nTables, bits, seed)
-      .join(BroadcastGate(bBuckets, nBatch * nTables, broadcastKeyLimit),
-        Seq("table", "bucket"), "left_semi")
-    // the freshness tag rides into the bucket heap so CosinePairs skips
-    // corpus-corpus pairs inside the expression (they were emitted by
-    // the append that introduced their younger member)
-    val flagged = cKeys.withColumn("fresh", lit(false))
-      .unionByName(bKeys.withColumn("fresh", lit(true)))
-    if (useFloat)
-      pairsAmongF(flagged,
-        idx.select(col("id"), col("uv"))
-          .unionByName(batchEnc.select(col("id"), col("uv"))),
-        threshold, maxBucketSize, broadcastKeyLimit)
-    else pairsAmong(flagged, threshold, maxBucketSize)
+  /** The regime under the committed parameters. */
+  private def committed(meta: Map[String, String],
+                        floatExchangeMinDim: Int): BandedPairs.Regime = {
+    val dim = param(meta, "dim").toInt
+    regime(dim, param(meta, "nTables").toInt, param(meta, "bits").toInt,
+      param(meta, "seed").toLong, param(meta, "threshold").toDouble,
+      param(meta, "maxBucketSize").toInt,
+      floatExchangeActive(dim, floatExchangeMinDim))
   }
 
-  /** READ-ONLY recovery twin of [[appendBatchOnce]]'s pair result (same
-    * contract as SimHashIndex.pairsForCommitted: valid until a LATER
-    * batch lands, which sequential-batchId streaming guarantees). */
+  /** The hyperplane regime over (id, uv) rows. Table t's bucket is the
+    * sign pattern of `bits` plane projections, all nTables recomputed
+    * by one fused expression that extracts the vector once
+    * ([[graft.plans.HyperplaneTableKeys]], bit-identical to the
+    * per-table `Similarity.lshBucket` form); one key per table per
+    * vector, so the probe bound is tight and no rescue take runs.
+    *
+    * The unit vector rides the key rows into the bucket and the batch
+    * restriction lives INSIDE the verifier (r15): the fresh flag rides
+    * through the bounded heap and CosinePairs skips corpus-corpus pairs
+    * before their 2·dim-flop dot products run — on a 100k append
+    * against 1M vectors those were ~91% of the in-bucket pair work.
+    * fresh ⇔ id ∈ batch under the unique-id contract, so "some member
+    * fresh" ≡ "pair touches the batch".
+    *
+    * `useFloat` is the float exchange (class scaladoc): the heap ships
+    * a FLOAT copy of the unit vector (member selection is by id, so the
+    * kept set is the double heap's), [[graft.plans.CosineCandidatesF]]
+    * emits candidates at threshold − [[FloatVerifyMargin]], and the
+    * shared `Similarity.exactReverify` re-verifies them EXACTLY against
+    * the stored doubles (one candidate-restricted (id, uv) lookup, no
+    * corpus shuffle) — ids, exact cos, rounding and dedup are the
+    * double path's. Its result is exactReverify's persisted frame. */
+  private[graft] def regime(dim: Int, nTables: Int, bits: Int, seed: Long,
+                            threshold: Double, maxBucketSize: Int,
+                            useFloat: Boolean): BandedPairs.Regime = {
+    import graft.plans.{TopKAggregate, VectorExpressions}
+    val double = BandedPairs.Regime(
+      part = "table",
+      keys = uv => VectorExpressions
+        .hyperplaneTableKeys(uv, dim, nTables, bits, seed),
+      keysPerDoc = nTables, payload = "uv", carry = true,
+      maxBucketSize = maxBucketSize,
+      members = (fresh, cap) =>
+        TopKAggregate.boundedVecMembers(col("id"), col("uv"), fresh, cap),
+      verify = m => VectorExpressions.cosinePairs(m, threshold),
+      pairCols = Seq(col("p.id_a"), col("p.id_b"),
+        round(col("p.cos"), 6).as("cos")),
+      fresh = true,
+      exactProbe = arr => VectorExpressions
+        .hyperplaneKeyHits(col("uv"), dim, nTables, bits, seed, arr),
+      bloomProbe = bf => VectorExpressions
+        .hyperplaneKeyHitsBloom(col("uv"), dim, nTables, bits, seed, bf))
+    if (!useFloat) double
+    else double.copy(
+      members = (fresh, cap) => TopKAggregate.boundedVecMembersF(col("id"),
+        col("uv").cast("array<float>"), fresh, cap),
+      verify = m => VectorExpressions
+        .cosineCandidatesF(m, threshold - FloatVerifyMargin),
+      pairCols = Seq(col("p.id_a"), col("p.id_b")),
+      finish = { (cand, uvSource, broadcastKeyLimit) =>
+        val (cut, nCand) = EagerCut.counted(cand)
+        Similarity.exactReverify(cut, nCand, uvSource, threshold,
+          broadcastKeyLimit)
+      })
+  }
+
+  /** The recovery twin of [[appendBatchOnce]]'s pair result
+    * ([[BandedPairs]] contract). */
   def pairsForCommitted(store: SnapshotStore, table: String, ids: DataFrame,
                         broadcastKeyLimit: Long = BroadcastGate.DefaultKeyLimit,
                         floatExchangeMinDim: Int = DefaultFloatExchangeMinDim)
-      : DataFrame = {
-    val v = store.currentVersion(table)
-    val meta = store.metaForVersion(table, v)
-    val threshold = param(meta, "threshold").toDouble
-    val maxBucketSize = param(meta, "maxBucketSize").toInt
-    val (dim, nTables, bits, seed) = (param(meta, "dim").toInt,
-      param(meta, "nTables").toInt, param(meta, "bits").toInt,
-      param(meta, "seed").toLong)
-    val idx = chain.load(store, table, v, meta)
-    val (idRows, nIds) = EagerCut.counted(ids.select(col("id")).distinct())
-    val batchRows = idx.join(BroadcastGate(idRows, nIds, broadcastKeyLimit),
-      Seq("id"), "left_semi")
-    // nIds × nTables bounds the touched-bucket count — no second action,
-    // and no distinct() on a semi-join probe side (r19, guide §2.4).
-    val bBuckets = keysOf(batchRows, dim, nTables, bits, seed)
-      .select(col("table"), col("bucket"))
-    val allKeys = keysOf(idx, dim, nTables, bits, seed)
-      .join(BroadcastGate(bBuckets, nIds * nTables, broadcastKeyLimit),
-        Seq("table", "bucket"), "left_semi")
-    // all rows come from the committed index here: freshness = batch
-    // membership, tagged through one gated outer join
-    val flagged = allKeys
-      .join(BroadcastGate(idRows.select(col("id"), lit(true).as("fresh_f")),
-          nIds, broadcastKeyLimit),
-        Seq("id"), "left_outer")
-      .withColumn("fresh", coalesce(col("fresh_f"), lit(false)))
-      .drop("fresh_f")
-    if (floatExchangeActive(dim, floatExchangeMinDim))
-      pairsAmongF(flagged, idx.select(col("id"), col("uv")),
-        threshold, maxBucketSize, broadcastKeyLimit)
-    else pairsAmong(flagged, threshold, maxBucketSize)
-  }
+      : DataFrame =
+    forCommitted(store, table, ids, broadcastKeyLimit)(
+      committed(_, floatExchangeMinDim))
 
-  /** In-bucket pair generation over the touched-bucket membership
-    * `allKeys` (table, bucket, id, uv, fresh) — the SimHashIndex
-    * skeleton with CosinePairs as the verifier. The batch restriction
-    * lives INSIDE the expression (r15): the fresh flag rides through
-    * the bounded heap and CosinePairs skips corpus-corpus pairs before
-    * their 2·dim-flop dot products run — on a 100k append against 1M
-    * vectors those were ~91% of the in-bucket pair work, computed only
-    * for the old restrictToTouching pass to discard (flagship, same
-    * window: 16.0 → 11.7-12.3 s, vs 16.4-16.7 for the pre-r15 fat
-    * layout). Equivalence: fresh ⇔ id ∈ batch (ids are
-    * globally unique), so "some member fresh" ≡ "pair touches the
-    * batch" — EmbedIndexSpec pins the path pair-for-pair. */
-  private def pairsAmong(allKeys: DataFrame, threshold: Double,
-                         maxBucketSize: Int): DataFrame = {
-    // Bucket capping as ONE bounded-heap aggregate (r15 — the r13
-    // window→heap medicine, last applied here): member-for-member
-    // identical to the row_number window it replaces, which sorted the
-    // full touched-key stream with the ~8·dim-byte unit vector riding
-    // every row just to discard everything past m+1.
-    EagerCut(allKeys
-      .groupBy(col("table"), col("bucket"))
-      .agg(graft.plans.TopKAggregate
-        .boundedVecMembers(col("id"), col("uv"), col("fresh"),
-          maxBucketSize + 1)
-        .as("members"))
-      // size == maxBucketSize+1 marks a truncated degenerate bucket:
-      // dropped whole, the batch operator's cap semantics
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .select(explode(graft.plans.VectorExpressions
-        .cosinePairs(col("members"), threshold)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), round(col("p.cos"), 6).as("cos"))
-      .dropDuplicates("id_a", "id_b"))
-  }
-
-  /** The float-exchange twin of [[pairsAmong]] (class scaladoc): the
-    * bucket heap ships a FLOAT copy of the unit vector (member selection
-    * is by id, so the kept set is identical to the double heap's),
-    * [[graft.plans.CosineCandidatesF]] emits candidates at
-    * threshold − [[FloatVerifyMargin]], and survivors re-verify EXACTLY
-    * against the stored doubles via `uvSource` (id, uv — must cover
-    * every id in `allKeys`): one candidate-restricted broadcast-semi
-    * columnar re-scan, no corpus shuffle, then two broadcast joins of
-    * the candidate-sized uv lookup. Output — ids, exact cos, rounding,
-    * dedup — is pair-for-pair [[pairsAmong]]'s; the margin-band false
-    * candidates die on the exact filter. The candidates are cut; the
-    * result is exactReverify's persisted frame. */
-  private def pairsAmongF(allKeys: DataFrame, uvSource: DataFrame,
-                          threshold: Double, maxBucketSize: Int,
-                          broadcastKeyLimit: Long): DataFrame = {
-    val (cand, nCand) = EagerCut.counted(allKeys
-      .groupBy(col("table"), col("bucket"))
-      .agg(graft.plans.TopKAggregate
-        .boundedVecMembersF(col("id"),
-          col("uv").cast("array<float>"), col("fresh"),
-          maxBucketSize + 1)
-        .as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .select(explode(graft.plans.VectorExpressions
-        .cosineCandidatesF(col("members"), threshold - FloatVerifyMargin))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b"))
-    // Shared exact tail (r16, one implementation across EmbedIndex /
-    // SemIndex / batch operators): candidate-restricted (id, uv)
-    // lookup, deterministic per-id resolve (lexicographic max — under
-    // the unique-doc-id contract an identity; under violation the
-    // double path compares per-occurrence vectors, so only determinism
-    // is owed, r15 ADVICE), exact double re-filter at the committed
-    // threshold. Both intermediates persist inside — without that the
-    // "one re-scan" claim depends on the planner's exchange reuse
-    // recognizing differently-aliased subplans.
-    Similarity.exactReverify(cand, nCand, uvSource, threshold,
-      broadcastKeyLimit)
-  }
-
-  /** Keep the index current from a stream of (id, vec) rows — the
-    * SimHashIndex.maintainFromStream contract verbatim. */
+  /** Keep the index current from a stream of (id, vec) rows
+    * ([[BandedPairs]] contract). */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, checkpointDir: String,
                          streamId: String = "emb-inbox",
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
-      appendBatchOnce(store, table, batch, streamId, batchId)
+    BandedPairs.maintainFromStream(stream, checkpointDir, onPairs) {
+      (batch, batchId) =>
+        appendBatchOnce(store, table, batch, streamId, batchId)
     }
 }

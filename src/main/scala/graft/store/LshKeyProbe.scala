@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared construction of the in-scan LSH key-probe tester for the
-  * incremental dedup appends — ONE implementation of the budget clamp,
-  * exact-set take, and Bloom fallback that DedupIndex, SimHashIndex and
-  * EmbedIndex previously carried as three drifting copies (r15 review).
+  * incremental dedup appends ([[BandedPairs]]) — ONE implementation of
+  * the budget clamp, exact-set take, and Bloom fallback.
   *
   * `keyRows` must be the batch's key rows as two columns
   * (part: int, bucket: long) — the band/table id first. `bound` is the
@@ -33,6 +32,16 @@ import org.apache.spark.sql.functions._
   */
 private[store] object LshKeyProbe {
 
+  /** Ceiling on the BLOOM probe's key bound: above it the probe is
+    * skipped entirely. A Bloom at 1% fpp costs ~9.6 bits per expected
+    * key, and the filter rides in the scan expression's task binary —
+    * 16.7M keys ≈ 20 MB is the acceptable edge; a batch big enough to
+    * exceed it (≥ ~1M docs at 16 MinHash bands) is a backfill whose
+    * append cost is amortized by its own size, not a trickle that needs
+    * the prefilter. Guards the driver and the task binary from a
+    * multi-GB sketch on a corpus-sized "batch". */
+  val BloomProbeMaxKeys: Long = 1L << 24
+
   def apply(keyRows: DataFrame, bound: Long, keyProbeMaxKeys: Int,
             rescueTakeCeiling: Long,
             exact: Array[Long] => Column,
@@ -40,7 +49,7 @@ private[store] object LshKeyProbe {
       : Option[Column] = {
     if (keyProbeMaxKeys <= 0) return None
     val budget =
-      math.min(keyProbeMaxKeys.toLong, DedupIndex.BloomProbeMaxKeys).toInt
+      math.min(keyProbeMaxKeys.toLong, BloomProbeMaxKeys).toInt
     if (bound <= budget || bound <= rescueTakeCeiling) {
       val rows = keyRows.select(col("part"), col("bucket")).distinct()
         .take(budget + 1)
@@ -51,7 +60,7 @@ private[store] object LshKeyProbe {
         return Some(exact(arr))
       }
     }
-    if (bound > DedupIndex.BloomProbeMaxKeys) None
+    if (bound > BloomProbeMaxKeys) None
     else {
       // builder key = bucket ^ ((part+1) << 56), mirrored verbatim in
       // BloomMixedKeys (ANSI-safe: shiftleft + xor only)

@@ -250,15 +250,17 @@ object SemIndex extends ChainedIndex {
     EagerCut(Similarity.semPairsTouching(tagged, eps, maxClusterSize))
   }
 
-  /** Keep the index current from a stream of (id, vec) rows — the
-    * SimHashIndex.maintainFromStream contract verbatim. */
+  /** Keep the index current from a stream of (id, vec) rows under the
+    * [[BandedPairs]] stream contract: each micro-batch is appended
+    * exactly once, and a replayed one is skipped. */
   def maintainFromStream(store: SnapshotStore, table: String,
                          stream: DataFrame, checkpointDir: String,
                          streamId: String = "sem-inbox",
                          onPairs: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ChainedIndex.pairStream(stream, checkpointDir, onPairs) { (batch, batchId) =>
-      appendBatchOnce(store, table, batch, streamId, batchId)
+    BandedPairs.maintainFromStream(stream, checkpointDir, onPairs) {
+      (batch, batchId) =>
+        appendBatchOnce(store, table, batch, streamId, batchId)
     }
 
   /** RETRAIN-AS-A-NEW-VERSION (r12 verdict #5): when the rows appended

@@ -184,9 +184,9 @@ class AppendJobCountSpec extends SparkSpec {
     one("hardDelete", 1, exact = true)(mut.hardDelete(19), 200)
     one("update 404", 0, exact = true)(mut.update(999, Map("remarks" -> "x")), 404)
     one("hardDelete 404", 0, exact = true)(mut.hardDelete(19), 404)
-    // create: the duplicate-name scan plus the tail-file write; the next
-    // key comes from the key set
-    one("create", 3, exact = false)(mut.create(Map("tool_name" -> "New")), 201)
+    // create: the duplicate-name scan (one per-partition probe job) plus
+    // the tail-file write; the next key comes from the key set
+    one("create", 2, exact = true)(mut.create(Map("tool_name" -> "New")), 201)
     // a 5-row one-file CSV drop, as the S3-event ingest sees it
     val inbox = TempDirs.create("graft-jobs-csv")
     val csv = inbox.resolve("batch.csv")
